@@ -5,7 +5,7 @@ the plan carries a ``Scan ExistingRDD`` leaf whose partitions
 round-trip a Python worker on EVERY action that re-executes the
 subtree (~0.3 s per action measured at 16 rows, plus ~1.6 s of
 worker spin-up for a session's first list frame), while the
-pandas/Arrow path plans a pure-JVM ``LocalTableScan`` with an
+Arrow path plans a pure-JVM ``LocalTableScan`` with an
 identical schema. The engine's centroid tables, codebooks, salt maps
 and band tables are all driver literals that sit UNDER hot subtrees
 (crossJoins, broadcasts) and re-execute once per probe/action — they
@@ -13,44 +13,32 @@ belong on the JVM path.
 
 `sources/txsql.py:_lit_frame` solves the same problem for its tiny
 string frames with literal SELECTs; this helper is the general-schema
-variant (arrays, timestamps) built on Arrow conversion.
+variant (arrays, timestamps). It hands Spark a ``pyarrow.Table``,
+which plans a ``LocalTableScan`` whatever the session's
+``spark.sql.execution.arrow.pyspark.enabled`` setting — a pandas frame
+would fall back to the ExistingRDD path when that conf is off.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
-
-# sessions already checked for the Arrow conf (ADVICE r13: the
-# LocalTableScan guarantee silently degrades to the ExistingRDD path
-# when spark.sql.execution.arrow.pyspark.enabled is off) — one conf
-# RPC per session, not per frame.
-_ARROW_CHECKED: set[str] = set()
-
-
-def _assert_arrow(spark: SparkSession) -> None:
-    key = spark.sparkContext.applicationId
-    if key in _ARROW_CHECKED:
-        return
-    if spark.conf.get("spark.sql.execution.arrow.pyspark.enabled",
-                      "false").lower() != "true":
-        raise RuntimeError(
-            "local_frame requires spark.sql.execution.arrow.pyspark."
-            "enabled=true (set by session.get_spark); without Arrow "
-            "the pandas conversion silently degrades to the "
-            "Python-RDD ExistingRDD path this helper exists to avoid")
-    _ARROW_CHECKED.add(key)
 
 
 def local_frame(spark: SparkSession, rows, ddl) -> DataFrame:
     """A ``LocalTableScan`` DataFrame from driver-side ``rows`` (list
     of tuples) with the schema given by ``ddl`` (DDL string or
-    StructType). Empty input builds the empty frame directly."""
+    StructType). Empty input builds the empty frame directly. Naive
+    datetimes are read as UTC (the session time zone the engine
+    pins)."""
     schema = StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
     if not rows:
         return spark.createDataFrame([], schema)
-    _assert_arrow(spark)
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(pdf, schema=schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type)
+         for col, f in zip(zip(*rows), arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

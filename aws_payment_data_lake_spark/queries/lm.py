@@ -7,20 +7,15 @@ logs is ulp-noisy cross-engine, so no strict hash; DuckDB parity runs
 in tests/test_lm_quality.py with a float tolerance, SURVEY.md §7.5)
 and this query stays on the bench for a timing record.
 
-Shared LM store (round 7): the trained model — unigram counts, bigram
-counts, (V, T) totals — is classic STORED state (CCNet trains its
-reference KenLM once and ships the artifact; every scoring job reads
-it). Same two tiers as the MinHash/IVF/chunk stores: a session memo
-keyed by (applicationId, sf_dir) with single-entry eviction, and a
-durable warehouse tier under SPARK_GRAFT_WAREHOUSE keyed by the corpus
-fingerprint (sources/store.py). Build cost is recorded under
-``bigram_lm`` in bench's ``store_build_sec``.
+The trained model — unigram counts, bigram counts, (V, T) totals — is
+stored state (CCNet trains its reference KenLM once and ships the
+artifact; every scoring job reads it), kept in the two store tiers of
+sources/store.py under the tier name ``bigram_lm``.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -31,15 +26,14 @@ from aws_payment_data_lake_spark.operators.lm_quality import (
 )
 from aws_payment_data_lake_spark.sources import load
 from aws_payment_data_lake_spark.sources.store import (
-    committed_version,
+    SessionStore,
+    append_cut,
     corpus_fingerprint,
     load_or_build,
-    read_store,
+    pure_append_prior,
 )
-from aws_payment_data_lake_spark.telemetry import timed_store_build
 
-_LM_STORE: dict = {}
-_LM_LOCK = threading.Lock()
+_SESSION = SessionStore()
 _LM_TABLES = ("uni", "big", "totals")
 
 
@@ -49,52 +43,38 @@ def durable_lm_tables(
 ) -> tuple[tuple[DataFrame, DataFrame, DataFrame], bool]:
     """((uni, big, totals), built) from the warehouse store.
 
-    PURE-APPEND roll (the store-family contract, gated like
-    queries/dedup.py's span index via the meta `extras` max-id — no
-    LM table carries doc ids): n-gram counts are ADDITIVE and bigrams
-    never cross document boundaries, so the rolled model is the prior
-    count tables MERGED with counts over the delta docs only —
-    compute ∝ delta tokens plus a vocab-sized merge shuffle (≪ corpus
-    tokens), exact at the durable tier's no-prune default (a pruned
-    prior table would have dropped rows a merge can't resurrect —
-    this tier never prunes). Counts change per key, so the tables are
-    REWRITTEN (no hardlink append — correct, not an omission)."""
+    PURE-APPEND roll (sources/store.py:pure_append_prior): n-gram
+    counts are ADDITIVE and bigrams never cross document boundaries,
+    so the rolled model is the prior count tables MERGED with counts
+    over the delta docs only — compute ∝ delta tokens plus a
+    vocab-sized merge shuffle (≪ corpus tokens), exact at the durable
+    tier's no-prune default (a pruned prior table would have dropped
+    rows a merge can't resurrect — this tier never prunes). Counts
+    change per key, so the tables are REWRITTEN (no hardlink append —
+    correct, not an omission)."""
     (docs,) = load(spark, sf_dir, "documents")
     fp = corpus_fingerprint(docs, "doc_id", "text")
     store_dir = os.path.join(warehouse, "bigram_lm")
 
     def build() -> dict[str, DataFrame]:
         if ingest:
-            cv = committed_version(store_dir)
-            if cv is not None:
-                fp_prior, tables, extras = cv
-                pm = extras.get("max_doc_id")
-                if pm is not None and set(_LM_TABLES) <= set(tables):
-                    base = docs.where(F.col("doc_id") <= pm)
-                    if corpus_fingerprint(
-                            base, "doc_id", "text") == fp_prior:
-                        prior = read_store(spark, store_dir, fp_prior,
-                                           _LM_TABLES)
-                        du, db, _ = train_bigram_lm(
-                            docs.where(F.col("doc_id") > pm))
-                        uni = (prior["uni"].unionByName(du)
-                               .groupBy("w")
-                               .agg(F.sum("c_w").alias("c_w")))
-                        big = (prior["big"].unionByName(db)
-                               .groupBy("prev", "w")
-                               .agg(F.sum("c_bg").alias("c_bg")))
-                        totals = uni.agg(
-                            F.count("*").alias("V"),
-                            F.sum("c_w").cast("long").alias("T"))
-                        return {"uni": uni, "big": big,
-                                "totals": totals}
+            pa = pure_append_prior(spark, docs, store_dir, _LM_TABLES,
+                                   "doc_id", ("doc_id", "text"))
+            if pa is not None:
+                du, db, _ = train_bigram_lm(pa.delta)
+                uni = (pa.frames["uni"].unionByName(du)
+                       .groupBy("w").agg(F.sum("c_w").alias("c_w")))
+                big = (pa.frames["big"].unionByName(db)
+                       .groupBy("prev", "w")
+                       .agg(F.sum("c_bg").alias("c_bg")))
+                totals = uni.agg(F.count("*").alias("V"),
+                                 F.sum("c_w").cast("long").alias("T"))
+                return {"uni": uni, "big": big, "totals": totals}
         uni, big, totals = train_bigram_lm(docs)
         return {"uni": uni, "big": big, "totals": totals}
 
-    frames, built = load_or_build(
-        spark, store_dir, fp, _LM_TABLES, build,
-        extras=lambda: {
-            "max_doc_id": docs.agg(F.max("doc_id")).first()[0]})
+    frames, built = load_or_build(spark, store_dir, fp, _LM_TABLES, build,
+                                  extras=append_cut(docs, "doc_id"))
     return (frames["uni"], frames["big"], frames["totals"]), built
 
 
@@ -103,47 +83,20 @@ def shared_lm_tables(spark: SparkSession, sf_dir: str,
     """(uni, big, totals) for ``sf_dir``'s documents — trained once per
     (Spark application, sf_dir), count tables persisted with a count
     barrier, reused by every scoring consumer (the bench gate and the
-    curation capstone's lm_keep decision). Same store contract as
-    queries/similarity.py:shared_ivf_index."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _LM_LOCK:
-        ent = _LM_STORE.get(key)
-        if ent is None:
-            for old in _LM_STORE.values():
-                # mark first: a mid-build holder unpersists its own
-                # frames on completion instead of leaking them
-                old["evicted"] = True
-                if old.get("val") is not None:
-                    for df in old["val"][:2]:
-                        try:
-                            df.unpersist()
-                        except Exception:
-                            pass
-            _LM_STORE.clear()
-            ent = {"val": None, "evicted": False,
-                   "build_lock": threading.Lock()}
-            _LM_STORE[key] = ent
-    with ent["build_lock"]:
-        if ent["val"] is None:
-            with timed_store_build("bigram_lm"):
-                wh = os.environ.get("SPARK_GRAFT_WAREHOUSE") or None
-                if wh:
-                    (uni, big, totals), _ = durable_lm_tables(
-                        spark, sf_dir, wh)
-                else:
-                    (docs,) = load(spark, sf_dir, "documents")
-                    uni, big, totals = train_bigram_lm(docs)
-                uni, big = uni.persist(), big.persist()
-                big.count()  # one job fills both count-table caches
-                uni.count()
-                ent["val"] = (uni, big, totals)
-        if ent["evicted"]:
-            for df in ent["val"][:2]:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-    return ent["val"]
+    curation capstone's lm_keep decision)."""
+
+    def build(wh: str | None) -> tuple[DataFrame, DataFrame, DataFrame]:
+        if wh:
+            (uni, big, totals), _ = durable_lm_tables(spark, sf_dir, wh)
+        else:
+            (docs,) = load(spark, sf_dir, "documents")
+            uni, big, totals = train_bigram_lm(docs)
+        uni, big = uni.persist(), big.persist()
+        big.count()  # one job fills both count-table caches
+        uni.count()
+        return uni, big, totals
+
+    return _SESSION.get(spark, sf_dir, "bigram_lm", build)
 
 
 def lm_perplexity_quality(spark: SparkSession, sf_dir: str) -> DataFrame:

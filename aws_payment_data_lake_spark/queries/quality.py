@@ -20,7 +20,7 @@ from aws_payment_data_lake_spark.operators.quality_model import (
     train_quality_model,
     weak_labels,
 )
-from aws_payment_data_lake_spark.sources import load
+from aws_payment_data_lake_spark.sources import load, store
 from aws_payment_data_lake_spark.telemetry import timed_store_build
 
 
@@ -49,23 +49,17 @@ def quality_model_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         neg_hi = float(by_label[0]["hi"]) if 0 in by_label else float("-inf")
         pos_lo = float(by_label[1]["lo"]) if 1 in by_label else float("inf")
 
-        wh = os.environ.get("SPARK_GRAFT_WAREHOUSE")
+        wh = store.warehouse()
         model = None
         if wh:
-            from aws_payment_data_lake_spark.sources.store import (
-                corpus_fingerprint,
-            )
-
             store_dir = os.path.join(wh, "quality_model")
-            fp = corpus_fingerprint(docs, "doc_id", "text")
+            fp = store.corpus_fingerprint(docs, "doc_id", "text")
             model = load_quality_model(spark, store_dir, fp)
-            if model is None:
-                with timed_store_build("quality_model"):
-                    model = train_quality_model(train, n_rows=n_train)
-                    save_quality_model(model, store_dir, fp)
         if model is None:
             with timed_store_build("quality_model"):
                 model = train_quality_model(train, n_rows=n_train)
+                if wh:
+                    save_quality_model(model, store_dir, fp)
     finally:
         labeled.unpersist()
 

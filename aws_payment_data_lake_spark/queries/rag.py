@@ -27,7 +27,6 @@ window) survives the vector tier without a join back.
 from __future__ import annotations
 
 import os
-import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -41,12 +40,12 @@ from aws_payment_data_lake_spark.operators.multimodal import (
 from aws_payment_data_lake_spark.sources import load
 from aws_payment_data_lake_spark.sources.store import (
     AppendFrom,
-    committed_version,
+    SessionStore,
+    append_cut,
     corpus_fingerprint,
     load_or_build,
-    read_store,
+    pure_append_prior,
 )
-from aws_payment_data_lake_spark.telemetry import timed_store_build
 
 # max chunks per doc is ceil(max_tokens/stride); 1000 leaves headroom
 CHUNK_STRIDE_ID = 1000
@@ -72,20 +71,12 @@ def chunk_embeddings(docs: DataFrame, window: int = 64,
             .select(F.col("doc_id").alias("vec_id"), "embedding"))
 
 
-# Session-scoped shared chunk index — same store contract as
-# queries/similarity.py:shared_ivf_index (the MinHash-store pattern):
-# built once per (application, sf_dir), `emb` and `assigned` persisted
-# with a count barrier, single-entry eviction. Production twin: the
-# chunk index is a stored table rebuilt when the corpus rolls; queries
-# only probe it.
-_CHUNK_STORE: dict = {}
-_CHUNK_LOCK = threading.Lock()
-
-# Durable tier (round 7, VERDICT r6 #7): same warehouse contract as the
-# MinHash and IVF stores — the chunk index IS a stored table in
-# production, rebuilt when the corpus rolls. Fingerprint over the
-# source documents' (doc_id, text): chunking + the stub embedder are
-# deterministic functions of exactly those columns.
+# The chunk index is stored state rebuilt when the corpus rolls; queries
+# only probe it. It lives in the two store tiers of sources/store.py
+# (tier ``rag_chunk_index``), fingerprinted over the source documents'
+# (doc_id, text): chunking and the stub embedder are deterministic
+# functions of exactly those columns.
+_SESSION = SessionStore()
 _CHUNK_TABLES = ("emb", "cents", "assigned")
 
 
@@ -95,106 +86,64 @@ def durable_chunk_index(
 ) -> tuple[tuple[DataFrame, DataFrame, DataFrame], bool]:
     """((emb, cents, assigned), built) from the warehouse store.
 
-    PURE-APPEND roll (the store-family contract; gate via the meta
-    `extras` max doc id — chunk vec_ids encode provenance but the
-    extras channel is the uniform mechanism): chunking and the stub
-    embedder are per-doc, so only the DELTA docs are chunked+embedded;
-    the frozen prior centroids assign the new chunks (the FAISS add()
-    contract, queries/similarity.py); emb and assigned hardlink the
-    prior version's part files (AppendFrom). Any edit/delete retrains."""
+    PURE-APPEND roll (sources/store.py:pure_append_prior): chunking and
+    the stub embedder are per-doc, so only the DELTA docs are
+    chunked+embedded; the frozen prior centroids assign the new chunks
+    (the FAISS add() contract, queries/similarity.py); emb and assigned
+    hardlink the prior version's part files (AppendFrom). Any
+    edit/delete retrains."""
     (docs,) = load(spark, sf_dir, "documents")
     fp = corpus_fingerprint(docs, "doc_id", "text")
     store_dir = os.path.join(warehouse, "rag_chunk_index")
 
     def build() -> dict:
         if ingest:
-            cv = committed_version(store_dir)
-            if cv is not None:
-                fp_prior, tables, extras = cv
-                pm = extras.get("max_doc_id")
-                if pm is not None and set(_CHUNK_TABLES) <= set(tables):
-                    base = docs.where(F.col("doc_id") <= pm)
-                    if corpus_fingerprint(
-                            base, "doc_id", "text") == fp_prior:
-                        prior = read_store(spark, store_dir, fp_prior,
-                                           _CHUNK_TABLES)
-                        emb_d = chunk_embeddings(
-                            docs.where(F.col("doc_id") > pm)).persist()
-                        emb_d.count()
-                        asg_d = S.assign_cells_blas(
-                            prior["cents"],
-                            emb_d.select(
-                                F.col("vec_id").alias("neighbor_id"),
-                                F.col("embedding").alias("ne")),
-                            "neighbor_id", "ne")
-                        vdir = os.path.join(store_dir, fp_prior)
-                        return {
-                            "emb": AppendFrom(
-                                emb_d, os.path.join(vdir, "emb")),
-                            "cents": prior["cents"],
-                            "assigned": AppendFrom(
-                                asg_d, os.path.join(vdir, "assigned"))}
+            pa = pure_append_prior(spark, docs, store_dir, _CHUNK_TABLES,
+                                   "doc_id", ("doc_id", "text"))
+            if pa is not None:
+                emb_d = chunk_embeddings(pa.delta).persist()
+                emb_d.count()
+                asg_d = S.assign_cells_blas(
+                    pa.frames["cents"],
+                    emb_d.select(F.col("vec_id").alias("neighbor_id"),
+                                 F.col("embedding").alias("ne")),
+                    "neighbor_id", "ne")
+                return {
+                    "emb": AppendFrom(emb_d, os.path.join(pa.vdir, "emb")),
+                    "cents": pa.frames["cents"],
+                    "assigned": AppendFrom(
+                        asg_d, os.path.join(pa.vdir, "assigned"))}
         emb = chunk_embeddings(docs).persist()
         emb.count()  # one Arrow pass feeds both k-means and the write
         cents, assigned = S.build_ivf_index(emb)
         return {"emb": emb, "cents": cents, "assigned": assigned}
 
-    frames, built = load_or_build(
-        spark, store_dir, fp, _CHUNK_TABLES, build,
-        extras=lambda: {
-            "max_doc_id": docs.agg(F.max("doc_id")).first()[0]})
+    frames, built = load_or_build(spark, store_dir, fp, _CHUNK_TABLES,
+                                  build, extras=append_cut(docs, "doc_id"))
     return (frames["emb"], frames["cents"], frames["assigned"]), built
 
 
 def shared_chunk_index(spark: SparkSession, sf_dir: str,
                        ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(emb, cents, assigned) for ``sf_dir``'s chunked documents."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _CHUNK_LOCK:
-        ent = _CHUNK_STORE.get(key)
-        if ent is None:
-            for old in _CHUNK_STORE.values():
-                # mark first: a builder still mid-build (val None) sees
-                # the flag after finishing and unpersists its OWN frames
-                # — evicting here would otherwise leak them for the
-                # session (ADVICE r5)
-                old["evicted"] = True
-                if old.get("val") is not None:
-                    for df in (old["val"][0], old["val"][2]):
-                        try:
-                            df.unpersist()
-                        except Exception:
-                            pass
-            _CHUNK_STORE.clear()
-            ent = {"val": None, "evicted": False,
-                   "build_lock": threading.Lock()}
-            _CHUNK_STORE[key] = ent
-    with ent["build_lock"]:
-        if ent["val"] is None:
-            with timed_store_build("rag_chunk_index"):
-                wh = os.environ.get("SPARK_GRAFT_WAREHOUSE") or None
-                if wh:
-                    (emb, cents, assigned), _ = durable_chunk_index(
-                        spark, sf_dir, wh)
-                    emb = emb.persist()
-                else:
-                    (docs,) = load(spark, sf_dir, "documents")
-                    emb = chunk_embeddings(docs).persist()
-                    emb.count()
-                    cents, assigned = S.build_ivf_index(emb)
-                assigned = assigned.persist()
-                assigned.count()
-                ent["val"] = (emb, cents, assigned)
-        if ent["evicted"]:
-            # late-finishing builder of an already-evicted entry: drop
-            # the cache immediately (the frames stay valid, merely
-            # uncached — recompute-from-source on use)
-            for df in (ent["val"][0], ent["val"][2]):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-    return ent["val"]
+    """(emb, cents, assigned) for ``sf_dir``'s chunked documents —
+    built once per (Spark application, sf_dir), `emb` and `assigned`
+    persisted with a count barrier."""
+
+    def build(wh: str | None) -> tuple[DataFrame, DataFrame, DataFrame]:
+        if wh:
+            (emb, cents, assigned), _ = durable_chunk_index(
+                spark, sf_dir, wh)
+            emb = emb.persist()
+        else:
+            (docs,) = load(spark, sf_dir, "documents")
+            emb = chunk_embeddings(docs).persist()
+            emb.count()
+            cents, assigned = S.build_ivf_index(emb)
+        assigned = assigned.persist()
+        assigned.count()
+        return emb, cents, assigned
+
+    return _SESSION.get(spark, sf_dir, "rag_chunk_index", build)
 
 
 def rag_chunk_retrieval(spark: SparkSession, sf_dir: str,

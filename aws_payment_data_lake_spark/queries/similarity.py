@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -11,43 +10,21 @@ from pyspark.sql import DataFrame, SparkSession
 from aws_payment_data_lake_spark.operators import similarity as S
 from aws_payment_data_lake_spark.queries import register
 from aws_payment_data_lake_spark.sources import load
-from aws_payment_data_lake_spark.telemetry import timed_store_build
 from aws_payment_data_lake_spark.sources.store import (
     AppendFrom,
+    SessionStore,
+    append_cut,
     corpus_fingerprint,
     load_or_build,
     pure_append_prior,
 )
 
-# ---------------------------------------------------------------------------
-# Session-scoped shared IVF index — the ANN twin of the MinHash store
-# (queries/dedup.py): an IVF index is BUILT once and probed many times,
-# so the (centroids, assigned-cells) pair is session state keyed by
-# (applicationId, sf_dir) with single-entry eviction, not per-query
-# work. Same locking contract as the dedup store: the global lock
-# covers dict bookkeeping only; the build lock serializes builders.
-# ---------------------------------------------------------------------------
-_IVF_STORE: dict = {}
-_IVF_LOCK = threading.Lock()
-
-# Durable tier (round 6): same warehouse contract as the MinHash store
-# (queries/dedup.py, sources/store.py) — an IVF index IS a stored
-# table in production (FAISS shards / a cent_id-partitioned silver
-# table), rebuilt when the corpus rolls.
+# The IVF index is built once and probed many times: (centroids,
+# assigned cells) live in the two store tiers of sources/store.py
+# (tier ``ivf_index``), the ANN twin of the MinHash store.
+_SESSION = SessionStore()
 _IVF_TABLES = ("cents", "assigned")
-
-
-def _pure_append_prior(spark: SparkSession, emb: DataFrame,
-                       store_dir: str, tables: tuple[str, ...],
-                       id_table: str, id_col: str,
-                       ) -> tuple[dict[str, DataFrame], DataFrame,
-                                  str] | None:
-    """ANN instantiation of the generic pure-append ingest gate
-    (sources/store.py:pure_append_prior — rationale and the measured
-    join-free design live there): embeddings corpus, (vec_id,
-    embedding) fingerprint."""
-    return pure_append_prior(spark, emb, store_dir, tables, id_table,
-                             id_col, "vec_id", ("vec_id", "embedding"))
+_EMB_FP = ("vec_id", "embedding")
 
 
 def durable_ivf_index(spark: SparkSession, sf_dir: str, warehouse: str,
@@ -57,7 +34,7 @@ def durable_ivf_index(spark: SparkSession, sf_dir: str, warehouse: str,
     Spark application whose embeddings are unchanged reads the index
     back with zero recomputation; a corpus roll flips the fingerprint
     and rebuilds (tests/test_durable_store.py). A PURE-APPEND roll
-    (``ingest=True``, gated by `_pure_append_prior`) rebuilds
+    (``ingest=True``, sources/store.py:pure_append_prior) rebuilds
     incrementally: frozen centroids assign only the delta (the FAISS
     add() contract), and the new version's assigned table is the
     delta's part files plus HARDLINKS to the prior version's
@@ -66,31 +43,26 @@ def durable_ivf_index(spark: SparkSession, sf_dir: str, warehouse: str,
     makes on append."""
     (emb,) = load(spark, sf_dir, "embeddings")
     store_dir = os.path.join(warehouse, "ivf_index")
-    fp = corpus_fingerprint(emb, "vec_id", "embedding")
+    fp = corpus_fingerprint(emb, *_EMB_FP)
 
     def build() -> dict:
         if ingest:
-            pa = _pure_append_prior(spark, emb, store_dir, _IVF_TABLES,
-                                    "assigned", "neighbor_id")
+            pa = pure_append_prior(spark, emb, store_dir, _IVF_TABLES,
+                                   "vec_id", _EMB_FP)
             if pa is not None:
-                frames, delta, fp_prior = pa
-                # materialize ONLY the delta's assignments; the new
-                # version's table directory hardlinks the prior part
-                # files (AppendFrom) — write IO ∝ delta, the manifest
-                # move a table format makes on append
                 new_rows = S.assign_cells_blas(
-                    frames["cents"],
-                    delta.select(F.col("vec_id").alias("neighbor_id"),
-                                 F.col("embedding").alias("ne")),
+                    pa.frames["cents"],
+                    pa.delta.select(F.col("vec_id").alias("neighbor_id"),
+                                    F.col("embedding").alias("ne")),
                     "neighbor_id", "ne")
-                return {"cents": frames["cents"],
+                return {"cents": pa.frames["cents"],
                         "assigned": AppendFrom(new_rows, os.path.join(
-                            store_dir, fp_prior, "assigned"))}
+                            pa.vdir, "assigned"))}
         cents, assigned = S.build_ivf_index(emb)
         return {"cents": cents, "assigned": assigned}
 
-    frames, built = load_or_build(spark, store_dir, fp,
-                                  _IVF_TABLES, build)
+    frames, built = load_or_build(spark, store_dir, fp, _IVF_TABLES, build,
+                                  extras=append_cut(emb, "vec_id"))
     return (frames["cents"], frames["assigned"]), built
 
 
@@ -98,46 +70,19 @@ def shared_ivf_index(spark: SparkSession,
                      sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(cents, assigned) for ``sf_dir``'s embeddings — built once per
     (Spark application, sf_dir), `assigned` persisted with a count
-    barrier, reused by every probe in the session. With
-    SPARK_GRAFT_WAREHOUSE set, the build goes through the durable
-    parquet tier instead (the memo then caches the read-back frames)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _IVF_LOCK:
-        ent = _IVF_STORE.get(key)
-        if ent is None:
-            for old in _IVF_STORE.values():
-                # mark first so a mid-build holder unpersists its own
-                # frames on completion instead of leaking them
-                # (ADVICE r5; same pattern as queries/rag.py)
-                old["evicted"] = True
-                if old.get("val") is not None:
-                    try:
-                        old["val"][1].unpersist()
-                    except Exception:
-                        pass
-            _IVF_STORE.clear()
-            ent = {"val": None, "evicted": False,
-                   "build_lock": threading.Lock()}
-            _IVF_STORE[key] = ent
-    with ent["build_lock"]:
-        if ent["val"] is None:
-            with timed_store_build("ivf_index"):
-                wh = os.environ.get("SPARK_GRAFT_WAREHOUSE") or None
-                if wh:
-                    (cents, assigned), _ = durable_ivf_index(
-                        spark, sf_dir, wh)
-                else:
-                    (emb,) = load(spark, sf_dir, "embeddings")
-                    cents, assigned = S.build_ivf_index(emb)
-                assigned = assigned.persist()
-                assigned.count()
-                ent["val"] = (cents, assigned)
-        if ent["evicted"]:
-            try:
-                ent["val"][1].unpersist()
-            except Exception:
-                pass
-    return ent["val"]
+    barrier, reused by every probe in the session."""
+
+    def build(wh: str | None) -> tuple[DataFrame, DataFrame]:
+        if wh:
+            (cents, assigned), _ = durable_ivf_index(spark, sf_dir, wh)
+        else:
+            (emb,) = load(spark, sf_dir, "embeddings")
+            cents, assigned = S.build_ivf_index(emb)
+        assigned = assigned.persist()
+        assigned.count()
+        return cents, assigned
+
+    return _SESSION.get(spark, sf_dir, "ivf_index", build)
 
 
 @register(
@@ -427,23 +372,23 @@ def durable_pq_index(spark: SparkSession, sf_dir: str, warehouse: str,
                      ingest: bool = True,
                      ) -> tuple[tuple[DataFrame, list], bool]:
     """((codes, codebooks), built) from the warehouse store. A
-    pure-append corpus roll (`_pure_append_prior`) encodes only the
-    delta with the FROZEN stored codebooks (`S.pq_ingest`); any edit
+    pure-append corpus roll (sources/store.py:pure_append_prior)
+    encodes only the delta with the FROZEN stored codebooks; any edit
     or delete falls back to a full retrain+re-encode."""
     (emb,) = load(spark, sf_dir, "embeddings")
     store_dir = os.path.join(warehouse, "pq_index")
-    fp = corpus_fingerprint(emb, "vec_id", "embedding")
+    fp = corpus_fingerprint(emb, *_EMB_FP)
 
     def build() -> dict:
         if ingest:
-            pa = _pure_append_prior(spark, emb, store_dir, _PQ_TABLES,
-                                    "codes", "vec_id")
+            pa = pure_append_prior(spark, emb, store_dir, _PQ_TABLES,
+                                   "vec_id", _EMB_FP)
             if pa is not None:
-                frames, delta, fp_prior = pa
                 return {"codes": AppendFrom(
-                            S.pq_encode(delta, _books_of(frames["books"])),
-                            os.path.join(store_dir, fp_prior, "codes")),
-                        "books": frames["books"]}
+                            S.pq_encode(pa.delta,
+                                        _books_of(pa.frames["books"])),
+                            os.path.join(pa.vdir, "codes")),
+                        "books": pa.frames["books"]}
         books = S.train_pq_codebooks(emb)
         codes = S.pq_encode(emb, books)
         rows = [(j, c, books[j][c])
@@ -453,8 +398,8 @@ def durable_pq_index(spark: SparkSession, sf_dir: str, warehouse: str,
             spark, rows, "subspace int, code int, ce array<double>")
         return {"codes": codes, "books": bdf}
 
-    frames, built = load_or_build(spark, store_dir, fp,
-                                  _PQ_TABLES, build)
+    frames, built = load_or_build(spark, store_dir, fp, _PQ_TABLES, build,
+                                  extras=append_cut(emb, "vec_id"))
     return (frames["codes"], _books_of(frames["books"])), built
 
 

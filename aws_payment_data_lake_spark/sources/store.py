@@ -1,24 +1,34 @@
-"""Durable operator-state store: derived tables materialized as parquet
-under a warehouse directory, keyed by a corpus fingerprint.
+"""Operator-state store for derived corpus tables (shingle/signature
+tables, LSH pair graphs, IVF/PQ/chunk indexes, LM counts), in two tiers.
 
-The session-scoped shared stores (queries/dedup.py, queries/similarity.py,
-queries/rag.py) memoize expensive derived state — shingle/signature
-tables, LSH pair graphs, IVF indexes — for the lifetime of ONE Spark
-application. Their production twin is a STORED silver table: built when
-the corpus rolls, read (not recomputed) by every later job. This module
-is that twin (VERDICT r5 #1): `load_or_build` materializes a named set
-of DataFrames as parquet tables plus a `_STORE_META.json` commit marker
-carrying the corpus fingerprint; any later SparkSession — a different
-application, a different day — whose corpus fingerprint still matches
-reads the tables back with ZERO recomputation, and a corpus change
-(append, edit, delete) flips the fingerprint and triggers a rebuild.
+Session tier (`SessionStore`): a per-application memo. Each store
+family (queries/dedup.py, lm.py, similarity.py, rag.py) keeps one
+instance holding a single live key, ``(applicationId, sf_dir)``. The
+first consumer of a tier builds it (persist + count barrier inside the
+family's builder, timed under the tier name in ``store_build_sec``);
+later consumers in the same application get the same frames back. A
+new application or scale factor evicts the old entry and unpersists
+its cached frames, so correctness never depends on the memo: every
+entry is rebuilt from the source on first touch.
 
-Crash + concurrency safety (round 7, VERDICT r6 #4 / ADVICE r6): every
-build lands in its own FINGERPRINT-SCOPED version directory
-(``<store>/<fingerprint>/<table>``), staged under a writer-private
-``.build-*`` name and atomically renamed to the fingerprint name; the
-meta file is renamed into place LAST and points at one complete
-version. Consequences, each test-asserted (tests/test_durable_store.py):
+Durable tier (`load_or_build`): when a warehouse directory is set
+(`warehouse()`, the ``SPARK_GRAFT_WAREHOUSE`` env var), the session
+builders go through this tier and the memo caches the read-back
+frames. `load_or_build` materializes a named set of DataFrames as
+parquet tables plus a `_STORE_META.json` commit marker carrying the
+corpus fingerprint; any later SparkSession — a different application,
+a different day — whose corpus fingerprint still matches reads the
+tables back with ZERO recomputation, and a corpus change (append,
+edit, delete) flips the fingerprint and triggers a rebuild. A
+pure-append change rolls incrementally through the one gate,
+`pure_append_prior`.
+
+Crash + concurrency safety: every build lands in its own
+FINGERPRINT-SCOPED version directory (``<store>/<fingerprint>/<table>``),
+staged under a writer-private ``.build-*`` name and atomically renamed
+to the fingerprint name; the meta file is renamed into place LAST and
+points at one complete version. Consequences, each test-asserted
+(tests/test_durable_store.py):
   * a crash mid-build leaves only an orphan staging dir — no meta, no
     half-version; the next consumer rebuilds (repeated work, never a
     corrupt read);
@@ -47,9 +57,11 @@ import json
 import os
 import re
 import shutil
+import threading
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
+from typing import Any, NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +73,73 @@ STORE_VERSION = 2  # v2: versioned layout + sum-folded fingerprint
 
 # test/telemetry hook: one entry per actual build (store_dir, fingerprint)
 BUILD_EVENTS: list[tuple[str, str]] = []
+
+
+def warehouse() -> str | None:
+    """The durable tier's root directory, or None when only the session
+    tier is on (the driver/bench default)."""
+    return os.environ.get("SPARK_GRAFT_WAREHOUSE") or None
+
+
+def _release(frames: Iterable) -> None:
+    """Unpersist every cached frame in ``frames``. Best effort: the
+    release runs on eviction and after a store write, where the frames'
+    session may already be stopped — a failed unpersist leaves at worst
+    an orphan cache, which must not fail the query that triggered it."""
+    for df in frames:
+        if isinstance(df, DataFrame) and df.is_cached:
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+
+
+class _Entry:
+    def __init__(self) -> None:
+        self.values: dict[str, tuple] = {}
+        self.locks: dict[str, threading.Lock] = {}
+        self.evicted = False
+
+
+class SessionStore:
+    """The session tier: a memo of built tiers for ONE live key,
+    ``(applicationId, sf_dir)``. `get` evicts a stale key (marks its
+    entry evicted, then unpersists its cached frames), builds a missing
+    tier under that tier's own lock — so a long Spark materialization
+    serializes only same-tier builders — and returns the same tuple
+    object on every later hit. A builder that finishes after its entry
+    was evicted unpersists its own frames instead of leaking them (the
+    frames stay valid, merely uncached)."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()  # guards the key/entry swap only
+        self._key: tuple[str, str] | None = None
+        self._entry = _Entry()
+
+    def get(self, spark: SparkSession, sf_dir: str, tier: str,
+            build: Callable[[str | None], tuple]) -> tuple:
+        """The ``tier`` tuple for ``sf_dir``, built on first touch by
+        ``build(warehouse())`` (timed under ``tier``)."""
+        key = (spark.sparkContext.applicationId, sf_dir)
+        with self._lock:
+            if key != self._key:
+                old = self._entry
+                # mark first: a builder still mid-build sees the flag
+                # once it finishes and releases its own frames
+                old.evicted = True
+                for val in list(old.values.values()):
+                    _release(val)
+                self._key, self._entry = key, _Entry()
+            ent = self._entry
+            lock = ent.locks.setdefault(tier, threading.Lock())
+        with lock:
+            if tier not in ent.values:
+                with timed_store_build(tier):
+                    ent.values[tier] = build(warehouse())
+            val = ent.values[tier]
+            if ent.evicted:
+                _release(val)
+        return val
 
 
 _SUM_MOD = 1_000_000_007  # sum fold bound: n * 1e9 < 2^63 for n < 9.2e9 rows
@@ -133,10 +212,9 @@ def read_store(spark: SparkSession, store_dir: str, fingerprint: str,
 def committed_version(store_dir: str
                       ) -> tuple[str, list[str], dict] | None:
     """(fingerprint, tables, extras) the meta pointer currently
-    commits, or None when the store is empty/uncommitted. Lets an
-    INCREMENTAL builder read the prior version's tables and compute
-    only the delta against a rolled corpus (queries/similarity.py ANN
-    ingest, queries/dedup.py span-index roll): the meta is the
+    commits, or None when the store is empty/uncommitted. Lets the
+    pure-append gate read the prior version's tables while a builder
+    computes only the delta against a rolled corpus: the meta is the
     snapshot pointer, so whatever it names is a complete, immutable
     version — safe to read while a new version is being staged.
     ``extras`` is the small builder-declared metadata dict recorded at
@@ -300,44 +378,56 @@ def _commit_meta(store_dir: str, fingerprint: str,
     _gc_old_versions(store_dir, fingerprint, previous)
 
 
-def pure_append_prior(spark: SparkSession, df: DataFrame, store_dir: str,
-                      tables: tuple[str, ...], id_table: str,
-                      id_col: str, df_id_col: str,
-                      fp_cols: tuple[str, ...],
-                      ) -> tuple[dict[str, DataFrame], DataFrame,
-                                 str] | None:
-    """Generic incremental-ingest gate: when this store's committed
-    version is a PURE-APPEND ancestor of ``df`` — every prior row
-    still present byte-identical — return ``(prior_frames,
-    delta_rows, prior_fingerprint)`` so a builder can grow derived
-    state from frozen artifacts instead of recomputing the corpus.
+_CUT = "max_id"  # meta extras key of the corpus cut pure_append_prior reads
 
-    The prior subset is cut JOIN-FREE at the prior version's max id
-    (read from ``id_table``.``id_col`` — one column-pruned scan): a
-    log-structured corpus appends with increasing ids, so base =
-    ``df_id_col <= prior_max`` and delta = the rest, two partition-
-    prunable filters, zero shuffles. The base subset is then
-    re-fingerprinted over ``fp_cols`` and matched against the
-    committed version's own fingerprint (which IS its dir name);
-    any edit, delete, id reuse, or below-max interleaved append flips
-    it and returns None — full rebuild, conservative, never wrong.
-    (An id-set-membership draft of this gate cost three corpus
-    shuffles and made an ANN ingest roll slower than the rebuild it
-    replaced — 11.2 vs 8.4 s at 200k vectors.)"""
+
+def append_cut(df: DataFrame, id_col: str) -> Callable[[], dict]:
+    """``extras`` for `load_or_build` recording the corpus max id, the
+    cut `pure_append_prior` splits the next roll at."""
+    return lambda: {_CUT: df.agg(F.max(id_col)).first()[0]}
+
+
+class PriorVersion(NamedTuple):
+    frames: dict[str, DataFrame]  # the committed version's tables
+    delta: DataFrame              # corpus rows above the cut
+    cut: Any                      # max id the committed version covers
+    vdir: str                     # its version directory
+
+
+def pure_append_prior(spark: SparkSession, df: DataFrame, store_dir: str,
+                      tables: tuple[str, ...], df_id_col: str,
+                      fp_cols: tuple[str, ...]) -> PriorVersion | None:
+    """The incremental-ingest gate: when this store's committed version
+    is a PURE-APPEND ancestor of ``df`` — every prior row still present
+    byte-identical — return it as a `PriorVersion` so a builder can
+    grow derived state from frozen artifacts instead of recomputing
+    the corpus.
+
+    The prior subset is cut JOIN-FREE at the corpus max id the version
+    recorded at commit (`append_cut`): a log-structured corpus appends
+    with increasing ids, so base = ``df_id_col <= cut`` and delta = the
+    rest, two partition-prunable filters, zero shuffles. The base
+    subset is then re-fingerprinted over ``fp_cols`` and matched
+    against the committed version's own fingerprint (which IS its dir
+    name); any edit, delete, id reuse, or below-max interleaved append
+    flips it and returns None — full rebuild, conservative, never
+    wrong. A version committed without a cut also returns None. (An
+    id-set-membership draft of this gate cost three corpus shuffles
+    and made an ANN ingest roll slower than the rebuild it replaced —
+    11.2 vs 8.4 s at 200k vectors.)"""
     cv = committed_version(store_dir)
     if cv is None:
         return None
-    fp_prior, meta_tables, _ = cv
-    if not set(tables) <= set(meta_tables):
+    fp_prior, meta_tables, extras = cv
+    cut = extras.get(_CUT)
+    if cut is None or not set(tables) <= set(meta_tables):
         return None
-    frames = read_store(spark, store_dir, fp_prior, tables)
-    prior_max = frames[id_table].agg(F.max(id_col)).first()[0]
-    if prior_max is None:
+    if corpus_fingerprint(df.where(F.col(df_id_col) <= cut),
+                          *fp_cols) != fp_prior:
         return None
-    base = df.where(F.col(df_id_col) <= prior_max)
-    if corpus_fingerprint(base, *fp_cols) != fp_prior:
-        return None
-    return frames, df.where(F.col(df_id_col) > prior_max), fp_prior
+    return PriorVersion(read_store(spark, store_dir, fp_prior, tables),
+                        df.where(F.col(df_id_col) > cut), cut,
+                        _version_dir(store_dir, fp_prior))
 
 
 def load_or_build(spark: SparkSession, store_dir: str, fingerprint: str,
@@ -359,7 +449,7 @@ def load_or_build(spark: SparkSession, store_dir: str, fingerprint: str,
     ``extras`` (dict, or a zero-arg callable evaluated only when a
     commit actually happens — so a fresh-store hit never pays for it)
     is recorded in the meta and surfaced by `committed_version`; used
-    by pure-append ingest gates to remember e.g. the corpus max id."""
+    by `append_cut` to remember the corpus max id for the next roll."""
 
     def _extras() -> dict | None:
         return extras() if callable(extras) else extras
@@ -387,10 +477,7 @@ def load_or_build(spark: SparkSession, store_dir: str, fingerprint: str,
                     f"builder did not produce {sorted(missing)}")
             write_store(store_dir, fingerprint, frames, _extras())
         BUILD_EVENTS.append((store_dir, fingerprint))
-        for df in frames.values():
-            try:
-                (df.delta if isinstance(df, AppendFrom) else df).unpersist()
-            except Exception:
-                pass
+        _release(df.delta if isinstance(df, AppendFrom) else df
+                 for df in frames.values())
         return read_store(spark, store_dir, fingerprint, tables), True
     return read_store(spark, store_dir, fingerprint, tables), False

@@ -28,6 +28,11 @@ cell is stringified TYPE-SENSITIVELY:
 The real driver scores only the FIRST 50 registered queries (registration
 order); this sim warns when the registry exceeds that window.
 
+The session is built the way the driver builds it: a bare
+``SparkSession.builder.master("local[N]")`` with only the UTC session time
+zone set — NOT ``session.get_spark()``, whose extra confs (Arrow, AQE
+tuning, memory) a query must never depend on.
+
 Usage: python scripts/driver_sim.py [--sf-dir /root/testdata/sf0.01]
 """
 
@@ -39,6 +44,7 @@ import sys
 import time
 
 import duckdb
+from pyspark.sql import SparkSession
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -48,7 +54,7 @@ from aws_payment_data_lake_spark.oracle import (  # noqa: E402
     diff_results,
     pandas_rows,
 )
-from aws_payment_data_lake_spark.session import get_spark  # noqa: E402
+from aws_payment_data_lake_spark.session import cpu_count  # noqa: E402
 from aws_payment_data_lake_spark.sources import TESTDATA_TABLES  # noqa: E402
 
 DRIVER_QUERY_CAP = 50
@@ -61,7 +67,10 @@ def main() -> int:
     ap.add_argument("--skip-smoke", action="store_true")
     args = ap.parse_args()
 
-    spark = get_spark(app_name="driver-sim")
+    spark = (SparkSession.builder.appName("driver-sim")
+             .master(f"local[{cpu_count()}]")
+             .config("spark.sql.session.timeZone", "UTC")
+             .getOrCreate())
 
     # ---- t1 smoke ----
     if not args.skip_smoke:

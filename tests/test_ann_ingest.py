@@ -16,13 +16,15 @@ from tests.conftest import SF_DIR
 from aws_payment_data_lake_spark.operators import similarity as S
 from aws_payment_data_lake_spark.queries.similarity import (
     _books_of,
-    _pure_append_prior,
     ann_index_ingest,
     durable_ivf_index,
     durable_pq_index,
 )
 from aws_payment_data_lake_spark.sources import load
-from aws_payment_data_lake_spark.sources.store import committed_version
+from aws_payment_data_lake_spark.sources.store import (
+    committed_version,
+    pure_append_prior,
+)
 
 
 def _write_corpus(emb, path: str) -> str:
@@ -129,13 +131,15 @@ def test_gate_rejects_edit_and_delete(spark, tmp_path):
     store_dir = os.path.join(wh, "ivf_index")
     (full,) = load(spark, full_dir, "embeddings")
 
+    def gate(corpus):
+        return pure_append_prior(spark, corpus, store_dir,
+                                 ("cents", "assigned"), "vec_id",
+                                 ("vec_id", "embedding"))
+
     # pure append passes the gate; delta is exactly the appended ids
-    pa = _pure_append_prior(spark, full, store_dir,
-                            ("cents", "assigned"), "assigned",
-                            "neighbor_id")
+    pa = gate(full)
     assert pa is not None
-    _, delta, _ = pa
-    assert (sorted(r["vec_id"] for r in delta.collect())
+    assert (sorted(r["vec_id"] for r in pa.delta.collect())
             == sorted(r["vec_id"] for r in
                       full.where(F.col("vec_id") >= cut).collect()))
 
@@ -145,14 +149,10 @@ def test_gate_rejects_edit_and_delete(spark, tmp_path):
         F.when(F.col("vec_id") == 0,
                F.transform("embedding", lambda x: x + F.lit(1.0)))
         .otherwise(F.col("embedding")))
-    assert _pure_append_prior(spark, edited, store_dir,
-                              ("cents", "assigned"), "assigned",
-                              "neighbor_id") is None
+    assert gate(edited) is None
 
     # delete of a base row likewise forces a retrain
-    assert _pure_append_prior(spark, full.where(F.col("vec_id") != 1),
-                              store_dir, ("cents", "assigned"),
-                              "assigned", "neighbor_id") is None
+    assert gate(full.where(F.col("vec_id") != 1)) is None
 
 
 def test_span_index_pure_append_roll(spark, tmp_path):
@@ -175,7 +175,7 @@ def test_span_index_pure_append_roll(spark, tmp_path):
     idx1, b1 = durable_span_index(spark, base, wh)
     assert b1
     fp1, _, extras1 = committed_version(store_dir)
-    assert extras1["max_doc_id"] == base.agg(F.max("doc_id")).first()[0]
+    assert extras1["max_id"] == base.agg(F.max("doc_id")).first()[0]
 
     idx2, b2 = durable_span_index(spark, docs, wh)
     assert b2

@@ -19,6 +19,7 @@ from aws_payment_data_lake_spark.queries.dedup import (
 from aws_payment_data_lake_spark.sources import load
 from aws_payment_data_lake_spark.sources.store import (
     BUILD_EVENTS,
+    SessionStore,
     corpus_fingerprint,
 )
 
@@ -264,8 +265,8 @@ def test_shared_store_consults_warehouse(spark, tmp_path, monkeypatch):
     import aws_payment_data_lake_spark.queries.dedup as QD
 
     wh = str(tmp_path / "wh3")
-    monkeypatch.setenv(QD.WAREHOUSE_ENV, wh)
-    monkeypatch.setattr(QD, "_SHARED_MINHASH", {})
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", wh)
+    monkeypatch.setattr(QD, "_SESSION", SessionStore())
     sh, sigs = QD.shared_base_tables(spark, SF_DIR)
     hits = glob.glob(os.path.join(wh, "minhash_base", "v*", "sigs"))
     assert len(hits) == 1

@@ -18,6 +18,7 @@ from aws_payment_data_lake_spark.operators.lm_quality import (
     train_bigram_lm,
 )
 from aws_payment_data_lake_spark.sources import load
+from aws_payment_data_lake_spark.sources.store import SessionStore
 
 _DUCK_TWIN = """
 WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk
@@ -139,7 +140,7 @@ def test_shared_and_durable_lm_store(spark, tmp_path, monkeypatch):
     )
 
     (docs,) = load(spark, SF_DIR, "documents")
-    monkeypatch.setattr(QL, "_LM_STORE", {})
+    monkeypatch.setattr(QL, "_SESSION", SessionStore())
     shared = shared_lm_tables(spark, SF_DIR)
     base = {r["doc_id"]: r["avg_logprob"]
             for r in lm_perplexity(docs).collect()}
