@@ -70,6 +70,21 @@ def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _input_bytes(spark: SparkSession, path: str) -> int:
+    """Size of an input zone: one file, or a directory's entries minus
+    the ``_``/``.`` names Spark's file source skips. Sized through the
+    Hadoop FileSystem of the path, so an object-store URI sizes the
+    same way a local path does."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    status = fs.getFileStatus(hpath)
+    if not status.isDirectory():
+        return status.getLen()
+    return sum(s.getLen() for s in fs.listStatus(hpath)
+               if not s.getPath().getName().startswith(("_", ".")))
+
+
 @register(
     "streaming_windows_live",
     oracle="""
@@ -163,13 +178,7 @@ def streaming_windows_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning-invariant either way.
     # Restored after the drain: conf is read at stream start, and the
     # batch union below should keep the session's normal parallelism.
-    try:
-        in_bytes = os.path.getsize(path)
-    except OSError:  # directory zone: sum the part files
-        in_bytes = sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path) if not f.startswith(("_", ".")))
-    shards = max(1, in_bytes // (64 * 1024 * 1024))
+    shards = max(1, _input_bytes(spark, path) // (64 * 1024 * 1024))
     saved_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shards))
     try:

@@ -35,7 +35,10 @@ Commit protocol (the ACID core):
      writer wins each version; the loser re-reads the log and applies
      its conflict rule). No placeholder-then-rename window exists in
      which an empty commit file is visible.
-  3. Conflict rules on losing the race, per operation:
+  3. Conflict rules on losing the race: every commit goes through
+     ``TxnTable._commit``, which replays the head and hands it to the
+     verb's rebase — abort, fix the commit up for the new head, or
+     publish nothing (an already-applied txn marker). Per operation:
        * append        — retry at the next version unconditionally
                          (appends are commutative; schema revalidated).
        * overwrite     — recompute removes against the new head, retry
@@ -43,10 +46,11 @@ Commit protocol (the ACID core):
        * compact       — retry iff every input file is still live
                          (concurrent APPENDS commute with compaction;
                          a concurrent remove of an input aborts).
-       * merge         — abort on ANY concurrent commit
-                         (ConcurrentWriteError): even a pure append may
-                         carry rows matching the merge keys, so
-                         read-modify-write is serialized strictly.
+       * merge         — retry iff the winner provably commutes (key-
+                         disjoint adds, none of the merge's input files
+                         rewritten), else ConcurrentWriteError.
+       * delete/update — abort on ANY concurrent commit.
+     ``sources/TXLOG_FORMAT.md`` has the full conflict matrix.
   4. Durability levers that cost nothing here: snapshot reads pin a
      file LIST, so a reader holding a DataFrame across a concurrent
      overwrite/merge keeps reading the old files until ``vacuum``
@@ -82,6 +86,7 @@ import re
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -157,7 +162,7 @@ class ProtocolError(RuntimeError):
 def _commit_features(c: dict[str, Any]) -> set[str]:
     """Features a commit's CONTENT activates (type_widening is not
     content-detectable — its set_schema looks like any other — so
-    widen_column tags it explicitly via _try_publish(features=...))."""
+    widen_column tags it explicitly via _commit(features=...))."""
     feats: set[str] = set()
     if c.get("column_mapping") or c.get("dropped_physical"):
         feats.add("column_mapping")
@@ -249,6 +254,12 @@ _STATS_SAFE = (int, float, str, bool)
 class ConcurrentWriteError(RuntimeError):
     """A read-modify-write (merge; compact with a removed input) lost
     the optimistic-concurrency race to a conflicting commit."""
+
+
+class _Restart(Exception):
+    """Raised by a rewrite's rebase when its staged output is stale
+    (a concurrent DV change on an input, or a second lost race): the
+    rewrite restarts from a fresh head."""
 
 
 class CheckViolationError(ValueError):
@@ -360,6 +371,11 @@ class Snapshot:
         return StructType([
             StructField(self.phys(f.name), f.dataType, f.nullable)
             for f in s.fields])
+
+
+# rebase(head, commit) after a lost publish race: raise, return the
+# commit fixed up for the new head, or None (already applied)
+_Rebase = Callable[[Snapshot, dict[str, Any]], "dict[str, Any] | None"]
 
 
 def _json_safe(v: Any) -> Any:
@@ -670,16 +686,16 @@ class TxnTable:
         """Atomically claim ``version`` with the full commit content.
         True on success, False if another writer took the version.
 
-        Protocol gate (single choke point — every commit path ends
-        here): features the commit's content activates (plus explicit
+        Protocol gate (single choke point — _commit is the only
+        caller): features the commit's content activates (plus explicit
         ``features`` tags for the content-invisible ones, e.g.
         type_widening) upgrade the table protocol inside this same
         commit; version 0 always carries an explicit protocol. The
         write is refused with ProtocolError if the table demands
         writer capabilities this client lacks — before any log byte
-        is published. Retry loops re-enter here after a fresh head
-        replay, so the base protocol is never staler than the version
-        being claimed."""
+        is published. _commit re-enters here after a lost race only
+        through a fresh head replay, so the base protocol is never
+        staler than the version being claimed."""
         base = getattr(self, "_head_protocol", None)
         feats = _commit_features(commit) | set(features)
         up = _upgrade_protocol(base, feats)
@@ -764,6 +780,130 @@ class TxnTable:
             json.dump({"version": snap.version, "parts": n_parts}, f)
             tmpname = f.name
         os.replace(tmpname, ptr)
+
+    def _commit(self, snap: Snapshot | None, commit: dict[str, Any],
+                rebase: _Rebase | None = None,
+                features: tuple[str, ...] = ()) -> int | None:
+        """The one commit loop: every write path publishes through
+        here. Publishes ``commit`` at ``snap.version + 1`` (version 0
+        when ``snap`` is None: a create), checkpoints, and returns the
+        version.
+
+        On a lost race the head is replayed once and handed to
+        ``rebase(head, commit)``, which either raises (abort), returns
+        the commit fixed up for the new head (republished at
+        ``head.version + 1``), or returns None: already applied,
+        publish nothing (a txn marker the head already holds); _commit
+        then returns None. Without ``rebase`` a lost race raises
+        ConcurrentWriteError (FileExistsError at version 0). The
+        TXLOG_FORMAT.md conflict matrix lists each verb's rebase."""
+        v = 0 if snap is None else snap.version + 1
+        while not self._try_publish(v, commit, features):
+            if rebase is None:
+                if v == 0:
+                    raise FileExistsError(
+                        f"concurrent create at {self.path}; staged "
+                        "files are orphaned until vacuum")
+                raise ConcurrentWriteError(
+                    f"{commit['op']} on {self.path} read version "
+                    f"{v - 1} but another commit won the next version; "
+                    "re-run (staged files are orphaned until vacuum)")
+            snap = self._replay()
+            commit = rebase(snap, commit)
+            if commit is None:
+                return None
+            v = snap.version + 1
+        self._maybe_checkpoint(v)
+        return v
+
+    def _commit_from_head(self, build: Callable[[Snapshot],
+                                                dict[str, Any] | None],
+                          snap: Snapshot | None = None,
+                          features: tuple[str, ...] = ()) -> int:
+        """Commit ``build(snap)`` (``snap`` defaults to a fresh head)
+        and, after a lost race, ``build(head)``: the commit is rebuilt
+        from the new head, so a full-map replace (properties,
+        constraints, schema) or a last-writer-wins remove list never
+        drops the winner's change. ``build`` returning None means
+        nothing to change; the version it looked at is returned."""
+        seen = snap if snap is not None else self._replay()
+
+        def rebase(head: Snapshot, _: dict[str, Any]
+                   ) -> dict[str, Any] | None:
+            nonlocal seen
+            seen = head
+            return build(head)
+
+        commit = build(seen)
+        v = (None if commit is None
+             else self._commit(seen, commit, rebase, features))
+        return seen.version if v is None else v
+
+    def _rebase_schema(self, commit: dict[str, Any], df: Any,
+                       head: Snapshot, schema_mode: str) -> None:
+        """Rebase step: re-derive the evolved schema against the new
+        head. The winner may itself have evolved it, and republishing
+        a stale merge would drop their columns."""
+        evolved = self._check_schema(df, head, schema_mode)
+        if evolved:
+            commit["schema_json"] = evolved
+        else:
+            commit.pop("schema_json", None)
+
+    @staticmethod
+    def _identity_moved(head: Snapshot, bases: dict[str, int]) -> bool:
+        """Rebase step: True when a concurrent write allocated identity
+        values at or past a base this write staged from, so its staged
+        ids would collide."""
+        return any(
+            head.identity_high.get(
+                head.phys(c),
+                head.identity[c]["start"] - head.identity[c]["step"])
+            + head.identity[c]["step"] != b
+            for c, b in bases.items())
+
+    @staticmethod
+    def _recheck(head: Snapshot, validated: dict[str, str] | None,
+                 check: Callable[[dict[str, str]], None]
+                 ) -> dict[str, str]:
+        """Rebase step: re-run ``check`` when the head's CHECK
+        constraints differ from the map the rows were ``validated``
+        against (None: never validated). A concurrent ALTER between
+        read and publish must not grandfather our rows. Returns the
+        map now validated."""
+        if validated == head.constraints:
+            return validated
+        check(dict(head.constraints))
+        return dict(head.constraints)
+
+    def _merge_rebase(self, touched: set[str], key: str, lo: Any,
+                      hi: Any, src: DataFrame | None = None) -> _Rebase:
+        """Key-disjoint rebase for merge and merge_clauses (Delta's
+        conflict detection): a winner commutes when it rewrote none of
+        the ``touched`` files and its adds' footer stats on ``key``
+        fall outside [lo, hi] (_assert_merge_commutes). At most 8
+        publish attempts. With ``src`` (autoMerge) the evolved schema
+        is re-derived against each new head."""
+        lost = 0
+
+        def rebase(head: Snapshot, commit: dict[str, Any]
+                   ) -> dict[str, Any]:
+            nonlocal lost
+            self._assert_merge_commutes(commit["read_version"],
+                                        head.version, touched, key,
+                                        lo, hi)
+            lost += 1
+            if lost == 8:
+                raise ConcurrentWriteError(
+                    f"merge into {self.path}: lost the publish race 8 "
+                    "times; re-run the merge (staged files are "
+                    "orphaned until vacuum)")
+            commit["read_version"] = head.version
+            if src is not None:
+                self._rebase_schema(commit, src, head, "merge")
+            return commit
+
+        return rebase
 
     # ---------------------------------------------------- data writes
     def _stage(self, df: DataFrame, partition_by: list[str] | None,
@@ -982,33 +1122,21 @@ class TxnTable:
         rather than mutates) and ``txlog.checkpointInterval``."""
         props = {k: str(v) for k, v in props.items()}
         self._validate_props(props)
-        while True:
-            snap = self._replay()
-            merged = {**snap.properties, **props}
-            commit = {"op": "set_properties", "ts": time.time(),
-                      "add": [], "remove": [], "properties": merged}
-            feats = (("append_only",)
-                     if merged.get("txlog.appendOnly", ""
-                                   ).lower() == "true" else ())
-            v = snap.version + 1
-            if self._try_publish(v, commit, features=feats):
-                self._maybe_checkpoint(v)
-                return v
+        # appendOnly=true in the merged map activates append_only
+        # through _commit_features
+        return self._commit_from_head(lambda snap: {
+            "op": "set_properties", "ts": time.time(),
+            "add": [], "remove": [],
+            "properties": {**snap.properties, **props}})
 
     def unset_properties(self, keys: list[str]) -> int:
         """ALTER TABLE UNSET TBLPROPERTIES (unknown keys are a no-op,
         matching Spark's IF EXISTS-less behavior on Delta)."""
-        while True:
-            snap = self._replay()
-            remaining = {k: x for k, x in snap.properties.items()
-                         if k not in set(keys)}
-            commit = {"op": "set_properties", "ts": time.time(),
-                      "add": [], "remove": [],
-                      "properties": remaining}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+        return self._commit_from_head(lambda snap: {
+            "op": "set_properties", "ts": time.time(),
+            "add": [], "remove": [],
+            "properties": {k: x for k, x in snap.properties.items()
+                           if k not in set(keys)}})
 
     def _maybe_autocompact(self) -> None:
         """Post-append policy hook (Databricks' autoCompact): when
@@ -1083,8 +1211,7 @@ class TxnTable:
         set_constraints commit carrying the full updated map. Losing a
         version race re-validates against the new head — data appended
         concurrently is never grandfathered past the check."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             if name in snap.constraints:
                 raise ValueError(
                     f"constraint {name!r} already on {self.path}: "
@@ -1093,13 +1220,11 @@ class TxnTable:
                 self._enforce(
                     self._read_files(snap, sorted(snap.live)),
                     {name: expr})
-            commit = {"op": "set_constraints", "ts": time.time(),
-                      "add": [], "remove": [],
-                      "constraints": {**snap.constraints, name: expr}}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return {"op": "set_constraints", "ts": time.time(),
+                    "add": [], "remove": [],
+                    "constraints": {**snap.constraints, name: expr}}
+
+        return self._commit_from_head(build)
 
     def add_columns(self, columns: dict[str, str]) -> int:
         """ALTER TABLE ADD COLUMNS: a metadata-only commit extending
@@ -1112,8 +1237,9 @@ class TxnTable:
         gets a FRESH physical id via the column mapping — otherwise
         old files would leak the retired column's data into the new
         logical column."""
-        while True:
-            snap = self._replay()
+        from pyspark.sql.types import _parse_datatype_string
+
+        def build(snap: Snapshot) -> dict[str, Any]:
             cur = snap.schema
             if cur is None:
                 raise ValueError(f"{self.path} has no schema to extend")
@@ -1122,8 +1248,6 @@ class TxnTable:
             if clash:
                 raise ValueError(
                     f"column(s) {clash} already exist on {self.path}")
-            from pyspark.sql.types import _parse_datatype_string
-
             taken_physical = ({snap.phys(f.name) for f in cur.fields}
                               | set(snap.dropped_physical))
             mapping = dict(snap.column_mapping)
@@ -1141,12 +1265,9 @@ class TxnTable:
                       "add": [], "remove": []}
             if remap:
                 commit["column_mapping"] = mapping
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
-            # lost the race: re-replay (the winner may itself have
-            # evolved the schema) and retry against the new head
+            return commit
+
+        return self._commit_from_head(build)
 
     def widen_column(self, col: str, new_type: str) -> int:
         """ALTER TABLE ALTER COLUMN col TYPE t — Delta's explicit
@@ -1158,8 +1279,8 @@ class TxnTable:
         from pyspark.sql.types import _parse_datatype_string
 
         want = _parse_datatype_string(new_type)
-        while True:
-            snap = self._replay()
+
+        def build(snap: Snapshot) -> dict[str, Any] | None:
             cur = snap.schema
             if cur is None or col not in {f.name for f in cur.fields}:
                 raise KeyError(f"no column {col!r} on {self.path}")
@@ -1167,7 +1288,7 @@ class TxnTable:
             old_s, new_s = (old.dataType.simpleString(),
                             want.simpleString())
             if old_s == new_s:
-                return snap.version          # no-op
+                return None                  # no-op
             if new_s not in self._WIDENS_TO.get(old_s, ()):
                 raise ValueError(
                     f"ALTER COLUMN {col} TYPE {new_s} on {self.path}: "
@@ -1177,16 +1298,14 @@ class TxnTable:
                 StructField(f.name, want if f.name == col else
                             f.dataType, f.nullable)
                 for f in cur.fields])
-            commit = {"op": "set_schema", "ts": time.time(),
-                      "schema_json": merged.json(),
-                      "add": [], "remove": []}
-            v = snap.version + 1
-            # type_widening is invisible in the commit content (a
-            # set_schema like any other) but changes how READERS must
-            # treat old files — tag it explicitly
-            if self._try_publish(v, commit, features=("type_widening",)):
-                self._maybe_checkpoint(v)
-                return v
+            return {"op": "set_schema", "ts": time.time(),
+                    "schema_json": merged.json(),
+                    "add": [], "remove": []}
+
+        # type_widening is invisible in the commit content (a
+        # set_schema like any other) but changes how READERS must
+        # treat old files — tag it explicitly
+        return self._commit_from_head(build, features=("type_widening",))
 
     def _assert_not_referenced(self, snap: Snapshot, col: str,
                                verb: str) -> None:
@@ -1213,8 +1332,7 @@ class TxnTable:
         pre-rename versions still reads under the OLD name (each
         snapshot carries its own mapping). The clustering spec follows
         the rename; CHECK constraints referencing the column block it."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             cur = snap.schema
             if cur is None:
                 raise FileNotFoundError(f"no txlog table at {self.path}")
@@ -1250,10 +1368,9 @@ class TxnTable:
                 # PHYSICAL name, which the rename never changes.
                 commit["identity"] = {(new if k == old else k): v
                                       for k, v in snap.identity.items()}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return commit
+
+        return self._commit_from_head(build)
 
     def drop_column(self, name: str) -> int:
         """ALTER TABLE DROP COLUMN — metadata-only: the field leaves
@@ -1263,8 +1380,7 @@ class TxnTable:
         of the same name maps to a fresh physical id instead of
         resurrecting the dropped data. Clustering or CHECK-referenced
         columns block the drop; so does dropping the last column."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             cur = snap.schema
             if cur is None:
                 raise FileNotFoundError(f"no txlog table at {self.path}")
@@ -1301,27 +1417,23 @@ class TxnTable:
                 commit["identity"] = {k: v for k, v
                                       in snap.identity.items()
                                       if k != name}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return commit
+
+        return self._commit_from_head(build)
 
     def drop_check_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             if name not in snap.constraints:
                 raise KeyError(
                     f"no constraint {name!r} on {self.path} "
                     f"(have {sorted(snap.constraints)})")
             kept = {n: e for n, e in snap.constraints.items()
                     if n != name}
-            commit = {"op": "set_constraints", "ts": time.time(),
-                      "add": [], "remove": [], "constraints": kept}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return {"op": "set_constraints", "ts": time.time(),
+                    "add": [], "remove": [], "constraints": kept}
+
+        return self._commit_from_head(build)
 
     @staticmethod
     def _derive_generated(df: DataFrame,
@@ -1481,34 +1593,28 @@ class TxnTable:
         (constant) expression instead of being rejected by the strict
         schema check. Existing rows are untouched (the ANSI/Delta
         contract — a default is a write-time fill, not a backfill)."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             self._validate_default(col, expr, snap)
-            commit = {"op": "set_defaults", "ts": time.time(),
-                      "add": [], "remove": [],
-                      "defaults": {**snap.defaults, col: expr}}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return {"op": "set_defaults", "ts": time.time(),
+                    "add": [], "remove": [],
+                    "defaults": {**snap.defaults, col: expr}}
+
+        return self._commit_from_head(build)
 
     def drop_column_default(self, col: str) -> int:
         """ALTER TABLE ... ALTER COLUMN col DROP DEFAULT: writes
         omitting the column are rejected again (strict schema)."""
-        while True:
-            snap = self._replay()
+        def build(snap: Snapshot) -> dict[str, Any]:
             if col not in snap.defaults:
                 raise KeyError(f"no DEFAULT on column {col!r} of "
                                f"{self.path}")
-            commit = {"op": "set_defaults", "ts": time.time(),
-                      "add": [], "remove": [],
-                      "defaults": {k: x for k, x
-                                   in snap.defaults.items()
-                                   if k != col}}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return {"op": "set_defaults", "ts": time.time(),
+                    "add": [], "remove": [],
+                    "defaults": {k: x for k, x
+                                 in snap.defaults.items()
+                                 if k != col}}
+
+        return self._commit_from_head(build)
 
     @staticmethod
     def _auto_constraints(generated: dict[str, str],
@@ -1624,10 +1730,7 @@ class TxnTable:
             props = {k: str(v) for k, v in properties.items()}
             self._validate_props(props)
             commit["properties"] = props
-        if not self._try_publish(0, commit):
-            raise FileExistsError(
-                f"concurrent create at {self.path}; staged files "
-                "orphaned (vacuum cleans them)")
+        self._commit(None, commit)
         return self
 
     def convert_from_parquet(self) -> "TxnTable":
@@ -1698,9 +1801,7 @@ class TxnTable:
                   "schema_json": schema.json(),
                   "partition_by": [],
                   "add": [a.to_json() for a in adds], "remove": []}
-        if not self._try_publish(0, commit):
-            raise FileExistsError(
-                f"concurrent create at {self.path}")
+        self._commit(None, commit)
         return self
 
     def clone_shallow(self, source: "TxnTable",
@@ -1773,9 +1874,7 @@ class TxnTable:
         if dv_files:
             commit["dv"] = {"files": dv_files, "per_target": per_target}
         inherited = self._clone_features(source, snap)
-        if not self._try_publish(0, commit, features=inherited):
-            raise FileExistsError(
-                f"concurrent create at {self.path}")
+        self._commit(None, commit, features=inherited)
         return self
 
     @staticmethod
@@ -1873,9 +1972,7 @@ class TxnTable:
         if props:
             self._validate_props(props)
             commit["properties"] = props
-        if not self._try_publish(0, commit):
-            raise FileExistsError(
-                f"concurrent create at {self.path}")
+        self._commit(None, commit)
         return self
 
     def clone_deep(self, source: "TxnTable",
@@ -1977,9 +2074,7 @@ class TxnTable:
         # `inherited` (computed up top, before the copy) drops
         # external_files: a deep clone's whole point is that no byte
         # lives outside its root
-        if not self._try_publish(0, commit, features=inherited):
-            raise FileExistsError(
-                f"concurrent create at {self.path}")
+        self._commit(None, commit, features=inherited)
         return self
 
     def append(self, df: DataFrame, txn_app: str | None = None,
@@ -2027,46 +2122,35 @@ class TxnTable:
             commit["schema_json"] = evolved
         if txn_app is not None:
             commit["txn"] = {"app": txn_app, "batch": int(txn_batch or 0)}
-        while True:
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                self._maybe_autocompact()
-                return v
-            snap = self._replay()      # lost the race: appends commute
+
+        def rebase(head: Snapshot, c: dict[str, Any]
+                   ) -> dict[str, Any] | None:
+            nonlocal df, bases, validated
             if (txn_app is not None
-                    and snap.txns.get(txn_app, -1) >= (txn_batch or 0)):
+                    and head.txns.get(txn_app, -1) >= (txn_batch or 0)):
                 return None            # a concurrent replay beat us
-            if any(snap.identity_high.get(
-                    snap.phys(c), snap.identity[c]["start"]
-                    - snap.identity[c]["step"])
-                   + snap.identity[c]["step"] != b
-                   for c, b in bases.items()):
-                # a concurrent writer allocated ids at or past our
-                # base: our staged values would collide — RESTAGE from
-                # the new high (old staged files orphan; vacuum sweeps)
-                df, bases = prep(snap)
-                self._enforce(df, dict(snap.constraints))
-                validated = dict(snap.constraints)
+            moved = self._identity_moved(head, bases)
+            if moved:
+                # our staged ids would collide: RESTAGE from the new
+                # high (old staged files orphan; vacuum sweeps)
+                df, bases = prep(head)
+            validated = self._recheck(
+                head, None if moved else validated,
+                lambda cons: self._enforce(df, cons))
+            if moved:
                 adds = self._stage(
-                    df, partition_by or snap.partition_by or None,
-                    mapping=snap.column_mapping)
-                commit["add"] = [a.to_json() for a in adds]
-                commit["identity_high"] = self._identity_high(
-                    adds, snap, bases)
-            elif snap.constraints != validated:
-                # a concurrent ALTER added/changed constraints between
-                # our read and publish — our rows are not grandfathered
-                validated = dict(snap.constraints)
-                self._enforce(df, validated)
-            # re-derive the evolved schema against the new head — the
-            # winner may itself have evolved it, and republishing our
-            # stale merge would drop their columns
-            evolved = self._check_schema(df, snap, schema_mode)
-            if evolved:
-                commit["schema_json"] = evolved
-            else:
-                commit.pop("schema_json", None)
+                    df, partition_by or head.partition_by or None,
+                    mapping=head.column_mapping)
+                c["add"] = [a.to_json() for a in adds]
+                c["identity_high"] = self._identity_high(
+                    adds, head, bases)
+            self._rebase_schema(c, df, head, schema_mode)
+            return c
+
+        v = self._commit(snap, commit, rebase)   # appends commute
+        if v is not None:
+            self._maybe_autocompact()
+        return v
 
     def copy_into(self, src_dir: str, fmt: str = "parquet",
                   pattern: str | None = None,
@@ -2212,27 +2296,17 @@ class TxnTable:
                 adds, snap, cp_bases)
         if evolved:
             commit["schema_json"] = evolved
-        while True:
-            v = snap.version + 1
-            if self._try_publish(v, commit, features=("copy_into",)):
-                self._maybe_checkpoint(v)
-                self._maybe_autocompact()
-                return {"version": v, "files_loaded": len(new),
-                        "files_skipped": len(found) - len(new),
-                        "rows_loaded": int(rows)}
-            snap = self._replay()          # lost the race
-            if any(snap.identity_high.get(
-                    snap.phys(c), snap.identity[c]["start"]
-                    - snap.identity[c]["step"])
-                   + snap.identity[c]["step"] != b
-                   for c, b in cp_bases.items()):
+
+        def rebase(head: Snapshot, c: dict[str, Any]) -> dict[str, Any]:
+            nonlocal validated
+            if self._identity_moved(head, cp_bases):
                 raise ConcurrentWriteError(
                     f"COPY INTO {self.path}: a concurrent write "
                     "allocated identity values past this batch's "
                     "base; re-run (nothing was recorded — the same "
                     "files will load; staged files are orphaned "
                     "until vacuum)")
-            overlap = set(new) & snap.copied
+            overlap = set(new) & head.copied
             if overlap:
                 raise ConcurrentWriteError(
                     f"COPY INTO {self.path}: a concurrent copy "
@@ -2240,14 +2314,16 @@ class TxnTable:
                     "(first: "
                     f"{sorted(overlap)[0]}); re-run to load the rest "
                     "(staged files are orphaned until vacuum)")
-            if snap.constraints != validated:
-                validated = dict(snap.constraints)
-                self._enforce(df, validated)
-            evolved = self._check_schema(df, snap, schema_mode)
-            if evolved:
-                commit["schema_json"] = evolved
-            else:
-                commit.pop("schema_json", None)
+            validated = self._recheck(
+                head, validated, lambda cons: self._enforce(df, cons))
+            self._rebase_schema(c, df, head, schema_mode)
+            return c
+
+        v = self._commit(snap, commit, rebase, features=("copy_into",))
+        self._maybe_autocompact()
+        return {"version": v, "files_loaded": len(new),
+                "files_skipped": len(found) - len(new),
+                "rows_loaded": int(rows)}
 
     def overwrite(self, df: DataFrame,
                   partition_by: list[str] | None = None,
@@ -2268,13 +2344,27 @@ class TxnTable:
         validated = dict(pre.constraints)
         self._enforce(df, validated)
         adds = self._stage(df, partition_by)
-        while True:
-            snap = self._replay()
-            if snap.constraints != validated:
-                # same hole append closes: a concurrent ALTER between
-                # our read and publish must re-validate our rows
-                validated = dict(snap.constraints)
-                self._enforce(df, validated)
+        props = (None if properties is None
+                 else {k: str(v) for k, v in properties.items()})
+        if props is not None:
+            self._validate_props(props)
+
+        def build(snap: Snapshot) -> dict[str, Any]:
+            nonlocal df, ow_bases, validated, adds
+            moved = self._identity_moved(snap, ow_bases)
+            if moved:
+                # concurrent allocation past our base: restage
+                df, ow_bases = self._assign_identity(
+                    df.drop(*ow_bases), snap)
+                if snap.generated:
+                    df = self._derive_generated(df, snap.generated)
+            # same hole append closes: a concurrent ALTER between our
+            # read and publish must re-validate our rows
+            validated = self._recheck(
+                snap, None if moved else validated,
+                lambda cons: self._enforce(df, cons))
+            if moved:
+                adds = self._stage(df, partition_by)
             commit = {"op": "overwrite", "ts": time.time(),
                       "schema_json": df.schema.json(),
                       # schema replace: defaults survive only for
@@ -2288,31 +2378,14 @@ class TxnTable:
                                        else snap.partition_by),
                       "add": [a.to_json() for a in adds],
                       "remove": sorted(snap.live)}
-            if properties is not None:
-                props = {k: str(v) for k, v in properties.items()}
-                self._validate_props(props)
+            if props is not None:
                 commit["properties"] = props
             if ow_bases:
-                if any(snap.identity_high.get(
-                        snap.phys(c), snap.identity[c]["start"]
-                        - snap.identity[c]["step"])
-                       + snap.identity[c]["step"] != b
-                       for c, b in ow_bases.items()):
-                    # concurrent allocation past our base: restage
-                    df, ow_bases = self._assign_identity(
-                        df.drop(*ow_bases), snap)
-                    if snap.generated:
-                        df = self._derive_generated(df, snap.generated)
-                    self._enforce(df, dict(snap.constraints))
-                    validated = dict(snap.constraints)
-                    adds = self._stage(df, partition_by)
-                    commit["add"] = [a.to_json() for a in adds]
                 commit["identity_high"] = self._identity_high(
                     adds, snap, ow_bases)
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+            return commit
+
+        return self._commit_from_head(build, pre)
 
     def replace(self, df: DataFrame,
                 partition_by: list[str] | None = None,
@@ -2357,10 +2430,10 @@ class TxnTable:
             for c, e in defaults.items():
                 self._validate_default(c, e, probe)
         adds = self._stage(df, partition_by)
-        while True:
-            snap = self._replay()
+
+        def build(snap: Snapshot) -> dict[str, Any]:
             self._assert_mutable(snap, "replace")
-            commit: dict[str, Any] = {
+            return {
                 "op": "replace", "ts": time.time(),
                 "schema_json": df.schema.json(),
                 "partition_by": partition_by or [],
@@ -2378,10 +2451,8 @@ class TxnTable:
                 "copy_sources_reset": True, "txns_reset": True,
                 "add": [a.to_json() for a in adds],
                 "remove": sorted(snap.live)}
-            v = snap.version + 1
-            if self._try_publish(v, commit):
-                self._maybe_checkpoint(v)
-                return v
+
+        return self._commit_from_head(build, pre)
 
     # -------------------------------------------------------- queries
     def version_at(self, timestamp: float) -> int:
@@ -2564,21 +2635,14 @@ class TxnTable:
         filter the caller still applies. Files with no stats for the
         column are conservatively kept."""
         snap = self._replay()
-        lo, hi = _json_safe(lo), _json_safe(hi)   # same form as stats
-        pcol = snap.phys(col)            # stats keys are PHYSICAL names
-        keep = [p for p, a in sorted(snap.live.items())
-                if self._overlaps(a.stats.get(pcol), lo, hi)]
-        return self._read_files(snap, keep)
+        return self._read_files(snap,
+                                sorted(self._scoped(snap, (col, lo, hi))))
 
     def scan_file_count(self, col: str, lo: Any = None,
                         hi: Any = None) -> tuple[int, int]:
         """(files kept, files total) for a scan() — the pruning audit."""
         snap = self._replay()
-        lo, hi = _json_safe(lo), _json_safe(hi)   # same form as stats
-        pcol = snap.phys(col)
-        keep = sum(1 for a in snap.live.values()
-                   if self._overlaps(a.stats.get(pcol), lo, hi))
-        return keep, len(snap.live)
+        return len(self._scoped(snap, (col, lo, hi))), len(snap.live)
 
     @staticmethod
     def _overlaps(mm: list[Any] | None, lo: Any, hi: Any) -> bool:
@@ -2643,13 +2707,7 @@ class TxnTable:
                           if p not in cur.live],
                   "remove": sorted(p for p in cur.live
                                    if p not in target.live)}
-        v = cur.version + 1
-        if not self._try_publish(v, commit):
-            raise ConcurrentWriteError(
-                f"restore of {self.path} read version {cur.version} but "
-                "another commit won the next version; re-run")
-        self._maybe_checkpoint(v)
-        return v
+        return self._commit(cur, commit)      # strictly serialized
 
     def count_rows(self, version: int | None = None,
                    timestamp: float | None = None) -> int:
@@ -2929,12 +2987,8 @@ class TxnTable:
                        F.max(on[0]).alias("hi")).first()
         src_rows = int(b["n"])
         lo, hi = _json_safe(b["lo"]), _json_safe(b["hi"])
-        if lo is None:                          # empty/all-null source
-            cand = sorted(snap.live)
-        else:
-            cand = sorted(p for p, a in snap.live.items()
-                          if self._overlaps(a.stats.get(snap.phys(on[0])),
-                                             lo, hi))
+        # an empty/all-NULL source (lo None) keeps every file
+        cand = sorted(self._scoped(snap, (on[0], lo, hi)))
         discovery = self._read_files_meta(snap, cand)
         touched = {
             r[0] for r in
@@ -3033,33 +3087,10 @@ class TxnTable:
         # key). Disjoint CDC writers then make progress concurrently;
         # anything unprovable (overlapping/stats-less adds, layout or
         # history rewrites, constraint changes) still aborts loudly.
-        read_v = snap.version
-        for _ in range(8):
-            if self._try_publish(read_v + 1, commit):
-                self._maybe_checkpoint(read_v + 1)
-                break
-            head_v = self.latest_version()
-            self._assert_merge_commutes(read_v, head_v, touched,
-                                        snap.phys(on[0]), lo, hi)
-            read_v = head_v
-            commit["read_version"] = read_v
-            if schema_mode == "merge":
-                # the winner may itself have evolved the schema:
-                # re-derive the union against the new head so our
-                # republished commit can't drop their columns (same
-                # rebase rule as append's)
-                ev2 = self._check_schema(eff_src, self._replay(),
-                                         "merge")
-                if ev2:
-                    commit["schema_json"] = ev2
-                else:
-                    commit.pop("schema_json", None)
-        else:
-            raise ConcurrentWriteError(
-                f"merge into {self.path}: lost the publish race 8 "
-                "times; re-run the merge (staged files are orphaned "
-                "until vacuum)")
-        return {"version": read_v + 1,
+        v = self._commit(snap, commit, self._merge_rebase(
+            touched, snap.phys(on[0]), lo, hi,
+            eff_src if schema_mode == "merge" else None))
+        return {"version": v,
                 "files_rewritten": len(touched),
                 "files_added": len(adds),
                 "files_scanned": len(cand),
@@ -3183,19 +3214,16 @@ class TxnTable:
         lo, hi = _json_safe(b["lo"]), _json_safe(b["hi"])
         if nmbs:
             cand = sorted(snap.live)        # every row is examined
-            touched = set(cand)
-        elif not matched:
+        else:
+            cand = sorted(self._scoped(snap, (on[0], lo, hi)))
+        if not (matched or nmbs):
             # insert-only merge: matched files need no rewrite at all
             # — matched target rows keep their bytes; only the
             # anti-joined inserts stage (Delta's insert-only fast
             # path, zero files removed). The anti join runs against
             # the stats-pruned candidates' KEY PROJECTION only
             # (column-pruned scan).
-            cand = (sorted(snap.live) if lo is None else
-                    sorted(p for p, a in snap.live.items()
-                           if self._overlaps(
-                               a.stats.get(snap.phys(on[0])),
-                               lo, hi)))
+            touched: set[str] = set()
             existing = self._read_files(snap, cand).select(*on)
             s_only = (source.alias(salias)
                       .join(existing, on=on, how="left_anti")
@@ -3216,132 +3244,131 @@ class TxnTable:
             # "Task not serializable: ObservationManager" (probed in
             # isolation; the shared test session reproduced it)
             n_ins = s_only.where(F.col("__code") != -1).count()
-            adds = self._stage(new_content, snap.partition_by or None,
-                               mapping=snap.column_mapping)
-            self._enforce_staged(snap, adds)
-            commit = {"op": "merge", "ts": time.time(),
-                      "read_version": snap.version,
-                      "add": [a.to_json() for a in adds], "remove": []}
-            if evolved:
-                commit["schema_json"] = evolved
-            if self._cdf_on(snap) and adds:
-                csnap = (Snapshot(-1, evolved, {},
-                                  column_mapping=dict(
-                                      snap.column_mapping))
-                         if evolved else snap)
-                cdc = self._stage_cdc(csnap,
-                                      [(new_content, "insert")])
-                if cdc:
-                    commit["cdc"] = {"files": cdc}
-            read_v = snap.version
-            for _ in range(8):
-                if self._try_publish(read_v + 1, commit):
-                    self._maybe_checkpoint(read_v + 1)
-                    break
-                head_v = self.latest_version()
-                self._assert_merge_commutes(read_v, head_v, set(),
-                                            snap.phys(on[0]), lo, hi)
-                read_v = head_v
-                commit["read_version"] = read_v
-                if schema_mode == "merge" and star:
-                    ev2 = self._check_schema(source, self._replay(),
-                                             "merge")
-                    if ev2:
-                        commit["schema_json"] = ev2
-                    else:
-                        commit.pop("schema_json", None)
-            else:
-                raise ConcurrentWriteError(
-                    f"merge into {self.path}: lost the publish race 8 "
-                    "times; re-run (staged files orphan until vacuum)")
-            return {"version": read_v + 1, "files_rewritten": 0,
-                    "files_added": len(adds),
-                    "files_scanned": len(cand), "rows_updated": 0,
-                    "rows_deleted": 0, "rows_inserted": int(n_ins)}
+            n_upd = n_del = 0
+            images = [(new_content, "insert")]
         else:
-            cand = (sorted(snap.live) if lo is None else
-                    sorted(p for p, a in snap.live.items()
-                           if self._overlaps(
-                               a.stats.get(snap.phys(on[0])),
-                               lo, hi)))
-            discovery = self._read_files_meta(snap, cand)
-            touched = {
-                r[0] for r in
-                (discovery.join(F.broadcast(keys), on=on, how="leftsemi")
-                 .select("__rel").distinct().collect())}
-        t_base = self._read_files(snap, sorted(touched))
-        for nf in new_fields:           # evolved cols: NULL on target
-            t_base = t_base.withColumn(nf.name,
-                                       F.lit(None).cast(nf.dataType))
-        t_frame = t_base.withColumn("__t", F.lit(1))
-        s_frame = source.withColumn("__s", F.lit(1))
-        j = t_frame.alias(talias).join(
-            s_frame.alias(salias),
-            on=[F.col(f"{talias}.{k}") == F.col(f"{salias}.{k}")
-                for k in on],
-            how="full_outer")
-        has_t = F.col(f"{talias}.__t").isNotNull()
-        has_s = F.col(f"{salias}.__s").isNotNull()
-        _KEEP, _DROP = 0, -1
-        code = (F.when(has_t & has_s,
-                       self._clause_code(matched, 100, _KEEP))
-                .when(has_s, self._clause_code(not_matched, 200, _DROP))
-                .otherwise(self._clause_code(nmbs, 300, _KEEP)))
-        j = j.withColumn("__code", code)
-        drop_codes = [_DROP]
-        drop_codes += [100 + i for i, cl in enumerate(matched)
-                       if cl["action"] == "delete"]
-        drop_codes += [300 + i for i, cl in enumerate(nmbs)
-                       if cl["action"] == "delete"]
+            if nmbs:
+                touched = set(cand)
+            else:
+                discovery = self._read_files_meta(snap, cand)
+                touched = {
+                    r[0] for r in
+                    (discovery.join(F.broadcast(keys), on=on,
+                                    how="leftsemi")
+                     .select("__rel").distinct().collect())}
+            t_base = self._read_files(snap, sorted(touched))
+            for nf in new_fields:           # evolved cols: NULL on target
+                t_base = t_base.withColumn(nf.name,
+                                           F.lit(None).cast(nf.dataType))
+            t_frame = t_base.withColumn("__t", F.lit(1))
+            s_frame = source.withColumn("__s", F.lit(1))
+            j = t_frame.alias(talias).join(
+                s_frame.alias(salias),
+                on=[F.col(f"{talias}.{k}") == F.col(f"{salias}.{k}")
+                    for k in on],
+                how="full_outer")
+            has_t = F.col(f"{talias}.__t").isNotNull()
+            has_s = F.col(f"{salias}.__s").isNotNull()
+            _KEEP, _DROP = 0, -1
+            code = (F.when(has_t & has_s,
+                           self._clause_code(matched, 100, _KEEP))
+                    .when(has_s, self._clause_code(not_matched, 200, _DROP))
+                    .otherwise(self._clause_code(nmbs, 300, _KEEP)))
+            j = j.withColumn("__code", code)
+            drop_codes = [_DROP]
+            drop_codes += [100 + i for i, cl in enumerate(matched)
+                           if cl["action"] == "delete"]
+            drop_codes += [300 + i for i, cl in enumerate(nmbs)
+                           if cl["action"] == "delete"]
 
-        tolerant = schema_mode == "merge"   # autoMerge star handling
+            tolerant = schema_mode == "merge"   # autoMerge star handling
 
-        def col_value(c: str):
-            v = F.col(f"{talias}.{c}")        # keep codes default here
-            branches: list[tuple[int, Any]] = []
-            for i, cl in enumerate(matched):
-                if cl["action"] == "update_star":
-                    if tolerant and c not in src_cols:
-                        continue              # keep the target's value
-                    branches.append((100 + i, F.col(f"{salias}.{c}")))
-                elif cl["action"] == "update" and c in cl["set"]:
-                    branches.append((100 + i, F.expr(cl["set"][c])))
-            for i, cl in enumerate(not_matched):
-                if cl["action"] == "insert_star":
-                    branches.append(
-                        (200 + i,
-                         F.lit(None) if tolerant and c not in src_cols
-                         else F.col(f"{salias}.{c}")))
-                elif cl["action"] == "insert":
-                    branches.append((200 + i,
-                                     F.expr(cl["set"][c]) if c in cl["set"]
-                                     else F.lit(None)))
-            for i, cl in enumerate(nmbs):
-                if cl["action"] == "update" and c in cl["set"]:
-                    branches.append((300 + i, F.expr(cl["set"][c])))
-            out = None
-            for bc, e in branches:
-                out = (F.when(F.col("__code") == bc, e) if out is None
-                       else out.when(F.col("__code") == bc, e))
-            out = v if out is None else out.otherwise(v)
-            return out.cast(types[c]).alias(c)
+            def col_value(c: str):
+                v = F.col(f"{talias}.{c}")        # keep codes default here
+                branches: list[tuple[int, Any]] = []
+                for i, cl in enumerate(matched):
+                    if cl["action"] == "update_star":
+                        if tolerant and c not in src_cols:
+                            continue              # keep the target's value
+                        branches.append((100 + i, F.col(f"{salias}.{c}")))
+                    elif cl["action"] == "update" and c in cl["set"]:
+                        branches.append((100 + i, F.expr(cl["set"][c])))
+                for i, cl in enumerate(not_matched):
+                    if cl["action"] == "insert_star":
+                        branches.append(
+                            (200 + i,
+                             F.lit(None) if tolerant and c not in src_cols
+                             else F.col(f"{salias}.{c}")))
+                    elif cl["action"] == "insert":
+                        branches.append((200 + i,
+                                         F.expr(cl["set"][c]) if c in cl["set"]
+                                         else F.lit(None)))
+                for i, cl in enumerate(nmbs):
+                    if cl["action"] == "update" and c in cl["set"]:
+                        branches.append((300 + i, F.expr(cl["set"][c])))
+                out = None
+                for bc, e in branches:
+                    out = (F.when(F.col("__code") == bc, e) if out is None
+                           else out.when(F.col("__code") == bc, e))
+                out = v if out is None else out.otherwise(v)
+                return out.cast(types[c]).alias(c)
 
-        # one bounded histogram pass (one output row per clause code)
-        # gives the operation metrics before the staging write re-runs
-        # the join. Deliberately NOT CollectMetrics/Observation, which
-        # would make the metrics ride the staging job: in Spark 4.1
-        # even a fully-consumed Observation leaves the session's
-        # ObservationManager captured in later RDD-path closures, and
-        # every subsequent MLlib job dies with "Task not serializable:
-        # ObservationManager" (probed in isolation). Constraints are
-        # enforced on the staged bytes (column-pruned re-read of the
-        # OUTPUT, cheaper than a third join run); a violation leaves
-        # orphans for vacuum, the same posture as a lost publish race.
-        hist = {r["__code"]: r["n"] for r in
-                j.groupBy("__code").agg(F.count(F.lit(1)).alias("n"))
-                .collect()}
-        new_content = (j.where(~F.col("__code").isin(drop_codes))
-                       .select(*[col_value(c) for c in tcols]))
+            # one bounded histogram pass (one output row per clause code)
+            # gives the operation metrics before the staging write re-runs
+            # the join. Deliberately NOT CollectMetrics/Observation, which
+            # would make the metrics ride the staging job: in Spark 4.1
+            # even a fully-consumed Observation leaves the session's
+            # ObservationManager captured in later RDD-path closures, and
+            # every subsequent MLlib job dies with "Task not serializable:
+            # ObservationManager" (probed in isolation). Constraints are
+            # enforced on the staged bytes (column-pruned re-read of the
+            # OUTPUT, cheaper than a third join run); a violation leaves
+            # orphans for vacuum, the same posture as a lost publish race.
+            hist = {r["__code"]: r["n"] for r in
+                    j.groupBy("__code").agg(F.count(F.lit(1)).alias("n"))
+                    .collect()}
+            new_content = (j.where(~F.col("__code").isin(drop_codes))
+                           .select(*[col_value(c) for c in tcols]))
+            images: list[tuple[DataFrame, str]] = []
+            if self._cdf_on(snap):
+                # image classes straight off the __code-classified join:
+                # pre-images are the target side, post-images re-run the
+                # clause CASE chain — one extra pass per class, only
+                # while the table opts into CDF
+                upd_codes = ([100 + i for i, cl in enumerate(matched)
+                              if cl["action"] in ("update", "update_star")]
+                             + [300 + i for i, cl in enumerate(nmbs)
+                                if cl["action"] == "update"])
+                delc = ([100 + i for i, cl in enumerate(matched)
+                         if cl["action"] == "delete"]
+                        + [300 + i for i, cl in enumerate(nmbs)
+                           if cl["action"] == "delete"])
+                insc = [200 + i for i in range(len(not_matched))]
+                pre_cols = [F.col(f"{talias}.{c}").cast(types[c]).alias(c)
+                            for c in tcols]
+                post_cols = [col_value(c) for c in tcols]
+                if upd_codes:
+                    updj = j.where(F.col("__code").isin(upd_codes))
+                    images += [(updj.select(*pre_cols), "update_preimage"),
+                               (updj.select(*post_cols),
+                                "update_postimage")]
+                if delc:
+                    images.append((j.where(F.col("__code").isin(delc))
+                                   .select(*pre_cols), "delete"))
+                if insc:
+                    images.append((j.where(F.col("__code").isin(insc))
+                                   .select(*post_cols), "insert"))
+            n_upd = sum(n for c2, n in hist.items()
+                        if (100 <= c2 < 200
+                            and matched[c2 - 100]["action"] != "delete")
+                        or (c2 >= 300
+                            and nmbs[c2 - 300]["action"] == "update"))
+            n_del = sum(n for c2, n in hist.items()
+                        if (100 <= c2 < 200
+                            and matched[c2 - 100]["action"] == "delete")
+                        or (c2 >= 300 and nmbs[c2 - 300]["action"]
+                            == "delete"))
+            n_ins = sum(n for c2, n in hist.items() if 200 <= c2 < 300)
         adds = self._stage(new_content, snap.partition_by or None,
                            mapping=snap.column_mapping)
         self._enforce_staged(snap, adds)
@@ -3351,89 +3378,29 @@ class TxnTable:
                   "remove": sorted(touched)}
         if evolved:
             commit["schema_json"] = evolved
-        if self._cdf_on(snap):
-            # image classes straight off the __code-classified join:
-            # pre-images are the target side, post-images re-run the
-            # clause CASE chain — one extra pass per class, only
-            # while the table opts into CDF
-            upd_codes = ([100 + i for i, cl in enumerate(matched)
-                          if cl["action"] in ("update", "update_star")]
-                         + [300 + i for i, cl in enumerate(nmbs)
-                            if cl["action"] == "update"])
-            delc = ([100 + i for i, cl in enumerate(matched)
-                     if cl["action"] == "delete"]
-                    + [300 + i for i, cl in enumerate(nmbs)
-                       if cl["action"] == "delete"])
-            insc = [200 + i for i in range(len(not_matched))]
-            pre_cols = [F.col(f"{talias}.{c}").cast(types[c]).alias(c)
-                        for c in tcols]
-            post_cols = [col_value(c) for c in tcols]
-            images = []
-            if upd_codes:
-                updj = j.where(F.col("__code").isin(upd_codes))
-                images += [(updj.select(*pre_cols), "update_preimage"),
-                           (updj.select(*post_cols),
-                            "update_postimage")]
-            if delc:
-                images.append((j.where(F.col("__code").isin(delc))
-                               .select(*pre_cols), "delete"))
-            if insc:
-                images.append((j.where(F.col("__code").isin(insc))
-                               .select(*post_cols), "insert"))
-            if images:
-                csnap = (Snapshot(-1, evolved, {},
-                                  column_mapping=dict(
-                                      snap.column_mapping))
-                         if evolved else snap)
-                cdc = self._stage_cdc(csnap, images)
-                if cdc:
-                    commit["cdc"] = {"files": cdc}
-        read_v = snap.version
+        # no staged rows and no target rows: every image is empty
+        if images and (adds or touched) and self._cdf_on(snap):
+            csnap = (Snapshot(-1, evolved, {},
+                              column_mapping=dict(snap.column_mapping))
+                     if evolved else snap)
+            cdc = self._stage_cdc(csnap, images)
+            if cdc:
+                commit["cdc"] = {"files": cdc}
         if nmbs:
-            if not self._try_publish(read_v + 1, commit):
+            def rebase(head: Snapshot, c: dict[str, Any]) -> None:
                 raise ConcurrentWriteError(
                     f"merge (NOT MATCHED BY SOURCE) into {self.path} "
-                    f"read version {read_v} but another commit won; "
-                    "this clause reads the whole table, so re-run")
-            self._maybe_checkpoint(read_v + 1)
+                    f"read version {snap.version} but another commit "
+                    "won; this clause reads the whole table, so re-run")
         else:
-            for _ in range(8):
-                if self._try_publish(read_v + 1, commit):
-                    self._maybe_checkpoint(read_v + 1)
-                    break
-                head_v = self.latest_version()
-                self._assert_merge_commutes(read_v, head_v, touched,
-                                            snap.phys(on[0]), lo, hi)
-                read_v = head_v
-                commit["read_version"] = read_v
-                if schema_mode == "merge" and star:
-                    ev2 = self._check_schema(source, self._replay(),
-                                             "merge")
-                    if ev2:
-                        commit["schema_json"] = ev2
-                    else:
-                        commit.pop("schema_json", None)
-            else:
-                raise ConcurrentWriteError(
-                    f"merge into {self.path}: lost the publish race 8 "
-                    "times; re-run (staged files orphan until vacuum)")
-        n_upd = sum(n for c2, n in hist.items()
-                    if 100 <= c2 < 200
-                    and matched[c2 - 100]["action"] != "delete")
-        n_del = sum(n for c2, n in hist.items()
-                    if (100 <= c2 < 200
-                        and matched[c2 - 100]["action"] == "delete")
-                    or (c2 >= 300 and nmbs[c2 - 300]["action"]
-                        == "delete"))
-        n_ins = sum(n for c2, n in hist.items() if 200 <= c2 < 300)
-        n_nmbs_upd = sum(n for c2, n in hist.items()
-                         if c2 >= 300
-                         and nmbs[c2 - 300]["action"] == "update")
-        return {"version": read_v + 1,
+            rebase = self._merge_rebase(
+                touched, snap.phys(on[0]), lo, hi,
+                source if schema_mode == "merge" and star else None)
+        return {"version": self._commit(snap, commit, rebase),
                 "files_rewritten": len(touched),
                 "files_added": len(adds),
                 "files_scanned": len(cand),
-                "rows_updated": int(n_upd + n_nmbs_upd),
+                "rows_updated": int(n_upd),
                 "rows_deleted": int(n_del),
                 "rows_inserted": int(n_ins)}
 
@@ -3574,13 +3541,7 @@ class TxnTable:
             cdc = self._stage_cdc(snap, images)
             if cdc:
                 commit["cdc"] = {"files": cdc}
-        if not self._try_publish(snap.version + 1, commit):
-            raise ConcurrentWriteError(
-                f"{op} on {self.path} read version {snap.version} but "
-                "another commit won the next version; re-run (staged "
-                "files are orphaned until vacuum)")
-        self._maybe_checkpoint(snap.version + 1)
-        return {"version": snap.version + 1,
+        return {"version": self._commit(snap, commit),
                 "files_rewritten": len(touched),
                 "rows_changed": rows_changed}
 
@@ -3649,14 +3610,9 @@ class TxnTable:
             cdc = self._stage_cdc(snap, images)
             if cdc:
                 commit["cdc"] = {"files": cdc}
-        if not self._try_publish(snap.version + 1, commit):
-            raise ConcurrentWriteError(
-                f"replaceWhere on {self.path} read version "
-                f"{snap.version} but another commit won; re-run "
-                "(staged files are orphaned until vacuum)")
-        self._maybe_checkpoint(snap.version + 1)
+        v = self._commit(snap, commit)
         replaced = sum(snap.live[p].rows for p in touched)
-        return {"version": snap.version + 1,
+        return {"version": v,
                 "files_rewritten": len(touched),
                 "files_added": len(adds),
                 "rows_replaced_upper_bound": int(replaced)}
@@ -3721,13 +3677,8 @@ class TxnTable:
                   "dv": {"files": dv_files,
                          "per_target": {k: int(v) for k, v
                                         in per_target.items()}}}
-        if not self._try_publish(snap.version + 1, commit):
-            raise ConcurrentWriteError(
-                f"dv-delete on {self.path} read version {snap.version} "
-                "but another commit won the next version; re-run "
-                "(staged sidecars are orphaned until vacuum)")
-        self._maybe_checkpoint(snap.version + 1)
-        return {"version": snap.version + 1, "files_rewritten": 0,
+        return {"version": self._commit(snap, commit),
+                "files_rewritten": 0,
                 "rows_changed": int(sum(per_target.values())),
                 "dv_files": len(dv_files)}
 
@@ -3823,13 +3774,8 @@ class TxnTable:
                        (updated, "update_postimage")])
             if cdc:
                 commit["cdc"] = {"files": cdc}
-        if not self._try_publish(snap.version + 1, commit):
-            raise ConcurrentWriteError(
-                f"dv-update on {self.path} read version {snap.version} "
-                "but another commit won the next version; re-run "
-                "(staged files are orphaned until vacuum)")
-        self._maybe_checkpoint(snap.version + 1)
-        return {"version": snap.version + 1, "files_rewritten": 0,
+        return {"version": self._commit(snap, commit),
+                "files_rewritten": 0,
                 "rows_changed": int(sum(per_target.values())),
                 "dv_files": len(dv_files),
                 "files_added": len(adds)}
@@ -3856,47 +3802,24 @@ class TxnTable:
         INCLUDED."""
         from aws_payment_data_lake_spark.operators.layout import zorder_key
 
-        while True:
-            snap = self._replay()
-            inputs = sorted(self._scoped(snap, snap.live, scope))
-            if not inputs:
-                return {"version": snap.version, "files_in": 0,
-                        "files_out": 0, "noop": 1}
-            content = self._read_files(snap, inputs)
+        def stage(snap: Snapshot, content: DataFrame,
+                  inputs: list[str]) -> list[AddFile]:
             z = zorder_key(content, zorder_by, bits, quantile=quantile)
             clustered = (content.withColumn("__z", z)
                          .repartitionByRange(n_files, "__z")
                          .sortWithinPartitions("__z")
                          .drop("__z"))
-            adds = self._stage(clustered, None,   # keep layout as-is
+            return self._stage(clustered, None,   # keep layout as-is
                                mapping=snap.column_mapping)
-            commit = {"op": "optimize", "ts": time.time(),
-                      "read_version": snap.version,
-                      "zorder_by": zorder_by,
-                      "add": [a.to_json() for a in adds],
-                      "remove": inputs}
-            if self._try_publish(snap.version + 1, commit):
-                self._maybe_checkpoint(snap.version + 1)
-                return {"version": snap.version + 1,
-                        "files_in": len(inputs),
-                        "files_out": len(adds), "noop": 0}
-            head = self._replay()
-            if not all(p in head.live for p in inputs):
-                raise ConcurrentWriteError(
-                    f"optimize of {self.path}: an input file was "
-                    "removed by a concurrent commit")
-            if self._dv_state_changed(snap, head, inputs):
-                continue   # a concurrent delete_dv/update_dv/restore
-                # changed rows our staged rewrite already materialized
-                # WITHOUT — republishing it would resurrect DV-deleted
-                # rows (lost update). Re-read under the new head; the
-                # staged files are orphaned until vacuum.
-            commit["read_version"] = head.version
-            if self._try_publish(head.version + 1, commit):
-                self._maybe_checkpoint(head.version + 1)
-                return {"version": head.version + 1,
-                        "files_in": len(inputs),
-                        "files_out": len(adds), "noop": 0}
+
+        v, _, inputs, adds = self._rewrite(
+            "optimize", lambda snap: sorted(self._scoped(snap, scope)),
+            stage, extra={"zorder_by": zorder_by})
+        if adds is None:
+            return {"version": v, "files_in": 0, "files_out": 0,
+                    "noop": 1}
+        return {"version": v, "files_in": len(inputs),
+                "files_out": len(adds), "noop": 0}
 
     def compact(self, max_files: int = 1,
                 small_file_rows: int | None = None,
@@ -3908,52 +3831,29 @@ class TxnTable:
         (footer-stats overlap — the OPTIMIZE ... WHERE slice; see
         optimize()). Commutes with concurrent APPENDS (retry keeps
         them); a concurrent removal of an input aborts."""
-        while True:
-            snap = self._replay()
-            inputs = sorted(
-                p for p, a in self._scoped(snap, snap.live,
-                                           scope).items()
+        def pick(snap: Snapshot) -> list[str]:
+            return sorted(
+                p for p, a in self._scoped(snap, scope).items()
                 if small_file_rows is None or a.rows < small_file_rows)
-            if len(inputs) <= max_files:
-                return {"version": snap.version, "files_in": len(inputs),
-                        "files_out": len(inputs), "noop": 1}
-            content = self._read_files(snap, inputs)
+
+        def stage(snap: Snapshot, content: DataFrame,
+                  inputs: list[str]) -> list[AddFile]:
             # OPTIMIZE preserves the clustered layout: a compaction
             # that binned clustered files arbitrarily would destroy
             # the footer-stats pruning the layout exists for
             pb = snap.partition_by or None
-            adds = self._stage(content, pb,
+            return self._stage(content, pb,
                                max_files=None if pb else max_files,
                                partition_files=max_files if pb else None,
                                mapping=snap.column_mapping)
-            commit = {"op": "compact", "ts": time.time(),
-                      "read_version": snap.version,
-                      "add": [a.to_json() for a in adds],
-                      "remove": inputs}
-            if self._try_publish(snap.version + 1, commit):
-                self._maybe_checkpoint(snap.version + 1)
-                return {"version": snap.version + 1,
-                        "files_in": len(inputs),
-                        "files_out": len(adds), "noop": 0}
-            head = self._replay()
-            if not all(p in head.live for p in inputs):
-                raise ConcurrentWriteError(
-                    f"compact of {self.path}: an input file was removed "
-                    "by a concurrent commit")
-            if self._dv_state_changed(snap, head, inputs):
-                continue   # concurrent DV op on an input: the staged
-                # rewrite predates the sidecar and would resurrect its
-                # dead rows — loop and re-read through the new DV state
-            # concurrent append: our rewrite is still valid, retry
-            # (the staged output is reused only if inputs unchanged;
-            # otherwise re-read — here inputs are unchanged by check)
-            commit["read_version"] = head.version
-            if self._try_publish(head.version + 1, commit):
-                self._maybe_checkpoint(head.version + 1)
-                return {"version": head.version + 1,
-                        "files_in": len(inputs),
-                        "files_out": len(adds), "noop": 0}
-            # lost twice: loop from scratch (orphans vacuumed later)
+
+        v, _, inputs, adds = self._rewrite("compact", pick, stage,
+                                           floor=max_files)
+        if adds is None:
+            return {"version": v, "files_in": len(inputs),
+                    "files_out": len(inputs), "noop": 1}
+        return {"version": v, "files_in": len(inputs),
+                "files_out": len(adds), "noop": 0}
 
     def materialize_dvs(self, min_dead_frac: float = 0.0,
                         max_files: int | None = None) -> dict[str, int]:
@@ -3977,8 +3877,7 @@ class TxnTable:
         Concurrency: commutes with concurrent appends; retries abort
         if an input was removed; a concurrent DV op on an input
         re-loops from scratch (same posture as compact)."""
-        while True:
-            snap = self._replay()
+        def pick(snap: Snapshot) -> list[str]:
             inputs = sorted(
                 p for p in snap.dvs
                 if p in snap.live and snap.live[p].rows > 0
@@ -3990,52 +3889,87 @@ class TxnTable:
                     inputs,
                     key=lambda p: -(snap.dv_dead.get(p, 0)
                                     / snap.live[p].rows))[:max_files]
-            if not inputs:
-                return {"version": snap.version, "files_purged": 0,
-                        "rows_dropped": 0, "noop": 1}
-            content = self._read_files(snap, inputs)   # DV-applied
-            pb = snap.partition_by or None
-            adds = self._stage(content, pb,
+            return inputs
+
+        def stage(snap: Snapshot, content: DataFrame,
+                  inputs: list[str]) -> list[AddFile]:
+            pb = snap.partition_by or None       # content is DV-applied
+            return self._stage(content, pb,
                                max_files=None if pb else len(inputs),
                                mapping=snap.column_mapping)
-            dropped = sum(snap.dv_dead.get(p, 0) for p in inputs)
-            commit = {"op": "reorg", "ts": time.time(),
-                      "read_version": snap.version,
+
+        v, snap, inputs, adds = self._rewrite("reorg", pick, stage)
+        if adds is None:
+            return {"version": v, "files_purged": 0,
+                    "rows_dropped": 0, "noop": 1}
+        dropped = sum(snap.dv_dead.get(p, 0) for p in inputs)
+        return {"version": v, "files_purged": len(inputs),
+                "files_out": len(adds),
+                "rows_dropped": int(dropped), "noop": 0}
+
+    def _rewrite(self, op: str, pick: Callable[[Snapshot], list[str]],
+                 stage: Callable[[Snapshot, DataFrame, list[str]],
+                                 list[AddFile]],
+                 floor: int = 0, extra: dict[str, Any] | None = None
+                 ) -> tuple[int, Snapshot, list[str], list[AddFile] | None]:
+        """The rewrite-and-publish core of compact, optimize and
+        materialize_dvs: ``pick`` the input files from a fresh head
+        (more than ``floor`` of them, else a no-op), ``stage`` their
+        rewrite, publish one commit removing them. Returns (version,
+        the snapshot read, inputs, adds); adds is None for a no-op.
+
+        A lost race commutes with concurrent appends: the same staged
+        commit republishes on the new head. A concurrent removal of
+        an input aborts. A concurrent DV change on an input (the
+        staged rewrite predates the sidecar and would resurrect its
+        dead rows), or a second lost race, restarts from a fresh head;
+        the staged files are orphaned until vacuum."""
+        while True:
+            snap = self._replay()
+            inputs = pick(snap)
+            if len(inputs) <= floor:
+                return snap.version, snap, inputs, None
+            adds = stage(snap, self._read_files(snap, inputs), inputs)
+            commit = {"op": op, "ts": time.time(),
+                      "read_version": snap.version, **(extra or {}),
                       "add": [a.to_json() for a in adds],
                       "remove": inputs}
-            if self._try_publish(snap.version + 1, commit):
-                self._maybe_checkpoint(snap.version + 1)
-                return {"version": snap.version + 1,
-                        "files_purged": len(inputs),
-                        "files_out": len(adds),
-                        "rows_dropped": int(dropped), "noop": 0}
-            head = self._replay()
-            if not all(p in head.live for p in inputs):
-                raise ConcurrentWriteError(
-                    f"reorg of {self.path}: an input file was removed "
-                    "by a concurrent commit")
-            if self._dv_state_changed(snap, head, inputs):
-                continue    # new dead rows on an input: re-read
-            commit["read_version"] = head.version
-            if self._try_publish(head.version + 1, commit):
-                self._maybe_checkpoint(head.version + 1)
-                return {"version": head.version + 1,
-                        "files_purged": len(inputs),
-                        "files_out": len(adds),
-                        "rows_dropped": int(dropped), "noop": 0}
+            lost = 0
 
-    def _scoped(self, snap: Snapshot, live: dict[str, AddFile],
+            def rebase(head: Snapshot, c: dict[str, Any]
+                       ) -> dict[str, Any]:
+                nonlocal lost
+                lost += 1
+                if lost > 1:
+                    raise _Restart
+                if not all(p in head.live for p in inputs):
+                    raise ConcurrentWriteError(
+                        f"{op} of {self.path}: an input file was "
+                        "removed by a concurrent commit")
+                if self._dv_state_changed(snap, head, inputs):
+                    raise _Restart
+                c["read_version"] = head.version
+                return c
+
+            try:
+                return self._commit(snap, commit, rebase), snap, inputs, adds
+            except _Restart:
+                continue
+
+    def _scoped(self, snap: Snapshot,
                 scope: tuple[str, Any, Any] | None
                 ) -> dict[str, AddFile]:
-        """live filtered to files whose footer stats on scope[0]
-        overlap [scope[1], scope[2]] — the OPTIMIZE ... WHERE file
-        selection, from the log alone."""
+        """The live files whose footer stats on scope[0] overlap
+        [scope[1], scope[2]] (all of them for no scope), from the log
+        alone: the one stats-pruning filter behind scan(), MERGE
+        discovery and OPTIMIZE ... WHERE. Stats keys are PHYSICAL
+        names; files with no stats for the column are kept."""
         if scope is None:
-            return dict(live)
+            return dict(snap.live)
         col, lo, hi = scope
         pcol = snap.phys(col)
-        lo, hi = _json_safe(lo), _json_safe(hi)
-        return {p: a for p, a in live.items()
+        lo, hi = _json_safe(lo), _json_safe(hi)   # same form as stats
+        return {p: a for p, a in snap.live.items()
                 if self._overlaps(a.stats.get(pcol), lo, hi)}
 
     @staticmethod

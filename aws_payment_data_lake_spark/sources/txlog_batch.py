@@ -529,13 +529,15 @@ class _SnapshotWriter(DataSourceArrowWriter):
                       "partition_by": self.partition_by or [],
                       "add": [a.to_json() for a in adds],
                       "remove": []}
-            if not t._try_publish(0, commit):
+
+            def lost_create(head, c):
                 raise ConcurrentWriteError(
                     f"concurrent create at {self.path}")
-            t._maybe_checkpoint(0)
+
+            t._commit(None, commit, lost_create)
             return
-        while True:
-            snap = t._replay()
+
+        def build(snap):
             self._refuse_unsupported(snap)   # may have changed
             if not self.overwrite and (
                     dict(snap.column_mapping) != self.mapping
@@ -579,13 +581,13 @@ class _SnapshotWriter(DataSourceArrowWriter):
                 commit["column_mapping"] = {}
                 commit["dropped_physical"] = []
                 commit["partition_by"] = self.partition_by or []
-            if t._try_publish(snap.version + 1, commit):
-                # same pairing as every package commit path: a
-                # plain-Spark-only pipeline must still checkpoint, or
-                # its replay cost grows with every commit forever
-                t._maybe_checkpoint(snap.version + 1)
-                return                      # appends commute; LWW
-                                            # overwrite recomputes
+            return commit
+
+        # every check re-runs against the new head after a lost race:
+        # appends commute, LWW overwrite recomputes its removes. The
+        # commit loop checkpoints like every package commit path, so
+        # a plain-Spark-only pipeline's replay cost stays bounded.
+        t._commit_from_head(build)
 
     def abort(self, messages) -> None:
         import shutil

@@ -22,7 +22,7 @@ Execution split (Python Data Source API, SPARK-44076):
     like on batch-written ones.
   * ``commit(messages, batchId)`` runs in the driver-side Python
     runner, which has NO SparkSession — deliberately fine: the commit
-    protocol (`_replay`, `_try_publish`, checkpointing) is pure
+    protocol (`_replay`, `_commit`, checkpointing) is pure
     file-IO + pyarrow. Losing a version race re-replays and
     republishes (appends commute), re-checking the high-water mark so
     a concurrent replica of the same query still commits each batch
@@ -276,23 +276,20 @@ class _TxlogStreamWriter(DataSourceStreamWriter):
         if evolved:
             commit["schema_json"] = evolved
         validated = dict(snap.constraints)
-        while True:
-            v = snap.version + 1
-            if t._try_publish(v, commit):
-                t._maybe_checkpoint(v)
-                return
-            snap = t._replay()           # lost the race: appends commute
-            if snap.txns.get(self.app, -1) >= batchId:
+
+        def rebase(head, c):             # lost the race: appends commute
+            nonlocal validated
+            if head.txns.get(self.app, -1) >= batchId:
                 self._drop_staged(messages)
-                return                   # a twin replica beat us
-            if snap.constraints != validated:
-                validated = dict(snap.constraints)
-                self._enforce_duckdb(validated, [a.path for a in adds])
-            evolved = t._check_schema(shim, snap, self.schema_mode)
-            if evolved:
-                commit["schema_json"] = evolved
-            else:
-                commit.pop("schema_json", None)
+                return None              # a twin replica beat us
+            validated = t._recheck(
+                head, validated,
+                lambda cons: self._enforce_duckdb(
+                    cons, [a.path for a in adds]))
+            t._rebase_schema(c, shim, head, self.schema_mode)
+            return c
+
+        t._commit(snap, commit, rebase)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
         self._drop_staged(messages)

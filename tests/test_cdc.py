@@ -148,13 +148,13 @@ def test_cdc_retries_past_concurrent_writer(spark, tmp_path):
     orig = t._try_publish
     fired = {"n": 0}
 
-    def racing_publish(version, commit):
+    def racing_publish(version, commit, features=()):
         # first merge publish attempt loses: an append sneaks in first
         if commit.get("op") == "merge" and fired["n"] == 0:
             fired["n"] = 1
             t2 = TxnTable(spark, t.path)
             t2.append(intruder)
-        return orig(version, commit)
+        return orig(version, commit, features)
 
     t._try_publish = racing_publish
     try:

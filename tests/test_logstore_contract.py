@@ -3,7 +3,8 @@
 contract. If `_try_publish` or `_maybe_checkpoint` start calling
 storage operations outside the declared sets, this test fails and the
 spec (plus any object-store LogStore port) must be revisited together
-— the same discipline as the independent-reader interop pin."""
+— the same discipline as the independent-reader interop pin. It also
+pins `TxnTable._commit` as the only caller of both."""
 
 from __future__ import annotations
 
@@ -52,3 +53,39 @@ def test_commit_claim_never_reads_before_linking():
         assert banned not in src, \
             f"_try_publish consults {banned}: claims must be " \
             "arbitrated by the atomic link alone"
+
+
+def test_commit_loop_is_the_only_publisher():
+    """One choke point: inside the package, ``_try_publish(`` and
+    ``_maybe_checkpoint(`` are each called only from
+    ``TxnTable._commit``, the single commit loop every write path
+    (DML, DDL, maintenance, the batch writer, the streaming sink)
+    publishes through. Commit metrics and per-step timings attach
+    there and nowhere else."""
+    import ast
+    import pathlib
+
+    import aws_payment_data_lake_spark
+
+    pkg = pathlib.Path(aws_payment_data_lake_spark.__file__).parent
+    calls: dict[str, list[str]] = {"_try_publish": [],
+                                   "_maybe_checkpoint": []}
+
+    def visit(node, scope, where):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef,
+                                  ast.AsyncFunctionDef)):
+                visit(child, scope + [child.name], where)
+                continue
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in calls):
+                calls[child.func.attr].append(
+                    (".".join(scope), f"{where}:{child.lineno}"))
+            visit(child, scope, where)
+
+    for src in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(src.read_text()), [], src.relative_to(pkg))
+    for name, sites in calls.items():
+        assert [caller for caller, _ in sites] == ["TxnTable._commit"], \
+            f"{name} called outside TxnTable._commit: {sites}"

@@ -239,3 +239,32 @@ def test_tws_twin_gate_or_parity(spark, tmp_path):
             if prev is not None:
                 spark.conf.set(
                     "spark.sql.streaming.stateStore.providerClass", prev)
+
+
+def test_state_shard_sizing_matches_local_listing(spark, tmp_path):
+    """streaming_windows_live sizes its state shards from the input
+    bytes, read through the Hadoop FileSystem of the path. On a
+    single-file zone and on a directory zone (part files plus the
+    `_SUCCESS`/`.crc` entries Spark skips) the bytes equal the local
+    listing, and a `file:` URI sizes the same as the bare path, so the
+    shard count is what the os.path sizing computed."""
+    from aws_payment_data_lake_spark.queries.streaming_batch import (
+        _input_bytes,
+    )
+
+    def local_bytes(p):
+        if os.path.isfile(p):
+            return os.path.getsize(p)
+        return sum(os.path.getsize(os.path.join(p, f))
+                   for f in os.listdir(p)
+                   if not f.startswith(("_", ".")))
+
+    zone = str(tmp_path / "zone")
+    spark.range(1000).repartition(3).write.parquet(zone)
+    assert any(f.startswith(("_", ".")) for f in os.listdir(zone))
+    for path in (EVENTS, zone):
+        want = local_bytes(path)
+        assert _input_bytes(spark, path) == want
+        assert _input_bytes(spark, "file://" + path) == want
+        assert (max(1, _input_bytes(spark, path) // (64 * 1024 * 1024))
+                == max(1, want // (64 * 1024 * 1024)))

@@ -250,12 +250,12 @@ def test_overwrite_revalidates_after_concurrent_alter(spark, table):
     orig = table._try_publish
     fired = {"n": 0}
 
-    def racing(version, commit):
+    def racing(version, commit, features=()):
         if commit.get("op") == "overwrite" and fired["n"] == 0:
             fired["n"] = 1
             t2 = TxnTable(spark, table.path)
             t2.add_check_constraint("amount_pos", "amount > 0")
-        return orig(version, commit)
+        return orig(version, commit, features)
 
     table._try_publish = racing
     try:

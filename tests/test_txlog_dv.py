@@ -261,11 +261,11 @@ def _race_dv_into_first_publish(monkeypatch, table_path, spark,
     orig = TxnTable._try_publish
     state = {"raced": False}
 
-    def racy(self, version, commit):
+    def racy(self, version, commit, features=()):
         if commit.get("op") in ops and not state["raced"]:
             state["raced"] = True
             t2.delete("id % 10 = 3", mode="dv")   # claims `version`
-        return orig(self, version, commit)
+        return orig(self, version, commit, features)
 
     monkeypatch.setattr(TxnTable, "_try_publish", racy)
     return state
