@@ -21,7 +21,8 @@ manifest-listed files, so:
 
 `overwrite` replaces the manifest (old data files become unreferenced
 and are removed best-effort AFTER the new manifest is live); append
-mode unions the old manifest's file list with the new files.
+mode unions the old manifest's file list with the new files and keeps
+its stream batch registry, so a replayed stream batch stays a no-op.
 
 Format: JSON-lines data files (human-auditable — this sink's use case
 is audit/erasure logs, not bulk data; the parquet zones stay the bulk
@@ -102,34 +103,45 @@ class _AuditWriter(DataSourceWriter):
         return _AuditCommit(name, n, digest)
 
     # -- driver side ------------------------------------------------------
-    def commit(self, messages) -> None:
-        files, total, digest = [], 0, 0
+    def _publish(self, messages, old: dict | None,
+                 batch_id: int | None = None) -> list[dict]:
+        """The one publish step of both commits: move the staged files
+        into place and atomically replace the manifest. Appends onto
+        ``old`` (None: a fresh manifest), carrying its stream
+        ``batches`` registry forward and registering ``batch_id``.
+        Returns the new manifest's file list."""
+        old = old or {}
+        files, total = list(old.get("files", [])), old.get("n_rows", 0)
+        digest = old.get("digest", 0)
         for m in messages:
             if m is None:
                 continue
             os.replace(os.path.join(self.staging, m.filename),
                        os.path.join(self.path, m.filename))
-            files.append({"file": m.filename, "n_rows": m.n_rows,
-                          "digest": m.digest})
+            entry = {"file": m.filename, "n_rows": m.n_rows,
+                     "digest": m.digest}
+            if batch_id is not None:
+                entry["batch_id"] = batch_id
+            files.append(entry)
             total += m.n_rows
             digest = (digest + m.digest) % _DIGEST_MOD
-        old_files: list[dict] = []
+        manifest = {"schema": self.schema_ddl, "files": files,
+                    "n_rows": total, "digest": digest}
+        batches = list(old.get("batches", []))
+        if batch_id is not None:
+            batches.append(batch_id)
+        if batches:
+            manifest["batches"] = batches
         mpath = os.path.join(self.path, _MANIFEST)
-        try:
-            with open(mpath) as fh:
-                old = json.load(fh)
-            old_files = old.get("files", [])
-        except (OSError, json.JSONDecodeError):
-            old = None
-        if not self.overwrite and old is not None:
-            files = old_files + files
-            total += old.get("n_rows", 0)
-            digest = (digest + old.get("digest", 0)) % _DIGEST_MOD
-        tmp = mpath + f".tmp-{self.write_id}"
+        tmp = mpath + f".tmp-{self.write_id}-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
-            json.dump({"schema": self.schema_ddl, "files": files,
-                       "n_rows": total, "digest": digest}, fh)
+            json.dump(manifest, fh)
         os.replace(tmp, mpath)  # the commit point
+        return files
+
+    def commit(self, messages) -> None:
+        old = read_manifest(self.path)
+        files = self._publish(messages, None if self.overwrite else old)
         # sweep the staging dir: our files were just moved out; any
         # leftovers are strays from earlier ABORTED writes (abort races
         # still-running tasks, which can re-create staged files after
@@ -142,7 +154,7 @@ class _AuditWriter(DataSourceWriter):
         shutil.rmtree(self.staging, ignore_errors=True)
         if self.overwrite and old is not None:
             kept = {f["file"] for f in files}
-            for f in old_files:  # unreference-then-delete, best effort
+            for f in old.get("files", []):  # unreference, then delete
                 if f["file"] not in kept:
                     try:
                         os.remove(os.path.join(self.path, f["file"]))
@@ -173,15 +185,14 @@ class _AuditReader(DataSourceReader):
         self.cols = [f.name for f in schema.fields]
         from_batch = options.get("frombatch")  # option keys lowercased
         try:
-            with open(os.path.join(self.path, _MANIFEST)) as fh:
-                entries = json.load(fh)["files"]
+            entries = (read_manifest(self.path) or {})["files"]
             if from_batch is not None:
                 k = int(from_batch)
                 entries = [f for f in entries
                            if f.get("batch_id") is not None
                            and f["batch_id"] >= k]
             self.files = [f["file"] for f in entries]
-        except (OSError, json.JSONDecodeError, KeyError):
+        except KeyError:
             self.files = []
 
     def partitions(self) -> list[InputPartition]:
@@ -249,13 +260,7 @@ class _AuditStreamWriter(_AuditWriter, DataSourceStreamWriter):
         _AuditWriter.__init__(self, options, schema, overwrite)
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        mpath = os.path.join(self.path, _MANIFEST)
-        try:
-            with open(mpath) as fh:
-                old = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            old = {"schema": self.schema_ddl, "files": [],
-                   "n_rows": 0, "digest": 0, "batches": []}
+        old = read_manifest(self.path) or {}
         if batchId in old.get("batches", []):
             # replayed batch: its rows are already committed — drop the
             # new attempt's staged files, keep the manifest untouched
@@ -266,24 +271,7 @@ class _AuditStreamWriter(_AuditWriter, DataSourceStreamWriter):
                     except OSError:
                         pass
             return
-        files, total, digest = (list(old["files"]), old["n_rows"],
-                                old["digest"])
-        for m in messages:
-            if m is None:
-                continue
-            os.replace(os.path.join(self.staging, m.filename),
-                       os.path.join(self.path, m.filename))
-            files.append({"file": m.filename, "n_rows": m.n_rows,
-                          "digest": m.digest, "batch_id": batchId})
-            total += m.n_rows
-            digest = (digest + m.digest) % _DIGEST_MOD
-        tmp = mpath + f".tmp-{self.write_id}-{batchId}"
-        with open(tmp, "w") as fh:
-            json.dump({"schema": self.schema_ddl, "files": files,
-                       "n_rows": total, "digest": digest,
-                       "batches": old.get("batches", []) + [batchId]},
-                      fh)
-        os.replace(tmp, mpath)
+        self._publish(messages, old, batchId)
         try:  # drop the staging dir when this batch emptied it
             os.rmdir(self.staging)
         except OSError:

@@ -42,6 +42,8 @@ import time
 import uuid
 from typing import Any, Callable
 
+from aws_payment_data_lake_spark.sources.txlog import list_log_versions
+
 _CATALOG_DIR = "_catalog"
 
 
@@ -82,16 +84,7 @@ class CatalogLog:
 
     # ------------------------------------------------------------ read
     def _versions(self) -> list[int]:
-        if not os.path.isdir(self._dir):
-            return []
-        out = []
-        for n in os.listdir(self._dir):
-            if n.endswith(".json") and not n.startswith("."):
-                try:
-                    out.append(int(n[:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return list_log_versions(self._dir)
 
     def head_version(self) -> int:
         """-1 when the catalog has never been written."""

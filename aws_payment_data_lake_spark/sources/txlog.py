@@ -86,7 +86,7 @@ import re
 import shutil
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -489,6 +489,87 @@ def _trunc_hi(v: Any) -> Any:
     return v
 
 
+def list_log_versions(log_dir: str) -> list[int]:
+    """The log listing (LogStore property 4): sorted versions of the
+    ``<int>.json`` commits in ``log_dir``, skipping dot-prefixed temp
+    names. Shared by TxnTable and the catalog log."""
+    if not os.path.isdir(log_dir):
+        return []
+    out = []
+    for n in os.listdir(log_dir):
+        if n.endswith(".json") and not n.startswith("."):
+            try:
+                out.append(int(n[:-5]))
+            except ValueError:
+                continue
+    return sorted(out)
+
+
+def _decode_map(cast: Callable[[Any], Any]) -> Callable[[dict], dict]:
+    return lambda m: {k: cast(x) for k, x in m.items()}
+
+
+# The checkpoint meta blob: every Snapshot field but version and live,
+# in blob key order, with its decoder (the encoding is the field value,
+# ``copied`` sorted). One list for both sides, so a field cannot be
+# checkpointed and then dropped on read.
+_CKPT_META: tuple[tuple[str, Callable[[Any], Any]], ...] = (
+    ("schema_json", lambda x: x),
+    ("txns", dict),
+    ("partition_by", list),
+    ("constraints", dict),
+    ("dvs", _decode_map(list)),
+    ("dv_dead", _decode_map(int)),
+    ("column_mapping", dict),
+    ("dropped_physical", list),
+    ("generated", dict),
+    ("protocol", lambda x: x),
+    ("copied", set),
+    ("properties", dict),
+    ("identity", _decode_map(dict)),
+    ("identity_high", _decode_map(int)),
+    ("defaults", dict),
+)
+
+# layout-only ops: their adds rewrite existing rows without changing
+# content (Delta's dataChange=false) — the change feed and the
+# streaming source skip them or they would re-emit the whole table
+# after every OPTIMIZE
+_LAYOUT_OPS = ("compact", "optimize", "reorg")
+
+
+@dataclass(frozen=True)
+class FeedFile:
+    """One file a commit contributes to the change feed. ``kind``:
+    'cdc' (a write-side change image: physical names + _change_type),
+    'add' (an added data file, read as inserts) or 'dv_dead' (a RAW
+    target file whose dead positions in ``sidecars`` are the delete
+    pre-images). ``path`` is relative to the table root."""
+    kind: str
+    path: str
+    sidecars: tuple[str, ...] = ()
+
+
+def _feed_plan(c: dict[str, Any], cdf: bool) -> list[FeedFile]:
+    """The change-feed policy, shared by ``TxnTable.changes`` and the
+    ``txlog_feed`` stream: the files commit ``c`` contributes. Layout
+    ops contribute nothing. A commit with write-side cdc images
+    contributes those verbatim (the reader keeps only inserts and
+    post-images in plain mode). Otherwise its adds are inserts and,
+    with ``cdf``, each DV target is a 'dv_dead' read of the commit's
+    sidecars."""
+    if c.get("op") in _LAYOUT_OPS:
+        return []
+    if c.get("cdc"):
+        return [FeedFile("cdc", f) for f in c["cdc"]["files"]]
+    plan = [FeedFile("add", a["path"]) for a in c.get("add", [])]
+    dv = c.get("dv")
+    if cdf and dv:
+        plan += [FeedFile("dv_dead", k, tuple(dv["files"]))
+                 for k in sorted(dv["per_target"])]
+    return plan
+
+
 class TxnTable:
     """One ACID parquet table. All methods are safe to call from
     concurrent writers (processes or threads) sharing the path."""
@@ -528,16 +609,27 @@ class TxnTable:
         return os.path.isfile(self._commit_path(0))
 
     def _versions_on_disk(self) -> list[int]:
-        if not os.path.isdir(self._log):
-            return []
-        out = []
-        for n in os.listdir(self._log):
-            if n.endswith(".json") and not n.startswith("."):
-                try:
-                    out.append(int(n[:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return list_log_versions(self._log)
+
+    def _commits(self, versions: Iterable[int]
+                 ) -> Iterator[tuple[int, dict[str, Any]]]:
+        """The one commit reader (LogStore property 4): ``(v, commit)``
+        for each of ``versions`` in order, each commit JSON opened
+        exactly once. A version missing on disk raises
+        FileNotFoundError."""
+        for v in versions:
+            with open(self._commit_path(v)) as f:
+                yield v, json.load(f)
+
+    def _ever_logged(self, versions: list[int]) -> set[str]:
+        """Every data, DV-sidecar and cdc-image rel any of ``versions``
+        ever committed (fsck's and vacuum's orphan test)."""
+        out: set[str] = set()
+        for _, c in self._commits(versions):
+            out.update(a["path"] for a in c.get("add", []))
+            out.update(c.get("dv", {}).get("files", []))
+            out.update(c.get("cdc", {}).get("files", []))
+        return out
 
     def latest_version(self) -> int:
         vs = self._versions_on_disk()
@@ -575,25 +667,11 @@ class TxnTable:
                                        json.loads(r.get("nulls")
                                                   or "{}"))
                     for r in rows}
-            return Snapshot(v, meta["schema_json"], live,
-                            dict(meta.get("txns", {})),
-                            list(meta.get("partition_by", [])),
-                            dict(meta.get("constraints", {})),
-                            {k: list(fs) for k, fs
-                             in meta.get("dvs", {}).items()},
-                            {k: int(n) for k, n
-                             in meta.get("dv_dead", {}).items()},
-                            dict(meta.get("column_mapping", {})),
-                            list(meta.get("dropped_physical", [])),
-                            dict(meta.get("generated", {})),
-                            meta.get("protocol"),
-                            set(meta.get("copied", [])),
-                            dict(meta.get("properties", {})),
-                            {k: dict(x) for k, x
-                             in meta.get("identity", {}).items()},
-                            {k: int(n) for k, n
-                             in meta.get("identity_high", {}).items()},
-                            dict(meta.get("defaults", {})))
+            # schema_json is required; absent optional keys (older
+            # checkpoints) keep the field defaults
+            return Snapshot(v, meta["schema_json"], live, **{
+                k: dec(meta[k]) for k, dec in _CKPT_META[1:]
+                if k in meta})
         except (OSError, KeyError, ValueError):
             return None   # corrupt/missing checkpoint -> full replay
 
@@ -609,11 +687,7 @@ class TxnTable:
         start = snap.version + 1 if snap else vs[0]
         if snap is None:
             snap = Snapshot(-1, None, {})
-        for v in vs:
-            if v < start or v > upto:
-                continue
-            with open(self._commit_path(v)) as f:
-                c = json.load(f)
+        for v, c in self._commits(x for x in vs if start <= x <= upto):
             if c.get("schema_json"):
                 snap.schema_json = c["schema_json"]
             if "partition_by" in c:
@@ -739,22 +813,10 @@ class TxnTable:
                                     ("bytes", pa.int64()),
                                     ("stats", pa.string()),
                                     ("nulls", pa.string())]))
-        meta = json.dumps({"schema_json": snap.schema_json,
-                           "txns": snap.txns,
-                           "partition_by": snap.partition_by,
-                           "constraints": snap.constraints,
-                           "dvs": snap.dvs,
-                           "dv_dead": snap.dv_dead,
-                           "column_mapping": snap.column_mapping,
-                           "dropped_physical": snap.dropped_physical,
-                           "generated": snap.generated,
-                           "protocol": snap.protocol,
-                           "copied": sorted(snap.copied),
-                           "properties": snap.properties,
-                           "identity": snap.identity,
-                           "identity_high": snap.identity_high,
-                           "defaults": snap.defaults})
-        t = t.replace_schema_metadata({b"txlog": meta.encode()})
+        meta = {k: getattr(snap, k) for k, _ in _CKPT_META}
+        meta["copied"] = sorted(snap.copied)      # a set: JSON list
+        t = t.replace_schema_metadata(
+            {b"txlog": json.dumps(meta).encode()})
         # MULTI-PART above checkpoint_part_rows (Delta's multi-part
         # checkpoints): the log is the scale surface — at 10M files a
         # single parquet is a multi-GB driver allocation; parts bound
@@ -915,8 +977,6 @@ class TxnTable:
         With a column ``mapping``, files are written under PHYSICAL
         names (stats keys included) so every file in the table —
         pre- and post-rename — spells columns identically."""
-        wid = uuid.uuid4().hex
-        out_dir = os.path.join(self.path, _DATA_DIR, wid)
         if partition_by:
             # hidden partitioning: range-cluster on the partition
             # columns (plus an in-file sort) so each file covers a
@@ -936,17 +996,25 @@ class TxnTable:
             # is narrow, so the clustered in-partition sort survives
             df = df.select(*[F.col(c).alias(mapping.get(c, c))
                              for c in df.columns])
-        df.write.mode("errorifexists").parquet(out_dir)
+        _, rels = self._write_dir(df)
         adds: list[AddFile] = []
-        for name in sorted(os.listdir(out_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            local = os.path.join(out_dir, name)
+        for rel in rels:
+            local = os.path.join(self.path, rel)
             nrows, stats, nulls = _footer_stats(local)
-            rel = os.path.join(_DATA_DIR, wid, name)
             adds.append(AddFile(rel, nrows, os.path.getsize(local),
                                 stats, nulls))
         return adds
+
+    def _write_dir(self, df: DataFrame) -> tuple[str, list[str]]:
+        """Write ``df`` as parquet under a fresh ``data/<uuid>/`` dir
+        (invisible until a commit names its files). Returns the write
+        id and the sorted rels of its parquet files."""
+        wid = uuid.uuid4().hex
+        out_dir = os.path.join(self.path, _DATA_DIR, wid)
+        df.write.mode("errorifexists").parquet(out_dir)
+        return wid, [os.path.join(_DATA_DIR, wid, n)
+                     for n in sorted(os.listdir(out_dir))
+                     if n.endswith(".parquet")]
 
     @staticmethod
     def _cdf_on(snap: "Snapshot") -> bool:
@@ -979,14 +1047,10 @@ class TxnTable:
         out = frames[0]
         for f2 in frames[1:]:
             out = out.unionByName(f2)
-        wid = uuid.uuid4().hex
-        out_dir = os.path.join(self.path, _DATA_DIR, wid)
-        out.write.mode("errorifexists").parquet(out_dir)
-        rels = [os.path.join(_DATA_DIR, wid, n)
-                for n in sorted(os.listdir(out_dir))
-                if n.endswith(".parquet")]
+        wid, rels = self._write_dir(out)
         if not rels:
-            shutil.rmtree(out_dir, ignore_errors=True)
+            shutil.rmtree(os.path.join(self.path, _DATA_DIR, wid),
+                          ignore_errors=True)
         return rels
 
     # safe widenings the parquet vectorized reader performs at scan
@@ -2461,10 +2525,8 @@ class TxnTable:
         commit JSONs, never data. Raises if the timestamp predates the
         table."""
         best = None
-        for v in self._versions_on_disk():
-            with open(self._commit_path(v)) as f:
-                ts = json.load(f).get("ts", 0.0)
-            if ts <= timestamp:
+        for v, c in self._commits(self._versions_on_disk()):
+            if c.get("ts", 0.0) <= timestamp:
                 best = v             # no early break: a retried append
                                      # republishes its ORIGINAL ts, so
                                      # ts is not strictly monotone
@@ -2790,22 +2852,11 @@ class TxnTable:
         return self.spark.createDataFrame(pdf, schema=ddl)
 
     def history(self) -> list[dict[str, Any]]:
-        out = []
-        for v in self._versions_on_disk():
-            with open(self._commit_path(v)) as f:
-                c = json.load(f)
-            out.append({"version": v, "op": c.get("op"),
-                        "ts": c.get("ts"),
-                        "added": len(c.get("add", [])),
-                        "removed": len(c.get("remove", [])),
-                        "txn": c.get("txn")})
-        return out
-
-    # layout-only ops: their adds rewrite existing rows without
-    # changing content (Delta's dataChange=false) — the change feed
-    # and the streaming source skip them or they would re-emit the
-    # whole table after every OPTIMIZE
-    _LAYOUT_OPS = ("compact", "optimize", "reorg")
+        return [{"version": v, "op": c.get("op"), "ts": c.get("ts"),
+                 "added": len(c.get("add", [])),
+                 "removed": len(c.get("remove", [])),
+                 "txn": c.get("txn")}
+                for v, c in self._commits(self._versions_on_disk())]
 
     def changes(self, since_version: int,
                 include_deletes: bool = False,
@@ -2829,16 +2880,13 @@ class TxnTable:
         (rewrites; consumers wanting those diff snapshots)."""
         snap = self._replay()
         frames = []
-        for v in self._versions_on_disk():
-            if v <= since_version:
-                continue
-            if end_version is not None and v > end_version:
-                continue
-            with open(self._commit_path(v)) as f:
-                c = json.load(f)
-            if c.get("op") in self._LAYOUT_OPS:
-                continue
-            if c.get("cdc"):
+        for v, c in self._commits(
+                x for x in self._versions_on_disk() if x > since_version
+                and (end_version is None or x <= end_version)):
+            by_kind: dict[str, list[FeedFile]] = {}
+            for ff in _feed_plan(c, include_deletes):
+                by_kind.setdefault(ff.kind, []).append(ff)
+            if "cdc" in by_kind:
                 # the commit carries WRITE-SIDE change images
                 # (txlog.enableChangeDataFeed was on): they are the
                 # authoritative events — richer than the add/dv
@@ -2850,8 +2898,8 @@ class TxnTable:
                 # columns the commit predates, drop retired ones —
                 # the union below can then never break on evolution
                 raw = self.spark.read.parquet(
-                    *[os.path.join(self.path, f)
-                      for f in c["cdc"]["files"]])
+                    *[os.path.join(self.path, ff.path)
+                      for ff in by_kind["cdc"]])
                 have = set(raw.columns)
                 ev = raw.select(*[
                     ((F.col(snap.phys(f.name)).cast(f.dataType)
@@ -2867,27 +2915,27 @@ class TxnTable:
                         .drop("_change_type"))
                 frames.append(ev.withColumn("_commit_version",
                                             F.lit(v)))
-                continue
-            rels = [a["path"] for a in c.get("add", [])]
-            if rels:
+            if "add" in by_kind:
                 # historical adds are read RAW (_plain_read), not through
                 # the current head's DV filter: a deletion vector logged
                 # AFTER commit v must not retroactively erase v's
                 # 'insert' rows — Delta CDF emits inserts as committed at
                 # their version, and the later dv commit contributes the
                 # explicit 'delete' events below. (ADVICE r8.)
-                ins = (self._plain_read(snap, rels)
+                ins = (self._plain_read(snap,
+                                        [ff.path for ff in by_kind["add"]])
                        .withColumn("_commit_version", F.lit(v)))
                 if include_deletes:
                     ins = ins.withColumn("_change_type",
                                          F.lit("insert"))
                 frames.append(ins)
-            dv = c.get("dv")
-            if include_deletes and dv:
+            if "dv_dead" in by_kind:
+                dead_ff = by_kind["dv_dead"]
                 raw = self._plain_read_meta(snap,
-                                            sorted(dv["per_target"]))
+                                            [ff.path for ff in dead_ff])
                 pairs = self.spark.read.parquet(
-                    *[os.path.join(self.path, f) for f in dv["files"]])
+                    *[os.path.join(self.path, f)
+                      for f in dead_ff[0].sidecars])
                 dead = (raw.join(
                     F.broadcast(pairs.select("target", "pos")),
                     on=[raw["__rel"] == pairs["target"],
@@ -3468,9 +3516,7 @@ class TxnTable:
         layout rewrites (compact/optimize), history rewrites
         (restore/overwrite), and constraint changes are all
         conservative aborts."""
-        for v in range(read_v + 1, head_v + 1):
-            with open(self._commit_path(v)) as f:
-                c = json.load(f)
+        for v, c in self._commits(range(read_v + 1, head_v + 1)):
             op = c.get("op")
             if op not in ("append", "merge", "delete", "update"):
                 raise ConcurrentWriteError(
@@ -3653,34 +3699,40 @@ class TxnTable:
         if not rels:
             return {"version": snap.version, "files_rewritten": 0,
                     "rows_changed": 0, "dv_files": 0}
-        matches = (self._read_files_meta(snap, rels).where(hit)
-                   .select(F.col("__rel").alias("target"),
-                           F.col("__pos").alias("pos")))
-        wid = uuid.uuid4().hex
-        out_dir = os.path.join(self.path, _DATA_DIR, wid)
-        matches.write.mode("errorifexists").parquet(out_dir)
-        staged = self.spark.read.parquet(out_dir)
-        per_target = {r["target"]: r["n"] for r in
-                      (staged.groupBy("target")
-                       .agg(F.count(F.lit(1)).alias("n")).collect())}
-        if not per_target:
-            shutil.rmtree(out_dir, ignore_errors=True)
+        staged = self._stage_dv(
+            snap, self._read_files_meta(snap, rels).where(hit))
+        if staged is None:
             return {"version": snap.version, "files_rewritten": 0,
                     "rows_changed": 0, "dv_files": 0}
-        self._assert_dv_targets_live(per_target, snap)
-        dv_files = [os.path.join(_DATA_DIR, wid, n)
-                    for n in sorted(os.listdir(out_dir))
-                    if n.endswith(".parquet")]
+        dv_files, per_target = staged
         commit = {"op": "delete_dv", "ts": time.time(),
                   "read_version": snap.version,
                   "add": [], "remove": [],
-                  "dv": {"files": dv_files,
-                         "per_target": {k: int(v) for k, v
-                                        in per_target.items()}}}
+                  "dv": {"files": dv_files, "per_target": per_target}}
         return {"version": self._commit(snap, commit),
                 "files_rewritten": 0,
                 "rows_changed": int(sum(per_target.values())),
                 "dv_files": len(dv_files)}
+
+    def _stage_dv(self, snap: Snapshot, matched: DataFrame
+                  ) -> tuple[list[str], dict[str, int]] | None:
+        """Stage the deletion-vector sidecar of the ``matched`` rows
+        (their ``__rel``/``__pos``) and count the dead rows per target.
+        Returns (sidecar rels, per_target), or None — the empty write
+        dir removed — when nothing matched."""
+        wid, dv_files = self._write_dir(
+            matched.select(F.col("__rel").alias("target"),
+                           F.col("__pos").alias("pos")))
+        out_dir = os.path.join(self.path, _DATA_DIR, wid)
+        staged = self.spark.read.parquet(out_dir)
+        per_target = {r["target"]: int(r["n"]) for r in
+                      (staged.groupBy("target")
+                       .agg(F.count(F.lit(1)).alias("n")).collect())}
+        if not per_target:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            return None
+        self._assert_dv_targets_live(per_target, snap)
+        return dv_files, per_target
 
     def _assert_dv_targets_live(self, per_target: dict[str, int],
                                 snap: Snapshot) -> None:
@@ -3743,31 +3795,17 @@ class TxnTable:
             (sets[c].alias(c) if c in sets else F.col(c))
             for c in tcols])
         self._enforce(updated, snap.constraints)
-        wid = uuid.uuid4().hex
-        out_dir = os.path.join(self.path, _DATA_DIR, wid)
-        (matched.select(F.col("__rel").alias("target"),
-                        F.col("__pos").alias("pos"))
-         .write.mode("errorifexists").parquet(out_dir))
-        staged = self.spark.read.parquet(out_dir)
-        per_target = {r["target"]: r["n"] for r in
-                      (staged.groupBy("target")
-                       .agg(F.count(F.lit(1)).alias("n")).collect())}
-        if not per_target:
-            shutil.rmtree(out_dir, ignore_errors=True)
+        staged = self._stage_dv(snap, matched)
+        if staged is None:
             return {"version": snap.version, "files_rewritten": 0,
                     "rows_changed": 0, "dv_files": 0}
-        self._assert_dv_targets_live(per_target, snap)
-        dv_files = [os.path.join(_DATA_DIR, wid, n)
-                    for n in sorted(os.listdir(out_dir))
-                    if n.endswith(".parquet")]
+        dv_files, per_target = staged
         adds = self._stage(updated, snap.partition_by or None,
                            mapping=snap.column_mapping)
         commit = {"op": "update_dv", "ts": time.time(),
                   "read_version": snap.version,
                   "add": [a.to_json() for a in adds], "remove": [],
-                  "dv": {"files": dv_files,
-                         "per_target": {k: int(v) for k, v
-                                        in per_target.items()}}}
+                  "dv": {"files": dv_files, "per_target": per_target}}
         if self._cdf_on(snap):
             cdc = self._stage_cdc(
                 snap, [(matched, "update_preimage"),
@@ -4013,13 +4051,7 @@ class TxnTable:
         ``clean`` is True iff everything above is empty."""
         vs = self._versions_on_disk()
         snap = self._replay()
-        ever_logged: set[str] = set()
-        for v in vs:
-            with open(self._commit_path(v)) as f:
-                c = json.load(f)
-            ever_logged.update(a["path"] for a in c.get("add", []))
-            ever_logged.update(c.get("dv", {}).get("files", []))
-            ever_logged.update(c.get("cdc", {}).get("files", []))
+        ever_logged = self._ever_logged(vs)
         missing, size_drift, row_drift = [], [], []
         for rel, add in sorted(snap.live.items()):
             local = os.path.join(self.path, rel)
@@ -4082,34 +4114,23 @@ class TxnTable:
         candidates: list[str] = []
         if retain_hours is not None:
             cutoff = time.time() - 3600.0 * retain_hours
-            keep_versions = []
-            for v in vs:
-                with open(self._commit_path(v)) as f:
-                    if json.load(f).get("ts", 0.0) >= cutoff:
-                        keep_versions.append(v)
+            keep_versions = [v for v, c in self._commits(vs)
+                             if c.get("ts", 0.0) >= cutoff]
             if not keep_versions or keep_versions[-1] != vs[-1]:
                 keep_versions.append(vs[-1])   # latest always readable
         else:
             keep_versions = (vs[-retain_versions:] if retain_versions
                              else vs[-1:])
         referenced: set[str] = set()
-        for v in keep_versions:
+        for v, c in self._commits(keep_versions):
             ksnap = self._replay(v)
             referenced.update(ksnap.live)
             referenced.update(f for fs in ksnap.dvs.values() for f in fs)
             # change-data images belong to their COMMIT: keep them
             # while the commit's version is retained (table_changes
             # over vacuumed versions is already bounded by retention)
-            with open(self._commit_path(v)) as f:
-                referenced.update(
-                    json.load(f).get("cdc", {}).get("files", []))
-        ever_logged: set[str] = set()
-        for v in vs:
-            with open(self._commit_path(v)) as f:
-                c = json.load(f)
-            ever_logged.update(a["path"] for a in c.get("add", []))
-            ever_logged.update(c.get("dv", {}).get("files", []))
-            ever_logged.update(c.get("cdc", {}).get("files", []))
+            referenced.update(c.get("cdc", {}).get("files", []))
+        ever_logged = self._ever_logged(vs)
         data_root = os.path.join(self.path, _DATA_DIR)
         removed_files = removed_orphans = 0
         now = time.time()

@@ -40,7 +40,6 @@ Python row loop."""
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator
 
@@ -53,7 +52,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
-from aws_payment_data_lake_spark.sources.txlog import TxnTable
+from aws_payment_data_lake_spark.sources.txlog import TxnTable, _feed_plan
 
 SOURCE_NAME = "txlog_feed"
 
@@ -63,7 +62,8 @@ class _FilePart(InputPartition):
                  schema_json: str | None = None,
                  mapping: dict | None = None,
                  kind: str = "add", cdf: bool = False,
-                 dv_paths: list[str] | None = None) -> None:
+                 dv_paths: list[str] | None = None,
+                 dv_key: str = "") -> None:
         self.path = path
         self.version = version
         self.schema_json = schema_json
@@ -76,7 +76,7 @@ class _FilePart(InputPartition):
         self.kind = kind
         self.cdf = cdf
         self.dv_paths = dv_paths or []
-        self.dv_key = ""               # log key the sidecars target
+        self.dv_key = dv_key           # log key the sidecars target
 
 
 def reconcile_arrow(table, schema_json: str | None, mapping: dict):
@@ -180,55 +180,26 @@ class _Log:
         names and null-fills/upcasts historical files.
 
         ``cdf`` (Delta's readChangeFeed): rows carry _change_type.
-        A commit with write-side `cdc` images contributes those
-        VERBATIM (update pre/post pairs, exact deletes — and in plain
-        mode, just its insert+postimage rows, no rewrite
-        amplification); a DV commit without images contributes its
-        adds as 'insert' plus the sidecars' dead target rows as
-        'delete' pre-images; a plain add is an 'insert'."""
+        Which files each commit contributes is the shared change-feed
+        policy (``txlog._feed_plan``); cdc files spell PHYSICAL names
+        like every table file, so they reconcile like adds."""
         snap = self.table._replay()
         root = self.table.path
         parts: list[_FilePart] = []
-        for v in self.table._versions_on_disk():
-            if not lo <= v < hi:
-                continue
-            with open(self.table._commit_path(v)) as f:
-                c = json.load(f)
-            if c.get("op") in TxnTable._LAYOUT_OPS:
-                continue
-            if c.get("cdc"):
-                # cdc files spell PHYSICAL names like every table
-                # file — same head-mapping reconciliation as adds
-                parts.extend(
-                    _FilePart(os.path.join(root, f), v,
-                              snap.schema_json,
-                              dict(snap.column_mapping), kind="cdc",
-                              cdf=cdf)
-                    for f in c["cdc"]["files"])
-                continue
-            parts.extend(
-                _FilePart(os.path.join(root, a["path"]), v,
-                          snap.schema_json, dict(snap.column_mapping),
-                          cdf=cdf)
-                for a in c.get("add", []))
-            dv = c.get("dv")
-            if cdf and dv:
-                dv_abs = [os.path.join(root, f) for f in dv["files"]]
-                for key in sorted(dv["per_target"]):
-                    p = _FilePart(
-                        os.path.join(root, key), v,
-                        snap.schema_json, dict(snap.column_mapping),
-                        kind="dv_dead", cdf=True, dv_paths=dv_abs)
-                    p.dv_key = key
-                    parts.append(p)
+        for v, c in self.table._commits(
+                x for x in self.table._versions_on_disk() if lo <= x < hi):
+            for ff in _feed_plan(c, cdf):
+                parts.append(_FilePart(
+                    os.path.join(root, ff.path), v, snap.schema_json,
+                    dict(snap.column_mapping), kind=ff.kind, cdf=cdf,
+                    dv_paths=[os.path.join(root, f) for f in ff.sidecars],
+                    dv_key=ff.path if ff.kind == "dv_dead" else ""))
         return parts
 
     def live_parts(self) -> list[_FilePart]:
         snap = self.table._replay()
         added_at: dict[str, int] = {}
-        for v in self.table._versions_on_disk():
-            with open(self.table._commit_path(v)) as f:
-                c = json.load(f)
+        for v, c in self.table._commits(self.table._versions_on_disk()):
             for a in c.get("add", []):
                 added_at[a["path"]] = v
         return [_FilePart(os.path.join(self.table.path, p),
@@ -320,21 +291,9 @@ class _FeedStreamReader(DataSourceStreamReader):
         if lo >= head_next:
             return {"version": head_next}
         bounded, files = lo, 0
-        for v in vs:
-            if v < lo:
-                continue
-            with open(log.table._commit_path(v)) as f:
-                c = json.load(f)
-            if c.get("op") in log.table._LAYOUT_OPS:
-                n = 0
-            elif c.get("cdc"):
-                # cdc commits PLAN their image files (commit_adds),
-                # not their adds — count what the batch will hold
-                n = len(c["cdc"]["files"])
-            else:
-                n = len(c.get("add", []))
-                if self.cdf and c.get("dv"):
-                    n += len(c["dv"].get("per_target", {}))
+        for v, c in log.table._commits(x for x in vs if x >= lo):
+            # count what commit_adds will plan for the batch
+            n = len(_feed_plan(c, self.cdf))
             if files and files + n > self.max_files:
                 break              # cap reached — but never starve:
             files += n             # at least one commit per batch

@@ -201,3 +201,34 @@ def test_from_batch_incremental_read(spark, tmp_path):
     assert ids_from(1) == [3, 4, 5]
     assert ids_from(2) == [4, 5]
     assert ids_from(3) == []
+
+
+def test_batch_append_keeps_the_stream_batch_registry(spark, tmp_path):
+    """A batch append after a stream commit carries the manifest's
+    ``batches`` registry forward, so a replayed stream batch is still
+    discarded instead of appended twice."""
+    import pyspark.sql.types as T
+    from pyspark.sql import Row
+    from pyspark.sql.types import StructType
+
+    from aws_payment_data_lake_spark.sources.audit_sink import (
+        _AuditStreamWriter,
+    )
+
+    out = str(tmp_path / "audit_mixed")
+    os.makedirs(out)
+    schema = StructType([T.StructField("id", T.LongType())])
+    w = _AuditStreamWriter({"path": out}, schema, False)
+
+    def stream_batch_0():
+        msg = w.write(iter([Row(id=1), Row(id=2)]))
+        w.commit([msg], batchId=0)
+
+    stream_batch_0()
+    _write(spark.range(10, 13), out, "append")
+    assert read_manifest(out)["n_rows"] == 5
+    stream_batch_0()                       # at-least-once replay
+    assert read_manifest(out)["n_rows"] == 5
+    back = (spark.read.format(SINK_NAME).schema("id bigint")
+            .option("path", out).load())
+    assert sorted(r.id for r in back.collect()) == [1, 2, 10, 11, 12]

@@ -4,7 +4,8 @@ contract. If `_try_publish` or `_maybe_checkpoint` start calling
 storage operations outside the declared sets, this test fails and the
 spec (plus any object-store LogStore port) must be revisited together
 — the same discipline as the independent-reader interop pin. It also
-pins `TxnTable._commit` as the only caller of both."""
+pins `TxnTable._commit` as the only caller of both, and
+`TxnTable._commits` as the only reader of commit JSONs (property 4)."""
 
 from __future__ import annotations
 
@@ -55,21 +56,17 @@ def test_commit_claim_never_reads_before_linking():
             "arbitrated by the atomic link alone"
 
 
-def test_commit_loop_is_the_only_publisher():
-    """One choke point: inside the package, ``_try_publish(`` and
-    ``_maybe_checkpoint(`` are each called only from
-    ``TxnTable._commit``, the single commit loop every write path
-    (DML, DDL, maintenance, the batch writer, the streaming sink)
-    publishes through. Commit metrics and per-step timings attach
-    there and nowhere else."""
+def _package_refs(names: set[str]) -> dict[str, list[tuple[str, str]]]:
+    """Every use of ``names`` inside the package — an attribute
+    (``x.name``) or a bare-name load — as (enclosing def/class scope,
+    file:line)."""
     import ast
     import pathlib
 
     import aws_payment_data_lake_spark
 
     pkg = pathlib.Path(aws_payment_data_lake_spark.__file__).parent
-    calls: dict[str, list[str]] = {"_try_publish": [],
-                                   "_maybe_checkpoint": []}
+    refs: dict[str, list[tuple[str, str]]] = {n: [] for n in names}
 
     def visit(node, scope, where):
         for child in ast.iter_child_nodes(node):
@@ -77,15 +74,48 @@ def test_commit_loop_is_the_only_publisher():
                                   ast.AsyncFunctionDef)):
                 visit(child, scope + [child.name], where)
                 continue
-            if (isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr in calls):
-                calls[child.func.attr].append(
+            if isinstance(child, ast.Attribute):
+                name = child.attr
+            elif (isinstance(child, ast.Name)
+                  and isinstance(child.ctx, ast.Load)):
+                name = child.id
+            else:
+                name = None
+            if name in refs:
+                refs[name].append(
                     (".".join(scope), f"{where}:{child.lineno}"))
             visit(child, scope, where)
 
     for src in sorted(pkg.rglob("*.py")):
         visit(ast.parse(src.read_text()), [], src.relative_to(pkg))
-    for name, sites in calls.items():
+    return refs
+
+
+def test_commit_loop_is_the_only_publisher():
+    """One choke point: inside the package, ``_try_publish(`` and
+    ``_maybe_checkpoint(`` are each called only from
+    ``TxnTable._commit``, the single commit loop every write path
+    (DML, DDL, maintenance, the batch writer, the streaming sink)
+    publishes through. Commit metrics and per-step timings attach
+    there and nowhere else."""
+    refs = _package_refs({"_try_publish", "_maybe_checkpoint"})
+    for name, sites in refs.items():
         assert [caller for caller, _ in sites] == ["TxnTable._commit"], \
             f"{name} called outside TxnTable._commit: {sites}"
+
+
+def test_commits_is_the_only_log_reader():
+    """One read path (LogStore property 4): inside the package,
+    ``_commit_path`` is used only by ``TxnTable._commits`` (the one
+    commit reader), ``_try_publish`` (the link that claims a version)
+    and ``exists``; and ``_LAYOUT_OPS`` only by ``_feed_plan``, the
+    change-feed planner ``changes()`` and the txlog_feed stream
+    share."""
+    refs = _package_refs({"_commit_path", "_LAYOUT_OPS"})
+    assert sorted(caller for caller, _ in refs["_commit_path"]) == [
+        "TxnTable._commits", "TxnTable._try_publish", "TxnTable.exists"], \
+        f"a commit JSON is opened outside TxnTable._commits: " \
+        f"{refs['_commit_path']}"
+    assert [caller for caller, _ in refs["_LAYOUT_OPS"]] == \
+        ["_feed_plan"], \
+        f"change-feed policy outside _feed_plan: {refs['_LAYOUT_OPS']}"
