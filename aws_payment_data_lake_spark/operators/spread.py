@@ -24,6 +24,12 @@ files) are spread unconditionally: they are tiny by construction, so
 the shuffle is cheap and the previous fallback — an
 ``rdd.getNumPartitions()`` probe costing ~1-2 s of driver plan
 compilation PER CALL — is retired entirely.
+
+``shuffle_width`` is the opposite guard, for a shuffle that is too
+WIDE: it sizes a keyed exchange from the bytes the optimizer expects
+the frame to carry, so a small batch is not fanned out to
+``spark.sql.shuffle.partitions`` tasks that AQE can no longer coalesce
+once the result is cached or checkpointed.
 """
 
 from __future__ import annotations
@@ -93,3 +99,33 @@ def spread_narrow_scan(df: DataFrame, key: str | None = None,
             if splits >= thr:
                 return df
     return df.repartition(tgt, F.col(key)) if key else df.repartition(tgt)
+
+
+def shuffle_width(df: DataFrame) -> int:
+    """Partition count for a keyed shuffle of ``df``:
+    ``clamp(ceil(size / advisory), 1, spark.sql.shuffle.partitions)``,
+    where ``size`` is the optimizer's ``sizeInBytes`` estimate of the
+    frame and ``advisory`` the session's
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — the size AQE
+    itself coalesces toward.
+
+    Give the result to ``repartition(n, key)``: AQE never changes an
+    explicit partition count, so the width survives a downstream
+    ``persist`` or ``checkpoint``, where AQE may not coalesce
+    (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is
+    false by default) and every later scan would otherwise run one
+    task per shuffle partition. A streaming frame, or one whose size
+    the optimizer does not know (it reports
+    ``spark.sql.defaultSizeInBytes``, e.g. an RDD-backed frame), gets
+    ``spark.sql.shuffle.partitions``: the width it has without this
+    guard."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    cap = conf.numShufflePartitions()
+    if df.isStreaming:
+        return cap
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size >= conf.defaultSizeInBytes():
+        return cap
+    sql_conf = df.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
+    advisory = conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES())
+    return max(1, min(cap, -(-size // advisory)))

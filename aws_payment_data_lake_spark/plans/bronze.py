@@ -9,8 +9,8 @@ deliberate (SURVEY.md §1.5):
     implement the documented trim+upper semantics);
   * dedup keeps "latest txn_ts" like :61-80 but with a TOTAL ordering
     (txn_ts, then row digest) so ties are deterministic, and it is an
-    aggregation (``max_by(struct)``), not a row_number sort-window — one
-    shuffle, no per-key full sort, no window state at 100 TB;
+    aggregation (``max_by(struct)``) over one hash exchange sized from
+    the batch's bytes, not a row_number window (see ``deduplicate``);
   * casts are ``try_*`` so malformed input lands as NULL for silver's
     validators instead of failing the job (Spark 4 ANSI mode throws on
     bad casts otherwise).
@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from aws_payment_data_lake_spark.operators.spread import shuffle_width
 from aws_payment_data_lake_spark.sources.writers import write_zone
 from aws_payment_data_lake_spark.plans.schemas import AMOUNT_DECIMAL
 
@@ -52,17 +53,34 @@ def deduplicate(df: DataFrame, key: str = "txn_id",
                 order_col: str = "txn_ts") -> DataFrame:
     """Latest-record-wins dedup per key (etl_transactions_bronze.py:61-80).
 
-    Implemented as ``max_by(struct(all cols), struct(order, digest))``:
-    a single hash aggregation with map-side partial combine — at scale this
-    beats the reference's row_number window (which must fully sort every
-    key group) and adds the deterministic tiebreak SURVEY.md §1.5.4 calls
-    for (digest of the whole row breaks exact txn_ts ties stably).
+    Implemented as ``max_by(struct(all cols), struct(order, digest))``;
+    the digest of the whole row breaks exact txn_ts ties stably (the
+    deterministic tiebreak SURVEY.md §1.5.4 calls for), so the ordering
+    is total and the result does not depend on partitioning.
+
+    Plan (``explain()``): ``Exchange hashpartitioning(key, n)`` (Spark
+    plans ``Exchange SinglePartition`` when n is 1), then a ``Sort`` on
+    key and a partial and a final ``SortAggregate`` in the same stage —
+    Spark plans ``max_by`` over structs as a sort aggregate, not a hash
+    aggregate. The rows cross the exchange uncombined; each partition
+    is sorted once, after the shuffle, as the reference's row_number
+    window would be, but with no window buffer.
+
+    The explicit ``repartition(n, key)`` comes before the ``groupBy`` so
+    that ``n`` is ``shuffle_width(df)`` (the input's bytes over AQE's
+    advisory partition size) rather than ``spark.sql.shuffle.partitions``.
+    The aggregate reuses that hash partitioning, so it is still the one
+    exchange, and AQE leaves an explicit count alone, so a caller that
+    caches or checkpoints the result keeps the small width: every later
+    scan of a cached day batch runs ``n`` tasks, not one per shuffle
+    partition.
     """
     digest = F.xxhash64(*[F.col(c) for c in df.columns])
     payload = F.struct(*[F.col(c) for c in df.columns])
     ordering = F.struct(F.col(order_col).alias("o1"), digest.alias("o2"))
     return (
-        df.groupBy(key)
+        df.repartition(shuffle_width(df), F.col(key))
+        .groupBy(key)
         .agg(F.max_by(payload, ordering).alias("_row"))
         .select("_row.*")
     )

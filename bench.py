@@ -17,12 +17,16 @@ to the driver's ~2000-char tail-capture window (total, driver-registered
 query timings, extras aggregated), while the COMPLETE record — all
 queries, ``store_build_sec``, per-phase ``phase_sec`` breakdowns,
 errors — is written to ``BENCH_DETAIL.json`` at the repo root.
+``SPARK_GRAFT_BENCH_TAG=<tag>`` (letters, digits, ``_``) writes it to
+``BENCH_DETAIL_<tag>.json`` instead, so a probe or core-count window
+leaves the canonical record alone.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -224,6 +228,19 @@ def _extra_fns():
     }
 
 
+def detail_name(tag: str | None) -> str:
+    """File name of the complete record: ``BENCH_DETAIL.json``, or
+    ``BENCH_DETAIL_<tag>.json`` for a non-empty ``tag``. The tag names
+    a file in the repo root, so it may hold letters, digits and ``_``
+    only."""
+    if not tag:
+        return "BENCH_DETAIL.json"
+    if not re.fullmatch(r"[A-Za-z0-9_]+", tag):
+        raise ValueError(
+            f"SPARK_GRAFT_BENCH_TAG={tag!r}: use letters, digits and _ only")
+    return f"BENCH_DETAIL_{tag}.json"
+
+
 def sf_from_dir(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -238,6 +255,7 @@ def materialize(df) -> None:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    detail = detail_name(os.environ.get("SPARK_GRAFT_BENCH_TAG"))
     only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
     spark = get_spark(app_name="bench")
     specs = registry.all_queries()
@@ -361,12 +379,12 @@ def main() -> int:
     # The driver records only the last ~2000 chars of output, and the
     # full 70-entry record outgrew that window in round 7 (the artifact
     # came back tail-truncated with parsed=null). Two-tier emission:
-    # the COMPLETE record goes to BENCH_DETAIL.json next to this script
-    # (committed with the repo), and stdout gets ONE compact line that
+    # the COMPLETE record goes to BENCH_DETAIL.json (or its tagged name,
+    # see ``detail_name``) next to this script (committed with the
+    # repo), and stdout gets ONE compact line that
     # always fits the window — suite total, the driver-registered
     # queries' timings, and an aggregate for the bench-only extras.
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
+    with open(os.path.join(REPO, detail), "w") as fh:
         json.dump(full, fh, indent=1)
     registered = set(specs)
     line = {
@@ -377,7 +395,7 @@ def main() -> int:
         "extra_queries_total_sec": round(
             sum(t for n, t in timings.items() if n not in registered), 3),
         "n_queries": len(timings),
-        "detail": "BENCH_DETAIL.json",
+        "detail": detail,
         "sf": full["sf"],
         "env": env,
     }

@@ -1,5 +1,6 @@
 """Incremental gold maintenance (plans/gold.py): merge-on-append equals
-full recompute, arrival-order/batching invariance, HLL estimate parity.
+full recompute, arrival-order/batching invariance, HLL estimate parity
+(exact in the sketch's sparse mode, within its error once dense).
 """
 
 from __future__ import annotations
@@ -7,6 +8,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from aws_payment_data_lake_spark.plans.bronze import run_bronze
+from aws_payment_data_lake_spark.plans.generator import generate_transactions
 from aws_payment_data_lake_spark.plans.gold import (
     daily_totals,
     daily_totals_merge,
@@ -16,6 +19,7 @@ from aws_payment_data_lake_spark.plans.gold import (
     merchant_kpis,
 )
 from aws_payment_data_lake_spark.plans.pipeline import run_pipeline
+from aws_payment_data_lake_spark.plans.silver import run_silver
 
 
 @pytest.fixture(scope="module")
@@ -51,14 +55,45 @@ def test_daily_totals_merge_equals_full(spark, silver):
 
 def test_kpi_state_merge_equals_full_report(spark, silver):
     """Report from per-day merged states == report from one full-state
-    build, INCLUDING the HLL distinct-user estimate (register-max merge
-    is order-independent: sketch-of-union == union-of-sketches)."""
+    build, INCLUDING the HLL distinct-user estimate. That estimate is
+    exact here because this fixture has ~30 users per merchant: every
+    sketch stays in coupon (sparse) mode, below 384 values at lgK=12,
+    and a union of coupon sets is the coupon set of the union. Past
+    that the estimates only agree within the sketch's error
+    (test_kpi_state_merge_tracks_full_estimate_at_scale)."""
     days = _days(silver)
     per_day = [merchant_kpi_state(silver.where(F.col("txn_date") == d))
                for d in days]
     merged = merchant_kpi_report(merchant_kpi_state_merge(*per_day))
     full = merchant_kpi_report(merchant_kpi_state(silver))
     _same(merged, full)
+
+
+def test_kpi_state_merge_tracks_full_estimate_at_scale(spark):
+    """At 80k rows (4 days x 20k, 50 merchants, 5000 users: ~1400 users
+    per merchant) the sketches are dense, and the merged state reports
+    the composite estimator while the single-pass state reports HIP,
+    so the two differ on most merchants. They must still agree within
+    three standard errors of lgK=12 (1.04 / sqrt(4096) = 1.6 %), 5 %;
+    seeds 1, 2, 3, 7, 11 and 13 gave largest gaps of 1.6-2.7 %."""
+    raw = generate_transactions(spark, days=4, rows_per_day=20_000,
+                                invalid_rate=0.0, seed=7)
+    silver = run_silver(run_bronze(raw)).cache()
+    try:
+        per_day = [merchant_kpi_state(silver.where(F.col("txn_date") == d))
+                   for d in _days(silver)]
+        merged = merchant_kpi_report(merchant_kpi_state_merge(*per_day))
+        full = merchant_kpi_report(merchant_kpi_state(silver))
+        j = (merged.select("merchant_id", F.col("n_users_approx").alias("m"))
+             .join(full.select("merchant_id",
+                               F.col("n_users_approx").alias("f")),
+                   "merchant_id"))
+        assert j.count() == 50
+        assert j.where(F.col("f") < 1000).count() == 0  # dense regime
+        assert j.where(F.abs(F.col("m") - F.col("f"))
+                       > 0.05 * F.col("f")).count() == 0
+    finally:
+        silver.unpersist()
 
 
 def test_kpi_state_merge_batching_invariant(spark, silver):
