@@ -10,7 +10,6 @@ chars stay inside a signed 64-bit int (16 would overflow under ANSI).
 from aws_payment_data_lake_spark.functions.text import (  # noqa: F401
     MERSENNE_P,
     hash60,
-    hash60_mod_p,
     shingles,
     tokens,
     word_ngrams,

@@ -29,11 +29,6 @@ def hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def hash60_mod_p(col: Column) -> Column:
-    """hash60 reduced mod 2^31-1 (safe operand for a*h+b mod p)."""
-    return hash60(col) % MERSENNE_P
-
-
 def word_ngrams_upto(tokens_col: Column, max_n: int) -> dict[int, Column]:
     """n-gram array columns for every n in 1..max_n, built INCREMENTALLY:
     gram_k = zip_with(gram_{k-1}[:-1], tokens[k:], concat) — one
@@ -70,33 +65,3 @@ def shingles(tokens_col: Column, n: int = 3) -> Column:
     even join-key distribution."""
     assert n == 3, "oracle SQL is written for n=3"
     return word_ngrams(tokens_col, n)
-
-
-_PII_URL = r"https?://\S+"
-_PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_NUM = r"\d(?:[ -]?\d){7,}"  # 8+ digits, optional space/dash separators
-
-
-def scrub_pii(col: Column | str) -> Column:
-    """Mask URLs, emails, and long digit runs (phone/card-shaped) with
-    sentinel tokens — the standard pre-training scrub stage. Three
-    chained regexp_replace calls, all JVM-side codegen (global replace
-    is Spark's default); patterns stay in the Java∩RE2 subset so the
-    DuckDB oracle (DUCK_SCRUB) applies the identical regexes. URL first:
-    URLs may embed @ or digit runs and must win those overlaps."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.regexp_replace(c, _PII_URL, "<URL>")
-    c = F.regexp_replace(c, _PII_EMAIL, "<EMAIL>")
-    return F.regexp_replace(c, _PII_NUM, "<NUM>")
-
-
-# DuckDB-side snippets, interpolated into oracle SQL strings.
-DUCK_TOKENS = "string_split({col}, ' ')"
-DUCK_HASH60 = "(('0x' || substr(md5({col}), 1, 15))::BIGINT)"
-DUCK_SHINGLES = ("list_transform(range(1, len({tk}) - 1), "
-                 "i -> {tk}[i] || ' ' || {tk}[i+1] || ' ' || {tk}[i+2])")
-DUCK_SCRUB = (
-    "regexp_replace(regexp_replace(regexp_replace({col}, "
-    "'https?://\\S+', '<URL>', 'g'), "
-    "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}', '<EMAIL>', 'g'), "
-    "'\\d(?:[ -]?\\d){{7,}}', '<NUM>', 'g')")

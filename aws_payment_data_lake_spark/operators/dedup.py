@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame
 from aws_payment_data_lake_spark.functions import (
     MERSENNE_P,
     hash60,
-    hash60_mod_p,
     shingles,
     tokens,
 )
@@ -122,7 +121,7 @@ def jaccard_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD,
     then |A|+|B|-|A∩B| for the union. No n^2 scan — cost follows shingle
     doc-frequency, and 3-gram shingles are rare by construction."""
     sh = doc_shingles(docs, id_col, text_col).persist()
-    # Materialization barrier (same shape as minhash_lsh_pairs): the
+    # Materialization barrier (same shape as shingle_sig_tables'): the
     # final action's three branches (sizes + both self-join sides) can
     # race to populate the cache and recompute the tokenize/shingle
     # chain. A/B-measured cost-neutral at sf0.1 (3 alternating trials
@@ -155,84 +154,14 @@ def jaccard_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD,
     )
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """One row per doc with sig0..sig63: min over shingles of
-    (a_i * (hash60(s) mod p) + b_i) mod p. Single exploded aggregation —
-    64 mins computed in one pass with map-side partial combine."""
-    sh = doc_shingles(docs, id_col, text_col).withColumn(
-        "h", hash60_mod_p(F.col("shingle")))
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MERSENNE_P).alias(f"sig{i}")
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def incremental_minhash_dedup(new_docs: DataFrame, corpus_sigs: DataFrame,
-                              est_threshold: float = JACCARD_THRESHOLD,
-                              id_col: str = "doc_id",
-                              text_col: str = "text") -> DataFrame:
-    """Dedup a NEW document batch against an EXISTING corpus using ONLY
-    the corpus's stored signature table — the production shape at
-    100 TB: the corpus text is never re-read (the signature table is the
-    persisted dedup state, ~0.5 KB/doc), the delta batch is signed and
-    banded, candidates come from a band-hash equi-join, and matches are
-    scored by the MinHash Jaccard ESTIMATE (fraction of agreeing
-    signature components, std ~sqrt(J(1-J)/64) ≈ 0.06 at J=0.6) — exact
-    verification would need both documents' shingles, i.e. corpus text.
-
-    The new side of the band join is the delta batch — orders of
-    magnitude smaller than the corpus — so AQE broadcasts it and the
-    corpus signature table never shuffles. Emits one row per
-    (new_doc_id, corpus_doc_id) with est_jaccard >= est_threshold; the
-    caller drops or canonicalizes the matched new docs.
-
-    Append path: union the NEW batch's signatures (`minhash_signatures`)
-    into the stored table afterward — signatures are per-doc, so the
-    state update is a blind append, no rebuild.
-
-    ``corpus_sigs`` contract: columns ``doc_id, sig0..sig{N_HASHES-1}``
-    (what ``minhash_signatures`` emits — it normalizes any ``id_col`` to
-    ``doc_id`` via ``doc_shingles``). ``id_col``/``text_col`` rename the
-    NEW batch's columns only."""
-    return incremental_from_sigs(minhash_signatures(new_docs, id_col, text_col),
-                                 corpus_sigs, est_threshold)
-
-
-def incremental_from_sigs(new_sigs: DataFrame, corpus_sigs: DataFrame,
-                          est_threshold: float = JACCARD_THRESHOLD) -> DataFrame:
-    """`incremental_minhash_dedup` on PRE-COMPUTED signature tables (both
-    sides ``doc_id, sig0..sig63``; extra columns ignored) — the shape a
-    stored-state pipeline calls directly, and what lets the registered
-    query derive batch + incremental variants from ONE signature pass."""
-
-    def banded(sigs: DataFrame, out: str) -> DataFrame:
-        bands = F.array(*[
-            F.xxhash64(F.lit(j), F.col(f"sig{2 * j}"), F.col(f"sig{2 * j + 1}"))
-            for j in range(N_BANDS)
-        ])
-        return sigs.select(
-            F.col("doc_id").alias(out),
-            F.posexplode(bands).alias("band_idx", "band_hash"))
-
-    cands = (
-        banded(new_sigs, "new_doc_id")
-        .join(banded(corpus_sigs, "corpus_doc_id"), ["band_idx", "band_hash"])
-        .select("new_doc_id", "corpus_doc_id")
-        .distinct()
-    )
-    return signature_agreement(cands, new_sigs, corpus_sigs, est_threshold)
-
-
 def signature_agreement(cands: DataFrame, new_sigs: DataFrame,
                         corpus_sigs: DataFrame,
                         est_threshold: float = JACCARD_THRESHOLD) -> DataFrame:
     """Score candidate (new_doc_id, corpus_doc_id) pairs by MinHash
-    component agreement; keep est_jaccard >= est_threshold. Split out of
-    `incremental_from_sigs` so callers that already HAVE a candidate set
-    (e.g. the cross-split subset of the batch LSH candidates — same band
-    definition, so the same pairs) skip the banding join."""
+    component agreement; keep est_jaccard >= est_threshold. Takes a
+    candidate set the caller already HAS (e.g. the cross-split subset of
+    the batch LSH candidates — same band definition, so the same pairs)
+    instead of running a banding join of its own."""
     n = (new_sigs.select("doc_id", *[F.col(f"sig{i}").alias(f"a{i}")
                                      for i in range(N_HASHES)])
          .withColumnRenamed("doc_id", "new_doc_id"))
@@ -430,14 +359,6 @@ def shingle_sig_tables(docs: DataFrame, id_col: str = "doc_id",
             .persist())
     sigs.count()
     return sh, sigs
-
-
-def minhash_lsh_pairs(docs: DataFrame, threshold: float = JACCARD_THRESHOLD,
-                      id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """MinHash-LSH near-dup pairs, exact-verified: banded candidates ->
-    exact Jaccard filter. Output contract identical to jaccard_pairs."""
-    sh, sigs = shingle_sig_tables(docs, id_col, text_col)
-    return verified_pairs_from(sh, sigs, threshold)
 
 
 def verified_pairs_from(sh: DataFrame, sigs: DataFrame,
@@ -701,7 +622,7 @@ def simhash_pairs(docs: DataFrame | None,
     # chain (AQE's broadcast conversion defeats shuffle-exchange reuse —
     # measured 10 s vs 6 s at sf0.1). Fingerprints are 2 longs per doc,
     # so persisting is cheap at any scale; count() is the materialization
-    # barrier (see minhash_lsh_pairs).
+    # barrier (see shingle_sig_tables).
     fps = simhash_fingerprints(docs, id_col, text_col, sh=sh).persist()
     fps.count()
     chunks = F.array(*[
@@ -890,37 +811,6 @@ def duplicate_spans_incremental(new_docs: DataFrame, index: DataFrame,
                     F.col("pos").alias("s"),
                     (F.col("pos") + F.lit(n - 1)).alias("e")))
     return _merge_hit_spans(hits)
-
-
-def remove_indexed_spans(docs: DataFrame, index: DataFrame,
-                         n: int = SPAN_NGRAM, min_tokens: int = 1,
-                         id_col: str = "doc_id", text_col: str = "text",
-                         hash_fn=hash60) -> DataFrame:
-    """Cut every window of ``docs`` that appears in the stored corpus
-    index (``span_window_index``) and emit surviving pieces — the
-    INDEX-ONLY scrub: no intra-batch comparison at all, so the result
-    for a document depends only on (document, index). That makes it
-    the streaming-safe tier (micro-batch boundaries cannot change the
-    output; used by streaming/corpus.py's ingest scrub) and the
-    standard crawl-vs-reference deployment (remove everything already
-    in the training corpus from a new crawl). For delta-ingest
-    semantics that ALSO dedups inside the batch, use
-    ``duplicate_spans_incremental`` + the split."""
-    from aws_payment_data_lake_spark.functions.spans import (
-        EMPTY_SPANS,
-        split_tokens_by_spans,
-    )
-
-    tok = _tok_frame(docs, id_col, text_col)
-    occ = _occurrences_from_tok(tok, n, hash_fn)
-    hits = (occ.join(index.select("gh"), "gh")
-            .select("doc_id", F.col("pos").alias("s"),
-                    (F.col("pos") + F.lit(n - 1)).alias("e")))
-    spans = _merge_hit_spans(hits)
-    d = tok.join(spans, "doc_id", "left").select(
-        "doc_id", "tk",
-        F.coalesce(F.col("spans"), F.expr(EMPTY_SPANS)).alias("spans"))
-    return split_tokens_by_spans(d, text_col, min_tokens)
 
 
 def remove_duplicate_spans(docs: DataFrame, n: int = SPAN_NGRAM,

@@ -107,43 +107,3 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 8,
         for i, rank in enumerate(ranks) for b in range(bits)
     ]
     return reduce(lambda a, x: a.bitwiseOR(x), parts).alias("z_value")
-
-
-def write_zordered(df: DataFrame, path: str, cols: list[str],
-                   bits: int = 8, n_files: int = 16,
-                   mode: str = "overwrite", quantile: bool = False) -> None:
-    """Materialize ``df`` as ``n_files`` parquet files clustered by the
-    z-value of ``cols``: range-partition by z (contiguous z-ranges per
-    file → tight per-file min/max on every participating column), sort
-    within partitions, drop the helper column on write. ``n_files`` is
-    the file-size knob; at 100 TB it comes from target file size, not
-    a constant. ``quantile=True`` uses equi-depth bucket ranks (see
-    ``zorder_key``) — the right call on skewed columns."""
-    (df.withColumn("z_value", zorder_key(df, cols, bits, quantile=quantile))
-       .repartitionByRange(n_files, "z_value")
-       .sortWithinPartitions("z_value")
-       .drop("z_value")
-       .write.mode(mode).parquet(path))
-
-
-def write_with_bloom(df: DataFrame, path: str, bloom_cols: list[str],
-                     ndv: int = 100_000, n_files: int = 16,
-                     mode: str = "overwrite") -> None:
-    """Write parquet with BLOOM FILTERS on ``bloom_cols`` — the
-    equality-lookup complement to `write_zordered`'s range clustering:
-    min/max stats can never prune a point lookup on a high-cardinality
-    unsorted column (every file's [min,max] contains almost any key),
-    but a bloom filter answers "key definitely absent" per row group,
-    so Spark's parquet reader skips it on `col = literal` predicates.
-
-    ``ndv`` sizes the filter (expected distinct values per row group —
-    overestimating costs bytes, underestimating costs false positives);
-    at 100 TB the knob is per-column. The feature is plain parquet
-    (parquet.bloom.filter.* write options), readable by any engine."""
-    writer = df.repartition(n_files).write.mode(mode)
-    for c in bloom_cols:
-        writer = (writer
-                  .option(f"parquet.bloom.filter.enabled#{c}", "true")
-                  .option(f"parquet.bloom.filter.expected.ndv#{c}",
-                          str(ndv)))
-    writer.parquet(path)

@@ -105,36 +105,3 @@ def lm_perplexity(docs: DataFrame, id_col: str = "doc_id",
                 F.round("_avg", 6).alias("avg_logprob"),
                 F.round(F.exp(-F.col("_avg")), 4).alias("ppl_proxy"))
     )
-
-
-def perplexity_gate(docs: DataFrame, keep_frac: float = 0.9,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    lm: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-                    ) -> DataFrame:
-    """The deployable form of the LM filter: score, threshold at the
-    ``keep_frac`` quantile of ppl_proxy, return the input rows plus
-    (ppl_proxy, lm_keep). The quantile is EXACT (relativeError 0) so
-    the gate is deterministic — at 100 TB exact percentile costs one
-    extra pass over the (doc, score) table, which is corpus-row-sized,
-    not token-sized; callers at that scale may persist the score table
-    first (the composition test does). CCNet deployment shape: pass
-    ``lm`` trained on a reference corpus."""
-    if not (0.0 < keep_frac <= 1.0):
-        raise ValueError(f"keep_frac must be in (0, 1], got {keep_frac}")
-    # materialize once: the quantile is an action and the join below
-    # would otherwise re-run the whole train+score DAG a second time.
-    # localCheckpoint (not .persist/CacheManager, whose entries leak
-    # until an explicit unpersist): its RDD blocks are
-    # reference-tracked, so the ContextCleaner releases them when the
-    # result frame is garbage-collected. Score table is
-    # corpus-row-sized (id + double), cache-cheap.
-    scores = lm_perplexity(docs, id_col, text_col, lm=lm) \
-        .localCheckpoint(eager=True)
-    (cut,) = scores.approxQuantile("ppl_proxy", [keep_frac], 0.0) or [None]
-    if cut is None:  # empty corpus
-        return docs.withColumn("ppl_proxy", F.lit(None).cast("double")) \
-                   .withColumn("lm_keep", F.lit(False))
-    return (docs.join(scores.select(id_col, "ppl_proxy"), id_col, "left")
-            .withColumn("lm_keep",
-                        F.coalesce(F.col("ppl_proxy") <= cut,
-                                   F.lit(False))))

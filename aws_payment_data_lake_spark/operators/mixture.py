@@ -75,21 +75,3 @@ def mixture_resample(docs: DataFrame, weights: dict[str, float],
                 F.explode(F.sequence(F.lit(1), F.col("n_copies")))
                 .alias("copy_idx"))
     )
-
-
-def mixture_summary(docs: DataFrame, weights: dict[str, float],
-                    default_weight: float = 1.0, id_col: str = "doc_id",
-                    key_col: str = "source",
-                    salt: str = ":mix") -> DataFrame:
-    """Per-source audit of the same resample: docs in, rows out,
-    realized epoch factor (rows_out / docs_in, the number that should
-    converge to the requested weight as the source grows)."""
-    n = _copies_expr(weights, default_weight, id_col, key_col, salt)
-    return (
-        docs.select(F.col(key_col), n.alias("n_copies"))
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("docs_in"),
-             F.sum("n_copies").alias("rows_out"),
-             F.round(F.sum("n_copies") / F.count(F.lit(1)).cast("double"),
-                     6).alias("realized_epochs"))
-    )

@@ -179,53 +179,3 @@ def feature_extract(with_payload: DataFrame) -> DataFrame:
     output plugs directly into operators.similarity (brute-force / IVF
     top-k over an ``embedding`` column)."""
     return with_payload.mapInPandas(_feature_batch, schema=EMBED_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("out_bytes", T.IntegerType()),
-    T.StructField("resized_checksum", T.LongType()),
-])
-
-RESIZE_TARGET = 64
-
-
-def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Deterministic fake resizer (a REAL nearest-neighbor image resample
-    would go here): pick RESIZE_TARGET evenly spaced bytes per payload
-    (position j -> byte at j*len//TARGET) and checksum them — the
-    payload-in, smaller-payload-out contract of a thumbnailing stage.
-    Vectorized: one (n x TARGET) gather into the concatenated buffer.
-    Payloads shorter than TARGET keep their natural size (every byte
-    sampled once at most)."""
-    import numpy as np
-    for pdf in batches:
-        payloads = pdf["payload"].tolist()
-        n = len(payloads)
-        lens = np.fromiter((len(b) for b in payloads), dtype=np.int64,
-                           count=n)
-        doc_starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=doc_starts[1:])
-        concat = np.frombuffer(b"".join(payloads), dtype=np.uint8)
-
-        out_n = np.minimum(lens, RESIZE_TARGET)
-        j = np.tile(np.arange(RESIZE_TARGET, dtype=np.int64), n)
-        valid = j < np.repeat(out_n, RESIZE_TARGET)
-        # nearest-neighbor positions j*len//out_n (stride relative to the
-        # OUTPUT length, so a short payload samples each byte once, not
-        # byte 0 repeatedly); clamp the divisor for empty payloads.
-        pos = (np.repeat(doc_starts, RESIZE_TARGET)
-               + j * np.repeat(lens, RESIZE_TARGET)
-               // np.maximum(np.repeat(out_n, RESIZE_TARGET), 1))
-        sums = np.zeros(n * RESIZE_TARGET, dtype=np.int64)
-        sums[valid] = concat[pos[valid]].astype(np.int64)
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "out_bytes": out_n.astype("int32"),
-            "resized_checksum": sums.reshape(n, RESIZE_TARGET).sum(axis=1),
-        })
-
-
-def resize_payloads(with_payload: DataFrame) -> DataFrame:
-    """Strided-resample "resize" via mapInPandas."""
-    return with_payload.mapInPandas(_resize_batch, schema=RESIZE_SCHEMA)

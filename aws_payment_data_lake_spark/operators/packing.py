@@ -56,13 +56,9 @@ def pack_training_shards(docs: DataFrame, token_budget: int = 512,
     shard_id) with shard_id = "<stream>-<shard_idx>".
 
     Tokens default to whitespace tokens (the corpus convention); pass
-    ``n_tokens_expr`` to pack by any other counter — e.g.
-    ``functions.bpe.bpe_token_count_column(text_col, merges)`` for the
-    vendored subword tokenizer. The packing shape is identical either
-    way (the counter only changes the cumsum input); with the BPE
-    counter, per-doc counts grow by the subword-split factor, so shard
-    boundaries land earlier — see tests/test_bpe.py for the measured
-    assignment diff on this corpus. Deterministic:
+    ``n_tokens_expr`` to pack by any other counter. The packing shape is
+    identical either way (the counter only changes the cumsum input).
+    Deterministic:
     stream = xxhash64(doc_id) mod n_streams, order within stream is
     doc_id, shard boundary is the running token count BEFORE the
     document (integer arithmetic only). ``stream_expr`` overrides the
@@ -88,87 +84,3 @@ def pack_training_shards(docs: DataFrame, token_budget: int = 512,
         .select(id_col, "n_tokens", "stream", "shard_idx",
                 F.concat_ws("-", "stream", "shard_idx").alias("shard_id"))
     )
-
-
-def write_training_shards(docs: DataFrame, path: str,
-                          token_budget: int = 512, n_streams: int = 32,
-                          id_col: str = "doc_id", text_col: str = "text",
-                          n_tokens_expr: Column | None = None,
-                          stream_expr: Column | None = None,
-                          epoch_seed: int | None = None,
-                          order_exprs: list[Column] | None = None,
-                          mode: str = "overwrite") -> DataFrame:
-    """Materialize the packed corpus as ONE FILE PER SHARD — the layout
-    a training dataloader consumes (shard = the unit of shuffling and
-    of resumable progress).
-
-    Pipeline: the assignment columns (stream, shard_idx, shard_id) are
-    computed IN-FRAME with the same window cumsum as
-    `pack_training_shards` — deliberately NOT as an assign-then-join-
-    back self-join. A self-join evaluates the input lineage twice, and
-    an input gated by a floating-point-aggregate filter (e.g. the LM
-    perplexity gate: `avg(logprob)` differs in last-ulp between
-    evaluations, flipping boundary rows through the `round`) is only
-    deterministic per evaluation — Spark then returns DUPLICATED rows
-    from the inner self-join (observed on this exact pipeline,
-    round 6: 646-row input -> 1215-row join output, dup rows inside
-    single shard files; reproduces with AQE on or off). One evaluation
-    sidesteps the hazard and saves the join outright.
-    `repartition(shard_id)` routes every row of a shard to exactly one
-    task, so the Hive `shard_id=` directory written by `partitionBy`
-    holds exactly one parquet file; rows sort by doc id within the
-    file so shard content is byte-deterministic. File size is governed
-    by the token budget (~budget tokens, overshoot bounded by one
-    document — the packing contract), which at 100 TB is the
-    shard-sizing knob; the shuffle is one pass of the corpus keyed by
-    shard, the minimum any physical re-layout costs.
-
-    Returns the assignment table (id, n_tokens, stream, shard_idx,
-    shard_id) READ BACK from the written files — the audit is exactly
-    what landed on disk, immune to any re-evaluation drift.
-
-    Only ``mode='overwrite'`` is accepted (ADVICE r6): shard
-    assignments are computed from scratch per invocation, so an append
-    would land a SECOND file into existing ``shard_id=`` directories
-    (breaking the one-file-per-shard contract) and the read-back audit
-    would include earlier writes' rows. Incremental corpus growth is a
-    re-pack (or a new path per corpus snapshot), not an append."""
-    if mode != "overwrite":
-        raise ValueError(
-            "write_training_shards supports only mode='overwrite' "
-            f"(got {mode!r}); appending would break the one-file-per-"
-            "shard contract and the read-back audit")
-    helper_cols = ("n_tokens", "stream", "tokens_before",
-                   "shard_idx", "shard_id")
-    clash = [c for c in docs.columns if c in helper_cols]
-    if clash:
-        raise ValueError(
-            f"write_training_shards needs columns {clash} for the "
-            "assignment; rename them on the input first")
-    n_tok = (F.size(F.split(F.col(text_col), " "))
-             if n_tokens_expr is None else n_tokens_expr)
-    stream = (F.pmod(F.xxhash64(id_col), F.lit(n_streams))
-              if stream_expr is None else stream_expr)
-    # epoch_seed reshuffles shard COMPOSITION; within-FILE rows still
-    # sort by doc id below, keeping shard bytes deterministic (loaders
-    # shuffle within shard at read time)
-    w = (Window.partitionBy("stream")
-         .orderBy(*_stream_order(id_col, epoch_seed, order_exprs))
-         .rowsBetween(Window.unboundedPreceding, -1))
-    out = (
-        docs.withColumn("n_tokens", n_tok)
-        .withColumn("stream", stream)
-        .withColumn("tokens_before",
-                    F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
-        .withColumn("shard_idx",
-                    (F.col("tokens_before") / F.lit(token_budget))
-                    .cast("long"))
-        .withColumn("shard_id", F.concat_ws("-", "stream", "shard_idx"))
-        .drop("tokens_before")
-    )
-    (out.repartition(F.col("shard_id"))
-        .sortWithinPartitions(id_col)
-        .write.partitionBy("shard_id")
-        .mode(mode).parquet(path))
-    return (docs.sparkSession.read.parquet(path)
-            .select(id_col, "n_tokens", "stream", "shard_idx", "shard_id"))

@@ -62,57 +62,22 @@ def _count_and_redact(col: Column) -> tuple[dict[str, Column], Column]:
     return counts, col
 
 
-def pii_profile(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text",
-                char_gate: bool = False) -> DataFrame:
-    """One row per document: per-type consumed-match counts (n_email,
-    n_ipv4, n_ssn, n_phone — see _count_and_redact for the ordering
-    contract), n_pii total, and the has_pii flag a curation gate keys
-    on. One projection, no shuffle.
-
-    ``char_gate`` (opt-in) wraps each output in the exact [0-9@]
-    pre-test so gate-failing docs pay one character scan instead of
-    eight regex passes. MEASURED before defaulting: on a 90%
-    digit-bearing corpus (sf1.0 here; real web text is digit-rich) the
-    gated form ran 3.5x SLOWER (20.3 vs 5.9 s) — the per-column CASE
-    wrappers defeat whole-stage-codegen subexpression sharing across
-    the chained counts, so gate-passing rows recompute the replace
-    chain per column. Enable only for corpora known digit-sparse
-    (code-token streams, normalized prose), where the gate's
-    short-circuit is near-total."""
-    gate = F.col(text_col).rlike(_GATE_RE)
-    counts, _ = _count_and_redact(F.col(text_col))
-    counts = {n: F.when(gate, c).otherwise(F.lit(0))
-              for n, c in counts.items()} if char_gate else counts
-    total = reduce(lambda a, b: a + b, counts.values())
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        *[c.cast("long").alias(n) for n, c in counts.items()],
-        total.cast("long").alias("n_pii"),
-        (total > 0).alias("has_pii"))
-
-
-def redact_pii(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text",
-               char_gate: bool = False) -> DataFrame:
-    """Replace every match with its typed placeholder, in the fixed
-    pattern order (broadest last). Output schema = input schema with
-    ``text_col`` redacted — the stage drops into any pipeline seam.
-    ``char_gate`` as in pii_profile (gate-failing docs pass through
-    untouched — exact, not heuristic)."""
-    _, redacted = _count_and_redact(F.col(text_col))
-    if char_gate:
-        redacted = F.when(F.col(text_col).rlike(_GATE_RE),
-                          redacted).otherwise(F.col(text_col))
-    return docs.withColumn(text_col, redacted)
-
-
 def pii_scan(docs: DataFrame, id_col: str = "doc_id",
              text_col: str = "text",
              char_gate: bool = False) -> DataFrame:
     """Profile AND redacted text in ONE projection (the benched shape:
     profile + redact as separate frames joined back would scan and
-    regex the corpus twice and add a corpus-sized shuffle)."""
+    regex the corpus twice and add a corpus-sized shuffle). Per-type
+    consumed-match counts (n_email, n_ipv4, n_ssn, n_phone — see
+    _count_and_redact for the ordering contract), the n_pii total, the
+    has_pii flag, and ``redacted_<text_col>``.
+
+    ``char_gate`` (opt-in) wraps each output in the exact [0-9@]
+    pre-test. MEASURED before defaulting: on a 90% digit-bearing corpus
+    (sf1.0) the gated form ran 3.5x SLOWER (20.3 vs 5.9 s) — the
+    per-column CASE wrappers defeat whole-stage-codegen subexpression
+    sharing across the chained counts. Enable only for corpora known
+    digit-sparse."""
     gate = F.col(text_col).rlike(_GATE_RE)
     counts, redacted = _count_and_redact(F.col(text_col))
     if char_gate:

@@ -225,46 +225,6 @@ def neardup_pairs(emb: DataFrame, threshold: float = 0.4,
         block_pairs, schema="vec_a long, vec_b long, cos_sim double")
 
 
-def quantize_embeddings(emb: DataFrame,
-                        vec_col: str = "embedding") -> DataFrame:
-    """Symmetric per-vector int8 quantization: q_i = round(x_i / s),
-    s = max|x| / 127 — a 4x smaller embedding table (tinyint vs float),
-    which at 100 TB is the difference between an embedding corpus that
-    fits the page cache and one that doesn't. Pure built-in higher-order
-    functions (transform/array_max), no Python in the path.
-
-    Per-VECTOR scale (not per-corpus): each vector uses the full int8
-    range regardless of its magnitude, and cosine similarity — the
-    search metric here — is scale-invariant, so ranking quality depends
-    only on the per-component rounding error (~0.4% of max|x|).
-    tests/test_similarity_skew.py measures top-k agreement against the
-    float baseline."""
-    amax = F.array_max(F.transform(F.col(vec_col), lambda x: F.abs(x)))
-    # Guard the QUOTIENT, not amax: for a denormal amax (e.g. 5e-324)
-    # amax/127 underflows to exactly 0.0 and the ANSI divide below would
-    # raise DIVIDE_BY_ZERO. A denormal-max vector quantizes to all-zero
-    # codes with scale 1 — reconstruction error 5e-324 << scale/2.
-    raw = amax / F.lit(127.0)
-    scale = (F.when(raw > 0, raw).otherwise(F.lit(1.0))
-             .cast("double"))
-    return emb.select(
-        "vec_id",
-        scale.alias("q_scale"),
-        F.transform(F.col(vec_col),
-                    lambda x: F.round(x / scale).cast("tinyint"))
-        .alias("q_embedding"),
-    )
-
-
-def dequantize_embeddings(qemb: DataFrame) -> DataFrame:
-    """Back to array<double> for the search tiers: x_i ≈ q_i * s."""
-    return qemb.select(
-        "vec_id",
-        F.transform("q_embedding",
-                    lambda x: x.cast("double") * F.col("q_scale"))
-        .alias("embedding"))
-
-
 def kmeans_centroids(emb: DataFrame, n_centroids: int = 16,
                      n_iter: int = 5, train_cap: int = 4096) -> DataFrame:
     """Spherical k-means (Lloyd) centroids for IVF coarse quantization,
@@ -370,36 +330,6 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 16,
         ue.unpersist()
 
 
-def ivf_topk(emb: DataFrame, k: int = 5, n_queries: int = 10,
-             n_centroids: int = 16, n_probe: int = 4,
-             n_train_iter: int = 0) -> DataFrame:
-    """IVF-style approximate top-k: coarse centroids from
-    `kmeans_centroids` (deterministic seed; `n_train_iter` Lloyd rounds);
-    every vector is assigned to its best centroid; each query probes its
-    n_probe closest cells and ranks exactly within them.
-
-    `n_train_iter` defaults to 0 (seed centroids = unit vectors of the
-    lowest sampled vec_ids) — a MEASURED choice for this testdata: the
-    synthetic embeddings are isotropic (within-label mean cosine 0.0016
-    vs 0.0003 across — no cluster structure), so Lloyd rounds cannot
-    sharpen cells and empirically degrade recall@5 (numpy + Spark A/B
-    agree: iters 0/1/2/3/5 → 0.94/0.94/0.88/0.88/0.86 at sf0.001,
-    0.92/0.90/0.92/0.88/0.90 at sf0.01, 1.0/0.98/1.0/0.96/0.96 at
-    sf0.1) while adding 5 training passes. On real, clustered embeddings
-    training is the right call — tests/test_similarity_skew.py proves
-    trained > seeded recall on a clustered corpus — so callers with
-    structure set n_train_iter > 0.
-
-    At 100 TB the assignment is one broadcast pass over the data and the
-    probe join touches n_probe/n_centroids of it; cells are the natural
-    partitioning key for the candidate table."""
-    cents, assigned = build_ivf_index(emb, n_centroids, n_train_iter)
-    queries = (emb.where(F.col("vec_id") < n_queries)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("qe")))
-    return ivf_probe_topk(cents, assigned, queries, k=k, n_probe=n_probe)
-
-
 def build_ivf_index(emb: DataFrame, n_centroids: int = 16,
                     n_train_iter: int = 0) -> tuple[DataFrame, DataFrame]:
     """The IVF INDEX: (cents, assigned) — coarse centroids plus every
@@ -409,7 +339,14 @@ def build_ivf_index(emb: DataFrame, n_centroids: int = 16,
     probe half (`ivf_probe_topk`) touches only n_probe cells of it per
     query batch. Callers that probe repeatedly persist `assigned` —
     see queries/similarity.py:shared_ivf_index for the session-scoped
-    store."""
+    store.
+
+    `n_train_iter` defaults to 0 (seed centroids), a measured choice for
+    this testdata: its embeddings are isotropic, so Lloyd rounds cannot
+    sharpen cells and lowered recall@5 (iters 0/1/2/3/5 -> 0.94/0.94/
+    0.88/0.88/0.86 at sf0.001). On clustered embeddings training wins —
+    tests/test_similarity_skew.py shows trained > seeded recall — so
+    callers with structure set n_train_iter > 0."""
     cents = kmeans_centroids(emb, n_centroids, n_train_iter)
     assigned = assign_cells_blas(
         cents,

@@ -1,4 +1,4 @@
-"""Banned-wordlist filter: the C4 "bad words" stage (Raffel et al.
+"""Banned-wordlist flags: the C4 "bad words" stage (Raffel et al.
 2020 §2.2 — pages containing any word from a public blocklist are
 dropped; RefinedWeb and Dolma run the same list-based gate before any
 model-based toxicity pass).
@@ -47,14 +47,3 @@ def wordlist_flags(docs: DataFrame,
     n_blocked = (n_words + n_phrases).cast("long")
     return (docs.withColumn("n_blocked", n_blocked)
             .withColumn("has_blocked", n_blocked > 0))
-
-
-def wordlist_filter(docs: DataFrame,
-                    words: tuple[str, ...] = DEMO_BLOCKLIST,
-                    phrases: tuple[str, ...] = DEMO_PHRASES,
-                    text_col: str = "text") -> DataFrame:
-    """C4 semantics: DROP every document with any blocklist hit.
-    Output schema = input schema (flags are not kept)."""
-    flagged = wordlist_flags(docs, words, phrases, text_col)
-    return flagged.where(~F.col("has_blocked")) \
-                  .drop("n_blocked", "has_blocked")

@@ -123,27 +123,6 @@ def run_pipeline(spark: SparkSession, base_dir: str, *, days: int = 3,
             "counts": counts}
 
 
-def register_zones(spark: SparkSession, paths: dict) -> list[str]:
-    """The Glue-crawler stand-in (reference README.md:63,79-80): register
-    each written zone as a queryable view under the reference's catalog
-    table names (etl_transactions_bronze.py:124 `raw_transactions`,
-    etl_transactions_silver.py:138 `bronze_transactions_parquet`), so
-    `spark.sql` over the zones works exactly like Athena over the Glue
-    catalog."""
-    names = []
-    for zone, table in (("raw", "raw_transactions"),
-                        ("bronze", "bronze_transactions_parquet"),
-                        ("silver", "silver_transactions_parquet"),
-                        ("audit", "audit_transactions_rejected")):
-        if zone == "raw":
-            df = read_raw(spark, paths[zone])
-        else:
-            df = spark.read.parquet(paths[zone])
-        df.createOrReplaceTempView(table)
-        names.append(table)
-    return names
-
-
 def main() -> None:
     from aws_payment_data_lake_spark.session import get_spark
 

@@ -21,11 +21,11 @@ input is the duplicate-cluster table, which holds ONLY docs in clusters
 (tiny vs the corpus) and broadcasts.
 
 The duplicate graph is built by a pluggable ``pair_fn`` defaulting to
-``minhash_lsh_pairs`` — the bucketed scale path (candidates ~ true
-pairs) — with the exact all-pairs ``jaccard_pairs`` baseline as an
-opt-in. Both share one output contract, and the driver proves them
-hash-equal on this data (``dedup_minhash_lsh`` passes the exact-Jaccard
-oracle), so the capstone keeps its recursive-CTE oracle byte-identical
+the session's MinHash-LSH tables (``shared_minhash_tables``) — the
+bucketed scale path (candidates ~ true pairs) — with the exact
+all-pairs ``jaccard_pairs`` baseline as an opt-in. Both share one
+output contract, and they are hash-equal on this data (the registered
+``dedup_minhash_lsh`` passes the exact-Jaccard oracle), so the capstone keeps its recursive-CTE oracle byte-identical
 while its Spark plan loses the O(sum df^2) co-occurrence join — the
 shape that goes quadratic on boilerplate-heavy corpora, exactly where
 curation runs at 100 TB.
@@ -266,10 +266,8 @@ def corpus_curation_decisions(spark: SparkSession, sf_dir: str,
     #      cut score — and take the max kept doc_id;
     #   3. lm_keep := s > s* OR (s = s* AND doc_id <= that boundary).
     # Identical keep set to the rank form (the oracle is unchanged),
-    # zero sorts over corpus-sized input, zero WindowExec. The same
-    # contract the production operator reaches via exact quantile
-    # (operators/lm_quality.perplexity_gate), here with the doc_id
-    # tiebreak made explicit so the decision stays hashable.
+    # zero sorts over corpus-sized input, zero WindowExec. The doc_id
+    # tiebreak is explicit so the decision stays hashable.
     from aws_payment_data_lake_spark.operators.lm_quality import (
         lm_perplexity,
     )

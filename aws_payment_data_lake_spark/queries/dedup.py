@@ -51,10 +51,8 @@ def durable_base_tables(spark: SparkSession, sf_dir: str, warehouse: str,
     per-doc, so a PURE-APPEND corpus roll (the store's generic
     join-free gate, sources/store.py:pure_append_prior) computes them
     for the DELTA docs only and hardlinks the prior version's part
-    files (AppendFrom) — the blind state append the incremental dedup
-    contract already promises (operators/dedup.py:
-    incremental_minhash_dedup, 'signatures are per-doc, the state
-    update is a blind append')."""
+    files (AppendFrom): signatures are per-doc, so the state update is
+    a blind append."""
     fp = fp or _corpus_fp(spark, sf_dir)
     store_dir = os.path.join(warehouse, "minhash_base")
     (docs,) = load(spark, sf_dir, "documents")

@@ -17,7 +17,7 @@ these plans change shape at 1000 executors.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from aws_payment_data_lake_spark.queries import register
 from aws_payment_data_lake_spark.sources import load
@@ -157,41 +157,6 @@ def brand_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
              / F.col("total_rev_dec").cast("double"))
             .alias("rev_share"))
         .orderBy("p_brand")
-    )
-
-
-def rolling_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user rolling 1-hour totals via a RANGE frame on EVENT TIME —
-    the window class the ROWS-frame analytics (window_event_analytics)
-    and the tumbling/session generators don't cover: the frame is "every
-    event within the last hour", however many rows that is.
-
-    Unregistered (the 50-slot driver registry is pinned); DuckDB parity
-    is asserted in tests/test_queries_extra.py with the equivalent
-    RANGE BETWEEN INTERVAL window.
-
-    Scale shape: one shuffle on user_id (high-cardinality, even), then a
-    per-partition ordered sweep — the same cost class as any analytic
-    window; the long MICROSECOND axis keeps the frame arithmetic in
-    codegen AND at full timestamp precision (unix_timestamp truncates to
-    seconds, silently widening the frame by up to 0.999 s — caught by
-    the sf0.1 DuckDB parity test)."""
-    (ev,) = load(spark, sf_dir, "events")
-    w = (Window.partitionBy("user_id")
-         .orderBy(F.unix_micros("ts"))
-         .rangeBetween(-3_600_000_000, 0))
-    # Exact DECIMAL sum over the frame, cast to double AFTER (the repo
-    # convention, queries/relational.py): a raw double sum behind
-    # round() is a rounding-boundary hazard — float summation order can
-    # flip the 4th decimal on a near-tie between engines. The input cast
-    # to (18,4) is tie-free: synthetic values carry 2 decimals.
-    return (
-        ev.select(
-            "event_id", "user_id", "ts",
-            F.count(F.lit(1)).over(w).alias("n_1h"),
-            F.sum(F.col("value").cast("decimal(18,4)")).over(w)
-            .cast("double").alias("sum_1h"))
-        .orderBy("user_id", "ts", "event_id")
     )
 
 

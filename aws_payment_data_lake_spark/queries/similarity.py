@@ -350,59 +350,6 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "rk"))
 
 
-# Durable PQ tier (round 7): the codes table IS the stored compressed
-# index; the codebooks ride along as a (subspace, code, ce) table and
-# are reconstructed into the driver-literal form on read-back.
-_PQ_TABLES = ("codes", "books")
-
-
-def _books_of(bdf: DataFrame) -> list:
-    """Reconstruct the driver-literal nested codebook list from the
-    stored (subspace, code, ce) table — m*k tiny centroid rows."""
-    brows = bdf.collect()
-    m = 1 + max(r["subspace"] for r in brows)
-    books = [[None] * (1 + max(r["code"] for r in brows if
-                               r["subspace"] == j)) for j in range(m)]
-    for r in brows:
-        books[r["subspace"]][r["code"]] = list(r["ce"])
-    return books
-
-
-def durable_pq_index(spark: SparkSession, sf_dir: str, warehouse: str,
-                     ingest: bool = True,
-                     ) -> tuple[tuple[DataFrame, list], bool]:
-    """((codes, codebooks), built) from the warehouse store. A
-    pure-append corpus roll (sources/store.py:pure_append_prior)
-    encodes only the delta with the FROZEN stored codebooks; any edit
-    or delete falls back to a full retrain+re-encode."""
-    (emb,) = load(spark, sf_dir, "embeddings")
-    store_dir = os.path.join(warehouse, "pq_index")
-    fp = corpus_fingerprint(emb, *_EMB_FP)
-
-    def build() -> dict:
-        if ingest:
-            pa = pure_append_prior(spark, emb, store_dir, _PQ_TABLES,
-                                   "vec_id", _EMB_FP)
-            if pa is not None:
-                return {"codes": AppendFrom(
-                            S.pq_encode(pa.delta,
-                                        _books_of(pa.frames["books"])),
-                            os.path.join(pa.vdir, "codes")),
-                        "books": pa.frames["books"]}
-        books = S.train_pq_codebooks(emb)
-        codes = S.pq_encode(emb, books)
-        rows = [(j, c, books[j][c])
-                for j in range(len(books)) for c in range(len(books[j]))]
-        from aws_payment_data_lake_spark.localframe import local_frame
-        bdf = local_frame(
-            spark, rows, "subspace int, code int, ce array<double>")
-        return {"codes": codes, "books": bdf}
-
-    frames, built = load_or_build(spark, store_dir, fp, _PQ_TABLES, build,
-                                  extras=append_cut(emb, "vec_id"))
-    return (frames["codes"], _books_of(frames["books"])), built
-
-
 def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN (the FAISS workhorse composition): session-shared
     coarse cells bound the candidate set, PQ codes score it with m

@@ -35,22 +35,6 @@ def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sliding_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-hour windows sliding every hour: each event lands in 2 windows
-    (Spark expands via its window generator; the oracle unions the two
-    shifted tumbling grids — identical window sets)."""
-    (ev,) = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "n_events", "sum_value")
-        .orderBy("window_start")
-    )
-
-
 def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows with a 12h inactivity gap. Spark merges
     events whose gap < 12h; the oracle rebuilds the same islands with a
@@ -75,13 +59,12 @@ def _input_bytes(spark: SparkSession, path: str) -> int:
     the ``_``/``.`` names Spark's file source skips. Sized through the
     Hadoop FileSystem of the path, so an object-store URI sizes the
     same way a local path does."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    status = fs.getFileStatus(hpath)
+    from aws_payment_data_lake_spark.streaming.source import path_status
+
+    fs, status = path_status(spark, path)
     if not status.isDirectory():
         return status.getLen()
-    return sum(s.getLen() for s in fs.listStatus(hpath)
+    return sum(s.getLen() for s in fs.listStatus(status.getPath())
                if not s.getPath().getName().startswith(("_", ".")))
 
 

@@ -9,7 +9,7 @@ hot path is JVM codegen even though the logic is "text processing".
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from aws_payment_data_lake_spark.functions import MERSENNE_P, word_ngrams_upto
 from aws_payment_data_lake_spark.operators.chunking import chunk_documents
@@ -106,12 +106,8 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality features + composite score (single-space tokens make avg
     token length a closed form: (chars - n + 1) / n).
 
-    `n_bpe_ish_pieces` stays the regex stand-in for oracle
-    byte-compatibility, but the engine's REAL subword counter is the
-    vendored tokenizer (functions/bpe.py — what shard packing uses);
-    tests/test_bpe.py::test_real_bpe_tracks_text_profile_proxy pins the
-    proxy to it (pearson > 0.98, stable ratio), so either counter
-    orders documents the same way.
+    `n_bpe_ish_pieces` is a regex stand-in for a subword count, kept
+    for oracle byte-compatibility.
 
     The lexicon is a compile-time constant, so language ID needs NO
     explode, NO join and NO shuffle — the whole profile is row-local, the

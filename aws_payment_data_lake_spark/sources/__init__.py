@@ -7,6 +7,5 @@ from aws_payment_data_lake_spark.sources.readers import (  # noqa: F401
 )
 from aws_payment_data_lake_spark.sources.writers import (  # noqa: F401
     delta_available,
-    write_bucketed,
     write_zone,
 )

@@ -251,9 +251,7 @@ class _AuditStreamWriter(_AuditWriter, DataSourceStreamWriter):
     batch (structured streaming is at-least-once into foreach-style
     sinks) is detected and discarded instead of double-appended. That
     plus the atomic manifest rename gives exactly-once CONTENT from an
-    at-least-once delivery, the same argument as the batch-id-keyed
-    parquet appends in streaming/corpus.py, upgraded from
-    "idempotent overwrite" to "skip, don't rewrite"."""
+    at-least-once delivery: "skip, don't rewrite"."""
 
     def __init__(self, options: dict, schema: StructType,
                  overwrite: bool) -> None:

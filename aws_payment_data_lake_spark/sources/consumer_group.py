@@ -3,10 +3,9 @@
 Kafka's consumer contract splits into assign() — the caller names its
 partitions statically — and subscribe() — the GROUP assigns them
 dynamically, rebalancing whenever membership changes. The queue source
-(sources/queue_source.py) already mirrors the log (segments, offsets,
-compaction, retention) and the committed-position floor; this module
-adds the missing coordination half, filesystem-backed the same way the
-broker's log is:
+(sources/queue_source.py) already mirrors the log (segments, offsets)
+and the committed-position floor; this module adds the missing
+coordination half, filesystem-backed the same way the broker's log is:
 
   * group state lives under ``<queue_dir>/.groups/<group>/``: one JSON
     per member plus a ``generation`` counter. Joining or leaving bumps
@@ -320,24 +319,6 @@ class GroupMember:
                             "ts_ms": r["t"]})
         out.sort(key=lambda r: r["offset"])
         return out
-
-
-def consumer_lag(queue_dir: str, group: str,
-                 topic: str) -> dict[int, dict[str, int]]:
-    """Per-partition lag for a group (Kafka's `kafka-consumer-groups
-    --describe`): {partition: {committed, log_end, lag}}. Metadata-only
-    — committed positions from the group's offsets file, log ends from
-    segment filenames; no record is read. The number an autoscaler or
-    alert reads to size the consumer fleet."""
-    g = ConsumerGroup(queue_dir, group, topic)
-    committed = g.committed()
-    out: dict[int, dict[str, int]] = {}
-    for p in _partitions_of(queue_dir, topic):
-        _, hi = _offset_bounds(_tp_dir(queue_dir, topic, p))
-        lo = committed.get(str(p), 0)
-        out[p] = {"committed": lo, "log_end": hi,
-                  "lag": max(0, hi - lo)}
-    return out
 
 
 def assign(queue_dir: str, group: str, topic: str,

@@ -47,7 +47,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 from collections.abc import Iterator
 
 from pyspark.sql import SparkSession

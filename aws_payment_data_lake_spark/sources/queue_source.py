@@ -20,9 +20,6 @@ as files — but everything Spark-visible IS the Kafka contract:
     `txn_foreach_batch` (sources/txlog.py) gives the queue -> ACID
     table pipeline Delta documents for Kafka, end-to-end exactly-once,
     with zero source-side state beyond the checkpoint.
-  * **Retention** (`trim_segments`) drops whole expired segments and
-    moves `earliest` forward — consumers pinned to "earliest" resume
-    from the retention floor exactly as they would on a real broker.
 
 Swapping in a real broker changes ONLY `_segments`/`_read_segment`
 (list offsets + poll instead of listdir + read): planning, offsets,
@@ -347,90 +344,6 @@ def produce_distributed(df, queue_dir: str, topic: str,
                     except OSError:
                         pass
     return out
-
-
-def compact_topic(queue_dir: str, topic: str) -> dict[str, int]:
-    """Kafka log compaction: within each partition, keep only the
-    LATEST record per key (keyless records are kept — they have no
-    compaction identity), never touching the ACTIVE (last) segment —
-    Kafka's cleaner has the same exclusion, which is what keeps the
-    next-offset calculation (last segment's start+count) exact.
-
-    Offsets are PRESERVED, not renumbered: a compacted segment keeps
-    its original (start, count) filename — the span over-approximates
-    its surviving records, which is harmless (planning clips by span,
-    readers filter by actual offsets; consumers must tolerate offset
-    gaps, exactly as on a compacted Kafka topic). Rewrites publish by
-    tmp+rename, so a concurrent reader sees either version, both
-    self-consistent. Returns {"records_removed": n, "segments": m}.
-
-    A compacted topic still replays to the same FINAL state through
-    the CDC apply (latest-per-key is all merge consumes) — the
-    pairing Kafka documents for changelog topics."""
-    removed = segs_rewritten = 0
-    topic_dir = os.path.join(queue_dir, topic)
-    if not os.path.isdir(topic_dir):
-        return {"records_removed": 0, "segments": 0}
-    for pdir in sorted(os.listdir(topic_dir)):
-        tp = os.path.join(topic_dir, pdir)
-        segs = _segments(tp)
-        if len(segs) < 2:
-            continue                      # active segment only
-        # pass 1 — latest offset per key across the WHOLE partition
-        # (the active segment contributes to the map but is never
-        # rewritten). Only (key -> offset) is held; pass 2 rewrites
-        # one segment at a time, so memory is bounded by the key
-        # cardinality plus a single segment — the same two-pass shape
-        # as Kafka's cleaner (offset map, then per-segment copy).
-        latest: dict[str, int] = {}
-        for start, count, path in segs:
-            with open(path) as f:
-                for line in f:
-                    r = json.loads(line)
-                    if r["k"] is not None:
-                        latest[r["k"]] = max(latest.get(r["k"], -1),
-                                             r["o"])
-        for start, count, path in segs[:-1]:
-            with open(path) as f:
-                rows = [json.loads(line) for line in f]
-            keep = [r for r in rows
-                    if r["k"] is None or latest[r["k"]] == r["o"]]
-            if len(keep) == len(rows):
-                continue
-            removed += len(rows) - len(keep)
-            segs_rewritten += 1
-            tmp = os.path.join(tp, f".tmp-{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                f.write("".join(json.dumps(r) + "\n" for r in keep))
-            os.rename(tmp, path)          # same name: span preserved
-    return {"records_removed": removed, "segments": segs_rewritten}
-
-
-def trim_segments(queue_dir: str, topic: str, upto_offset: int) -> int:
-    """Retention: drop every segment of `topic` that lies ENTIRELY
-    below `upto_offset` (whole-segment granularity, like a broker's
-    log cleaner — never splits a segment). Returns segments removed;
-    `earliest` moves forward for every consumer planning afterwards.
-
-    The ACTIVE (last) segment is never removed, even when it lies
-    wholly below the cutoff — the same exclusion Kafka's cleaner makes.
-    This is not just conservatism: segment filenames are the only
-    durable record of each partition's log-end offset, so deleting ALL
-    segments would make _offset_bounds report (0, 0) and the next
-    produce would restart offsets at 0 — log-end moving BACKWARDS,
-    which breaks checkpointed consumers (replayed offset ranges would
-    no longer be byte-identical) and the exactly-once contract."""
-    removed = 0
-    topic_dir = os.path.join(queue_dir, topic)
-    if not os.path.isdir(topic_dir):
-        return 0
-    for pdir in os.listdir(topic_dir):
-        tp = os.path.join(topic_dir, pdir)
-        for start, count, path in _segments(tp)[:-1]:
-            if start + count <= upto_offset:
-                os.unlink(path)
-                removed += 1
-    return removed
 
 
 # ---------------------------------------------------------------------------

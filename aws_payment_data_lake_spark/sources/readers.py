@@ -28,10 +28,6 @@ TESTDATA_TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
-
 def normalize_event_time(df: DataFrame) -> DataFrame:
     """Source-boundary rule: event-time columns are session-UTC
     ``TimestampType``, whatever the parquet footer says.
@@ -71,28 +67,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
     """Read several tables at once: ``li, ord = load(spark, d, "lineitem", "orders")``."""
     return tuple(read_table(spark, sf_dir, n) for n in names)
-
-
-def read_evolved(spark: SparkSession, path: str,
-                 target_schema: "T.StructType | None" = None) -> DataFrame:
-    """Schema-evolution read of a parquet zone whose files were written
-    at different schema versions — the lake reality once a pipeline
-    ships v2 (added columns, widened types) while v1 files remain.
-
-    Two tiers:
-      * no ``target_schema``: parquet ``mergeSchema`` unions the file
-        schemas (absent columns read as null) — footer-only, but the
-        sampling cost scales with FILE count and conflicting widths
-        (an int file next to a long file) are a merge error.
-      * ``target_schema`` given (the catalog contract — production
-        zones pin the evolved schema rather than re-deriving it per
-        read): the scan itself reads every file under the pinned
-        schema. Spark 4's parquet reader widens primitives in-scan
-        (int32 file -> LongType column, float -> double) and fills
-        columns a file lacks with typed nulls — verified against
-        mixed-version files in tests/test_schema_evolution.py. No
-        cast layer sits above the scan, so filter pushdown and column
-        pruning on every column still reach parquet."""
-    if target_schema is None:
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    return spark.read.schema(target_schema).parquet(path)

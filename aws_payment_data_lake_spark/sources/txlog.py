@@ -62,8 +62,7 @@ app, batch <= the last recorded) is detected during log replay and
 skipped instead of double-appended — the storage-layer fix for the
 reference's blind retry-duplicating append
 (src/glue_jobs/etl_transactions_bronze.py:130), and the same
-idempotence contract the streaming sinks here use
-(``streaming/corpus.py``, ``sources/audit_sink.py``).
+idempotence contract the audit sink uses (``sources/audit_sink.py``).
 
 Hidden partitioning / pruning: ``partition_by`` columns stay INSIDE
 the parquet files (no Hive ``col=`` directories); the staging write
@@ -4197,9 +4196,9 @@ def txn_foreach_batch(table: TxnTable, app: str):
     """``foreachBatch`` sink writing a stream into a TxnTable with
     exactly-once content: the micro-batch id is the txn batch number,
     so Structured Streaming's at-least-once replay after a failure is
-    DETECTED during log replay and skipped — the table-format upgrade
-    of the batch-id-keyed idempotent sinks in ``streaming/corpus.py``
-    and ``sources/audit_sink.py`` ("skip, don't rewrite").
+    DETECTED during log replay and skipped — the table-format version
+    of the batch-id-keyed audit sink, ``sources/audit_sink.py`` ("skip,
+    don't rewrite").
 
     Usage::
 

@@ -44,7 +44,6 @@ stream columns, the same autoMerge contract as merge()/append().
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from collections.abc import Iterator

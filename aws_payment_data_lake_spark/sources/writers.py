@@ -104,28 +104,3 @@ def read_zone(spark, path: str, fmt: str = "parquet") -> DataFrame:
 
         return TxnTable(spark, path).snapshot()
     return spark.read.parquet(path)
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   n_buckets: int, sort_cols: list[str] | None = None,
-                   path: str | None = None, mode: str = "overwrite") -> None:
-    """Bucketed parquet table for shuffle-free co-located joins — the
-    100 TB pattern for a fact table that is repeatedly joined or
-    aggregated on the same key: pay the hash-partition ONCE at write
-    time, and every later join/groupBy on the bucket key reads
-    pre-partitioned data with NO Exchange on that side (two tables
-    bucketed the same way join with no shuffle at all; adding
-    ``sort_cols`` on the join key also drops the per-task Sort under a
-    sort-merge join).
-
-    Bucketing requires the table catalog (``saveAsTable`` — bucket
-    metadata lives in the metastore, not the parquet footers);
-    ``path`` pins the data location for external-table layouts.
-    ``spark.table(table)`` reads it back bucket-aware.
-    """
-    w = df.write.format("parquet").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path is not None:
-        w = w.option("path", path)
-    w.mode(mode).saveAsTable(table)

@@ -5,56 +5,33 @@ The reference lists streaming ingestion (Kinesis/Kafka) only as a
 the same logical plans the batch engine runs:
 
   events.py         file-source event stream: watermarked tumbling /
-                    session window aggregations, stateful stream dedup
-                    (dropDuplicatesWithinWatermark).
+                    session window aggregations.
   bronze_stream.py  streaming medallion ingest: raw CSV stream ->
-                    bronze transforms -> partitioned parquet sink with
-                    checkpointed exactly-once file commits.
-  stateful.py       custom stateful operators: applyInPandasWithState
-                    per-user running aggregates, plus the (env-gated)
-                    transformWithStateInPandas twin.
-  corpus.py         LLM-corpus tier on streams: document chunking
-                    (stateless flatMap) and LM scoring under a
-                    batch-trained LM (stream-static join).
+                    bronze transforms -> MERGE sink (foreachBatch +
+                    partition-scoped upsert), replay-idempotent.
+  joins.py          view->purchase attribution join (batch plan).
+  cdc.py            queue change events folded into a txlog table.
   source.py         shared parquet stream-source plumbing (schema from
-                    footer, literal-file->glob rule).
+                    footer, file-vs-directory rule).
 
-tests/test_streaming.py asserts stream==batch parity for each: the same
+tests/test_streaming.py asserts stream==batch parity: the same
 expressions produce the same rows whether fed a static DataFrame or a
 file stream drained with Trigger.AvailableNow.
 """
 
 from aws_payment_data_lake_spark.streaming.events import (  # noqa: F401
-    deduped_event_stream,
     read_event_stream,
-    run_available_now,
     start_available_now,
     tumbling_counts,
 )
 from aws_payment_data_lake_spark.streaming.bronze_stream import (  # noqa: F401
     read_raw_stream,
     run_bronze_stream,
-    start_bronze_sink,
     start_bronze_upsert_sink,
-)
-from aws_payment_data_lake_spark.streaming.stateful import (  # noqa: F401
-    user_running_totals,
 )
 from aws_payment_data_lake_spark.streaming.joins import (  # noqa: F401
     view_purchase_attribution_batch,
-    view_purchase_attribution_stream,
-)
-from aws_payment_data_lake_spark.streaming.corpus import (  # noqa: F401
-    chunk_stream,
-    lm_score_stream,
-    read_document_stream,
 )
 from aws_payment_data_lake_spark.streaming.source import (  # noqa: F401
     read_parquet_stream,
-)
-from aws_payment_data_lake_spark.streaming.rate_source import (  # noqa: F401
-    rate_window_totals,
-    rate_window_totals_batch,
-    read_rate_events,
-    synthetic_events,
 )

@@ -1,4 +1,4 @@
-"""Streaming medallion ingest: raw CSV stream -> bronze parquet sink.
+"""Streaming medallion ingest: raw CSV stream -> bronze MERGE sink.
 
 The streaming twin of plans/bronze.py. The stateless transforms
 (normalise/cast/derive) are REUSED verbatim — they are row-local
@@ -13,9 +13,9 @@ projections, legal in any streaming plan. Only dedup changes shape:
 always arrive — so first-wins-within-watermark is the principled
 streaming semantics; tests assert both drop the same duplicate keys.
 
-The parquet sink commits files transactionally per micro-batch via the
-checkpoint's write-ahead log: exactly-once file output, the property the
-reference approximated with Glue job bookmarks (SURVEY.md §2.12 D1).
+The sink upserts every micro-batch into the bronze zone, so a replayed
+batch leaves the zone unchanged: the property the reference approximated
+with Glue job bookmarks (SURVEY.md §2.12 D1).
 """
 
 from __future__ import annotations
@@ -56,22 +56,6 @@ def run_bronze_stream(raw: DataFrame,
     return derive_txn_date(df)
 
 
-def start_bronze_sink(bronze: DataFrame, path: str,
-                      checkpoint_dir: str) -> StreamingQuery:
-    """Partitioned parquet sink with checkpointed exactly-once commits,
-    drained with AvailableNow (swap the trigger for a processing-time one
-    in continuous ingest)."""
-    return (
-        bronze.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("txn_date")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def start_bronze_upsert_sink(bronze: DataFrame, bronze_dir: str,
                              checkpoint_dir: str) -> StreamingQuery:
     """MERGE sink: every micro-batch is upserted into the bronze zone via
@@ -79,8 +63,7 @@ def start_bronze_upsert_sink(bronze: DataFrame, bronze_dir: str,
     new files — the reference's bookmark-style incremental semantics
     (SURVEY.md §2.12 D1) with REPLAY idempotence on top. foreachBatch
     delivery is at-least-once: after a failure the same micro-batch can
-    run again. The plain parquet sink absorbs that through the sink
-    commit log; this sink absorbs it through MERGE semantics — a
+    run again. This sink absorbs that through MERGE semantics — a
     replayed batch re-merges latest-wins on txn_id and leaves the zone's
     content unchanged, so EITHER kind of rerun (checkpoint recovery or a
     full re-ingest with a fresh checkpoint) never duplicates rows.

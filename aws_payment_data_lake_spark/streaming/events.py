@@ -1,4 +1,4 @@
-"""Streaming event analytics: watermarks, windows, stateful dedup.
+"""Streaming event analytics: watermarks and windows.
 
 Batch/stream symmetry is the design invariant: `tumbling_counts` applies
 the SAME expressions as the batch query `tumbling_window_events`
@@ -50,16 +50,6 @@ def tumbling_counts(events: DataFrame,
     )
 
 
-def deduped_event_stream(events: DataFrame,
-                         watermark: str = DEFAULT_WATERMARK) -> DataFrame:
-    """Stateful stream dedup on event_id: dropDuplicatesWithinWatermark
-    keeps the FIRST arrival and stores each key only until the watermark
-    passes it — bounded state, unlike a plain dropDuplicates whose state
-    grows forever on an unbounded stream."""
-    return (events.withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(["event_id"]))
-
-
 def start_available_now(stream_df: DataFrame, query_name: str,
                         output_mode: str = "append"):
     """Start (without draining) an AvailableNow run into a memory sink.
@@ -73,13 +63,3 @@ def start_available_now(stream_df: DataFrame, query_name: str,
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start())
-
-
-def run_available_now(stream_df: DataFrame, query_name: str,
-                      output_mode: str = "append") -> DataFrame:
-    """Drain a stream to completion into a memory sink and return the
-    result as a DataFrame (test/driver harness for file-backed streams;
-    Trigger.AvailableNow processes everything available, then stops)."""
-    q = start_available_now(stream_df, query_name, output_mode)
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)

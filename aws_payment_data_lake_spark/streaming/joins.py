@@ -1,17 +1,5 @@
-"""Stream-stream joins: watermarked, time-bounded event correlation.
-
-The streaming operator class the window aggregations don't cover: two
-UNBOUNDED inputs joined row-to-row, where the time-range condition plus
-both watermarks tell Spark exactly how long each side's state must be
-retained (a view can only match purchases up to `attribution_window`
-later, so view state older than watermark + window is dropped — without
-the bound the join state grows forever). Stream-stream inner joins emit
-in append mode only.
-
-Batch/stream symmetry (the module contract everywhere in streaming/):
-the same join over the same files as a batch DataFrame returns the same
-rows — asserted in tests/test_streaming.py.
-"""
+"""View->purchase attribution: a time-bounded event self-join, the plan
+the registered query runs (queries/relational.py)."""
 
 from __future__ import annotations
 
@@ -19,7 +7,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
-def _sides(events: DataFrame):
+def view_purchase_attribution_batch(events: DataFrame,
+                                    attribution_window: str = "1 hour",
+                                    ) -> DataFrame:
+    """Every (view, purchase) pair for the same user with the purchase
+    at most `attribution_window` after the view."""
     views = (events.where(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
                      F.col("event_id").alias("view_event_id"),
@@ -29,11 +21,6 @@ def _sides(events: DataFrame):
                          F.col("event_id").alias("purchase_event_id"),
                          F.col("ts").alias("purchase_ts"),
                          F.col("value").alias("purchase_value")))
-    return views, purchases
-
-
-def _joined(views: DataFrame, purchases: DataFrame,
-            attribution_window: str) -> DataFrame:
     return (
         views.join(
             purchases,
@@ -47,25 +34,3 @@ def _joined(views: DataFrame, purchases: DataFrame,
                 "view_ts", "purchase_ts",
                 F.round("purchase_value", 4).alias("purchase_value"))
     )
-
-
-def view_purchase_attribution_stream(events: DataFrame,
-                                     attribution_window: str = "1 hour",
-                                     watermark: str = "1 day") -> DataFrame:
-    """STREAMING view->purchase attribution: every (view, purchase) pair
-    for the same user with the purchase inside the attribution window.
-    Both sides carry watermarks so the join state is bounded: purchase
-    state expires at the purchase watermark, view state at watermark +
-    attribution window (Spark derives this from the time-range
-    predicate)."""
-    views, purchases = _sides(events)
-    return _joined(views.withWatermark("view_ts", watermark),
-                   purchases.withWatermark("purchase_ts", watermark),
-                   attribution_window)
-
-
-def view_purchase_attribution_batch(events: DataFrame,
-                                    attribution_window: str = "1 hour",
-                                    ) -> DataFrame:
-    """The batch twin — identical plan minus watermarks."""
-    return _joined(*_sides(events), attribution_window)

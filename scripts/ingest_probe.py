@@ -1,11 +1,11 @@
 """Measure the incremental ANN index roll vs a full rebuild.
 
-Scenario: a warehouse holds the IVF + PQ stores for the base 90% of an
+Scenario: a warehouse holds the IVF store for the base 90% of an
 embeddings corpus; the corpus rolls by appending the newest 10%.
 Compare:
-  * ingest roll  — durable_{ivf,pq}_index with the pure-append gate
-    active: frozen artifacts, delta-only assignment/encode;
-  * full rebuild — same roll with ingest=False: retrain + re-encode
+  * ingest roll  — durable_ivf_index with the pure-append gate active:
+    frozen centroids, delta-only cell assignment;
+  * full rebuild — same roll with ingest=False: retrain + re-assign
     the whole corpus.
 
 Run: python scripts/ingest_probe.py [sf_dir]   (default testdata sf0.1)
@@ -30,7 +30,6 @@ from aws_payment_data_lake_spark.session import get_spark  # noqa: E402
 from aws_payment_data_lake_spark.sources import load  # noqa: E402
 from aws_payment_data_lake_spark.queries.similarity import (  # noqa: E402
     durable_ivf_index,
-    durable_pq_index,
 )
 
 
@@ -55,15 +54,12 @@ def main() -> None:
         def roll(wh: str, ingest: bool) -> dict:
             t0 = time.perf_counter()
             (_, a1), b1 = durable_ivf_index(spark, base_dir, wh)
-            (_, k1), b2 = durable_pq_index(spark, base_dir, wh)
             t1 = time.perf_counter()
-            (_, a2), b3 = durable_ivf_index(spark, full_dir, wh,
+            (_, a2), b2 = durable_ivf_index(spark, full_dir, wh,
                                             ingest=ingest)
-            (c2, _), b4 = durable_pq_index(spark, full_dir, wh,
-                                           ingest=ingest)
             t2 = time.perf_counter()
-            assert b1 and b2 and b3 and b4
-            assert a2.count() == n and c2.count() == n
+            assert b1 and b2
+            assert a2.count() == n
             return {"base_build_sec": round(t1 - t0, 3),
                     "roll_sec": round(t2 - t1, 3)}
 

@@ -15,10 +15,8 @@ from tests.conftest import SF_DIR
 
 from aws_payment_data_lake_spark.operators import similarity as S
 from aws_payment_data_lake_spark.queries.similarity import (
-    _books_of,
     ann_index_ingest,
     durable_ivf_index,
-    durable_pq_index,
 )
 from aws_payment_data_lake_spark.sources import load
 from aws_payment_data_lake_spark.sources.store import (
@@ -100,28 +98,6 @@ def test_ivf_pure_append_ingests_with_frozen_centroids(spark, tmp_path):
     new_inodes = _data_inodes(fp2)
     assert prior_inodes <= new_inodes        # prior files linked, not copied
     assert new_inodes - prior_inodes         # plus fresh delta part files
-
-
-def test_pq_pure_append_encodes_delta_with_frozen_books(spark, tmp_path):
-    base_dir, full_dir, cut = _setup(spark, tmp_path)
-    wh = str(tmp_path / "wh")
-
-    (codes1, books1), built1 = durable_pq_index(spark, base_dir, wh)
-    assert built1
-    base_code_rows = _crows(codes1)
-
-    (codes2, books2), built2 = durable_pq_index(spark, full_dir, wh)
-    assert built2
-    # frozen codebooks prove the ingest path ran: a retrain on the full
-    # corpus samples a different row set and moves the codewords
-    assert books2 == books1
-
-    got = _crows(codes2)
-    assert [r for r in got if r[0] < cut] == base_code_rows
-    (full,) = load(spark, full_dir, "embeddings")
-    delta = full.where(F.col("vec_id") >= cut)
-    assert ([r for r in got if r[0] >= cut]
-            == _crows(S.pq_encode(delta, books1)))
 
 
 def test_gate_rejects_edit_and_delete(spark, tmp_path):

@@ -1,104 +1,7 @@
-"""Small-file compaction: file-count reduction, content preservation,
-idempotent re-run, and the local-path guard."""
+"""Scoped txlog compaction (OPTIMIZE ... WHERE): files outside the
+scope keep their bytes, through the Python API and through SQL."""
 
 from __future__ import annotations
-
-import glob
-import os
-
-import pytest
-
-from tests.conftest import SF_DIR
-
-from aws_payment_data_lake_spark.sources import load
-from aws_payment_data_lake_spark.sources.maintenance import (
-    compact_parquet_dir,
-)
-
-
-def _n_files(path):
-    return len(glob.glob(os.path.join(path, "*.parquet")))
-
-
-def test_compacts_small_files_preserving_rows(spark, tmp_path):
-    (events,) = load(spark, SF_DIR, "events")
-    src = str(tmp_path / "zone")
-    events.repartition(48).write.parquet(src)
-    assert _n_files(src) == 48
-    before = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-
-    total = sum(os.path.getsize(f)
-                for f in glob.glob(os.path.join(src, "*.parquet")))
-    report = compact_parquet_dir(spark, src,
-                                 target_file_bytes=-(-total // 4))
-    assert report["compacted"] and report["files_before"] == 48
-    assert report["files_after"] <= 5
-    assert _n_files(src) == report["files_after"]
-    # no leftover tmp/bak dirs
-    assert not os.path.exists(src + ".compact-tmp")
-    assert not os.path.exists(src + ".compact-bak")
-
-    after = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-    assert after == before
-
-    # repeated runs strictly shrink the file count until no-op (at toy
-    # sizes parquet per-file overhead dominates, so re-encoding can
-    # legitimately leave room for another pass; convergence is the
-    # guaranteed property)
-    prev = report["files_after"]
-    for _ in range(5):
-        r = compact_parquet_dir(spark, src,
-                                target_file_bytes=-(-total // 4))
-        if not r["compacted"]:
-            break
-        assert r["files_after"] < prev
-        prev = r["files_after"]
-    else:
-        pytest.fail("compaction did not converge")
-    assert sorted(tuple(x) for x in
-                  spark.read.parquet(src).collect()) == before
-
-
-def test_noop_below_min_files(spark, tmp_path):
-    (events,) = load(spark, SF_DIR, "events")
-    src = str(tmp_path / "one")
-    events.coalesce(1).write.parquet(src)
-    report = compact_parquet_dir(spark, src, target_file_bytes=1)
-    assert not report["compacted"] and report["files_before"] == 1
-
-
-def test_recovers_from_crash_window(spark, tmp_path):
-    """Simulated crash between os.replace(base, bak) and
-    os.replace(tmp, base): the zone exists only at .compact-bak. The
-    next compaction call must restore it and proceed (ADVICE r5)."""
-    (events,) = load(spark, SF_DIR, "events")
-    src = str(tmp_path / "crashed")
-    events.repartition(8).write.parquet(src)
-    before = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-    os.replace(src, src + ".compact-bak")  # the crash state
-    assert not os.path.exists(src)
-
-    report = compact_parquet_dir(spark, src, target_file_bytes=1 << 30)
-    assert os.path.isdir(src) and not os.path.exists(src + ".compact-bak")
-    assert report["files_before"] == 8
-    after = sorted(tuple(r) for r in spark.read.parquet(src).collect())
-    assert after == before
-
-
-def test_rejects_remote_schemes(spark):
-    with pytest.raises((ValueError, Exception)) as e:
-        compact_parquet_dir(spark, "s3://bucket/zone")
-    assert "s3" in str(e.value) or "local" in str(e.value).lower() \
-        or "scheme" in str(e.value).lower()
-
-
-def test_partitioned_zone_rejected(spark, tmp_path):
-    (events,) = load(spark, SF_DIR, "events")
-    zone = str(tmp_path / "pzone")
-    (events.withColumn("part", events.user_id % 2)
-     .write.partitionBy("part").parquet(zone))
-    with pytest.raises(ValueError, match="partition"):
-        compact_parquet_dir(spark, zone)
 
 
 # ----------------------------------------------- OPTIMIZE ... WHERE (r9)

@@ -133,27 +133,6 @@ def test_poll_budget_and_resume(tmp_path):
     assert len({(r["partition"], r["offset"]) for r in a + b}) == 40
 
 
-def test_consumer_lag_describe(tmp_path):
-    from aws_payment_data_lake_spark.sources.consumer_group import (
-        consumer_lag,
-    )
-
-    qdir = _mk_queue(tmp_path, n=40, parts=4)
-    g = ConsumerGroup(qdir, "g1", "pay")
-    m = g.join("c1")
-    lag0 = consumer_lag(qdir, "g1", "pay")
-    assert all(v == {"committed": 0, "log_end": 10, "lag": 10}
-               for v in lag0.values())
-    m.poll(max_records=15)          # p0 fully + 5 of p1
-    lag1 = consumer_lag(qdir, "g1", "pay")
-    assert lag1[0]["lag"] == 0
-    assert lag1[1] == {"committed": 5, "log_end": 10, "lag": 5}
-    assert sum(v["lag"] for v in lag1.values()) == 25
-    m.poll()
-    assert sum(v["lag"] for v in
-               consumer_lag(qdir, "g1", "pay").values()) == 0
-
-
 # --------------------------------------------------------------- ADVICE r8
 def test_concurrent_commits_of_different_partitions_never_lost(tmp_path):
     """Two members committing DIFFERENT partitions concurrently must

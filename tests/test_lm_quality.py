@@ -14,7 +14,6 @@ from tests.conftest import SF_DIR
 
 from aws_payment_data_lake_spark.operators.lm_quality import (
     lm_perplexity,
-    perplexity_gate,
     train_bigram_lm,
 )
 from aws_payment_data_lake_spark.sources import load
@@ -100,33 +99,6 @@ def test_cross_corpus_scoring(spark):
                      lm_perplexity(docs.limit(100), lm=lm).collect()]
     junk = lm_perplexity(probe, lm=lm).collect()[0]["ppl_proxy"]
     assert junk > float(np.median(corpus_scores))
-
-
-def test_perplexity_gate_keeps_the_fluent_fraction(spark):
-    (docs,) = load(spark, SF_DIR, "documents")
-    sample = docs.limit(400)
-    gated = perplexity_gate(sample, keep_frac=0.8)
-    n = sample.count()
-    kept = gated.where("lm_keep").count()
-    assert gated.count() == n
-    # exact quantile -> kept fraction lands on ~keep_frac (ties may
-    # push it slightly above, never more than the tie group)
-    assert 0.75 * n <= kept <= 0.9 * n, (kept, n)
-    # every kept doc scores no worse than every dropped doc
-    worst_kept = gated.where("lm_keep").agg(
-        {"ppl_proxy": "max"}).collect()[0][0]
-    best_drop = gated.where("NOT lm_keep").agg(
-        {"ppl_proxy": "min"}).collect()[0][0]
-    assert worst_kept <= best_drop
-
-
-def test_perplexity_gate_empty_and_bad_params(spark):
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    out = perplexity_gate(empty)
-    assert out.count() == 0
-    assert {"ppl_proxy", "lm_keep"} <= set(out.columns)
-    with pytest.raises(ValueError):
-        perplexity_gate(empty, keep_frac=0.0)
 
 
 def test_shared_and_durable_lm_store(spark, tmp_path, monkeypatch):

@@ -12,6 +12,8 @@ from __future__ import annotations
 import inspect
 import re
 
+from tests.source_refs import package_refs
+
 from aws_payment_data_lake_spark.sources.txlog import TxnTable
 
 
@@ -56,41 +58,6 @@ def test_commit_claim_never_reads_before_linking():
             "arbitrated by the atomic link alone"
 
 
-def _package_refs(names: set[str]) -> dict[str, list[tuple[str, str]]]:
-    """Every use of ``names`` inside the package — an attribute
-    (``x.name``) or a bare-name load — as (enclosing def/class scope,
-    file:line)."""
-    import ast
-    import pathlib
-
-    import aws_payment_data_lake_spark
-
-    pkg = pathlib.Path(aws_payment_data_lake_spark.__file__).parent
-    refs: dict[str, list[tuple[str, str]]] = {n: [] for n in names}
-
-    def visit(node, scope, where):
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.ClassDef, ast.FunctionDef,
-                                  ast.AsyncFunctionDef)):
-                visit(child, scope + [child.name], where)
-                continue
-            if isinstance(child, ast.Attribute):
-                name = child.attr
-            elif (isinstance(child, ast.Name)
-                  and isinstance(child.ctx, ast.Load)):
-                name = child.id
-            else:
-                name = None
-            if name in refs:
-                refs[name].append(
-                    (".".join(scope), f"{where}:{child.lineno}"))
-            visit(child, scope, where)
-
-    for src in sorted(pkg.rglob("*.py")):
-        visit(ast.parse(src.read_text()), [], src.relative_to(pkg))
-    return refs
-
-
 def test_commit_loop_is_the_only_publisher():
     """One choke point: inside the package, ``_try_publish(`` and
     ``_maybe_checkpoint(`` are each called only from
@@ -98,7 +65,7 @@ def test_commit_loop_is_the_only_publisher():
     (DML, DDL, maintenance, the batch writer, the streaming sink)
     publishes through. Commit metrics and per-step timings attach
     there and nowhere else."""
-    refs = _package_refs({"_try_publish", "_maybe_checkpoint"})
+    refs = package_refs({"_try_publish", "_maybe_checkpoint"})
     for name, sites in refs.items():
         assert [caller for caller, _ in sites] == ["TxnTable._commit"], \
             f"{name} called outside TxnTable._commit: {sites}"
@@ -111,7 +78,7 @@ def test_commits_is_the_only_log_reader():
     and ``exists``; and ``_LAYOUT_OPS`` only by ``_feed_plan``, the
     change-feed planner ``changes()`` and the txlog_feed stream
     share."""
-    refs = _package_refs({"_commit_path", "_LAYOUT_OPS"})
+    refs = package_refs({"_commit_path", "_LAYOUT_OPS"})
     assert sorted(caller for caller, _ in refs["_commit_path"]) == [
         "TxnTable._commits", "TxnTable._try_publish", "TxnTable.exists"], \
         f"a commit JSON is opened outside TxnTable._commits: " \

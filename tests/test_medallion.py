@@ -240,21 +240,6 @@ def test_pipeline_on_acid_format(spark, tmp_path_factory):
                      ingest="streaming_upsert", **kw)
 
 
-def test_register_zones_enables_sql_over_catalog_names(spark, pipeline_result):
-    from aws_payment_data_lake_spark.plans.pipeline import register_zones
-
-    base, res = pipeline_result
-    names = register_zones(spark, res["paths"])
-    assert "bronze_transactions_parquet" in names  # reference table name
-    got = spark.sql("""
-        SELECT count(*) AS n FROM silver_transactions_parquet
-        WHERE status_curated = 'UNKNOWN'
-    """).collect()[0]["n"]
-    assert got == 0  # silver never contains unvalidated statuses
-    n_b = spark.sql("SELECT count(*) AS n FROM bronze_transactions_parquet").collect()[0]["n"]
-    assert n_b == res["counts"]["bronze"]
-
-
 def test_write_zone_format_flag_gated(spark, tmp_path_factory):
     """The declared Delta writer flag (SURVEY §4.1/§7.0) exists and is
     honestly gated: parquet writes through write_zone, fmt='delta' raises

@@ -12,9 +12,7 @@ from tests.conftest import SF_DIR
 
 from aws_payment_data_lake_spark.operators.multimodal import (
     EMBED_DIM,
-    RESIZE_TARGET,
     feature_extract,
-    resize_payloads,
     with_binary_payload,
 )
 from aws_payment_data_lake_spark.sources import load
@@ -56,32 +54,3 @@ def test_feature_extract_feeds_similarity_tier(spark, payload_rows):
     top = brute_force_topk(emb, k=3, n_queries=2).collect()
     assert len(top) == 6
     assert all(r["rk"] <= 3 for r in top)
-
-
-def test_resize_matches_python_reference(spark, payload_rows):
-    wp, texts = payload_rows
-    got = {r["doc_id"]: (r["out_bytes"], r["resized_checksum"])
-           for r in resize_payloads(wp).collect()}
-    assert set(got) == set(texts)
-    for doc_id in list(texts)[:20]:
-        b = texts[doc_id]
-        n = len(b)
-        out_n = min(n, RESIZE_TARGET)
-        ref = sum(b[j * n // out_n] for j in range(out_n))
-        assert got[doc_id] == (out_n, ref), doc_id
-
-
-def test_resize_short_and_empty_payloads(spark):
-    """Payloads shorter than the target (and empty) are handled without
-    oversampling: out_bytes == len(payload), checksum over each byte
-    at most once."""
-    rows = [(1, b"abc"), (2, b""), (3, bytes(range(100)))]
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in rows], "doc_id long, payload binary")
-    got = {r["doc_id"]: (r["out_bytes"], r["resized_checksum"])
-           for r in resize_payloads(df).collect()}
-    assert got[1] == (3, ord("a") + ord("b") + ord("c"))
-    assert got[2] == (0, 0)
-    n = 100
-    ref = sum(j * n // RESIZE_TARGET for j in range(RESIZE_TARGET))
-    assert got[3] == (RESIZE_TARGET, ref)

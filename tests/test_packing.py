@@ -69,46 +69,6 @@ def test_budget_envelope(spark):
                for s, top in last.items() for i in range(top + 1))
 
 
-def test_write_training_shards_one_file_per_shard(spark, tmp_path):
-    """The shard sink writes exactly one parquet file per shard dir,
-    round-trips every document exactly once, and shard token sums obey
-    the packing overshoot bound (<= budget + the shard's largest doc)."""
-    import glob
-    import os
-
-    from aws_payment_data_lake_spark.operators.packing import (
-        write_training_shards,
-    )
-    from aws_payment_data_lake_spark.sources import load
-
-    (docs,) = load(spark, SF_DIR, "documents")
-    out = str(tmp_path / "shards")
-    packed = write_training_shards(docs, out, token_budget=512)
-
-    shard_dirs = [d for d in os.listdir(out) if d.startswith("shard_id=")]
-    assert shard_dirs
-    for d in shard_dirs:
-        files = glob.glob(os.path.join(out, d, "*.parquet"))
-        assert len(files) == 1, (d, files)
-
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    assert (back.select("doc_id").distinct().count()
-            == docs.select("doc_id").distinct().count())
-    # written assignment == operator assignment
-    a = sorted(map(tuple, back.select(
-        "doc_id", "shard_id").collect()))
-    b = sorted(map(tuple, packed.select(
-        "doc_id", "shard_id").collect()))
-    assert a == b
-
-    import pyspark.sql.functions as F
-    sums = (packed.groupBy("shard_id")
-            .agg(F.sum("n_tokens").alias("tok"),
-                 F.max("n_tokens").alias("mx")).collect())
-    assert all(r["tok"] <= 512 + r["mx"] for r in sums)
-
-
 def test_epoch_seed_reproducible_and_distinct(spark):
     """Same seed -> identical assignment (re-derivable from the seed
     alone); different seeds -> different shard composition; doc set,

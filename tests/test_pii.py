@@ -1,18 +1,16 @@
-"""PII scrub: DuckDB-twin parity on planted PII (strict compare — the
-patterns are the Java/RE2 common subset, so both engines must agree
-exactly), idempotence, and schema-preservation."""
+"""PII scrub (operators/pii.pii_scan): DuckDB-twin parity on planted
+PII (strict compare — the patterns are the Java/RE2 common subset, so
+both engines must agree exactly), idempotence, and the exact char
+gate."""
 
 from __future__ import annotations
 
 import duckdb
+import pyspark.sql.functions as F
 
 from tests.conftest import SF_DIR
 
-from aws_payment_data_lake_spark.operators.pii import (
-    PII_PATTERNS,
-    pii_profile,
-    redact_pii,
-)
+from aws_payment_data_lake_spark.operators.pii import PII_PATTERNS, pii_scan
 from aws_payment_data_lake_spark.sources import load
 
 _PLANTED = [
@@ -50,7 +48,7 @@ def test_profile_and_redaction_match_duckdb_twin(spark):
 
     got_prof = {r["doc_id"]: (r["n_email"], r["n_ipv4"], r["n_ssn"],
                               r["n_phone"])
-                for r in pii_profile(df).collect()}
+                for r in pii_scan(df).collect()}
     assert got_prof == want_prof
     # sanity on the planted rows themselves, not just cross-engine
     assert got_prof[1] == (2, 0, 0, 0)
@@ -59,21 +57,23 @@ def test_profile_and_redaction_match_duckdb_twin(spark):
     # the genuine phone on the same row still counts
     assert got_prof[3] == (0, 0, 1, 1)
 
-    got_red = {r["doc_id"]: r["text"] for r in redact_pii(df).collect()}
+    got_red = {r["doc_id"]: r["redacted_text"]
+               for r in pii_scan(df).collect()}
     assert got_red == want_red
     assert "<EMAIL>" in got_red[1] and "@" not in got_red[1]
     assert "<SSN>" in got_red[3] and "<PHONE>" in got_red[3]
 
 
-def test_redaction_is_idempotent_and_schema_preserving(spark):
+def test_redaction_is_idempotent(spark):
+    """Scanning redacted text again finds zero PII and changes
+    nothing (placeholders contain no digit or @)."""
     df = spark.createDataFrame(_PLANTED, "doc_id long, text string")
-    once = redact_pii(df)
-    twice = redact_pii(once)
-    assert once.schema == df.schema
-    assert sorted(map(tuple, once.collect())) == \
-        sorted(map(tuple, twice.collect()))
-    # post-redaction profile finds zero PII
-    assert pii_profile(once).agg({"n_pii": "sum"}).collect()[0][0] == 0
+    once = pii_scan(df).select("doc_id",
+                               F.col("redacted_text").alias("text"))
+    twice = pii_scan(once)
+    assert twice.agg({"n_pii": "sum"}).collect()[0][0] == 0
+    assert sorted(map(tuple, once.collect())) == sorted(
+        map(tuple, twice.select("doc_id", "redacted_text").collect()))
 
 
 def test_corpus_scan_shape(spark):
@@ -83,7 +83,7 @@ def test_corpus_scan_shape(spark):
     from contextlib import redirect_stdout
 
     (docs,) = load(spark, SF_DIR, "documents")
-    prof = pii_profile(docs)
+    prof = pii_scan(docs)
     buf = io.StringIO()
     with redirect_stdout(buf):
         prof.explain("formatted")
@@ -95,8 +95,6 @@ def test_char_gate_is_exact(spark):
     """The [0-9@] pre-gate changes nothing: gated and ungated outputs
     are identical on a mix of planted-PII and clean docs (every
     pattern needs a digit or @, so the gate is exact by construction)."""
-    from aws_payment_data_lake_spark.operators.pii import pii_scan
-
     rows = [(1, "call me at +1 415-555-0188 or a@b.co"),
             (2, "clean prose with no personal data at all"),
             (3, "ssn 123-45-6789 and ip 10.0.0.1"),

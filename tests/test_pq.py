@@ -73,34 +73,6 @@ def test_self_retrieval_at_cosine_one(spark, pq):
     assert top[0]["cos_sim"] == 1.0
 
 
-def test_durable_pq_index(spark, tmp_path, pq):
-    """Warehouse contract for the PQ index: stored codes + codebooks
-    read back bit-identical; probes through the stored index match the
-    fresh build exactly."""
-    from aws_payment_data_lake_spark.queries.similarity import (
-        durable_pq_index,
-    )
-
-    emb, books, codes = pq
-    wh = str(tmp_path / "whpq")
-    (c1, b1), built = durable_pq_index(spark, SF_DIR, wh)
-    assert built
-    (c2, b2), built2 = durable_pq_index(spark, SF_DIR, wh)
-    assert not built2
-    assert b2 == books
-    stored = sorted((r["vec_id"], tuple(r["codes"])) for r in c2.collect())
-    fresh = sorted((r["vec_id"], tuple(r["codes"])) for r in codes.collect())
-    assert stored == fresh
-
-    q = emb.where("vec_id < 5").selectExpr(
-        "vec_id AS query_id", "embedding AS qe")
-    got = sorted(map(tuple,
-                     S.pq_topk(c2, q, b2, rerank=emb).collect()))
-    want = sorted(map(tuple,
-                      S.pq_topk(codes, q, books, rerank=emb).collect()))
-    assert got == want and got
-
-
 def test_ivfpq_recall_and_self_retrieval(spark, pq):
     """IVF-PQ composition: probing n_probe cells then ADC+re-rank
     still clears a recall floor vs brute force (cells bound the

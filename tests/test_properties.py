@@ -99,74 +99,6 @@ vec = st.lists(
 
 
 @SETTINGS
-@given(vecs=st.lists(vec, min_size=1, max_size=6))
-def test_quantization_bounds_and_reconstruction(spark, vecs):
-    """int8 codes stay in [-127, 127] and reconstruction error is
-    bounded by scale/2 per component — for ANY float input including
-    zeros and denormals."""
-    from aws_payment_data_lake_spark.operators.similarity import (
-        dequantize_embeddings,
-        quantize_embeddings,
-    )
-
-    emb = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>")
-    q = quantize_embeddings(emb)
-    rows = {r["vec_id"]: r for r in q.collect()}
-    deq = {r["vec_id"]: r["embedding"]
-           for r in dequantize_embeddings(q).collect()}
-    for i, v in enumerate(vecs):
-        codes, scale = rows[i]["q_embedding"], rows[i]["q_scale"]
-        assert all(-127 <= c <= 127 for c in codes), codes
-        for orig, rec in zip(v, deq[i]):
-            assert abs(orig - rec) <= scale / 2 + 1e-12
-
-
-@SETTINGS
-@given(rows=st.lists(
-    st.tuples(st.integers(0, 5), st.integers(0, 100)),
-    min_size=1, max_size=12))
-def test_salted_join_parity_property(spark, rows):
-    """salted_join == plain join for arbitrary key multiplicity and
-    salt counts (keys missing from the dim side included)."""
-    from aws_payment_data_lake_spark.operators.skew import salted_join
-
-    fact = spark.createDataFrame(rows, "k long, payload long")
-    dim = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")],
-                                "k long, name string")
-    for how in ("inner", "left"):
-        got = sorted(tuple(r) for r in
-                     salted_join(fact, dim, "k", n_salts=3, how=how)
-                     .collect())
-        want = sorted(tuple(r) for r in fact.join(dim, "k", how).collect())
-        assert got == want, how
-
-
-@SETTINGS
-@given(payloads=st.lists(st.binary(min_size=0, max_size=200),
-                         min_size=1, max_size=8))
-def test_resize_output_bounds_property(spark, payloads):
-    """out_bytes == min(len, TARGET) and the checksum is a sum of
-    actual payload bytes (bounded by 255*out_bytes) for ANY binary
-    input, including empty payloads."""
-    from aws_payment_data_lake_spark.operators.multimodal import (
-        RESIZE_TARGET,
-        resize_payloads,
-    )
-
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "doc_id long, payload binary")
-    got = {r["doc_id"]: (r["out_bytes"], r["resized_checksum"])
-           for r in resize_payloads(df).collect()}
-    for i, p in enumerate(payloads):
-        out_n, ck = got[i]
-        assert out_n == min(len(p), RESIZE_TARGET)
-        assert 0 <= ck <= 255 * max(out_n, 0)
-
-
-@SETTINGS
 @given(edges=st.lists(
     st.tuples(st.integers(0, 9), st.integers(0, 9)),
     min_size=1, max_size=12))

@@ -125,116 +125,6 @@ def test_exact_dedup_fulltext_and_prefix_tiers(spark):
     assert D.exact_duplicate_groups(docs_sm, prefix_len=100).count() > 0
 
 
-def test_rolling_range_window_matches_duckdb(spark):
-    """RANGE-on-event-time frame parity: Spark rangeBetween(-3600, 0) on
-    unix seconds == DuckDB RANGE BETWEEN INTERVAL 1 HOUR PRECEDING."""
-    import duckdb
-
-    from aws_payment_data_lake_spark.queries.relational2 import (
-        rolling_event_totals,
-    )
-
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/events.parquet')")
-    mism = compare_spark_duck(
-        rolling_event_totals(spark, SF_DIR), con, """
-        SELECT event_id, user_id, ts,
-               CAST(count(*) OVER w AS BIGINT) AS n_1h,
-               CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE)
-                 AS sum_1h
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts
-                     RANGE BETWEEN INTERVAL 1 HOUR PRECEDING
-                           AND CURRENT ROW)
-        ORDER BY user_id, ts, event_id""")
-    con.close()
-    assert not mism, mism[:5]
-
-
-def test_scrub_pii_masks_and_matches_duckdb(spark):
-    """PII scrub: hand-checked masking on synthetic strings, then
-    cross-engine parity (identical Java∩RE2 regexes) over the documents
-    table with injected PII."""
-    import duckdb
-
-    from aws_payment_data_lake_spark.functions.text import (
-        DUCK_SCRUB,
-        scrub_pii,
-    )
-
-    cases = {
-        "mail me at bob.smith+x@ex-ample.co.uk now":
-            "mail me at <EMAIL> now",
-        "card 4111 1111 1111 1111 and phone 555-123-4567 ok":
-            "card <NUM> and phone <NUM> ok",
-        "see https://spam.example/a?b=c#d here":
-            "see <URL> here",
-        "short 1234567 stays":  # 7 digits: below the 8-digit floor
-            "short 1234567 stays",
-        "no pii at all": "no pii at all",
-    }
-    df = spark.createDataFrame([(t,) for t in cases], "text string")
-    got = {r["text"]: r["scrubbed"] for r in
-           df.select("text", scrub_pii("text").alias("scrubbed")).collect()}
-    assert got == cases
-
-    (docs,) = load(spark, SF_DIR, "documents")
-    injected = F.concat(
-        F.col("text"),
-        F.lit(" reach a@b.io or 12345678901 via http://x.y/z"))
-    sdf = docs.select(
-        "doc_id", scrub_pii(injected).alias("scrubbed")).orderBy("doc_id")
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/documents.parquet')")
-    scrub = DUCK_SCRUB.format(
-        col="text || ' reach a@b.io or 12345678901 via http://x.y/z'")
-    mism = compare_spark_duck(sdf, con, f"""
-        SELECT doc_id, {scrub} AS scrubbed
-        FROM documents ORDER BY doc_id""")
-    con.close()
-    assert not mism, mism[:3]
-
-
-def test_incremental_minhash_dedup_against_stored_signatures(spark):
-    """Delta-batch dedup against a corpus SIGNATURE table (corpus text
-    never re-read). Controlled synthetic corpus: three new docs are
-    near-copies (~0.8 shingle Jaccard) of distinct corpus docs, two are
-    unrelated — exactly the three matches must surface, scored by the
-    64-perm estimate."""
-    from aws_payment_data_lake_spark.operators.dedup import (
-        incremental_minhash_dedup,
-        minhash_signatures,
-    )
-
-    def doc(block, drop=0):
-        words = [f"w{block}_{i}" for i in range(50)]
-        return " ".join(words[drop:] if drop else words)
-
-    corpus = spark.createDataFrame(
-        [(100 + b, doc(b)) for b in range(20)], "doc_id long, text string")
-    new = spark.createDataFrame(
-        [(0, doc(0, drop=2)), (1, doc(1, drop=2)), (2, doc(2, drop=2)),
-         (3, doc(97)), (4, doc(98))],
-        "doc_id long, text string")
-
-    sigs = minhash_signatures(corpus)
-    got = {(r["new_doc_id"], r["corpus_doc_id"]): r["est_jaccard"]
-           for r in incremental_minhash_dedup(new, sigs).collect()}
-    assert set(got) == {(0, 100), (1, 101), (2, 102)}, got
-    assert all(0.6 <= j <= 1.0 for j in got.values()), got
-
-    # Append path: blind-union the new signatures into the state and the
-    # same batch now also matches itself exactly (est_jaccard 1.0).
-    sigs2 = sigs.unionByName(minhash_signatures(new))
-    again = {(r["new_doc_id"], r["corpus_doc_id"]): r["est_jaccard"]
-             for r in incremental_minhash_dedup(new, sigs2).collect()}
-    for i in range(5):
-        assert again[(i, i)] == 1.0
-    assert set(again) == set(got) | {(i, i) for i in range(5)}
-
-
 def test_lsh_hot_bucket_guard(spark):
     """Adversarial hot bucket: 1,000 docs with IDENTICAL signatures put
     all 1,000 in every band's bucket. With bucket_cap=100 the salted
@@ -263,66 +153,18 @@ def test_lsh_salted_tier_matches_default_on_testdata(spark):
     set must equal the default bucket-and-expand tier's exactly."""
     from aws_payment_data_lake_spark.operators.dedup import (
         lsh_candidate_pairs,
-        minhash_signatures,
+        shingle_sig_tables,
     )
 
     (docs,) = load(spark, SF_DIR, "documents")
-    sigs = minhash_signatures(docs).persist()
-    sigs.count()
+    sh, sigs = shingle_sig_tables(docs)
     default = {(r["doc_a"], r["doc_b"])
                for r in lsh_candidate_pairs(sigs).collect()}
     salted = {(r["doc_a"], r["doc_b"])
               for r in lsh_candidate_pairs(sigs, bucket_cap=2).collect()}
+    sh.unpersist()
     sigs.unpersist()
     assert default == salted and default
-
-
-def test_incremental_dedup_nondefault_id_col(spark):
-    """id_col/text_col rename the NEW batch's columns; the signature
-    table always carries doc_id (doc_shingles normalizes the name).
-    Regression for the round-3 UNRESOLVED_COLUMN on non-default id_col."""
-    from aws_payment_data_lake_spark.operators.dedup import (
-        incremental_minhash_dedup,
-        minhash_signatures,
-    )
-
-    corpus = spark.createDataFrame(
-        [(100, " ".join(f"w{i}" for i in range(30)))],
-        "ref_id long, body string")
-    new = spark.createDataFrame(
-        [(7, " ".join(f"w{i}" for i in range(2, 30)))],
-        "item_id long, body string")
-    sigs = minhash_signatures(corpus, id_col="ref_id", text_col="body")
-    assert "doc_id" in sigs.columns
-    got = incremental_minhash_dedup(
-        new, sigs, id_col="item_id", text_col="body").collect()
-    assert [(r["new_doc_id"], r["corpus_doc_id"]) for r in got] == [(7, 100)]
-
-
-def test_incremental_dedup_agrees_with_exact_on_testdata(spark):
-    """On the driver corpus: split at doc_id 50, dedup the low half
-    against the high half's signatures; agreement with the
-    exact-verified cross pairs (measured 1.0/1.0 on current testdata;
-    0.8 floors tolerate borderline pairs in regenerated data)."""
-    from aws_payment_data_lake_spark.operators.dedup import (
-        incremental_minhash_dedup,
-        minhash_lsh_pairs,
-        minhash_signatures,
-    )
-
-    (docs,) = load(spark, SF_DIR, "documents")
-    new = docs.where(F.col("doc_id") < 50)
-    corpus = docs.where(F.col("doc_id") >= 50)
-    got = {(r["new_doc_id"], r["corpus_doc_id"]) for r in
-           incremental_minhash_dedup(new, minhash_signatures(corpus))
-           .collect()}
-    exact = {(min(r["doc_a"], r["doc_b"]), max(r["doc_a"], r["doc_b"]))
-             for r in minhash_lsh_pairs(docs).collect()}
-    cross = {(a, b) for a, b in exact if a < 50 <= b}
-    if cross:
-        tp = len(got & cross)
-        assert tp / len(cross) >= 0.8, (got, cross)
-        assert not got or tp / len(got) >= 0.8, (got, cross)
 
 
 def test_text_repetition_profile_matches_duck(spark, duck):

@@ -10,10 +10,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from aws_payment_data_lake_spark.sources.queue_source import (
-    compact_topic,
     produce,
     read_queue,
-    trim_segments,
 )
 
 # record: (key index or None, payload round) — small alphabets force
@@ -66,82 +64,3 @@ def test_produce_readback_matches_reference(spark, tmp_path_factory,
             {"key": f"k{k}" if k is not None else None,
              "value": f"v{p}"} for k, p in call], num_partitions=2)
     assert _spark_log(spark, qdir) == _reference(history, 2)
-
-
-@settings(max_examples=10, deadline=None, derandomize=True,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(history=_HISTORY)
-def test_compaction_property(spark, tmp_path_factory, history):
-    """After compaction: keyless records all survive; keyed records
-    survive iff latest for their key OR resident in a partition's
-    active segment; offsets never renumber."""
-    qdir = str(tmp_path_factory.mktemp("qprop"))
-    for call in history:
-        produce(qdir, "t", [
-            {"key": f"k{k}" if k is not None else None,
-             "value": f"v{p}"} for k, p in call], num_partitions=2)
-    full = _reference(history, 2)
-    # active segment = the records of each partition's LAST produce
-    # call that touched it
-    last_start = {}
-    for (p, o), _ in full.items():
-        last_start[p] = o + 1
-    seg_starts = {}                      # (part) -> last segment start
-    import os
-    for p in (0, 1):
-        tp = os.path.join(qdir, "t", f"p{p}")
-        if not os.path.isdir(tp):
-            continue
-        segs = sorted(n for n in os.listdir(tp) if n.endswith(".jsonl"))
-        seg_starts[p] = int(segs[-1].split("-")[0])
-
-    compact_topic(qdir, "t")
-    got = _spark_log(spark, qdir)
-
-    latest = {}
-    for (p, o), (k, v) in full.items():
-        if k is not None:
-            cur = latest.get(k)
-            if cur is None or o > cur[1]:
-                latest[k] = (p, o)
-    for (p, o), (k, v) in full.items():
-        in_active = o >= seg_starts.get(p, 1 << 60)
-        survives = (k is None) or in_active or (latest[k] == (p, o))
-        assert ((p, o) in got) == survives, ((p, o), k, v)
-        if (p, o) in got:
-            assert got[(p, o)] == (k, v)     # offsets never renumber
-
-
-@settings(max_examples=10, deadline=None, derandomize=True,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(history=_HISTORY, cut=st.integers(0, 6))
-def test_retention_property(spark, tmp_path_factory, history, cut):
-    """After trim(upto=cut): surviving records are exactly those in
-    segments whose [start, end) reaches cut or beyond, PLUS the active
-    (last) segment unconditionally — its filename is the durable
-    record of the partition's log-end offset, so retention never
-    removes it (r8; Kafka's cleaner has the same exclusion). Offsets
-    intact."""
-    qdir = str(tmp_path_factory.mktemp("qprop"))
-    import os
-    for call in history:
-        produce(qdir, "t", [
-            {"key": f"k{k}" if k is not None else None,
-             "value": f"v{p}"} for k, p in call], num_partitions=2)
-    spans = {}                       # part -> [(start, end)]
-    for p in (0, 1):
-        tp = os.path.join(qdir, "t", f"p{p}")
-        if not os.path.isdir(tp):
-            continue
-        for n in sorted(x for x in os.listdir(tp) if x.endswith(".jsonl")):
-            s, c = n[:-len(".jsonl")].split("-")
-            spans.setdefault(p, []).append((int(s), int(s) + int(c)))
-    full = _reference(history, 2)
-    trim_segments(qdir, "t", upto_offset=cut)
-    got = _spark_log(spark, qdir)
-    for (p, o), rec in full.items():
-        seg = next((s, e) for s, e in spans[p] if s <= o < e)
-        survives = seg[1] > cut or seg == spans[p][-1]
-        assert ((p, o) in got) == survives
-        if (p, o) in got:
-            assert got[(p, o)] == rec

@@ -15,7 +15,6 @@ from aws_payment_data_lake_spark.sources.queue_source import (
     read_queue,
     register_queue_source,
     stream_queue,
-    trim_segments,
 )
 from aws_payment_data_lake_spark.sources.txlog import (
     TxnTable,
@@ -141,21 +140,6 @@ def test_replay_is_byte_identical(spark, tmp_path):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_retention_moves_earliest(spark, tmp_path):
-    """trim_segments drops whole expired segments; earliest consumers
-    resume from the retention floor."""
-    qdir = str(tmp_path / "q")
-    produce(qdir, "pay", [{"partition": 0, "value": f"old-{i}"}
-                          for i in range(10)], num_partitions=1)
-    produce(qdir, "pay", [{"partition": 0, "value": f"new-{i}"}
-                          for i in range(10)], num_partitions=1)
-    removed = trim_segments(qdir, "pay", upto_offset=10)
-    assert removed == 1
-    got = read_queue(spark, qdir, "pay")
-    assert _values(got) == sorted(f"new-{i}" for i in range(10))
-    assert got.agg({"offset": "min"}).collect()[0][0] == 10
-
-
 def test_queue_to_acid_table_exactly_once(spark, tmp_path):
     """The Kafka->Delta pipeline on the engine's own pieces: JSON
     payments stream from the queue, deserialize with from_json, land
@@ -212,122 +196,6 @@ def test_empty_queue_yields_empty_frame(spark, tmp_path):
     assert got.count() == 0
     assert [f.name for f in got.schema.fields] == \
         [n for n, _ in KAFKA_FIELDS]
-
-
-def test_log_compaction_latest_per_key(spark, tmp_path):
-    """Kafka log compaction: non-active segments retain only the
-    latest record per key (offsets preserved, gaps appear), the active
-    segment stays byte-untouched, and a full re-read yields exactly
-    the latest value per key plus the active segment's records."""
-    import os
-    from aws_payment_data_lake_spark.sources.queue_source import (
-        compact_topic,
-    )
-    qdir = str(tmp_path / "q")
-    # 3 produce calls -> 3 segments per touched partition; same keys
-    # rewritten across calls
-    for round_i in range(3):
-        produce(qdir, "pay", [
-            {"key": f"k{i}", "value": f"r{round_i}-k{i}"}
-            for i in range(6)], num_partitions=2)
-    active = {}
-    for p in (0, 1):
-        tp = os.path.join(qdir, "pay", f"p{p}")
-        segs = sorted(os.listdir(tp))
-        active[p] = (segs[-1], os.path.getmtime(os.path.join(tp, segs[-1])))
-
-    res = compact_topic(qdir, "pay")
-    assert res["records_removed"] == 12     # rounds 0+1 (6 keys x 2) stale
-    # active segments untouched byte-for-byte
-    for p in (0, 1):
-        tp = os.path.join(qdir, "pay", f"p{p}")
-        name, mtime = active[p]
-        assert os.path.getmtime(os.path.join(tp, name)) == mtime
-
-    got = read_queue(spark, qdir, "pay")
-    vals = {bytes(r["key"]).decode(): (r["offset"],
-                                       bytes(r["value"]).decode())
-            for r in got.collect()}
-    # exactly one surviving record per key: the round-2 write
-    assert got.count() == 6
-    assert all(v.startswith("r2-") for _, v in vals.values())
-    # offsets preserved (round-2 offsets are 12..17 across partitions)
-    assert sorted(o for o, _ in vals.values()) != list(range(6))
-
-    # producing after compaction continues offsets without collision
-    produce(qdir, "pay", [{"key": "k0", "value": "r3-k0"}],
-            num_partitions=2)
-    latest = read_queue(spark, qdir, "pay").groupBy().max("offset") \
-        .collect()[0][0]
-    offs = [r["offset"] for r in read_queue(spark, qdir, "pay").collect()]
-    assert len(offs) == len(set(offs)) and latest == max(offs)
-
-
-def test_compacted_topic_replays_to_same_cdc_state(spark, tmp_path):
-    """The changelog pairing: CDC-applying a topic BEFORE and AFTER
-    compaction lands the same final table."""
-    import json as _json
-    from aws_payment_data_lake_spark.sources.queue_source import (
-        compact_topic,
-    )
-    from aws_payment_data_lake_spark.sources.txlog import TxnTable
-    from aws_payment_data_lake_spark.streaming.cdc import (
-        cdc_foreach_batch,
-    )
-    qdir = str(tmp_path / "q")
-    events = [(1, 1.0, "u"), (2, 2.0, "u"), (1, 11.0, "u"),
-              (2, 0.0, "d"), (3, 3.0, "u"), (2, 22.0, "u")]
-    for i, v, op in events:                 # one produce per event ->
-        produce(qdir, "cdc", [{             # many segments to compact
-            "key": str(i),
-            "value": _json.dumps({"id": i, "v": v, "_op": op})}],
-            num_partitions=2)
-
-    def apply_to(name):
-        t = TxnTable(spark, str(tmp_path / name))
-        t.create(spark.createDataFrame([], "id bigint, v double"))
-        q = (stream_queue(spark, qdir, "cdc")
-             .writeStream
-             .foreachBatch(cdc_foreach_batch(t, ["id"],
-                                             "id bigint, v double"))
-             .option("checkpointLocation", str(tmp_path / (name + "_ck")))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return sorted((r["id"], r["v"]) for r in t.snapshot().collect())
-
-    before = apply_to("before")
-    compact_topic(qdir, "cdc")
-    after = apply_to("after")
-    assert before == after == [(1, 11.0), (2, 22.0), (3, 3.0)]
-
-
-def test_trim_never_removes_active_segment_offsets_monotonic(spark,
-                                                             tmp_path):
-    """Retention past the log end must not reset offsets: the active
-    (last) segment survives any cutoff — its filename is the durable
-    record of the partition's log-end offset — so a produce after an
-    aggressive trim continues offsets instead of restarting at 0
-    (checkpointed consumers would otherwise see log-end move backwards
-    and replayed ranges stop being byte-identical)."""
-    from aws_payment_data_lake_spark.sources.queue_source import (
-        _offset_bounds, _tp_dir,
-    )
-
-    qdir = str(tmp_path / "q")
-    produce(qdir, "pay", [{"partition": 0, "value": f"a-{i}"}
-                          for i in range(10)], num_partitions=1)
-    produce(qdir, "pay", [{"partition": 0, "value": f"b-{i}"}
-                          for i in range(10)], num_partitions=1)
-    # cutoff ABOVE the whole log: only the non-active segment goes
-    removed = trim_segments(qdir, "pay", upto_offset=10_000)
-    assert removed == 1
-    lo, nxt = _offset_bounds(_tp_dir(qdir, "pay", 0))
-    assert (lo, nxt) == (10, 20)          # log end did NOT move back
-    out = produce(qdir, "pay", [{"partition": 0, "value": "c"}],
-                  num_partitions=1)
-    assert out[0] == (20, 1)              # offsets continue, never reuse
-    got = read_queue(spark, qdir, "pay")
-    assert got.agg({"offset": "max"}).collect()[0][0] == 20
 
 
 def test_rate_limited_restart_resumes_exactly_once(spark, tmp_path):

@@ -1,15 +1,11 @@
-"""IVF recall bound (the docstring's promise in operators/similarity.py)
-and salted-aggregation equivalence."""
+"""IVF and sign-LSH recall bounds (the docstring promises in
+operators/similarity.py)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from tests.conftest import SF_DIR
 
-from aws_payment_data_lake_spark.operators.skew import salted_user_value_totals
 from aws_payment_data_lake_spark.queries import all_queries
-from aws_payment_data_lake_spark.sources import load
 
 
 def test_ivf_recall_vs_brute_force(spark):
@@ -22,7 +18,7 @@ def test_ivf_recall_vs_brute_force(spark):
     recall = len(bf & ivf) / len(bf)
     # measured 0.94 (sf0.001) / 0.92 (sf0.01) at 4/16 probes with seed
     # centroids (n_train_iter=0 — the right default for this isotropic
-    # testdata, see ivf_topk's docstring); 0.9 is the regression floor
+    # testdata, see build_ivf_index's docstring); 0.9 is the regression floor
     assert recall >= 0.9, f"IVF recall@5 regressed: {recall}"
 
 
@@ -37,7 +33,8 @@ def test_kmeans_beats_seed_centroids_on_clustered_corpus(spark):
 
     from aws_payment_data_lake_spark.operators.similarity import (
         brute_force_topk,
-        ivf_topk,
+        build_ivf_index,
+        ivf_probe_topk,
     )
 
     rng = np.random.default_rng(7)
@@ -65,104 +62,20 @@ def test_kmeans_beats_seed_centroids_on_clustered_corpus(spark):
     bf = {(r["query_id"], r["neighbor_id"])
           for r in brute_force_topk(emb, k=5, n_queries=40).collect()}
 
+    queries = emb.where("vec_id < 40").selectExpr("vec_id AS query_id",
+                                                  "embedding AS qe")
+
     def recall(n_train_iter):
+        cents, assigned = build_ivf_index(emb, n_centroids=8,
+                                          n_train_iter=n_train_iter)
         got = {(r["query_id"], r["neighbor_id"])
-               for r in ivf_topk(emb, k=5, n_queries=40, n_centroids=8,
-                                 n_probe=2, n_train_iter=n_train_iter)
-               .collect()}
+               for r in ivf_probe_topk(cents, assigned, queries, k=5,
+                                       n_probe=2).collect()}
         return len(bf & got) / len(bf)
 
     seeded, trained = recall(0), recall(5)
     assert trained > seeded, (seeded, trained)
     assert trained >= 0.9, (seeded, trained)
-
-
-def test_salted_agg_equals_plain_agg(spark):
-    (events,) = load(spark, SF_DIR, "events")
-    salted = {r["user_id"]: (r["n_events"], r["sum_value"])
-              for r in salted_user_value_totals(events).collect()}
-    plain = {r["user_id"]: (r["n_events"], r["sum_value"]) for r in (
-        events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 4).alias("sum_value"))
-    ).collect()}
-    assert salted == plain
-
-
-def test_int8_quantization_preserves_topk(spark):
-    """4x-smaller int8 embeddings must preserve the search results:
-    top-5 brute-force agreement vs the float baseline (measured
-    0.98 at sf0.001, 1.0 at sf0.1; 0.9 is the floor), and the
-    quantized schema is genuinely tinyint."""
-    from pyspark.sql import types as T
-
-    from aws_payment_data_lake_spark.operators.similarity import (
-        brute_force_topk,
-        dequantize_embeddings,
-        quantize_embeddings,
-    )
-
-    (emb,) = load(spark, SF_DIR, "embeddings")
-    q = quantize_embeddings(emb)
-    el = q.schema["q_embedding"].dataType.elementType
-    assert isinstance(el, T.ByteType), el
-
-    exact = {(r["query_id"], r["neighbor_id"])
-             for r in brute_force_topk(emb, 5, 10).collect()}
-    quant = {(r["query_id"], r["neighbor_id"])
-             for r in brute_force_topk(dequantize_embeddings(q), 5, 10)
-             .collect()}
-    assert len(exact & quant) / len(exact) >= 0.9
-
-
-def test_salted_join_equals_plain_join(spark):
-    from aws_payment_data_lake_spark.operators.skew import salted_join
-
-    (events,) = load(spark, SF_DIR, "events")
-    fact = events.select("event_id", "user_id", "value")
-    dim = (events.select("user_id").distinct()
-           .withColumn("tier", F.pmod("user_id", F.lit(3))))
-
-    def canon(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    for how in ("inner", "left"):
-        got = salted_join(fact, dim, "user_id", n_salts=8, how=how)
-        want = fact.join(dim, "user_id", how)
-        assert canon(got) == canon(want), how
-    # columns come back without the salt
-    assert set(got.columns) == {"user_id", "event_id", "value", "tier"}
-
-
-def test_salted_join_spreads_hot_key(spark):
-    """One key with 5k rows: the salted fact side must occupy several
-    (key, salt) groups, i.e. several reducers."""
-    from aws_payment_data_lake_spark.operators.skew import salted_join
-
-    hot = spark.range(5_000).select(
-        F.lit(1).alias("k"), F.col("id").alias("payload"))
-    dim = spark.createDataFrame([(1, "only")], "k long, name string")
-    out = salted_join(hot, dim, "k", n_salts=8)
-    assert out.count() == 5_000
-    salts = (hot.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in hot.columns]),
-                        F.lit(8)))
-        .select("_salt").distinct().count())
-    assert salts > 1
-
-
-def test_salted_agg_splits_hot_key(spark):
-    # one pathological key with 10k distinct rows: the salt must spread
-    # it over multiple partial groups, and the merge must still be exact
-    hot = spark.range(10_000).select(
-        F.lit(1).alias("user_id"), F.col("id").cast("double").alias("value"))
-    salted = (hot.withColumn(
-        "_salt", F.pmod(F.xxhash64("user_id", "value"), F.lit(16)))
-        .groupBy("user_id", "_salt").count())
-    assert salted.count() > 1  # hot key spread over >1 reducer
-    got = salted_user_value_totals(hot).collect()[0]
-    assert got["n_events"] == 10_000
-    assert got["sum_value"] == sum(range(10_000))
 
 
 def test_shared_ivf_index_reused(spark):

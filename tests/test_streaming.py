@@ -19,17 +19,24 @@ from aws_payment_data_lake_spark.plans import generator as G
 from aws_payment_data_lake_spark.plans.pipeline import read_raw
 from aws_payment_data_lake_spark.sources import read_table
 from aws_payment_data_lake_spark.streaming import (
-    deduped_event_stream,
     read_event_stream,
+    read_parquet_stream,
     read_raw_stream,
-    run_available_now,
     run_bronze_stream,
-    start_bronze_sink,
+    start_available_now,
+    start_bronze_upsert_sink,
     tumbling_counts,
-    user_running_totals,
 )
 
 EVENTS = os.path.join(SF_DIR, "events.parquet")
+
+
+def _drain(stream_df, query_name, output_mode="append"):
+    """Run an AvailableNow stream into a memory sink to completion;
+    returns (query, result frame)."""
+    q = start_available_now(stream_df, query_name, output_mode)
+    q.awaitTermination()
+    return q, stream_df.sparkSession.table(query_name)
 
 
 def _same_rows(df_a, df_b):
@@ -42,7 +49,7 @@ def _same_rows(df_a, df_b):
 
 def test_tumbling_stream_matches_batch(spark):
     stream = tumbling_counts(read_event_stream(spark, EVENTS))
-    got = run_available_now(stream, "t_tumbling", output_mode="complete")
+    _, got = _drain(stream, "t_tumbling", output_mode="complete")
     batch = (
         read_table(spark, SF_DIR, "events")
         .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
@@ -53,40 +60,6 @@ def test_tumbling_stream_matches_batch(spark):
                 "event_type", "n_events", "sum_value")
     )
     _same_rows(got, batch)
-
-
-def test_stream_dedup_drops_replayed_batch(spark, tmp_path):
-    # Replay the same events file twice (an at-least-once source); the
-    # watermarked dedup must restore exactly-once row counts.
-    src = str(tmp_path / "replayed")
-    ev = read_table(spark, SF_DIR, "events")
-    ev.write.mode("overwrite").parquet(src)
-    ev.write.mode("append").parquet(src)
-    assert spark.read.parquet(src).count() == 2 * ev.count()
-
-    stream = deduped_event_stream(
-        read_event_stream(spark, src, max_files_per_trigger=1))
-    got = run_available_now(stream, "t_dedup", output_mode="append")
-    assert got.count() == ev.count()
-    assert got.select("event_id").distinct().count() == ev.count()
-
-
-def test_stateful_running_totals_match_batch(spark):
-    stream = user_running_totals(read_event_stream(spark, EVENTS))
-    got = run_available_now(stream, "t_totals", output_mode="update")
-    # Final state per user == batch aggregate; with several micro-batches
-    # the memory sink holds one row per (user, batch) — keep the last.
-    final = (got.groupBy("user_id")
-             .agg(F.max("n_events").alias("n_events"),
-                  F.max("sum_value").alias("sum_value")))
-    batch = (read_table(spark, SF_DIR, "events").groupBy("user_id")
-             .agg(F.count(F.lit(1)).alias("n_events"),
-                  F.sum("value").alias("sum_value")))
-    a = {r["user_id"]: (r["n_events"], round(r["sum_value"], 6))
-         for r in final.collect()}
-    b = {r["user_id"]: (r["n_events"], round(r["sum_value"], 6))
-         for r in batch.collect()}
-    assert a == b
 
 
 @pytest.fixture()
@@ -104,7 +77,7 @@ def test_bronze_stream_matches_batch_keys(spark, tmp_path, raw_zone):
     ckpt = str(tmp_path / "ckpt")
     stream = run_bronze_stream(
         read_raw_stream(spark, raw_zone).drop("ingest_date"))
-    q = start_bronze_sink(stream, out, ckpt)
+    q = start_bronze_upsert_sink(stream, out, ckpt)
     q.awaitTermination()
 
     got = spark.read.parquet(out)
@@ -112,25 +85,14 @@ def test_bronze_stream_matches_batch_keys(spark, tmp_path, raw_zone):
 
     # Same schema (modulo column order from partitioned read-back).
     assert sorted(got.columns) == sorted(batch.columns)
-    # Both dedup to the same key set: first-wins (stream) vs latest-wins
-    # (batch) pick different rows for a duplicated key, but drop the same
-    # duplicates.
+    # Both dedup to the same key set: a duplicated key may resolve to a
+    # different row (first arrival within the watermark, then the
+    # sink's latest-wins merge across micro-batches), but the same
+    # duplicates drop.
     assert got.count() == batch.count()
     assert got.select("txn_id").distinct().count() == got.count()
     _same_rows(got.select("txn_id", "txn_date"),
                batch.select("txn_id", "txn_date"))
-
-
-def test_bronze_stream_restart_is_exactly_once(spark, tmp_path, raw_zone):
-    out = str(tmp_path / "bronze_stream")
-    ckpt = str(tmp_path / "ckpt")
-    for _ in range(2):  # second start finds nothing new in the checkpoint
-        stream = run_bronze_stream(
-            read_raw_stream(spark, raw_zone).drop("ingest_date"))
-        q = start_bronze_sink(stream, out, ckpt)
-        q.awaitTermination()
-    got = spark.read.parquet(out)
-    assert got.select("txn_id").distinct().count() == got.count()
 
 
 def test_bronze_upsert_sink_replay_is_idempotent(spark, tmp_path, raw_zone):
@@ -138,8 +100,6 @@ def test_bronze_upsert_sink_replay_is_idempotent(spark, tmp_path, raw_zone):
     re-ingest with a fresh checkpoint replays every micro-batch against
     the already-populated zone — content must be byte-for-byte the same
     rows (a blind append sink would double every row)."""
-    from aws_payment_data_lake_spark.streaming import start_bronze_upsert_sink
-
     out = str(tmp_path / "bronze_merge")
 
     def ingest(ckpt: str) -> None:
@@ -161,84 +121,6 @@ def test_bronze_upsert_sink_replay_is_idempotent(spark, tmp_path, raw_zone):
     assert second == first
     assert parts2 == parts1
     assert zone2.select("txn_id").distinct().count() == zone2.count()
-
-
-def test_stream_stream_join_matches_batch(spark):
-    """Watermarked stream-stream join (view->purchase attribution,
-    1-hour window) == the identical batch join over the same file.
-    Append mode: stream-stream inner joins emit rows as both watermarks
-    pass them; AvailableNow over a finite file emits every match."""
-    from aws_payment_data_lake_spark.streaming import (
-        view_purchase_attribution_batch,
-        view_purchase_attribution_stream,
-    )
-
-    stream = view_purchase_attribution_stream(
-        read_event_stream(spark, EVENTS))
-    got = run_available_now(stream, "t_ss_join", output_mode="append")
-    batch = view_purchase_attribution_batch(
-        read_table(spark, SF_DIR, "events"))
-    assert got.count() > 0  # the join is non-vacuous on this data
-    _same_rows(got, batch)
-
-
-def test_rate_source_stream_matches_batch(spark):
-    """The broker stand-in (rate-micro-batch source): one drained
-    micro-batch through the windowed aggregation == the spark.range
-    batch twin computing the identical synthetic events. Proves the
-    transform/window/sink surface is source-agnostic (swap in a Kafka
-    reader and nothing downstream changes)."""
-    from aws_payment_data_lake_spark.streaming.rate_source import (
-        rate_window_totals,
-        rate_window_totals_batch,
-        read_rate_events,
-        synthetic_events,
-    )
-
-    stream = rate_window_totals(
-        synthetic_events(read_rate_events(spark, rows_per_batch=10_000)))
-    got = run_available_now(stream, "t_rate_totals", output_mode="complete")
-    want = rate_window_totals_batch(spark, n_rows=10_000)
-    _same_rows(got, want)
-    # sanity: the synthetic hour spans 12 five-minute windows x 3 types
-    assert got.count() == 36
-
-
-def test_tws_twin_gate_or_parity(spark, tmp_path):
-    """transformWithStateInPandas twin: when protobuf is missing (this
-    container) the gate raises immediately, naming the dep and the
-    working alternative; when present, the twin must agree with the
-    applyInPandasWithState path."""
-    import importlib.util
-
-    from aws_payment_data_lake_spark.streaming.stateful import (
-        user_running_totals_tws,
-    )
-
-    have_pb = (importlib.util.find_spec("google") is not None
-               and importlib.util.find_spec("google.protobuf") is not None)
-    if not have_pb:
-        with pytest.raises(ImportError, match="protobuf"):
-            user_running_totals_tws(read_event_stream(spark, EVENTS))
-    else:  # pragma: no cover - container ships without protobuf
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                              None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-        try:
-            tws = run_available_now(
-                user_running_totals_tws(read_event_stream(spark, EVENTS)),
-                "t_tws", output_mode="update")
-            base = run_available_now(
-                user_running_totals(read_event_stream(spark, EVENTS)),
-                "t_tws_base", output_mode="update")
-            _same_rows(tws, base)
-        finally:
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def test_state_shard_sizing_matches_local_listing(spark, tmp_path):
@@ -268,3 +150,22 @@ def test_state_shard_sizing_matches_local_listing(spark, tmp_path):
         assert _input_bytes(spark, "file://" + path) == want
         assert (max(1, _input_bytes(spark, path) // (64 * 1024 * 1024))
                 == max(1, want // (64 * 1024 * 1024)))
+
+
+def test_uri_directory_zone_streams_with_max_files_per_trigger(
+        spark, tmp_path):
+    """A ``file:`` URI to a directory zone is a directory, decided
+    through the path's Hadoop FileSystem: with max_files_per_trigger=1
+    the stream reads one part file per micro-batch and drains every row
+    under availableNow."""
+    zone = str(tmp_path / "zone")
+    spark.range(300).repartition(3).write.parquet(zone)
+    n_files = len([f for f in os.listdir(zone) if f.endswith(".parquet")])
+    assert n_files == 3
+
+    stream = read_parquet_stream(spark, "file://" + zone,
+                                 max_files_per_trigger=1)
+    q, got = _drain(stream, "t_uri_zone")
+    assert sorted(r["id"] for r in got.collect()) == list(range(300))
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == n_files

@@ -1,18 +1,15 @@
 """End-to-end training-data pipeline: curation -> LM-perplexity gate ->
 semantic dedup -> decontamination -> mixture resampling -> shard
-packing -> one-file-per-shard write.
+packing.
 
 The operators are each oracle-/parity-checked on their own; this test
 proves they COMPOSE — the handoffs (keep sets, score thresholds, the
 vec_id==doc_id embedding linkage of the synthetic corpus, benchmark
-splits, per-copy rows, shard layout) line up without glue code — and
-that the whole chain is deterministic end-to-end (two runs produce
-identical shard content)."""
+splits, per-copy rows, shard assignment) line up without glue code —
+and that the whole chain is deterministic end-to-end (two runs produce
+identical shard assignments)."""
 
 from __future__ import annotations
-
-import glob
-import os
 
 import pyspark.sql.functions as F
 
@@ -25,7 +22,7 @@ from aws_payment_data_lake_spark.operators.lm_quality import lm_perplexity
 from aws_payment_data_lake_spark.operators.mixture import mixture_resample
 from aws_payment_data_lake_spark.operators.similarity import semantic_dedup
 from aws_payment_data_lake_spark.operators.packing import (
-    write_training_shards,
+    pack_training_shards,
 )
 from aws_payment_data_lake_spark.queries.curation import (
     corpus_curation_decisions,
@@ -33,7 +30,7 @@ from aws_payment_data_lake_spark.queries.curation import (
 from aws_payment_data_lake_spark.sources import load
 
 
-def _run_chain(spark, out_dir: str):
+def _run_chain(spark):
     (docs,) = load(spark, SF_DIR, "documents")
 
     # 1. curation: language + quality + near-dup gates
@@ -70,15 +67,14 @@ def _run_chain(spark, out_dir: str):
                               F.col("doc_id") * 100 + F.col("copy_idx"))
                   .select("row_id", "text"))
 
-    # 4+5. pack and write one file per shard
-    packed = write_training_shards(
-        train_rows, out_dir, token_budget=512, id_col="row_id")
+    # 4. pack into token-budgeted shards
+    packed = pack_training_shards(
+        train_rows, token_budget=512, id_col="row_id")
     return docs, kept, clean, mixed, packed
 
 
-def test_chain_composes_and_is_deterministic(spark, tmp_path):
-    out1, out2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    docs, kept, clean, mixed, packed = _run_chain(spark, out1)
+def test_chain_composes_and_is_deterministic(spark):
+    docs, kept, clean, mixed, packed = _run_chain(spark)
 
     n_docs, n_kept, n_clean = docs.count(), kept.count(), clean.count()
     assert 0 < n_kept <= n_docs
@@ -89,15 +85,7 @@ def test_chain_composes_and_is_deterministic(spark, tmp_path):
     assert packed.count() == mixed.join(
         clean.select("doc_id"), "doc_id").count()
 
-    # shard layout on disk: one file per shard, all rows present
-    shard_dirs = [d for d in os.listdir(out1) if d.startswith("shard_id=")]
-    assert shard_dirs
-    for d in shard_dirs:
-        assert len(glob.glob(os.path.join(out1, d, "*.parquet"))) == 1
-    assert spark.read.parquet(out1).count() == packed.count()
-
-    # determinism: the full chain rerun writes identical shard content
-    _run_chain(spark, out2)
-    a = sorted(map(tuple, spark.read.parquet(out1).collect()))
-    b = sorted(map(tuple, spark.read.parquet(out2).collect()))
+    # determinism: the full chain rerun packs identical shards
+    a = sorted(map(tuple, packed.collect()))
+    b = sorted(map(tuple, _run_chain(spark)[4].collect()))
     assert a == b

@@ -6,10 +6,7 @@ from __future__ import annotations
 
 from tests.conftest import SF_DIR
 
-from aws_payment_data_lake_spark.operators.wordlist import (
-    wordlist_filter,
-    wordlist_flags,
-)
+from aws_payment_data_lake_spark.operators.wordlist import wordlist_flags
 from aws_payment_data_lake_spark.sources import load
 
 
@@ -24,14 +21,6 @@ def test_flag_semantics(spark):
            for r in wordlist_flags(docs).collect()}
     assert got == {1: (1, True), 2: (0, False), 3: (2, True),
                    4: (0, False), 5: (2, True)}
-
-
-def test_filter_drops_any_hit(spark):
-    rows = [(1, "slow"), (2, "fine"), (3, "has slow join inside")]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    kept = wordlist_filter(docs)
-    assert [r["doc_id"] for r in kept.collect()] == [2]
-    assert kept.columns == docs.columns          # flags not kept
 
 
 def test_corpus_parity_with_duckdb(spark, duck):

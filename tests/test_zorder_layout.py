@@ -1,21 +1,15 @@
-"""Z-order layout: key parity with a Python bit-interleave reference,
-row-preservation, and the actual payoff — measured parquet-footer file
-skipping on a 2-D rectangle query vs a single-column sort."""
+"""Z-order key (operators/layout.zorder_key): parity with a Python
+bit-interleave reference, parameter checks, and the skew payoff of
+quantile buckets, measured as txlog file skipping after OPTIMIZE
+ZORDER (multi-column pruning itself: tests/test_txlog.py)."""
 
 from __future__ import annotations
 
-import glob
-import os
-
-import pyarrow.parquet as pq
 import pytest
 
 from tests.conftest import SF_DIR
 
-from aws_payment_data_lake_spark.operators.layout import (
-    write_zordered,
-    zorder_key,
-)
+from aws_payment_data_lake_spark.operators.layout import zorder_key
 from aws_payment_data_lake_spark.sources import load
 
 BITS = 4
@@ -48,83 +42,17 @@ def test_constant_and_single_column(spark):
         assert r["z_value"] == _py_z([0, rank], BITS), (tuple(r), rank)
 
 
-def _files_touched(path: str, predicates: dict[str, tuple[float, float]]):
-    """Count files a min/max-pruning reader must touch for a rectangle
-    query, straight from the parquet footers."""
-    touched, total = 0, 0
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        md = pq.ParquetFile(f).metadata
-        names = {md.schema.column(i).name: i
-                 for i in range(len(md.schema))}
-        overlaps = True
-        for col, (lo, hi) in predicates.items():
-            cmins, cmaxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(names[col]).statistics
-                cmins.append(st.min)
-                cmaxs.append(st.max)
-            if min(cmins) > hi or max(cmaxs) < lo:
-                overlaps = False
-                break
-        total += 1
-        touched += overlaps
-    return touched, total
-
-
-def test_zorder_prunes_multi_dim_workload(spark, tmp_path):
-    """The z-order trade, measured from real parquet footers: a
-    user_id-sorted layout prunes user predicates (near-)optimally and
-    NOTHING else; z-order prunes on every participating dimension, so
-    it wins on value predicates outright and on the mixed workload in
-    total. (It need not win the user-only predicate — single-column
-    sort is by construction optimal there; that asymmetry IS the point
-    of the test.)"""
-    (events,) = load(spark, SF_DIR, "events")
-    ev = events.select("event_id", "user_id", "value")
-
-    flat = str(tmp_path / "by_user")
-    (ev.repartitionByRange(16, "user_id").sortWithinPartitions("user_id")
-       .write.mode("overwrite").parquet(flat))
-    zord = str(tmp_path / "zorder")
-    write_zordered(ev, zord, ["user_id", "value"], bits=8, n_files=16)
-
-    # rows identical across layouts
-    a = spark.read.parquet(flat)
-    b = spark.read.parquet(zord)
-    assert a.count() == b.count() == ev.count()
-    assert a.exceptAll(b).count() == 0
-
-    (qu,), (qv25,) = ev.approxQuantile(["user_id", "value"], [0.25], 0.001)
-    (qv80,) = ev.approxQuantile("value", [0.8], 0.001)
-    workload = [
-        {"user_id": (0, qu)},                      # user stripe
-        {"value": (0, qv25)},                      # low-value scan
-        {"value": (qv80, float("inf"))},           # high-value scan
-        {"user_id": (0, qu), "value": (0, qv25)},  # 2-D rectangle
-    ]
-    frac_flat, frac_z = [], []
-    for preds in workload:
-        t, n = _files_touched(flat, preds)
-        frac_flat.append(t / n)
-        t, n = _files_touched(zord, preds)
-        frac_z.append(t / n)
-
-    # value-only predicates: the user-sorted layout reads EVERYTHING
-    # (each file spans the full value range); z-order must prune both
-    assert frac_flat[1] == frac_flat[2] == 1.0, frac_flat
-    assert frac_z[1] < 1.0 and frac_z[2] < 1.0, frac_z
-    # and across the whole workload z-order touches less data
-    assert sum(frac_z) < sum(frac_flat), (frac_z, frac_flat)
-
-
 def test_quantile_buckets_prune_skewed_column(spark, tmp_path):
-    """VERDICT r5 #5, measured: on a zipf-shaped column (dense mass at
-    the low end, max ~2^20) LINEAR buckets put ~every row in bucket 0 —
-    the a-dimension contributes nothing to the interleave, every file's
+    """VERDICT r5 #5, measured through the txlog's OPTIMIZE ZORDER (the
+    caller of zorder_key): on a zipf-shaped column (dense mass at the
+    low end, max ~2^20) LINEAR buckets put ~every row in bucket 0 — the
+    a-dimension contributes nothing to the interleave, every file's
     [min, max] spans the dense region, and a rectangle query on it
     touches all files. QUANTILE buckets split the mass equi-depth, so
     the same query prunes. Results stay bit-identical."""
     import pyspark.sql.functions as F
+
+    from aws_payment_data_lake_spark.sources.txlog import TxnTable
 
     n = 40_000
     base = spark.range(n).select(
@@ -135,24 +63,24 @@ def test_quantile_buckets_prune_skewed_column(spark, tmp_path):
         .cast("long").alias("a"),
         (F.col("id") % 997).cast("long").alias("b"))
 
-    lin, qtl = str(tmp_path / "lin"), str(tmp_path / "qtl")
-    write_zordered(base, lin, ["a", "b"], bits=8, n_files=64)
-    write_zordered(base, qtl, ["a", "b"], bits=8, n_files=64,
-                   quantile=True)
-
-    preds = {"a": (10, 13)}  # rectangle inside the dense region
-    t_lin, n_lin = _files_touched(lin, preds)
-    t_qtl, n_qtl = _files_touched(qtl, preds)
+    tables = {}
+    for quantile in (False, True):
+        t = TxnTable(spark, str(tmp_path / f"q{int(quantile)}"))
+        t.create(base)
+        t.optimize(zorder_by=["a", "b"], n_files=64, quantile=quantile)
+        tables[quantile] = t
+    t_lin, n_lin = tables[False].scan_file_count("a", 10, 13)
+    t_qtl, n_qtl = tables[True].scan_file_count("a", 10, 13)
     assert t_lin >= n_lin - 2            # linear layout barely prunes
     assert t_qtl <= n_qtl // 2, (t_qtl, n_qtl)  # measured 22/64
 
     # same rows either way, and the pruned read is exact
-    a = spark.read.parquet(lin)
-    b = spark.read.parquet(qtl)
+    a, b = tables[False].snapshot(), tables[True].snapshot()
     assert a.count() == b.count() == n
     assert a.exceptAll(b).count() == 0
     want = base.where(F.col("a").between(10, 13)).count()
-    assert b.where(F.col("a").between(10, 13)).count() == want
+    assert (tables[True].scan("a", 10, 13)
+            .where(F.col("a").between(10, 13)).count()) == want
 
 
 def test_bad_params_raise(spark):
@@ -167,34 +95,3 @@ def test_non_numeric_columns_rejected(spark):
     df = spark.createDataFrame([(1, "a")], "x long, s string")
     with pytest.raises(ValueError, match="numeric"):
         zorder_key(df, ["x", "s"])
-
-
-def test_bloom_filter_write(spark, tmp_path):
-    """Bloom filters actually land in the files and rows survive the
-    write bit-for-bit. This environment's pyarrow (16.x) does not
-    expose bloom_filter_offset in the column metadata, so presence is
-    asserted by the measured footprint: an ndv=10k bloom is ~12 KiB per
-    row group, several times this tiny table's data pages — a with-bloom
-    file is unmistakably larger than its bloom-free twin."""
-    (events,) = load(spark, SF_DIR, "events")
-    ev = events.select("event_id", "user_id", "value")
-    from aws_payment_data_lake_spark.operators.layout import (
-        write_with_bloom,
-    )
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloomed")
-    ev.repartition(4).write.parquet(plain)
-    write_with_bloom(ev, bloomed, ["event_id"], ndv=10_000, n_files=4)
-
-    back = spark.read.parquet(bloomed)
-    assert back.count() == ev.count()
-    assert back.exceptAll(ev).count() == 0
-
-    def total(d):
-        return sum(os.path.getsize(f)
-                   for f in glob.glob(os.path.join(d, "*.parquet")))
-
-    n_files = len(glob.glob(os.path.join(bloomed, "*.parquet")))
-    assert n_files == 4
-    # each of the 4 files carries one ~12 KiB bloom for event_id
-    assert total(bloomed) > total(plain) + n_files * 8_000, (
-        total(plain), total(bloomed))
