@@ -144,9 +144,9 @@ def txlog_sink_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol with the batch id as the txn marker — then the summary
     reads back through the stats-pruned snapshot. Not driver-
     registered (streaming sink); exactly-once/replay/constraint
-    semantics live in tests/test_txlog_sink.py and the medallion
-    txn_stream hash row."""
-    from aws_payment_data_lake_spark.sources.txlog_sink import (
+    semantics live in tests/test_txlog_sink.py (the stream writer of
+    sources/txlog_batch.py) and the medallion txn_stream hash row."""
+    from aws_payment_data_lake_spark.sources.txlog_batch import (
         write_stream_txlog,
     )
 

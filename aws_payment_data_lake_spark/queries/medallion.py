@@ -201,7 +201,7 @@ def medallion_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
       variant='txn_stream' the NATIVE `writeStream.format("txlog")`
                            sink (round 10, VERDICT r9 #2): the
                            % 30 == 4 slice streams in multi-batch
-                           through sources/txlog_sink.py — each
+                           through sources/txlog_batch.py — each
                            micro-batch id riding the commit as the
                            (app, batch) txn marker — then the
                            table-committed-but-checkpoint-uncommitted
@@ -458,7 +458,7 @@ def medallion_dedup_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the replayed batch MUST be skipped by the sink (asserted:
         # row count and table version unchanged), and the final
         # snapshot rides the driver hash.
-        from aws_payment_data_lake_spark.sources.txlog_sink import (
+        from aws_payment_data_lake_spark.sources.txlog_batch import (
             write_stream_txlog,
         )
 

@@ -260,7 +260,7 @@ def produce_distributed(df, queue_dir: str, topic: str,
     slice. ``df`` columns: ``key`` (string, required non-null — CDC
     records are keyed by contract), ``value`` (string).
 
-    Shape = the audit sink's 2PC:
+    Shape = a two-phase commit, like the txlog writers':
 
       * the driver reads each queue partition's next offset ONCE
         (single-producer-per-topic contract, same as ``produce``);

@@ -24,8 +24,7 @@ Commit protocol (the ACID core):
   1. Stage: the writer lands its parquet files under a fresh
      ``data/<uuid>/`` directory. Staged files are INVISIBLE — readers
      only ever open files the log references, so a crashed write
-     leaves garbage, never a torn table (same posture as the audit
-     sink's manifest, ``sources/audit_sink.py``).
+     leaves garbage, never a torn table.
   2. Publish: the full commit JSON is written to a temp name, fsynced,
      then ``os.link``ed to ``_txlog/<version>.json``. Hard-link
      creation is atomic and fails with EEXIST if the version is taken,
@@ -62,7 +61,8 @@ app, batch <= the last recorded) is detected during log replay and
 skipped instead of double-appended — the storage-layer fix for the
 reference's blind retry-duplicating append
 (src/glue_jobs/etl_transactions_bronze.py:130), and the same
-idempotence contract the audit sink uses (``sources/audit_sink.py``).
+idempotence contract the ``writeStream.format("txlog")`` sink keys on
+its micro-batch ids (``sources/txlog_batch.py``).
 
 Hidden partitioning / pruning: ``partition_by`` columns stay INSIDE
 the parquet files (no Hive ``col=`` directories); the staging write
@@ -2863,8 +2863,7 @@ class TxnTable:
         """Change feed: rows ADDED by commits > since_version (and
         <= end_version when given — Delta's bounded
         ``table_changes(t, start, end)`` form), tagged with
-        _commit_version — the table-format twin of the audit sink's
-        fromBatch reader. Layout-only commits (compact, optimize,
+        _commit_version. Layout-only commits (compact, optimize,
         reorg) are skipped.
 
         ``include_deletes=True`` adds a ``_change_type`` column
@@ -4196,9 +4195,10 @@ def txn_foreach_batch(table: TxnTable, app: str):
     """``foreachBatch`` sink writing a stream into a TxnTable with
     exactly-once content: the micro-batch id is the txn batch number,
     so Structured Streaming's at-least-once replay after a failure is
-    DETECTED during log replay and skipped — the table-format version
-    of the batch-id-keyed audit sink, ``sources/audit_sink.py`` ("skip,
-    don't rewrite").
+    DETECTED during log replay and skipped ("skip, don't rewrite") —
+    the same marker the native ``writeStream.format("txlog")`` sink
+    commits, composed by hand for sinks that need ``append()``'s
+    driver-side allocation (identity columns).
 
     Usage::
 

@@ -1,9 +1,12 @@
-"""The ACID table as a SOURCE: `format("txlog_feed")` reads a
-sources/txlog.py table either as a batch snapshot or as a structured
-stream of its commit log — the Delta "table streaming / change data
-feed" capability (Armbrust et al., VLDB 2020 §4.3) on the engine's own
-format, built on the Spark 4 Python Data Source API like the synthetic
-payments source (pydatasource.py) and the audit sink (audit_sink.py).
+"""The ACID table as a STREAM SOURCE: `format("txlog_feed")` reads a
+sources/txlog.py table as a structured stream of its commit log — the
+Delta "table streaming / change data feed" capability (Armbrust et
+al., VLDB 2020 §4.3) on the engine's own format, built on the Spark 4
+Python Data Source API like the synthetic payments source
+(pydatasource.py). Batch reads of the table are `format("txlog")`
+(txlog_batch.py), the one reader that applies deletion vectors, time
+travel and file skipping; a batch read of `txlog_feed` is refused with
+a pointer there.
 
 Stream semantics:
   * Offsets are LOG VERSIONS — `{"version": N}` means "commits < N
@@ -46,7 +49,6 @@ from collections.abc import Iterator
 from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -87,7 +89,8 @@ def reconcile_arrow(table, schema_json: str | None, mapping: dict):
     physical columns drop, and safely-widened types (int32 under a
     bigint schema) Arrow-cast up — the same upcasts the pinned-schema
     batch scan performs. An impossible cast fails loudly. Shared by
-    the stream feed and the batch `format("txlog")` reader."""
+    the stream feed, the batch `format("txlog")` reader and the
+    stream writer's derived-column typing."""
     import json as _json
 
     import pyarrow as pa
@@ -115,6 +118,23 @@ def reconcile_arrow(table, schema_json: str | None, mapping: dict):
     return pa.table(cols, names=names)
 
 
+def dead_positions(sidecars: list[str], key: str):
+    """Sorted int64 Arrow array of the row positions the deletion-vector
+    ``sidecars`` mark dead in the file logged as ``key``. Shared by the
+    snapshot reader (drops them) and the feed's delete pre-images
+    (keeps only them)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    dead = set()
+    for f in sidecars:
+        dv = pq.read_table(f, columns=["target", "pos"])
+        m = pc.equal(dv.column("target"), pa.scalar(key))
+        dead.update(dv.filter(m).column("pos").to_pylist())
+    return pa.array(sorted(dead), type=pa.int64())
+
+
 def _read_file_batches(part: _FilePart) -> Iterator:
     """One staged parquet file -> Arrow batches reconciled to the
     feed's declared schema + the constant _commit_version column
@@ -137,14 +157,9 @@ def _read_file_batches(part: _FilePart) -> Iterator:
             raw, types = raw.filter(keep), None
     elif part.kind == "dv_dead":
         # delete pre-images: the sidecars' dead positions of THIS file
-        dead = set()
-        for f in part.dv_paths:
-            dv = pq.read_table(f, columns=["target", "pos"])
-            m = pc.equal(dv.column("target"), pa.scalar(part.dv_key))
-            dead.update(dv.filter(m).column("pos").to_pylist())
         idx = pa.array(range(raw.num_rows), type=pa.int64())
-        raw = raw.filter(pc.is_in(idx, value_set=pa.array(
-            sorted(dead), type=pa.int64())))
+        raw = raw.filter(pc.is_in(idx, value_set=dead_positions(
+            part.dv_paths, part.dv_key)))
         types = pa.array(["delete"] * raw.num_rows)
     table = reconcile_arrow(raw, part.schema_json, part.mapping)
     if part.cdf:
@@ -163,8 +178,8 @@ def _read_file_batches(part: _FilePart) -> Iterator:
 
 
 class _Log:
-    """Driver-side log inspector shared by the batch and stream
-    readers (TxnTable's filesystem half; no SparkSession needed)."""
+    """Driver-side log inspector of the stream reader (TxnTable's
+    filesystem half; no SparkSession needed)."""
 
     def __init__(self, options: dict) -> None:
         path = options.get("path")
@@ -196,17 +211,6 @@ class _Log:
                     dv_key=ff.path if ff.kind == "dv_dead" else ""))
         return parts
 
-    def live_parts(self) -> list[_FilePart]:
-        snap = self.table._replay()
-        added_at: dict[str, int] = {}
-        for v, c in self.table._commits(self.table._versions_on_disk()):
-            for a in c.get("add", []):
-                added_at[a["path"]] = v
-        return [_FilePart(os.path.join(self.table.path, p),
-                          added_at.get(p, snap.version),
-                          snap.schema_json, dict(snap.column_mapping))
-                for p in sorted(snap.live)]
-
     def schema(self, cdf: bool = False) -> StructType:
         from pyspark.sql.types import StringType
         base = self.table._replay().schema or StructType([])
@@ -214,22 +218,6 @@ class _Log:
                  if cdf else [])
         return StructType(list(base.fields) + extra
                           + [StructField("_commit_version", LongType())])
-
-
-class _FeedBatchReader(DataSourceReader):
-    """Batch mode: the CURRENT snapshot, each row tagged with the
-    commit that added its file."""
-
-    def __init__(self, options: dict) -> None:
-        self.options = options
-
-    def partitions(self) -> list[InputPartition]:
-        return _Log(self.options).live_parts() or [_FilePart("", -1)]
-
-    def read(self, partition: _FilePart) -> Iterator:
-        if partition.version < 0:
-            return
-        yield from _read_file_batches(partition)
 
 
 class _FeedStreamReader(DataSourceStreamReader):
@@ -324,13 +312,12 @@ class _FeedStreamReader(DataSourceStreamReader):
 
 
 class TxlogFeedDataSource(DataSource):
-    """`format("txlog_feed")`, options: path (required),
-    startingVersion (stream), maxFilesPerTrigger (stream rate
-    limit), readChangeFeed (stream — Delta's
-    streaming CDF: rows carry _change_type; commits with write-side
-    cdc images stream them verbatim, DV deletes stream their
-    pre-images). Schema = table schema [+ _change_type]
-    + _commit_version."""
+    """`spark.readStream.format("txlog_feed")`, options: path
+    (required), startingVersion, maxFilesPerTrigger (rate limit),
+    readChangeFeed (Delta's streaming CDF: rows carry _change_type;
+    commits with write-side cdc images stream them verbatim, DV
+    deletes stream their pre-images). Schema = table schema
+    [+ _change_type] + _commit_version."""
 
     @classmethod
     def name(cls) -> str:
@@ -341,19 +328,21 @@ class TxlogFeedDataSource(DataSource):
             cdf=str(self.options.get("readChangeFeed", "false")
                     ).lower() == "true")
 
-    def reader(self, schema) -> DataSourceReader:
+    def reader(self, schema):
+        # batch reads have ONE home, format("txlog"), which applies
+        # deletion vectors; a second batch reader here would not
         if str(self.options.get("readChangeFeed", "false")
                ).lower() == "true":
-            # schema() adds _change_type for this option, but the
-            # batch reader emits the current SNAPSHOT (no change
-            # events to type) — refuse loudly instead of failing the
-            # scan with a schema/batch mismatch (ADVICE r11 #2)
             raise ValueError(
                 "readChangeFeed is a STREAMING option on txlog_feed "
                 "(spark.readStream); for batch change queries use "
                 "table_changes('t', start[, end]) through "
                 "LakehouseCatalog.sql or TxnTable.changes()")
-        return _FeedBatchReader(self.options)
+        raise ValueError(
+            "txlog_feed is a STREAMING source (spark.readStream); read "
+            "the table in batch with spark.read.format('txlog') "
+            "(txlog_batch.read_txlog), or its changes with "
+            "TxnTable.changes()")
 
     def streamReader(self, schema) -> DataSourceStreamReader:
         return _FeedStreamReader(self.options)
@@ -362,12 +351,6 @@ class TxlogFeedDataSource(DataSource):
 def register_txlog_feed(spark: SparkSession) -> None:
     """Idempotent per-session registration."""
     spark.dataSource.register(TxlogFeedDataSource)
-
-
-def read_table_feed(spark: SparkSession, path: str):
-    """Batch: current snapshot with _commit_version per row."""
-    register_txlog_feed(spark)
-    return spark.read.format(SOURCE_NAME).option("path", path).load()
 
 
 def stream_table_feed(spark: SparkSession, path: str,

@@ -209,16 +209,12 @@ class LakehouseCatalog:
         self._seen_version = -2           # forces the first refresh
         self._refresh()
         # one catalog construction makes the whole surface available:
-        # spark.read/write.format("txlog") works without a separate
-        # registration call (idempotent; headless sessions included)
-        try:
-            from aws_payment_data_lake_spark.sources.txlog_batch import (
-                register_txlog_source,
-            )
-            register_txlog_source(spark)
-        except Exception:
-            pass              # a read-only/py-limited session still
-            #                   gets the sql() surface
+        # spark.read/write/writeStream.format("txlog") works without a
+        # separate registration call (idempotent)
+        from aws_payment_data_lake_spark.sources.txlog_batch import (
+            register_txlog_source,
+        )
+        register_txlog_source(spark)
 
     # ------------------------------------------------------------ registry
     @property

@@ -115,7 +115,7 @@ def test_copy_into_fills_only_source_absent_columns(spark, tmp_path):
 
 
 def test_native_sink_fills_defaults(spark, tmp_path):
-    from aws_payment_data_lake_spark.sources.txlog_sink import (
+    from aws_payment_data_lake_spark.sources.txlog_batch import (
         write_stream_txlog,
     )
 

@@ -111,7 +111,7 @@ def test_python_api_and_streaming_sink_derive(spark, tmp_path):
     import json
     import os
 
-    from aws_payment_data_lake_spark.sources.txlog_sink import (
+    from aws_payment_data_lake_spark.sources.txlog_batch import (
         write_stream_txlog,
     )
 

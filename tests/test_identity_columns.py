@@ -160,7 +160,7 @@ def test_streaming_into_identity_table(spark, tmp_path):
     from aws_payment_data_lake_spark.sources.txlog import (
         txn_foreach_batch,
     )
-    from aws_payment_data_lake_spark.sources.txlog_sink import (
+    from aws_payment_data_lake_spark.sources.txlog_batch import (
         write_stream_txlog,
     )
 
@@ -192,7 +192,7 @@ def test_native_sink_derives_generated_columns(spark, tmp_path):
     medallion's derived partition date can live inside the format
     even under streaming ingest."""
     from aws_payment_data_lake_spark.sources.txlog import TxnTable
-    from aws_payment_data_lake_spark.sources.txlog_sink import (
+    from aws_payment_data_lake_spark.sources.txlog_batch import (
         write_stream_txlog,
     )
 

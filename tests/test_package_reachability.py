@@ -19,10 +19,6 @@ from tests.source_refs import PKG, package_modules, refs
 
 REPO = PKG.parent
 
-_AUDIT_SINK = ("the payments_audit data source; tests/test_audit_sink.py "
-               "pins its commit protocol (manifest swap, abort, "
-               "exactly-once stream batches)")
-
 KEEP = {
     "oracle.compare_spark_duck":
         "the DuckDB comparator the oracle-parity tests call",
@@ -34,21 +30,9 @@ KEEP = {
         "AUC metric the quality-model tests assert on",
     "operators.quality_model.linear_parity_frame":
         "reference the quality-model test compares scoring against",
-    "sources.audit_sink.PaymentsAuditDataSource": _AUDIT_SINK,
-    "sources.audit_sink._AuditCommit": _AUDIT_SINK,
-    "sources.audit_sink._AuditReadPartition": _AUDIT_SINK,
-    "sources.audit_sink._AuditReader": _AUDIT_SINK,
-    "sources.audit_sink._AuditStreamWriter": _AUDIT_SINK,
-    "sources.audit_sink._AuditWriter": _AUDIT_SINK,
-    "sources.audit_sink._row_digest": _AUDIT_SINK,
-    "sources.audit_sink.read_manifest": _AUDIT_SINK,
-    "sources.audit_sink.register_audit_sink": _AUDIT_SINK,
     "sources.txlog.txn_foreach_batch":
         "the txlog's exactly-once foreachBatch sink; tests pin its "
         "replay skip",
-    "sources.txlog_stream.read_table_feed":
-        "txlog_feed batch read; tests/test_txlog_read_path.py pins its "
-        "parity with changes()",
     "sources.txlog_stream.stream_table_feed":
         "txlog_feed stream read; tests/test_txlog_read_path.py pins its "
         "parity with changes()",

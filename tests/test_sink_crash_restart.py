@@ -59,10 +59,10 @@ with open(os.path.join(src, "f0.jsonl"), "w") as f:
 
 from pyspark.sql.datasource import DataSource
 from aws_payment_data_lake_spark.session import get_spark
-from aws_payment_data_lake_spark.sources.txlog_sink import (
-    _TxlogStreamWriter)
+from aws_payment_data_lake_spark.sources.txlog_batch import (
+    _StreamWriter)
 
-class CrashyWriter(_TxlogStreamWriter):
+class CrashyWriter(_StreamWriter):
     def __init__(self, options, schema):
         self._point = options["crashpoint"]
         self._sentinel = options["sentinel"]
@@ -108,7 +108,7 @@ sys.path.insert(0, sys.argv[1])
 tpath, src, ckpt = sys.argv[2:5]
 from aws_payment_data_lake_spark.session import get_spark
 from aws_payment_data_lake_spark.sources.txlog import TxnTable
-from aws_payment_data_lake_spark.sources.txlog_sink import (
+from aws_payment_data_lake_spark.sources.txlog_batch import (
     write_stream_txlog)
 
 spark = get_spark(app_name="restart-run", master="local[4]",

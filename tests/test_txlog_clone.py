@@ -205,17 +205,17 @@ def test_sql_shallow_clone_ddl(spark, tmp_path):
 
 
 def test_feed_reads_clone_external_files(spark, tmp_path):
-    """txlog_feed (table-as-a-stream/batch) resolves absolute add
-    paths: a clone's v0 streams exactly the forked content."""
+    """The plain-Spark batch read (``format("txlog")``) resolves
+    absolute add paths: a clone's v0 reads exactly the forked
+    content."""
     src = _src(spark, tmp_path, n=6)
     c = _mk(spark, tmp_path, "clone").clone_shallow(src)
-    from aws_payment_data_lake_spark.sources.txlog_stream import (
-        read_table_feed,
+    from aws_payment_data_lake_spark.sources.txlog_batch import (
+        read_txlog,
     )
-    got = read_table_feed(spark, c.path)
+    got = read_txlog(spark, c.path)
     assert sorted((r.id, r.v) for r in got.collect()) == [
         (i, 2 * i) for i in range(6)]
-    assert {r._commit_version for r in got.collect()} == {0}
 
 
 def test_independent_reader_replays_clone(spark, tmp_path):

@@ -1,13 +1,14 @@
-"""txlog_feed Python Data Source: the ACID table as a batch snapshot
-and as a structured stream of its commit log."""
+"""txlog_feed Python Data Source: the ACID table as a structured
+stream of its commit log (batch reads are ``format("txlog")``)."""
 
 from __future__ import annotations
 
 import pytest
 
 from aws_payment_data_lake_spark.sources.txlog import TxnTable
+from aws_payment_data_lake_spark.sources.txlog_batch import read_txlog
 from aws_payment_data_lake_spark.sources.txlog_stream import (
-    read_table_feed,
+    register_txlog_feed,
     stream_table_feed,
 )
 
@@ -25,13 +26,17 @@ def table(spark, tmp_path):
     return t
 
 
-def test_batch_feed_matches_snapshot(spark, table):
-    got = read_table_feed(spark, table.path)
-    assert set(got.columns) == {"id", "v", "_commit_version"}
-    assert _rows(got, "id", "v") == _rows(table.snapshot())
-    vers = {r["id"]: r["_commit_version"] for r in got.collect()}
-    assert all(vers[i] == 0 for i in range(3))
-    assert all(vers[i] == 1 for i in range(3, 7))
+def test_batch_feed_read_is_refused_with_pointer(spark, table):
+    """A batch read of txlog_feed would bypass the deletion vectors
+    format("txlog") applies; it is refused with a pointer there, and
+    the pointed-to read drops the DV-deleted rows."""
+    table.delete("id < 3", mode="dv")
+    register_txlog_feed(spark)
+    with pytest.raises(Exception, match=r"format\('txlog'\)"):
+        (spark.read.format("txlog_feed").option("path", table.path)
+         .load().collect())
+    assert _rows(read_txlog(spark, table.path), "id") == [
+        (i,) for i in range(3, 7)]
 
 
 def test_stream_feed_full_history(spark, table, tmp_path):
@@ -97,16 +102,17 @@ def test_feed_reconciles_evolution_mapping_and_widening(spark,
     history — pre-evolution files null-fill new columns, renamed
     columns alias physical->logical, and pre-widening int32 files
     upcast — in batch mode AND in a stream replaying from version 0
-    started AFTER the changes (the restart-heals contract)."""
+    started AFTER the changes (the restart-heals contract). The batch
+    half reads through ``format("txlog")``."""
     t = TxnTable(spark, str(tmp_path / "evo"))
     t.create(spark.createDataFrame([(1, 10)], "id int, v int"))
     t.merge(spark.createDataFrame([(2, 2 ** 40, "eu")],
                                   "id int, v bigint, region string"),
             on=["id"], schema_mode="merge")      # widen v + add region
     t.rename_column("region", "zone")           # mapping: zone->region
-    # batch feed under the head schema
-    got = read_table_feed(spark, t.path)
-    assert set(got.columns) == {"id", "v", "zone", "_commit_version"}
+    # batch read under the head schema
+    got = read_txlog(spark, t.path)
+    assert set(got.columns) == {"id", "v", "zone"}
     rows = {r["id"]: (r["v"], r["zone"]) for r in got.collect()}
     assert rows[1] == (10, None) and rows[2] == (2 ** 40, "eu")
     # stream from version 0 over the same history

@@ -14,7 +14,7 @@ from aws_payment_data_lake_spark.sources.txlog import (
     CheckViolationError,
     TxnTable,
 )
-from aws_payment_data_lake_spark.sources.txlog_sink import (
+from aws_payment_data_lake_spark.sources.txlog_batch import (
     write_stream_txlog,
 )
 
@@ -279,3 +279,52 @@ def test_default_app_id_is_checkpoint_scoped(spark, tmp_path):
     assert _state(t) == [(1, 1.0, "a"), (2, 2.0, "b")]
     txns = t._replay().txns
     assert len([a for a in txns if a.startswith("txlog-sink:")]) == 2
+
+
+def test_one_txlog_source_serves_batch_and_stream_in_either_order(
+        spark, tmp_path):
+    """``format("txlog")`` is ONE data source: registering it for the
+    stream sink keeps batch reads and writes working, and registering
+    it for batch (every LakehouseCatalog does) keeps a plain
+    ``writeStream.format("txlog")`` working — exactly once, with a
+    replayed batch skipped."""
+    from aws_payment_data_lake_spark.sources.txsql import LakehouseCatalog
+
+    tpath = str(tmp_path / "t")
+    t = TxnTable(spark, tpath)
+    t.create(spark.createDataFrame([], DDL))
+    src = str(tmp_path / "in")
+    _feed(src, [(1, 1.0, "a"), (2, 2.0, "b")])
+    # stream-side registration first, then batch read + batch append
+    _stream(spark, src, tpath, str(tmp_path / "ck1"))
+    got = spark.read.format("txlog").option("path", tpath).load()
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, 1.0, "a"), (2, 2.0, "b")]
+    (spark.createDataFrame([(3, 3.0, "c")], DDL).write.format("txlog")
+     .option("path", tpath).mode("append").save())
+    assert [r[0] for r in _state(t)] == [1, 2, 3]
+
+    # batch-side registration last, then a plain writeStream
+    LakehouseCatalog(spark)
+    src2, ckpt = str(tmp_path / "in2"), str(tmp_path / "ck2")
+    _feed(src2, [(4, 4.0, "d")])
+    _feed(src2, [(5, 5.0, "e")])
+
+    def plain_stream():
+        q = (spark.readStream.schema(DDL)
+             .option("maxFilesPerTrigger", "1").json(src2)
+             .writeStream.format("txlog").option("path", tpath)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+
+    plain_stream()
+    assert [r[0] for r in _state(t)] == [1, 2, 3, 4, 5]
+    version = t.latest_version()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for marker in (str(last), f".{last}.crc"):    # crash before ckpt
+        os.remove(os.path.join(commits, marker))
+    plain_stream()                                # replays batch `last`
+    assert [r[0] for r in _state(t)] == [1, 2, 3, 4, 5]
+    assert t.latest_version() == version
