@@ -92,6 +92,7 @@ from typing import Any
 from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from aws_payment_data_lake_spark.localframe import local_frame
@@ -2961,187 +2962,35 @@ class TxnTable:
               delete_when: Any = None,
               schema_mode: str = "strict",
               helper_cols: tuple[str, ...] = ()) -> dict[str, int]:
-        """Upsert (MERGE INTO): target rows matching ``source`` on the
-        key columns are replaced by the source row; unmatched source
-        rows are inserted. ``delete_when`` (Column or SQL string over
-        the SOURCE row) adds Delta's `WHEN MATCHED AND cond THEN
-        DELETE` clause: flagged source rows delete their match instead
-        of replacing it, and flagged rows with NO match insert nothing
-        — exactly the CDC-apply contract, with no driver-side key
-        lists (the flag rides the same broadcast key join). Replaying
-        the same merge is idempotent. Copy-on-write at FILE
-        granularity: only files containing a matching key are
-        rewritten; every other file's bytes stay untouched (asserted
-        in tests). Concurrency: a commit racing between our read and
-        publish is REBASED OVER when footer key stats prove it
-        commutes (it rewrote none of our input files and its added
-        files' key ranges are disjoint from the batch's); otherwise
-        ConcurrentWriteError (an overlapping append can carry matching
-        keys).
+        """Upsert (MERGE INTO) by key, spelled as Delta's CDC-apply
+        clause set and run by ``merge_clauses``::
 
-        ``schema_mode='merge'`` (Delta's autoMerge, VERDICT r9 #1):
-        NEW source columns auto-widen the table — the commit carries
-        the schema union and every pre-existing file reads NULL for
-        them through the pinned-schema read path; a source MISSING
-        table columns keeps the target's values on matched rows
-        (each matched target row is updated in place rather than
-        replaced wholesale — Delta's updateAll-under-autoMerge
-        posture) and inserts NULL for them on unmatched rows. In
-        'strict' (default) any schema difference fails exactly as
-        before. ``helper_cols`` names source columns that are
-        EXPRESSION INPUTS ONLY (the CDC ``_op`` delete flag): they
-        never land in the table and never participate in evolution —
-        without the escape, autoMerge would widen the table with the
-        flag column itself."""
-        snap = self._replay()
-        self._assert_mutable(snap, "MERGE")
-        self._assert_no_identity(snap, "MERGE")
-        if snap.generated:              # derive absent generated cols
-            source = self._derive_generated(source, snap.generated)
-        source = source.localCheckpoint(eager=True)  # pin: read twice
-        eff_src = source.drop(*helper_cols) if helper_cols else source
-        evolved = (self._check_schema(eff_src, snap, "merge")
-                   if schema_mode == "merge" and snap.schema is not None
-                   else None)
-        new_fields: list[Any] = []
-        if evolved:
-            have = {f.name for f in snap.schema.fields}
-            new_fields = [f for f in
-                          StructType.fromJson(json.loads(evolved)).fields
-                          if f.name not in have]
+            WHEN MATCHED AND C THEN DELETE
+            WHEN MATCHED THEN UPDATE SET *
+            WHEN NOT MATCHED AND NOT C THEN INSERT *
+
+        ``C`` is ``delete_when`` (Column or SQL string over the SOURCE
+        row, NULL = false): flagged source rows delete their match and
+        flagged rows with NO match insert nothing. Without it, matched
+        target rows are replaced by their source row and the rest
+        insert. The clause set reads no target column, so it runs the
+        replace plan (see ``merge_clauses``). ``helper_cols`` names
+        source columns that are EXPRESSION INPUTS ONLY (the CDC ``_op``
+        flag): both star clauses EXCEPT them, so they never land in the
+        table and never widen it under ``schema_mode='merge'``."""
+        star = {"cond": None, "set": None, "except": list(helper_cols)}
+        matched = [dict(star, action="update_star")]
+        insert = dict(star, action="insert_star")
         if delete_when is not None:
-            dcond = (F.expr(delete_when)
-                     if isinstance(delete_when, str) else delete_when)
-            dflag = F.coalesce(dcond, F.lit(False))
-            upserts = source.where(~dflag)
-        else:
-            upserts = source
-        keys = source.select(*on).distinct()   # deletes touch files too
-        # stats-pruned discovery: files whose footer [min,max] on the
-        # first key column can't overlap the batch's key range can't
-        # hold a match — prune them from the discovery SCAN using log
-        # metadata alone (the same _overlaps contract as scan()). On a
-        # key-clustered table a narrow batch scans a handful of files
-        # instead of the corpus; stats-less files are kept
-        # conservatively, multi-column keys prune on the first only.
-        # ONE pre-flight aggregate (r14, guide §1.2): the row count for
-        # the result dict and the key-range min/max were two separate
-        # jobs over the checkpointed source; fold them into one (the
-        # merge_clauses pre-flight got the same treatment in r13).
-        b = source.agg(F.count(F.lit(1)).alias("n"),
-                       F.min(on[0]).alias("lo"),
-                       F.max(on[0]).alias("hi")).first()
-        src_rows = int(b["n"])
-        lo, hi = _json_safe(b["lo"]), _json_safe(b["hi"])
-        # an empty/all-NULL source (lo None) keeps every file
-        cand = sorted(self._scoped(snap, (on[0], lo, hi)))
-        discovery = self._read_files_meta(snap, cand)
-        touched = {
-            r[0] for r in
-            (discovery.join(F.broadcast(keys), on=on, how="leftsemi")
-             .select("__rel").distinct().collect())
-        }
-        old_cols = ([f.name for f in snap.schema.fields]
-                    if snap.schema else source.columns)
-        old_types = ({f.name: f.dataType for f in snap.schema.fields}
-                     if snap.schema else {})
-        src_cols = set(source.columns) - set(helper_cols)
-        missing = ([c for c in old_cols if c not in src_cols]
-                   if schema_mode == "merge" else [])
-        if touched:
-            keep_frames = self._read_files(snap, sorted(touched))
-            for f in new_fields:
-                keep_frames = keep_frames.withColumn(
-                    f.name, F.lit(None).cast(f.dataType))
-            survivors = keep_frames.join(F.broadcast(keys), on=on,
-                                         how="left_anti")
-            up = upserts
-            if missing:
-                # keep-target for columns the source lacks: matched
-                # target rows supply them (one output row per matched
-                # target row); unmatched source rows insert NULL
-                matched_vals = (self._read_files(snap, sorted(touched))
-                                .join(F.broadcast(keys), on=on,
-                                      how="leftsemi")
-                                .select(*on, *missing))
-                up = up.join(matched_vals, on=on, how="left")
-            new_content = survivors.unionByName(
-                up.select(*keep_frames.columns))
-        else:
-            up = upserts
-            for c in missing:               # inserts only: NULL-fill
-                up = up.withColumn(c, F.lit(None).cast(old_types[c]))
-            cols = old_cols + [f.name for f in new_fields]
-            new_content = up.select(*cols)
-        self._enforce(new_content, snap.constraints)
-        adds = self._stage(new_content, snap.partition_by or None,
-                           mapping=snap.column_mapping)
-        commit = {"op": "merge", "ts": time.time(),
-                  "read_version": snap.version,
-                  "add": [a.to_json() for a in adds],
-                  "remove": sorted(touched)}
-        if evolved:
-            commit["schema_json"] = evolved
-        if self._cdf_on(snap):
-            # classify images off the SAME broadcast key joins the
-            # merge plan uses; an extra pass per class, paid only
-            # while the table opts into CDF
-            fsnap = (Snapshot(-1, evolved, {},
-                              column_mapping=dict(snap.column_mapping))
-                     if evolved else snap)
-            tgt_m = None
-            if touched:
-                tgt_m = (self._read_files(snap, sorted(touched))
-                         .join(F.broadcast(keys), on=on,
-                               how="leftsemi"))
-                for f in new_fields:
-                    tgt_m = tgt_m.withColumn(
-                        f.name, F.lit(None).cast(f.dataType))
-            images: list[tuple[DataFrame, str]] = []
-            upp = (up.select(*(old_cols
-                               + [f.name for f in new_fields]))
-                   if touched else new_content)
-            if tgt_m is not None:
-                if delete_when is not None:
-                    dkeys = source.where(dflag).select(*on).distinct()
-                    images.append((tgt_m.join(
-                        F.broadcast(dkeys), on=on, how="leftsemi"),
-                        "delete"))
-                    images.append((tgt_m.join(
-                        F.broadcast(dkeys), on=on, how="left_anti"),
-                        "update_preimage"))
-                else:
-                    images.append((tgt_m, "update_preimage"))
-                mkeys = tgt_m.select(*on).distinct()
-                images.append((upp.join(F.broadcast(mkeys), on=on,
-                                        how="leftsemi"),
-                               "update_postimage"))
-                images.append((upp.join(F.broadcast(mkeys), on=on,
-                                        how="left_anti"), "insert"))
-            else:
-                images.append((upp, "insert"))
-            cdc = self._stage_cdc(fsnap, images)
-            if cdc:
-                commit["cdc"] = {"files": cdc}
-        # Publish with KEY-DISJOINT rebase (Delta's conflict-detection
-        # posture): losing the version race no longer aborts
-        # unconditionally — the same per-file key bounds that prune
-        # MERGE discovery can PROVE an intervening commit commutes with
-        # this merge (it rewrote none of the files we read, and every
-        # file it added has footer stats on the key column strictly
-        # outside our batch's key range, so it cannot hold a matching
-        # key). Disjoint CDC writers then make progress concurrently;
-        # anything unprovable (overlapping/stats-less adds, layout or
-        # history rewrites, constraint changes) still aborts loudly.
-        v = self._commit(snap, commit, self._merge_rebase(
-            touched, snap.phys(on[0]), lo, hi,
-            eff_src if schema_mode == "merge" else None))
-        return {"version": v,
-                "files_rewritten": len(touched),
-                "files_added": len(adds),
-                "files_scanned": len(cand),
-                "files_total": len(snap.live),
-                "rows_upserted": src_rows}
+            flag = F.coalesce(F.expr(delete_when)
+                              if isinstance(delete_when, str)
+                              else delete_when, F.lit(False))
+            matched.insert(0, {"cond": flag, "action": "delete",
+                               "set": None})
+            insert["cond"] = ~flag
+        return self.merge_clauses(source, on, matched=matched,
+                                  not_matched=[insert],
+                                  schema_mode=schema_mode)
 
     def merge_clauses(self, source: DataFrame, on: list[str],
                       matched: list[dict[str, Any]] | None = None,
@@ -3151,36 +3000,52 @@ class TxnTable:
                       talias: str = "t", salias: str = "s",
                       schema_mode: str = "strict",
                       ) -> dict[str, int]:
-        """Full Delta MERGE semantics (VERDICT r8 #3) — the general
-        form behind ``WHEN MATCHED [AND c] THEN UPDATE SET col = expr``,
-        multiple conditional MATCHED clauses, and
-        ``WHEN NOT MATCHED BY SOURCE``, which the replace-by-source
-        ``merge()`` cannot express.
+        """Delta MERGE (VERDICT r8 #3) — the one MERGE engine behind
+        ``merge()`` and SQL ``MERGE INTO``.
 
-        Each clause is ``{"cond": sql|None, "action": ..., "set":
-        {col: sql}}``; conditions and SET/VALUES expressions may
+        Each clause is ``{"cond": sql|Column|None, "action": ...,
+        "set": {col: sql}}``; conditions and SET/VALUES expressions may
         reference both sides through ``talias``/``salias``. Actions:
         matched -> 'delete' | 'update' | 'update_star';
         not_matched -> 'insert' | 'insert_star';
         not_matched_by_source -> 'delete' | 'update'.
+        A star clause may carry ``"except": [cols]`` (``SET * EXCEPT``):
+        those source columns are never written and never schema.
         Per row, the FIRST clause whose condition holds (NULL = false)
         applies; with none: matched/nmbs rows keep, unmatched source
-        rows drop (the SQL:2003 / Delta rule).
+        rows drop (the SQL:2003 / Delta rule). A merge with a MATCHED or
+        NOT MATCHED BY SOURCE clause whose source has duplicate non-NULL
+        keys raises (Delta's 'multiple source rows matched').
 
-        Plan shape: one full-outer join of the TOUCHED target files
-        against the (broadcast-sized, checkpointed) source, every
-        disposition a single CASE chain — no per-clause passes. File
-        granularity stays copy-on-write: without NOT MATCHED BY SOURCE
-        clauses only key-matching files rewrite (footer-stats-pruned
-        discovery, like merge()); with them every row must be
-        examined, so the whole live set is input — exactly Delta's
-        cost model for that clause. A merge whose source keys are
-        non-unique raises (Delta's 'multiple source rows matched').
+        Two plans, chosen from the clause list alone; both stay
+        copy-on-write at FILE granularity behind the same footer-stats
+        pruned discovery, staging, CHECK enforcement on the staged
+        bytes, CDF images and key-disjoint rebase:
+          * replace — no NOT MATCHED BY SOURCE clause and no clause
+            reads a target column; matched actions are 'delete' or
+            'update_star', inserts any. Every source row gets its
+            clause codes once; one discovery aggregate over the
+            candidate files gives the touched files and the row counts;
+            the touched files minus the leaving keys are unioned with
+            the written source rows (broadcast anti-join, no join of
+            target rows against source rows). A source row is joined
+            against the target keys only when its disposition depends
+            on whether it matches (e.g. a flagged row an unconditional
+            INSERT * still inserts).
+          * CASE — everything else: one full-outer join of the touched
+            files (every live file under NOT MATCHED BY SOURCE, Delta's
+            cost model for that clause) against the source, every
+            disposition a single CASE chain.
+        The replace plan collapses duplicate TARGET keys to the one
+        source row; the CASE plan updates each target row.
 
-        Concurrency: key-disjoint rebase like merge() when the clause
-        set doesn't read the whole table; NOT MATCHED BY SOURCE merges
-        read everything, so ANY concurrent commit aborts
-        (serializable).
+        Returns ``version``, ``files_rewritten``, ``files_added``,
+        ``files_scanned``, ``files_total`` and ``rows_updated`` /
+        ``rows_deleted`` (target rows) / ``rows_inserted``.
+
+        Concurrency: key-disjoint rebase when the clause set doesn't
+        read the whole table; NOT MATCHED BY SOURCE merges read
+        everything, so ANY concurrent commit aborts (serializable).
 
         ``schema_mode='merge'`` (Delta's autoMerge, VERDICT r9 #1),
         active when a star clause is present: NEW source columns
@@ -3189,9 +3054,8 @@ class TxnTable:
         then assign them, and a source MISSING a table column means
         update_star keeps the target's value / insert_star inserts
         NULL — Delta's exact autoMerge contract. Without a star
-        clause, extra source columns stay what they are today:
-        expression inputs, never schema (nothing assigns them).
-        'strict' (default) behaves exactly as before."""
+        clause, extra source columns stay expression inputs, never
+        schema. 'strict' (default) requires the star columns."""
         matched = list(matched or [])
         not_matched = list(not_matched or [])
         nmbs = list(not_matched_by_source or [])
@@ -3210,13 +3074,16 @@ class TxnTable:
             source = self._derive_generated(source, snap.generated)
         tcols = [f.name for f in snap.schema.fields]
         types = {f.name: f.dataType for f in snap.schema.fields}
-        star = any(cl.get("action") in ("update_star", "insert_star")
-                   for cl in matched + not_matched)
-        src_cols = set(source.columns)
+        stars = [cl for cl in matched + not_matched
+                 if cl["action"] in ("update_star", "insert_star")]
+        hidden = [c for cl in stars for c in cl.get("except") or ()]
+        src_cols = set(source.columns) - set(hidden)
+        evo_src = (source.drop(*hidden)
+                   if schema_mode == "merge" and stars else None)
         evolved = None
         new_fields: list[Any] = []
-        if schema_mode == "merge" and star:
-            evolved = self._check_schema(source, snap, "merge")
+        if evo_src is not None:
+            evolved = self._check_schema(evo_src, snap, "merge")
             if evolved:
                 allf = StructType.fromJson(json.loads(evolved)).fields
                 new_fields = [f for f in allf
@@ -3231,18 +3098,37 @@ class TxnTable:
                 raise ValueError(f"MERGE assigns unknown column(s) "
                                  f"{bad}; table has {tcols}")
         source = source.localCheckpoint(eager=True)   # read 3x below
-        keys = source.select(*on).distinct()
-        # ONE pre-flight aggregate (r13, guide §1.2): the duplicate
-        # guard's two counts and the key-range min/max used to be
-        # three separate actions per merge; they fold into a single
-        # job over the checkpointed source. Null semantics preserved:
-        # multi-arg count_distinct excludes any-null key tuples and
-        # the conditional count matches na.drop(subset=on) — the
-        # guard still sees NON-NULL key rows only (a NULL key never
-        # equi-joins a target row, so several NULL-key source rows
-        # cannot make one target row match twice — Delta likewise
-        # raises only when a target row actually multi-matches,
-        # ADVICE r9). min/max ignore nulls, unchanged.
+        _KEEP, _DROP = 0, -1
+        mcode = self._clause_code(matched, 100, _KEEP)
+        ncode = self._clause_code(not_matched, 200, _DROP)
+        upd = [100 + i for i, cl in enumerate(matched)
+               if cl["action"] != "delete"]
+        dels = [100 + i for i, cl in enumerate(matched)
+                if cl["action"] == "delete"]
+        ins = [200 + i for i in range(len(not_matched))]
+        proj = [F.col(c).cast(types[c]).alias(c) for c in tcols]
+        s_al = source.alias(salias)
+        replace = (
+            not nmbs
+            and all(cl["action"] in ("delete", "update_star")
+                    for cl in matched)
+            and self._resolves(s_al, [mcode, ncode] + [
+                F.expr(e) for cl in not_matched
+                for e in (cl.get("set") or {}).values()]))
+        if replace:
+            s_al = s_al.select("*", mcode.alias("__mc"),
+                               ncode.alias("__nc"))
+        # ONE pre-flight aggregate (r13, guide §1.2) over the
+        # checkpointed source: key range, duplicate guard and (replace
+        # plan) the clause-code counts. It runs as ONE task, so the
+        # guard's distinct count needs no shuffle stage (on a batch
+        # source the shuffle cost more than the scan). Null semantics:
+        # multi-arg count_distinct excludes any-null key tuples and the
+        # conditional count matches na.drop(subset=on) — the guard sees
+        # NON-NULL key rows only (a NULL key never equi-joins a target
+        # row, so several NULL-key source rows cannot make one target
+        # row match twice — Delta likewise raises only when a target
+        # row actually multi-matches, ADVICE r9).
         kc = [F.col(c) for c in on]
         aggs = [F.min(on[0]).alias("lo"), F.max(on[0]).alias("hi")]
         if matched or nmbs:
@@ -3250,7 +3136,13 @@ class TxnTable:
                 lambda a, c: a & c.isNotNull(), kc, F.lit(True))
             aggs += [F.count(F.when(nonnull, F.lit(1))).alias("n_nn"),
                      F.count_distinct(*kc).alias("nd")]
-        b = source.agg(*aggs).first()
+        if replace:
+            # writes if matched / writes if not matched, per source row
+            w_m = F.col("__mc").isin(upd)
+            w_n = F.col("__nc") != _DROP
+            aggs += [F.count(F.when(w_n, F.lit(1))).alias("n_ins"),
+                     F.count(F.when(w_m != w_n, F.lit(1))).alias("n_amb")]
+        b = s_al.coalesce(1).agg(*aggs).first()
         if (matched or nmbs) and b["n_nn"] != b["nd"]:
             raise ValueError(
                 "MERGE source has duplicate key rows on "
@@ -3262,36 +3154,109 @@ class TxnTable:
             cand = sorted(snap.live)        # every row is examined
         else:
             cand = sorted(self._scoped(snap, (on[0], lo, hi)))
-        if not (matched or nmbs):
-            # insert-only merge: matched files need no rewrite at all
-            # — matched target rows keep their bytes; only the
-            # anti-joined inserts stage (Delta's insert-only fast
-            # path, zero files removed). The anti join runs against
-            # the stats-pruned candidates' KEY PROJECTION only
-            # (column-pruned scan).
-            touched: set[str] = set()
-            existing = self._read_files(snap, cand).select(*on)
-            s_only = (source.alias(salias)
-                      .join(existing, on=on, how="left_anti")
-                      .withColumn("__code",
-                                  self._clause_code(not_matched, 200, -1)))
-            new_content = (s_only.where(F.col("__code") != -1)
-                           .select(*[self._insert_value(
-                               cl_list=not_matched, c=c, types=types,
-                               salias=salias,
-                               src_cols=src_cols if schema_mode == "merge"
-                               else None)
-                                     for c in tcols]))
-            # metrics are a second pass over the (source-sized,
-            # checkpointed) anti join — NOT CollectMetrics/Observation:
-            # in Spark 4.1 even a fully-consumed Observation leaves the
-            # session's ObservationManager captured in later RDD-path
-            # closures, and every subsequent MLlib job dies with
-            # "Task not serializable: ObservationManager" (probed in
-            # isolation; the shared test session reproduced it)
-            n_ins = s_only.where(F.col("__code") != -1).count()
-            n_upd = n_del = 0
-            images = [(new_content, "insert")]
+        tolerant = schema_mode == "merge"   # autoMerge star handling
+
+        def target(rels: list[str]) -> DataFrame:
+            df = self._read_files(snap, rels)
+            for nf in new_fields:           # evolved cols: NULL on target
+                df = df.withColumn(nf.name, F.lit(None).cast(nf.dataType))
+            return df
+
+        def col_value(c: str, keep):
+            """Column ``c`` of an output row by its ``__code``; ``keep``
+            where the fired clause does not assign ``c``."""
+            branches: list[tuple[int, Any]] = []
+            for i, cl in enumerate(matched):
+                if cl["action"] == "update_star":
+                    if tolerant and c not in src_cols:
+                        continue              # keep the target's value
+                    branches.append((100 + i, F.col(f"{salias}.{c}")))
+                elif cl["action"] == "update" and c in cl["set"]:
+                    branches.append((100 + i, F.expr(cl["set"][c])))
+            for i, cl in enumerate(not_matched):
+                if cl["action"] == "insert_star":
+                    branches.append(
+                        (200 + i,
+                         F.lit(None) if tolerant and c not in src_cols
+                         else F.col(f"{salias}.{c}")))
+                elif cl["action"] == "insert":
+                    branches.append((200 + i,
+                                     F.expr(cl["set"][c]) if c in cl["set"]
+                                     else F.lit(None)))
+            for i, cl in enumerate(nmbs):
+                if cl["action"] == "update" and c in cl["set"]:
+                    branches.append((300 + i, F.expr(cl["set"][c])))
+            out = None
+            for bc, e in branches:
+                out = (F.when(F.col("__code") == bc, e) if out is None
+                       else out.when(F.col("__code") == bc, e))
+            out = keep if out is None else out.otherwise(keep)
+            return out.cast(types[c]).alias(c)
+
+        images: list[tuple[DataFrame, str]] = []
+        if replace:
+            # discovery and row counts in ONE job: per candidate file,
+            # matched target rows by the source row's clause codes.
+            # Counts are per matched target row, so rows_inserted is
+            # exact while target keys are unique.
+            sc = s_al.select(*on, "__mc", "__nc")
+            per = (self._read_files_meta(snap, cand)
+                   .join(F.broadcast(sc), on=on)
+                   .groupBy("__rel", "__mc", "__nc")
+                   .agg(F.count(F.lit(1)).alias("n")).collect())
+            touched = {r["__rel"] for r in per if r["__mc"] != _KEEP}
+            n_upd = sum(r["n"] for r in per if r["__mc"] in upd)
+            n_del = sum(r["n"] for r in per if r["__mc"] in dels)
+            n_ins = b["n_ins"] - sum(r["n"] for r in per
+                                     if r["__nc"] != _DROP)
+            if b["n_amb"] or any(cl["action"] == "insert"
+                                 for cl in not_matched):
+                # some row's disposition (or values) depends on whether
+                # it matches: split the source on the matched target
+                # keys (one broadcast, reused by both joins)
+                mk = F.broadcast(self._read_files(snap, cand).select(*on)
+                                 .join(F.broadcast(sc.select(*on)), on=on,
+                                       how="leftsemi"))
+                w = (s_al.join(mk, on=on, how="leftsemi")
+                     .withColumn("__code", F.col("__mc"))
+                     .unionByName(s_al.join(mk, on=on, how="left_anti")
+                                  .withColumn("__code", F.col("__nc"))))
+            else:
+                w = s_al.withColumn("__code", F.col("__mc"))
+            w = w.where(F.col("__code").isin(upd + ins))
+            t_rows = target(sorted(touched))
+            kept = ([c for c in tcols if c not in src_cols]
+                    if tolerant and upd else [])
+            if kept:
+                # keep-target for columns the source lacks: matched
+                # target rows supply them; unmatched rows read NULL
+                updated = F.broadcast(sc.where(F.col("__mc").isin(upd))
+                                      .select(*on))
+                w = w.join(t_rows.join(updated, on=on, how="leftsemi")
+                           .select(*on, *kept), on=on, how="left")
+            up = w.alias(salias).select(*[
+                col_value(c, F.col(c) if c in kept else F.lit(None))
+                for c in tcols])
+            gone = sc.where(F.col("__mc") != _KEEP).select(*on)
+            new_content = (t_rows.join(F.broadcast(gone), on=on,
+                                       how="left_anti")
+                           .select(*proj).unionByName(up))
+            if self._cdf_on(snap):
+                tgt = t_rows.join(F.broadcast(sc.select(*on, "__mc")),
+                                  on=on)
+                upd_keys = F.broadcast(tgt.where(F.col("__mc").isin(upd))
+                                       .select(*on))
+                if dels:
+                    images.append((tgt.where(F.col("__mc").isin(dels))
+                                   .select(*proj), "delete"))
+                if upd:
+                    images += [(tgt.where(F.col("__mc").isin(upd))
+                                .select(*proj), "update_preimage"),
+                               (up.join(upd_keys, on=on, how="leftsemi"),
+                                "update_postimage")]
+                if ins:
+                    images.append((up.join(upd_keys, on=on,
+                                           how="left_anti"), "insert"))
         else:
             if nmbs:
                 touched = set(cand)
@@ -3299,14 +3264,10 @@ class TxnTable:
                 discovery = self._read_files_meta(snap, cand)
                 touched = {
                     r[0] for r in
-                    (discovery.join(F.broadcast(keys), on=on,
-                                    how="leftsemi")
+                    (discovery.join(F.broadcast(source.select(*on)),
+                                    on=on, how="leftsemi")
                      .select("__rel").distinct().collect())}
-            t_base = self._read_files(snap, sorted(touched))
-            for nf in new_fields:           # evolved cols: NULL on target
-                t_base = t_base.withColumn(nf.name,
-                                           F.lit(None).cast(nf.dataType))
-            t_frame = t_base.withColumn("__t", F.lit(1))
+            t_frame = target(sorted(touched)).withColumn("__t", F.lit(1))
             s_frame = source.withColumn("__s", F.lit(1))
             j = t_frame.alias(talias).join(
                 s_frame.alias(salias),
@@ -3315,50 +3276,14 @@ class TxnTable:
                 how="full_outer")
             has_t = F.col(f"{talias}.__t").isNotNull()
             has_s = F.col(f"{salias}.__s").isNotNull()
-            _KEEP, _DROP = 0, -1
-            code = (F.when(has_t & has_s,
-                           self._clause_code(matched, 100, _KEEP))
-                    .when(has_s, self._clause_code(not_matched, 200, _DROP))
+            code = (F.when(has_t & has_s, mcode)
+                    .when(has_s, ncode)
                     .otherwise(self._clause_code(nmbs, 300, _KEEP)))
             j = j.withColumn("__code", code)
-            drop_codes = [_DROP]
-            drop_codes += [100 + i for i, cl in enumerate(matched)
-                           if cl["action"] == "delete"]
-            drop_codes += [300 + i for i, cl in enumerate(nmbs)
-                           if cl["action"] == "delete"]
-
-            tolerant = schema_mode == "merge"   # autoMerge star handling
-
-            def col_value(c: str):
-                v = F.col(f"{talias}.{c}")        # keep codes default here
-                branches: list[tuple[int, Any]] = []
-                for i, cl in enumerate(matched):
-                    if cl["action"] == "update_star":
-                        if tolerant and c not in src_cols:
-                            continue              # keep the target's value
-                        branches.append((100 + i, F.col(f"{salias}.{c}")))
-                    elif cl["action"] == "update" and c in cl["set"]:
-                        branches.append((100 + i, F.expr(cl["set"][c])))
-                for i, cl in enumerate(not_matched):
-                    if cl["action"] == "insert_star":
-                        branches.append(
-                            (200 + i,
-                             F.lit(None) if tolerant and c not in src_cols
-                             else F.col(f"{salias}.{c}")))
-                    elif cl["action"] == "insert":
-                        branches.append((200 + i,
-                                         F.expr(cl["set"][c]) if c in cl["set"]
-                                         else F.lit(None)))
-                for i, cl in enumerate(nmbs):
-                    if cl["action"] == "update" and c in cl["set"]:
-                        branches.append((300 + i, F.expr(cl["set"][c])))
-                out = None
-                for bc, e in branches:
-                    out = (F.when(F.col("__code") == bc, e) if out is None
-                           else out.when(F.col("__code") == bc, e))
-                out = v if out is None else out.otherwise(v)
-                return out.cast(types[c]).alias(c)
-
+            nm_upd = [300 + i for i, cl in enumerate(nmbs)
+                      if cl["action"] == "update"]
+            nm_del = [300 + i for i, cl in enumerate(nmbs)
+                      if cl["action"] == "delete"]
             # one bounded histogram pass (one output row per clause code)
             # gives the operation metrics before the staging write re-runs
             # the join. Deliberately NOT CollectMetrics/Observation, which
@@ -3366,57 +3291,42 @@ class TxnTable:
             # even a fully-consumed Observation leaves the session's
             # ObservationManager captured in later RDD-path closures, and
             # every subsequent MLlib job dies with "Task not serializable:
-            # ObservationManager" (probed in isolation). Constraints are
-            # enforced on the staged bytes (column-pruned re-read of the
-            # OUTPUT, cheaper than a third join run); a violation leaves
-            # orphans for vacuum, the same posture as a lost publish race.
+            # ObservationManager" (probed in isolation).
             hist = {r["__code"]: r["n"] for r in
                     j.groupBy("__code").agg(F.count(F.lit(1)).alias("n"))
                     .collect()}
-            new_content = (j.where(~F.col("__code").isin(drop_codes))
-                           .select(*[col_value(c) for c in tcols]))
-            images: list[tuple[DataFrame, str]] = []
+            n_upd = sum(hist.get(c2, 0) for c2 in upd + nm_upd)
+            n_del = sum(hist.get(c2, 0) for c2 in dels + nm_del)
+            n_ins = sum(hist.get(c2, 0) for c2 in ins)
+            post_cols = [col_value(c, F.col(f"{talias}.{c}"))
+                         for c in tcols]
+            new_content = (j.where(~F.col("__code").isin(
+                [_DROP] + dels + nm_del)).select(*post_cols))
             if self._cdf_on(snap):
                 # image classes straight off the __code-classified join:
                 # pre-images are the target side, post-images re-run the
                 # clause CASE chain — one extra pass per class, only
                 # while the table opts into CDF
-                upd_codes = ([100 + i for i, cl in enumerate(matched)
-                              if cl["action"] in ("update", "update_star")]
-                             + [300 + i for i, cl in enumerate(nmbs)
-                                if cl["action"] == "update"])
-                delc = ([100 + i for i, cl in enumerate(matched)
-                         if cl["action"] == "delete"]
-                        + [300 + i for i, cl in enumerate(nmbs)
-                           if cl["action"] == "delete"])
-                insc = [200 + i for i in range(len(not_matched))]
                 pre_cols = [F.col(f"{talias}.{c}").cast(types[c]).alias(c)
                             for c in tcols]
-                post_cols = [col_value(c) for c in tcols]
-                if upd_codes:
-                    updj = j.where(F.col("__code").isin(upd_codes))
+                if upd + nm_upd:
+                    updj = j.where(F.col("__code").isin(upd + nm_upd))
                     images += [(updj.select(*pre_cols), "update_preimage"),
                                (updj.select(*post_cols),
                                 "update_postimage")]
-                if delc:
-                    images.append((j.where(F.col("__code").isin(delc))
+                if dels + nm_del:
+                    images.append((j.where(F.col("__code")
+                                           .isin(dels + nm_del))
                                    .select(*pre_cols), "delete"))
-                if insc:
-                    images.append((j.where(F.col("__code").isin(insc))
+                if ins:
+                    images.append((j.where(F.col("__code").isin(ins))
                                    .select(*post_cols), "insert"))
-            n_upd = sum(n for c2, n in hist.items()
-                        if (100 <= c2 < 200
-                            and matched[c2 - 100]["action"] != "delete")
-                        or (c2 >= 300
-                            and nmbs[c2 - 300]["action"] == "update"))
-            n_del = sum(n for c2, n in hist.items()
-                        if (100 <= c2 < 200
-                            and matched[c2 - 100]["action"] == "delete")
-                        or (c2 >= 300 and nmbs[c2 - 300]["action"]
-                            == "delete"))
-            n_ins = sum(n for c2, n in hist.items() if 200 <= c2 < 300)
         adds = self._stage(new_content, snap.partition_by or None,
                            mapping=snap.column_mapping)
+        # CHECK constraints are enforced on the staged bytes (a
+        # column-pruned re-read of the OUTPUT, cheaper than re-running
+        # the plan); a violation leaves orphans for vacuum, the same
+        # posture as a lost publish race
         self._enforce_staged(snap, adds)
         commit = {"op": "merge", "ts": time.time(),
                   "read_version": snap.version,
@@ -3425,7 +3335,7 @@ class TxnTable:
         if evolved:
             commit["schema_json"] = evolved
         # no staged rows and no target rows: every image is empty
-        if images and (adds or touched) and self._cdf_on(snap):
+        if images and (adds or touched):
             csnap = (Snapshot(-1, evolved, {},
                               column_mapping=dict(snap.column_mapping))
                      if evolved else snap)
@@ -3440,12 +3350,12 @@ class TxnTable:
                     "won; this clause reads the whole table, so re-run")
         else:
             rebase = self._merge_rebase(
-                touched, snap.phys(on[0]), lo, hi,
-                source if schema_mode == "merge" and star else None)
+                touched, snap.phys(on[0]), lo, hi, evo_src)
         return {"version": self._commit(snap, commit, rebase),
                 "files_rewritten": len(touched),
                 "files_added": len(adds),
                 "files_scanned": len(cand),
+                "files_total": len(snap.live),
                 "rows_updated": int(n_upd),
                 "rows_deleted": int(n_del),
                 "rows_inserted": int(n_ins)}
@@ -3470,33 +3380,23 @@ class TxnTable:
         conditions are false, the SQL MERGE rule)."""
         expr = None
         for i, cl in enumerate(clauses):
-            cond = (F.lit(True) if cl.get("cond") is None
-                    else F.coalesce(F.expr(cl["cond"]), F.lit(False)))
+            c = cl.get("cond")
+            cond = (F.lit(True) if c is None else F.coalesce(
+                F.expr(c) if isinstance(c, str) else c, F.lit(False)))
             expr = (F.when(cond, F.lit(base + i)) if expr is None
                     else expr.when(cond, F.lit(base + i)))
         return (expr.otherwise(F.lit(default))
                 if expr is not None else F.lit(default))
 
     @staticmethod
-    def _insert_value(cl_list: list[dict[str, Any]], c: str,
-                      types: dict[str, Any], salias: str,
-                      src_cols: set[str] | None = None):
-        """Column ``c`` for insert-only rows: per fired clause, the
-        star source column / the SET expression / NULL. With
-        ``src_cols`` (autoMerge mode) an insert_star of a column the
-        source lacks inserts NULL instead of failing to resolve."""
-        out = None
-        for i, cl in enumerate(cl_list):
-            if cl["action"] == "insert_star":
-                e = (F.lit(None)
-                     if src_cols is not None and c not in src_cols
-                     else F.col(f"{salias}.{c}"))
-            else:
-                e = (F.expr(cl["set"][c]) if c in (cl.get("set") or {})
-                     else F.lit(None))
-            out = (F.when(F.col("__code") == 200 + i, e) if out is None
-                   else out.when(F.col("__code") == 200 + i, e))
-        return out.cast(types[c]).alias(c)
+    def _resolves(df: DataFrame, exprs: list[Any]) -> bool:
+        """True when every expression resolves against ``df`` alone
+        (Spark analyzes a projection eagerly, no job runs)."""
+        try:
+            df.select(*exprs)
+        except AnalysisException:
+            return False
+        return True
 
     def _assert_merge_commutes(self, read_v: int, head_v: int,
                                touched: set[str], key: str,

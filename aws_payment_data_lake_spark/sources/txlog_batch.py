@@ -668,12 +668,18 @@ class _StreamWriter(DataSourceStreamArrowWriter):
             self.schema = StructType(
                 list(schema.fields)
                 + [tbl_types[c] for c in sorted(self.derive)])
+        # appends honor the table's declared clustering, as the batch
+        # writer's do: each task's file is sorted on it in-file, so its
+        # footer stats stay tight without an OPTIMIZE
+        names = set(self.schema.names)
+        self.partition_by = [c for c in snap.partition_by
+                             if c in names] or None
 
     # -- executor side ----------------------------------------------------
     def write(self, iterator) -> _Staged:
         return _stage(self.path, self.mapping,
                       self._derived(iterator) if self.derive
-                      else iterator)
+                      else iterator, self.partition_by)
 
     def _derived(self, batches) -> Iterator:
         """Each batch + its derived columns: a DuckDB projection

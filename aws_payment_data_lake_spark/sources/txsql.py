@@ -106,12 +106,11 @@ row counts, zero data files opened (Delta's metadata-only count).
 MERGE carries the full Delta clause set (VERDICT r8 #3): multiple
 conditional WHEN MATCHED clauses (first-true-wins), column-targeted
 ``UPDATE SET c = expr`` referencing both aliases, conditional inserts
-with explicit column lists, and ``WHEN NOT MATCHED BY SOURCE`` —
-dispatched to ``txlog.merge_clauses``. The exact replace-by-source
-shape ([source-conditional DELETE +] UPDATE SET * + INSERT *) keeps
-the leaner ``txlog.merge`` plan and its key-disjoint concurrent
-rebase. Extra source columns such as a delete flag are dropped on
-write — unless ``WITH SCHEMA EVOLUTION`` (Delta's statement-scoped
+with explicit column lists, and ``WHEN NOT MATCHED BY SOURCE``. Every
+MERGE hands its parsed clauses to ``txlog.merge_clauses``, which picks
+its plan from them (a star shape that reads no target column runs the
+lean replace plan). Extra source columns such as a delete flag are
+dropped on write — unless ``WITH SCHEMA EVOLUTION`` (Delta's statement-scoped
 autoMerge, round 10) is given, in which case new source columns widen
 the target inside the merge commit, old files read NULL for them, and
 a source missing a table column keeps the target's value on
@@ -1290,42 +1289,13 @@ class LakehouseCatalog:
             keys.append(c1)
 
         matched, not_matched, nmbs = self._parse_merge_clauses(clauses)
-
-        # Fast path: the exact replace-by-source shape (optional
-        # source-conditional DELETE + unconditional UPDATE SET * +
-        # unconditional INSERT *) keeps txlog.merge's leaner plan
-        # (broadcast anti-join + union instead of a full-outer join)
-        # and its benched key-disjoint rebase. Everything else — column
-        # -targeted SET, multiple conditional MATCHED clauses, NOT
-        # MATCHED BY SOURCE, conditional inserts — runs the general
-        # clause engine (txlog.merge_clauses).
-        legacy = (
-            not nmbs
-            and len(not_matched) == 1
-            and not_matched[0] == {"cond": None, "action": "insert_star",
-                                   "set": None}
-            and 1 <= len(matched) <= 2
-            and matched[-1] == {"cond": None, "action": "update_star",
-                                "set": None}
-            and all(cl["action"] == "delete" and cl["cond"] is not None
-                    and f"{talias}." not in cl["cond"]
-                    for cl in matched[:-1]))
-        if legacy:
-            delete_when = None
-            if len(matched) == 2:
-                # the condition references source columns, optionally
-                # alias-qualified; strip the qualifier (it runs on the
-                # source frame)
-                delete_when = sqllex.sub(rf"\b{re.escape(salias)}\.", "",
-                                     matched[0]["cond"])
-            res = t.merge(source, on=keys, delete_when=delete_when,
-                          schema_mode=schema_mode)
-        else:
-            res = t.merge_clauses(source, on=keys, matched=matched,
-                                  not_matched=not_matched,
-                                  not_matched_by_source=nmbs,
-                                  talias=talias, salias=salias,
-                                  schema_mode=schema_mode)
+        # every clause shape runs the one MERGE engine; the plan choice
+        # (replace vs full-outer CASE) is txlog.merge_clauses' own
+        res = t.merge_clauses(source, on=keys, matched=matched,
+                              not_matched=not_matched,
+                              not_matched_by_source=nmbs,
+                              talias=talias, salias=salias,
+                              schema_mode=schema_mode)
         return self._metrics("merge", res)
 
     def _parse_merge_clauses(self, text: str) -> tuple[

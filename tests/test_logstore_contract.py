@@ -86,3 +86,19 @@ def test_commits_is_the_only_log_reader():
     assert [caller for caller, _ in refs["_LAYOUT_OPS"]] == \
         ["_feed_plan"], \
         f"change-feed policy outside _feed_plan: {refs['_LAYOUT_OPS']}"
+
+
+def test_one_merge_engine():
+    """One MERGE engine: ``TxnTable.merge`` is a clause translation into
+    ``merge_clauses`` with no staging or commit of its own, and the SQL
+    layer never calls ``.merge(`` — every ``MERGE INTO`` hands its
+    parsed clauses to ``merge_clauses``, which alone picks the plan."""
+    refs = package_refs({"_stage", "_commit", "merge", "merge_clauses"})
+    own = [site for name in ("_stage", "_commit") for site in refs[name]
+           if site[0] == "TxnTable.merge"]
+    assert own == [], f"TxnTable.merge stages or commits itself: {own}"
+    assert ("TxnTable.merge" in
+            [caller for caller, _ in refs["merge_clauses"]])
+    sql = [where for _, where in refs["merge"]
+           if where.startswith("sources/txsql.py")]
+    assert sql == [], f"the SQL layer calls .merge( directly: {sql}"

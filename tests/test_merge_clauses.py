@@ -133,25 +133,86 @@ def test_clause_validation_errors(spark, tmp_path):
                                   "set": {"nope": "1"}}])
 
 
-def test_update_star_clause_engine_matches_legacy_merge(spark,
-                                                        tmp_path):
-    """The clause engine's unconditional update_star+insert_star must
-    produce the same table as legacy merge() (the SQL layer dispatches
-    the star shape to merge(); this pins the semantic equivalence that
-    dispatch relies on)."""
-    a = _mk(spark, tmp_path, "a")
-    b = _mk(spark, tmp_path, "b")
-    base = spark.range(10).selectExpr("id", "id * 1.0 as v")
-    src = spark.range(5, 15).selectExpr("id", "id * -1.0 as v")
-    a.create(base)
-    b.create(base)
-    a.merge(src, on=["id"])
-    b.merge_clauses(src, on=["id"],
-                    matched=[{"cond": None, "action": "update_star",
-                              "set": None}],
-                    not_matched=[{"cond": None, "action": "insert_star",
-                                  "set": None}])
-    assert _state(a) == _state(b)
+_UPDATE_STAR = {"cond": None, "action": "update_star", "set": None}
+_INSERT_STAR = {"cond": None, "action": "insert_star", "set": None}
+_UPDATE_V = {"cond": None, "action": "update", "set": {"v": "s.v"}}
+_KILL = {"cond": "s.kill", "action": "delete", "set": None}
+
+
+def _insert_values(cond=None):
+    return {"cond": cond, "action": "insert",
+            "set": {"id": "s.id", "v": "s.v"}}
+
+
+# (replace-plan merge, the same merge spelled with explicit SET /
+# VALUES, which only the CASE plan serves)
+_PLAN_PAIRS = {
+    "star": (
+        lambda t, src: t.merge_clauses(src, on=["id"],
+                                       matched=[_UPDATE_STAR],
+                                       not_matched=[_INSERT_STAR]),
+        {"matched": [_UPDATE_V], "not_matched": [_insert_values()]}),
+    "delete_star": (
+        lambda t, src: t.merge_clauses(src, on=["id"],
+                                       matched=[_KILL, _UPDATE_STAR],
+                                       not_matched=[_INSERT_STAR]),
+        {"matched": [_KILL, _UPDATE_V],
+         "not_matched": [_insert_values()]}),
+    "merge_triple": (
+        lambda t, src: t.merge(src, on=["id"], delete_when="kill",
+                               helper_cols=("kill",)),
+        {"matched": [_KILL, _UPDATE_V],
+         "not_matched": [_insert_values("NOT coalesce(s.kill, false)")]}),
+}
+
+
+def _run_plan(spark, run):
+    """(plan, result) of one merge: the CASE plan is the only one that
+    full-outer joins the target against the source."""
+    frame = type(spark.range(0))            # the session's DataFrame class
+    hows = []
+    real = frame.join
+
+    def spy(self, other, on=None, how=None):
+        hows.append(how)
+        return real(self, other, on, how)
+
+    with mock.patch.object(frame, "join", spy):
+        res = run()
+    return ("case" if "full_outer" in hows else "replace"), res
+
+
+@pytest.mark.parametrize("shape", sorted(_PLAN_PAIRS))
+def test_replace_and_case_plans_agree(spark, tmp_path, shape):
+    """The replace plan and the CASE plan are one MERGE semantics: the
+    star shapes and merge()'s CDC triple give the same table, counts
+    and change rows as the same merge spelled with explicit SET /
+    VALUES — flagged rows matched and unmatched, a NULL flag, inserts
+    and untouched files included."""
+    replace_run, explicit = _PLAN_PAIRS[shape]
+    base = spark.range(20).selectExpr("id", "id * 1.0 as v")
+    src = spark.range(15, 25).selectExpr(
+        "id", "id * -1.0 as v",
+        "CASE WHEN id = 17 THEN NULL ELSE id % 3 = 0 END as kill")
+    out = {}
+    for name in ("replace", "case"):
+        t = _mk(spark, tmp_path, name)
+        t.create(base, partition_by=["id"], partition_files=4)
+        t.set_properties({"txlog.enableChangeDataFeed": "true"})
+        v0 = t.latest_version()
+        run = ((lambda: replace_run(t, src)) if name == "replace"
+               else (lambda: t.merge_clauses(src, on=["id"], **explicit)))
+        plan, res = _run_plan(spark, run)
+        assert plan == name
+        feed = sorted((r.id, r.v, r._change_type) for r in
+                      t.changes(v0, include_deletes=True).collect())
+        out[name] = (_state(t), feed,
+                     {k: res[k] for k in ("files_rewritten", "files_total",
+                                          "rows_updated", "rows_deleted",
+                                          "rows_inserted")})
+    assert out["replace"] == out["case"]
+    counts = out["replace"][2]
+    assert 0 < counts["files_rewritten"] < counts["files_total"]
 
 
 def test_clause_merge_enforces_constraints_on_staged_output(spark,

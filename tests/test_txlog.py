@@ -113,7 +113,8 @@ def test_merge_upsert_and_file_granularity(spark, tmp_path):
     src = spark.createDataFrame([(5, -5), (7, -7), (2000, 1)],
                                 "id long, v long")
     res = t.merge(src, on=["id"])
-    assert res["rows_upserted"] == 3
+    assert (res["rows_updated"], res["rows_deleted"],
+            res["rows_inserted"]) == (2, 0, 1)
     got = {r["id"]: r["v"] for r in t.snapshot().collect()}
     assert got[5] == -5 and got[7] == -7 and got[2000] == 1
     assert got[6] == 6 and got[1050] == 1050

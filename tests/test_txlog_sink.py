@@ -263,6 +263,29 @@ def test_optimize_reclusters_streamed_files(spark, tmp_path):
     assert kept_after < total_after     # clustered files prune
 
 
+def test_streamed_files_are_sorted_on_the_table_clustering(spark,
+                                                           tmp_path):
+    """The stream writer honors the table's declared ``partition_by``
+    like the batch writer: each staged file is sorted on it in-file,
+    so its footer range is tight without an OPTIMIZE."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "in")
+    tpath = str(tmp_path / "t")
+    t = TxnTable(spark, tpath)
+    t.create(spark.createDataFrame([], DDL), partition_by=["id"])
+    ids = [(i * 37) % 101 for i in range(101)]      # a permutation
+    _feed(src, [(i, float(i), "s") for i in ids])
+    _stream(spark, src, tpath, str(tmp_path / "ck"))
+    files = sorted(t._replay().live)
+    assert files
+    for rel in files:
+        got = pq.read_table(os.path.join(tpath, rel)).column("id")
+        assert got.to_pylist() == sorted(got.to_pylist()), rel
+    assert sorted(r["id"] for r in t.snapshot().collect()) \
+        == list(range(101))
+
+
 def test_default_app_id_is_checkpoint_scoped(spark, tmp_path):
     """Two DIFFERENT queries (distinct checkpoints, no explicit
     txnAppId) feeding one table must not skip each other's batch ids

@@ -372,14 +372,49 @@ def test_merge_conditional_insert_with_column_list(spark, lake):
 
 
 def test_merge_duplicate_source_keys_raise(spark, lake):
+    """Every MERGE shape runs one engine, so every one refuses a source
+    whose non-NULL keys repeat: column-targeted SET, the star shape and
+    TxnTable.merge (the star shape used to duplicate target rows)."""
     lake.sql("CREATE TABLE pay USING txlog AS SELECT * FROM seed")
+    dup = "SELECT id % 2 AS id, amount, ccy FROM seed"
+    for action in ("UPDATE SET amount = s.amount", "UPDATE SET *"):
+        with pytest.raises(ValueError, match="duplicate key"):
+            lake.sql(f"MERGE INTO pay t USING ({dup}) s "
+                     f"ON t.id = s.id WHEN MATCHED THEN {action} "
+                     "WHEN NOT MATCHED THEN INSERT *")
     with pytest.raises(ValueError, match="duplicate key"):
-        lake.sql("""
-            MERGE INTO pay t
-            USING (SELECT id % 2 AS id, amount FROM seed) s
-            ON t.id = s.id
-            WHEN MATCHED THEN UPDATE SET amount = s.amount
-        """)
+        lake.table("pay").merge(spark.sql(dup), on=["id"])
+    assert lake.table("pay").latest_version() == 0
+
+
+def test_merge_inserts_unmatched_flagged_row(spark, lake, tmp_path):
+    """A source-conditional DELETE fires on MATCHED rows only, so with
+    an unconditional INSERT * an unmatched flagged row is inserted
+    (Delta semantics). merge(delete_when=...) spells NOT MATCHED AND
+    NOT C, so the same row inserts nothing there."""
+    spark.sql("SELECT id, amount + 1 AS amount, ccy, id IN (3, 42) AS kill "
+              "FROM (SELECT * FROM seed UNION ALL SELECT 42, 420, 'EUR')"
+              ).createOrReplaceTempView("flagged")
+    lake.sql("CREATE TABLE pay USING txlog AS SELECT * FROM seed")
+    res = {r["metric"]: r["value"] for r in lake.sql("""
+        MERGE INTO pay t USING flagged s ON t.id = s.id
+        WHEN MATCHED AND s.kill THEN DELETE
+        WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT *
+    """).collect()}
+    want = {i: i * 10 + 1 for i in range(10) if i != 3}
+    assert dict(_rows(lake.sql("SELECT id, amount FROM pay"))) \
+        == {**want, 42: 421}
+    assert (res["rows_updated"], res["rows_deleted"],
+            res["rows_inserted"]) == (9, 1, 1)
+    lake.register("pay2", str(tmp_path / "pay2"))
+    lake.sql("CREATE TABLE pay2 USING txlog AS SELECT * FROM seed")
+    res = lake.table("pay2").merge(spark.table("flagged"), on=["id"],
+                                   delete_when="kill",
+                                   helper_cols=("kill",))
+    assert dict(_rows(lake.sql("SELECT id, amount FROM pay2"))) == want
+    assert (res["rows_updated"], res["rows_deleted"],
+            res["rows_inserted"]) == (9, 1, 0)
 
 
 def test_merge_clause_conditions_null_is_false(spark, lake):
@@ -559,8 +594,8 @@ def test_table_changes_bounded_version_range(spark, lake, tmp_path):
 def test_merge_with_schema_evolution_sql(spark, lake):
     """Delta's `MERGE WITH SCHEMA EVOLUTION INTO`: new source columns
     widen the target inside the merge commit; without the modifier the
-    same statement leaves the schema alone (star projection drops the
-    extra column on the legacy path)."""
+    same statement leaves the schema alone (the star projection drops
+    the extra column)."""
     lake.sql("CREATE TABLE pay USING txlog AS SELECT * FROM seed")
     spark.sql(
         "SELECT id, id * 99 AS amount, 'GBP' AS ccy, 'web' AS channel "
@@ -571,7 +606,8 @@ def test_merge_with_schema_evolution_sql(spark, lake):
         "WHEN MATCHED THEN UPDATE SET * "
         "WHEN NOT MATCHED THEN INSERT *")
     m = {r["metric"]: r["value"] for r in out.collect()}
-    assert m["rows_upserted"] == 4
+    assert (m["rows_updated"], m["rows_deleted"],
+            m["rows_inserted"]) == (2, 0, 2)
     head = lake.sql("SELECT * FROM pay")
     assert head.columns == ["id", "amount", "ccy", "channel"]
     got = {r["id"]: (r["amount"], r["ccy"], r["channel"])
