@@ -246,6 +246,23 @@ def _validate_writer_protocol(protocol: dict[str, Any] | None,
             f"{sorted(_WRITER_FEATURES)}); a blind commit could "
             f"violate the table's invariants")
 
+
+def _small(ckpt: DataFrame) -> bool:
+    """True when an eagerly local-checkpointed frame holds at most one
+    advisory partition of bytes (``spark.sql.adaptive.
+    advisoryPartitionSizeInBytes``, the size AQE gives one task): an
+    aggregate over it then runs as ONE task, with no shuffle stage.
+    The blocks sit in the block manager, so the size is exact and no
+    job runs."""
+    jspark = ckpt.sparkSession._jsparkSession
+    rid = ckpt._jdf.queryExecution().logical().rdd().id()
+    size = sum(i.memSize() + i.diskSize() for i in
+               jspark.sparkContext().getRDDStorageInfo() if i.id() == rid)
+    sql_conf = ckpt.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
+    return size <= jspark.sessionState().conf().getConf(
+        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES())
+
+
 # columns whose footer stats we harvest: parquet logical types that
 # arrive as JSON-safe python values (or are made so below)
 _STATS_SAFE = (int, float, str, bool)
@@ -3021,23 +3038,25 @@ class TxnTable:
         copy-on-write at FILE granularity behind the same footer-stats
         pruned discovery, staging, CHECK enforcement on the staged
         bytes, CDF images and key-disjoint rebase:
-          * replace — no NOT MATCHED BY SOURCE clause and no clause
+          * replace — no NOT MATCHED BY SOURCE clause and no condition
             reads a target column; matched actions are 'delete' or
-            'update_star', inserts any. Every source row gets its
-            clause codes once; one discovery aggregate over the
-            candidate files gives the touched files and the row counts;
-            the touched files minus the leaving keys are unioned with
-            the written source rows (broadcast anti-join, no join of
-            target rows against source rows). A source row is joined
-            against the target keys only when its disposition depends
-            on whether it matches (e.g. a flagged row an unconditional
-            INSERT * still inserts).
+            'update_star', not-matched actions 'insert_star'. Every
+            source row gets its clause codes once; one discovery join
+            of the candidate files' keys with the source gives the
+            touched files and the row counts; the touched files minus
+            the leaving keys are unioned with the written source rows
+            (broadcast anti-join, no join of target rows against source
+            rows). When a row's disposition depends on whether it
+            matches (e.g. a flagged row an unconditional INSERT * still
+            inserts), the discovery join is checkpointed and its keys
+            split the source. An insert-only merge skips the discovery:
+            its inserts are the source rows no candidate key matches.
           * CASE — everything else: one full-outer join of the touched
             files (every live file under NOT MATCHED BY SOURCE, Delta's
             cost model for that clause) against the source, every
-            disposition a single CASE chain.
-        The replace plan collapses duplicate TARGET keys to the one
-        source row; the CASE plan updates each target row.
+            disposition a single CASE chain. A replace-shaped merge
+            runs it too when the discovery finds a source key matching
+            several target rows (the CASE plan updates each one).
 
         Returns ``version``, ``files_rewritten``, ``files_added``,
         ``files_scanned``, ``files_total`` and ``rows_updated`` /
@@ -3112,17 +3131,22 @@ class TxnTable:
             not nmbs
             and all(cl["action"] in ("delete", "update_star")
                     for cl in matched)
-            and self._resolves(s_al, [mcode, ncode] + [
-                F.expr(e) for cl in not_matched
-                for e in (cl.get("set") or {}).values()]))
+            and all(cl["action"] == "insert_star" for cl in not_matched)
+            and self._resolves(s_al, [mcode, ncode]))
+        # per source row: writes if matched / writes if not matched;
+        # a row where they differ is AMBIGUOUS until matched
+        w_m = F.col("__mc").isin(upd)
+        w_n = F.col("__nc") != _DROP
+        amb = w_m != w_n
         if replace:
             s_al = s_al.select("*", mcode.alias("__mc"),
                                ncode.alias("__nc"))
         # ONE pre-flight aggregate (r13, guide §1.2) over the
         # checkpointed source: key range, duplicate guard and (replace
-        # plan) the clause-code counts. It runs as ONE task, so the
-        # guard's distinct count needs no shuffle stage (on a batch
-        # source the shuffle cost more than the scan). Null semantics:
+        # plan) the clause-code counts, in ONE task for a small source
+        # (on a batch source the distinct count's shuffle cost more
+        # than the scan; a larger source keeps its scan parallel).
+        # Null semantics:
         # multi-arg count_distinct excludes any-null key tuples and the
         # conditional count matches na.drop(subset=on) — the guard sees
         # NON-NULL key rows only (a NULL key never equi-joins a target
@@ -3137,12 +3161,10 @@ class TxnTable:
             aggs += [F.count(F.when(nonnull, F.lit(1))).alias("n_nn"),
                      F.count_distinct(*kc).alias("nd")]
         if replace:
-            # writes if matched / writes if not matched, per source row
-            w_m = F.col("__mc").isin(upd)
-            w_n = F.col("__nc") != _DROP
             aggs += [F.count(F.when(w_n, F.lit(1))).alias("n_ins"),
-                     F.count(F.when(w_m != w_n, F.lit(1))).alias("n_amb")]
-        b = s_al.coalesce(1).agg(*aggs).first()
+                     F.count(F.when(amb, F.lit(1))).alias("n_amb")]
+        b = ((s_al.coalesce(1) if _small(source) else s_al)
+             .agg(*aggs).first())
         if (matched or nmbs) and b["n_nn"] != b["nd"]:
             raise ValueError(
                 "MERGE source has duplicate key rows on "
@@ -3194,35 +3216,57 @@ class TxnTable:
             return out.cast(types[c]).alias(c)
 
         images: list[tuple[DataFrame, str]] = []
+        touched: set[str] | None = None
+        n_ins: int | None = None
+        if replace and matched:
+            # discovery: the candidate files' keys joined with the
+            # source, checkpointed (the split below reads its matched
+            # keys without a second scan), then per clause-code pair the
+            # matched target rows, their distinct keys and their files
+            disc = (self._read_files_meta(snap, cand)
+                    .join(F.broadcast(s_al.select(*on, "__mc", "__nc")),
+                          on=on)
+                    .select("__rel", *on, "__mc", "__nc")
+                    .localCheckpoint(eager=True))
+            per = ((disc.coalesce(1) if _small(disc) else disc)
+                   .groupBy("__mc", "__nc")
+                   .agg(F.count(F.lit(1)).alias("n"),
+                        F.count_distinct(*kc).alias("nd"),
+                        F.collect_set("__rel").alias("rels"))
+                   .collect())
+            if sum(r["n"] for r in per) != sum(r["nd"] for r in per):
+                # a source key matches SEVERAL target rows: only the
+                # CASE plan updates each one
+                touched = {f for r in per for f in r["rels"]}
+                replace = False
         if replace:
-            # discovery and row counts in ONE job: per candidate file,
-            # matched target rows by the source row's clause codes.
-            # Counts are per matched target row, so rows_inserted is
-            # exact while target keys are unique.
-            sc = s_al.select(*on, "__mc", "__nc")
-            per = (self._read_files_meta(snap, cand)
-                   .join(F.broadcast(sc), on=on)
-                   .groupBy("__rel", "__mc", "__nc")
-                   .agg(F.count(F.lit(1)).alias("n")).collect())
-            touched = {r["__rel"] for r in per if r["__mc"] != _KEEP}
-            n_upd = sum(r["n"] for r in per if r["__mc"] in upd)
-            n_del = sum(r["n"] for r in per if r["__mc"] in dels)
-            n_ins = b["n_ins"] - sum(r["n"] for r in per
-                                     if r["__nc"] != _DROP)
-            if b["n_amb"] or any(cl["action"] == "insert"
-                                 for cl in not_matched):
-                # some row's disposition (or values) depends on whether
-                # it matches: split the source on the matched target
-                # keys (one broadcast, reused by both joins)
-                mk = F.broadcast(self._read_files(snap, cand).select(*on)
-                                 .join(F.broadcast(sc.select(*on)), on=on,
-                                       how="leftsemi"))
-                w = (s_al.join(mk, on=on, how="leftsemi")
-                     .withColumn("__code", F.col("__mc"))
-                     .unionByName(s_al.join(mk, on=on, how="left_anti")
-                                  .withColumn("__code", F.col("__nc"))))
-            else:
+            if matched:
+                touched = {f for r in per if r["__mc"] != _KEEP
+                           for f in r["rels"]}
+                n_upd = sum(r["n"] for r in per if r["__mc"] in upd)
+                n_del = sum(r["n"] for r in per if r["__mc"] in dels)
+                n_ins = b["n_ins"] - sum(r["n"] for r in per
+                                         if r["__nc"] != _DROP)
                 w = s_al.withColumn("__code", F.col("__mc"))
+                if b["n_amb"]:
+                    # an ambiguous row takes its NOT MATCHED code unless
+                    # its key matched
+                    hit = (disc.where(amb).select(*on)
+                           .withColumn("__hit", F.lit(True)))
+                    w = (s_al.join(F.broadcast(hit), on=on, how="left")
+                         .withColumn("__code", F.when(
+                             amb & F.col("__hit").isNull(), F.col("__nc"))
+                             .otherwise(F.col("__mc"))))
+            else:
+                # insert-only: no target row changes; the inserts are the
+                # source rows whose key no candidate file holds
+                # (rows_inserted is read off the staged files)
+                touched = set()
+                n_upd = n_del = 0
+                w = (s_al.join(self._read_files(snap, cand).select(*on),
+                               on=on, how="left_anti")
+                     .withColumn("__code", F.col("__nc")))
+            sc = s_al.select(*on, "__mc")
             w = w.where(F.col("__code").isin(upd + ins))
             t_rows = target(sorted(touched))
             kept = ([c for c in tcols if c not in src_cols]
@@ -3240,7 +3284,8 @@ class TxnTable:
             gone = sc.where(F.col("__mc") != _KEEP).select(*on)
             new_content = (t_rows.join(F.broadcast(gone), on=on,
                                        how="left_anti")
-                           .select(*proj).unionByName(up))
+                           .select(*proj).unionByName(up)
+                           if touched else up)
             if self._cdf_on(snap):
                 tgt = t_rows.join(F.broadcast(sc.select(*on, "__mc")),
                                   on=on)
@@ -3260,7 +3305,7 @@ class TxnTable:
         else:
             if nmbs:
                 touched = set(cand)
-            else:
+            elif touched is None:
                 discovery = self._read_files_meta(snap, cand)
                 touched = {
                     r[0] for r in
@@ -3323,6 +3368,8 @@ class TxnTable:
                                    .select(*post_cols), "insert"))
         adds = self._stage(new_content, snap.partition_by or None,
                            mapping=snap.column_mapping)
+        if n_ins is None:                   # insert-only: every staged row
+            n_ins = sum(a.rows for a in adds)
         # CHECK constraints are enforced on the staged bytes (a
         # column-pruned re-read of the OUTPUT, cheaper than re-running
         # the plan); a violation leaves orphans for vacuum, the same

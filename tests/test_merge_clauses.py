@@ -158,6 +158,14 @@ _PLAN_PAIRS = {
                                        not_matched=[_INSERT_STAR]),
         {"matched": [_KILL, _UPDATE_V],
          "not_matched": [_insert_values()]}),
+    "update_only": (
+        lambda t, src: t.merge_clauses(src, on=["id"],
+                                       matched=[_UPDATE_STAR]),
+        {"matched": [_UPDATE_V]}),
+    "insert_only": (
+        lambda t, src: t.merge_clauses(src, on=["id"],
+                                       not_matched=[_INSERT_STAR]),
+        {"not_matched": [_insert_values()]}),
     "merge_triple": (
         lambda t, src: t.merge(src, on=["id"], delete_when="kill",
                                helper_cols=("kill",)),
@@ -194,7 +202,7 @@ def test_replace_and_case_plans_agree(spark, tmp_path, shape):
     src = spark.range(15, 25).selectExpr(
         "id", "id * -1.0 as v",
         "CASE WHEN id = 17 THEN NULL ELSE id % 3 = 0 END as kill")
-    out = {}
+    out, rewritten = {}, {}
     for name in ("replace", "case"):
         t = _mk(spark, tmp_path, name)
         t.create(base, partition_by=["id"], partition_files=4)
@@ -207,12 +215,16 @@ def test_replace_and_case_plans_agree(spark, tmp_path, shape):
         feed = sorted((r.id, r.v, r._change_type) for r in
                       t.changes(v0, include_deletes=True).collect())
         out[name] = (_state(t), feed,
-                     {k: res[k] for k in ("files_rewritten", "files_total",
-                                          "rows_updated", "rows_deleted",
-                                          "rows_inserted")})
+                     {k: res[k] for k in ("files_total", "rows_updated",
+                                          "rows_deleted", "rows_inserted")})
+        rewritten[name] = res["files_rewritten"]
     assert out["replace"] == out["case"]
-    counts = out["replace"][2]
-    assert 0 < counts["files_rewritten"] < counts["files_total"]
+    # an insert-only merge rewrites no file; the CASE plan rewrites the
+    # files holding a matched key, every other shape the same files
+    assert rewritten["replace"] < out["replace"][2]["files_total"]
+    assert (rewritten["replace"] == 0) == (shape == "insert_only")
+    assert (rewritten["replace"] == rewritten["case"]) \
+        == (shape != "insert_only")
 
 
 def test_clause_merge_enforces_constraints_on_staged_output(spark,

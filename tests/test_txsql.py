@@ -417,6 +417,42 @@ def test_merge_inserts_unmatched_flagged_row(spark, lake, tmp_path):
             res["rows_inserted"]) == (9, 1, 0)
 
 
+@pytest.mark.parametrize("shape", ["update_only", "flagged", "merge"])
+def test_merge_updates_every_row_of_a_duplicated_target_key(spark, lake,
+                                                            shape):
+    """INSERT admits a key twice; a source row matching both target
+    rows updates both, in every star shape: none is lost to the one
+    source row, and the counts are per target row."""
+    lake.sql("CREATE TABLE pay USING txlog AS SELECT * FROM seed")
+    lake.sql("INSERT INTO pay SELECT id, amount + 5, ccy FROM seed "
+             "WHERE id = 1")
+    spark.sql("SELECT id, -amount AS amount, ccy, id = 7 AS kill "
+              "FROM seed WHERE id IN (1, 7) "
+              "UNION ALL SELECT 42, 420, 'EUR', false"
+              ).createOrReplaceTempView("dup_src")
+    if shape == "merge":
+        res = lake.table("pay").merge(spark.table("dup_src"), on=["id"],
+                                      delete_when="kill",
+                                      helper_cols=("kill",))
+    else:
+        res = {r["metric"]: r["value"] for r in lake.sql(
+            "MERGE INTO pay t USING dup_src s ON t.id = s.id "
+            + ("WHEN MATCHED AND s.kill THEN DELETE "
+               "WHEN MATCHED THEN UPDATE SET * "
+               "WHEN NOT MATCHED THEN INSERT *" if shape == "flagged"
+               else "WHEN MATCHED THEN UPDATE SET *")).collect()}
+    # update_only updates 7 and inserts nothing; the other two delete
+    # the flagged 7 and insert 42
+    want = ([(7, -70)] if shape == "update_only" else [(42, 420)])
+    counts = (3, 0, 0) if shape == "update_only" else (2, 1, 1)
+    assert _rows(lake.sql("SELECT id, amount FROM pay "
+                          "WHERE id IN (1, 7, 42)")) \
+        == sorted([(1, -10), (1, -10)] + want)
+    assert lake.sql("SELECT count(*) AS n FROM pay").first()["n"] == 11
+    assert (res["rows_updated"], res["rows_deleted"],
+            res["rows_inserted"]) == counts
+
+
 def test_merge_clause_conditions_null_is_false(spark, lake):
     """NULL conditions must not fire a clause (SQL MERGE rule)."""
     lake.sql("CREATE TABLE pay USING txlog AS SELECT * FROM seed")
