@@ -247,22 +247,6 @@ def _validate_writer_protocol(protocol: dict[str, Any] | None,
             f"violate the table's invariants")
 
 
-def _small(ckpt: DataFrame) -> bool:
-    """True when an eagerly local-checkpointed frame holds at most one
-    advisory partition of bytes (``spark.sql.adaptive.
-    advisoryPartitionSizeInBytes``, the size AQE gives one task): an
-    aggregate over it then runs as ONE task, with no shuffle stage.
-    The blocks sit in the block manager, so the size is exact and no
-    job runs."""
-    jspark = ckpt.sparkSession._jsparkSession
-    rid = ckpt._jdf.queryExecution().logical().rdd().id()
-    size = sum(i.memSize() + i.diskSize() for i in
-               jspark.sparkContext().getRDDStorageInfo() if i.id() == rid)
-    sql_conf = ckpt.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
-    return size <= jspark.sessionState().conf().getConf(
-        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES())
-
-
 # columns whose footer stats we harvest: parquet logical types that
 # arrive as JSON-safe python values (or are made so below)
 _STATS_SAFE = (int, float, str, bool)
@@ -3116,6 +3100,13 @@ class TxnTable:
             if bad:
                 raise ValueError(f"MERGE assigns unknown column(s) "
                                  f"{bad}; table has {tcols}")
+        # a source the optimizer sizes at most at one file-open cost
+        # (spark.sql.files.openCostInBytes, the bytes Spark scans in
+        # the time a task start costs) is aggregated in ONE task below,
+        # with no shuffle stage; an unknown or larger size stays parallel
+        small = (source._jdf.queryExecution().optimizedPlan().stats()
+                 .sizeInBytes() <= self.spark._jsparkSession.sessionState()
+                 .conf().filesOpenCostInBytes())
         source = source.localCheckpoint(eager=True)   # read 3x below
         _KEEP, _DROP = 0, -1
         mcode = self._clause_code(matched, 100, _KEEP)
@@ -3143,10 +3134,9 @@ class TxnTable:
                                ncode.alias("__nc"))
         # ONE pre-flight aggregate (r13, guide §1.2) over the
         # checkpointed source: key range, duplicate guard and (replace
-        # plan) the clause-code counts, in ONE task for a small source
-        # (on a batch source the distinct count's shuffle cost more
-        # than the scan; a larger source keeps its scan parallel).
-        # Null semantics:
+        # plan) the clause-code counts (on a small batch source the
+        # distinct count's shuffle cost more than the scan). Null
+        # semantics:
         # multi-arg count_distinct excludes any-null key tuples and the
         # conditional count matches na.drop(subset=on) — the guard sees
         # NON-NULL key rows only (a NULL key never equi-joins a target
@@ -3163,8 +3153,7 @@ class TxnTable:
         if replace:
             aggs += [F.count(F.when(w_n, F.lit(1))).alias("n_ins"),
                      F.count(F.when(amb, F.lit(1))).alias("n_amb")]
-        b = ((s_al.coalesce(1) if _small(source) else s_al)
-             .agg(*aggs).first())
+        b = (s_al.coalesce(1) if small else s_al).agg(*aggs).first()
         if (matched or nmbs) and b["n_nn"] != b["nd"]:
             raise ValueError(
                 "MERGE source has duplicate key rows on "
@@ -3228,7 +3217,7 @@ class TxnTable:
                           on=on)
                     .select("__rel", *on, "__mc", "__nc")
                     .localCheckpoint(eager=True))
-            per = ((disc.coalesce(1) if _small(disc) else disc)
+            per = ((disc.coalesce(1) if small else disc)
                    .groupBy("__mc", "__nc")
                    .agg(F.count(F.lit(1)).alias("n"),
                         F.count_distinct(*kc).alias("nd"),
