@@ -246,7 +246,6 @@ def _validate_writer_protocol(protocol: dict[str, Any] | None,
             f"{sorted(_WRITER_FEATURES)}); a blind commit could "
             f"violate the table's invariants")
 
-
 # columns whose footer stats we harvest: parquet logical types that
 # arrive as JSON-safe python values (or are made so below)
 _STATS_SAFE = (int, float, str, bool)
@@ -3030,11 +3029,12 @@ class TxnTable:
             touched files and the row counts; the touched files minus
             the leaving keys are unioned with the written source rows
             (broadcast anti-join, no join of target rows against source
-            rows). When a row's disposition depends on whether it
-            matches (e.g. a flagged row an unconditional INSERT * still
-            inserts), the discovery join is checkpointed and its keys
-            split the source. An insert-only merge skips the discovery:
-            its inserts are the source rows no candidate key matches.
+            rows). The discovery join is checkpointed: when a row's
+            disposition depends on whether it matches (e.g. a flagged
+            row an unconditional INSERT * still inserts), its matched
+            keys split the source without a second scan. An
+            insert-only merge skips the discovery: its inserts are the
+            source rows no candidate key matches.
           * CASE — everything else: one full-outer join of the touched
             files (every live file under NOT MATCHED BY SOURCE, Delta's
             cost model for that clause) against the source, every
