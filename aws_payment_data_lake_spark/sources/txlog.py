@@ -378,6 +378,17 @@ class Snapshot:
 _Rebase = Callable[[Snapshot, dict[str, Any]], "dict[str, Any] | None"]
 
 
+@dataclass
+class _NewRows:
+    """A write's new rows across its publish attempts
+    (TxnTable._restage): the raw frame, the frame last readied from it,
+    that frame's identity bases, and the CHECK map it passed."""
+    raw: DataFrame
+    df: DataFrame | None = None
+    bases: dict[str, int] = field(default_factory=dict)
+    validated: dict[str, str] | None = None
+
+
 def _json_safe(v: Any) -> Any:
     if v is None or isinstance(v, _STATS_SAFE):
         return v
@@ -937,6 +948,34 @@ class TxnTable:
             return validated
         check(dict(head.constraints))
         return dict(head.constraints)
+
+    def _restage(self, rows: _NewRows, snap: Snapshot,
+                 commit: dict[str, Any],
+                 stage: Callable[[DataFrame, Snapshot], list[AddFile]],
+                 schema_mode: str | None = None) -> None:
+        """Stage a write's new rows into ``commit`` against ``snap``:
+        the first attempt, and the rebase step after a lost race. The
+        rows are readied from the raw frame and staged on the first
+        attempt, and again when a concurrent write allocated identity
+        values past their bases (the old staged files orphan until
+        vacuum). CHECK constraints re-run whenever ``snap``'s differ
+        from the map the rows passed, and with a ``schema_mode`` the
+        evolved schema is re-derived (None: the write replaces the
+        schema)."""
+        fresh = rows.df is None or self._identity_moved(snap, rows.bases)
+        if fresh:
+            rows.df, rows.bases = self._ready(rows.raw, snap)
+        if schema_mode is not None:
+            self._rebase_schema(commit, rows.df, snap, schema_mode)
+        rows.validated = self._recheck(
+            snap, None if fresh else rows.validated,
+            lambda cons: self._enforce(rows.df, cons))
+        if fresh:
+            adds = stage(rows.df, snap)
+            commit["add"] = [a.to_json() for a in adds]
+            if rows.bases:
+                commit["identity_high"] = self._identity_high(
+                    adds, snap, rows.bases)
 
     def _merge_rebase(self, touched: set[str], key: str, lo: Any,
                       hi: Any, src: DataFrame | None = None) -> _Rebase:
@@ -1510,6 +1549,19 @@ class TxnTable:
                 df = df.withColumn(c, F.expr(e))
         return df
 
+    def _ready(self, raw: DataFrame, snap: Snapshot
+               ) -> tuple[DataFrame, dict[str, int]]:
+        """Ready a write's new rows against ``snap`` from its raw frame:
+        identity ids first, then DEFAULTs, then generated columns (whose
+        expressions may read either). Returns the frame and its
+        identity bases. A table with none of the three runs no Spark
+        job here."""
+        df, bases = self._assign_identity(raw, snap)
+        df = self._apply_defaults(df, snap)
+        if snap.generated:
+            df = self._derive_generated(df, snap.generated)
+        return df, bases
+
     def _assign_identity(self, df: DataFrame, snap: Snapshot
                          ) -> tuple[DataFrame, dict[str, int]]:
         """Assign GENERATED ALWAYS AS IDENTITY columns on a write's
@@ -1697,14 +1749,24 @@ class TxnTable:
                                   f"({c} IS NULL AND ({e}) IS NULL))")
         return cons
 
-    @staticmethod
-    def _validate_identity_spec(df: DataFrame,
-                                identity: dict[str, dict[str, int]],
-                                generated: dict[str, str]) -> None:
-        """Identity DDL validation shared by create() AND replace()
-        (the REPLACE arm initially skipped it, so a step<1 or
-        non-integer spec could enter through CREATE OR REPLACE and
-        underflow/brick later appends)."""
+    def _define(self, df: DataFrame, partition_by: list[str] | None,
+                partition_files: int | None,
+                generated: dict[str, str] | None,
+                not_null: list[str] | None,
+                identity: dict[str, dict[str, int]] | None,
+                defaults: dict[str, str] | None,
+                properties: dict[str, str] | None) -> dict[str, Any]:
+        """The table-definition step of create() and replace():
+        validate the identity spec (an identity table is defined EMPTY:
+        the log owns allocation), derive the generated columns, register
+        and enforce the NOT NULL and generated columns' CHECK
+        constraints, validate DEFAULTs and properties, then stage
+        ``df``. Returns the commit's definition fields, empty specs left
+        out."""
+        generated = dict(generated or {})
+        not_null = list(not_null or [])
+        identity = {k: {"start": int(v["start"]), "step": int(v["step"])}
+                    for k, v in (identity or {}).items()}
         names = {f.name: f.dataType.simpleString()
                  for f in df.schema.fields}
         for col, spec in identity.items():
@@ -1712,8 +1774,7 @@ class TxnTable:
                 raise ValueError(
                     f"identity column {col!r} not in the schema "
                     f"{sorted(names)}")
-            if names[col] not in ("bigint", "long", "int",
-                                  "integer"):
+            if names[col] not in ("bigint", "long", "int", "integer"):
                 raise ValueError(
                     f"identity column {col!r} must be an integer "
                     f"type, got {names[col]}")
@@ -1725,6 +1786,37 @@ class TxnTable:
                 raise ValueError(
                     f"identity step for {col!r} must be >= 1 "
                     f"(got {spec['step']})")
+        if identity and df.take(1):
+            raise ValueError(
+                "identity tables must be (re)created EMPTY (the log "
+                "owns allocation); CREATE or REPLACE, then append")
+        if generated:
+            df = self._derive_generated(df, generated)
+        bad = sorted((set(generated) | set(not_null))
+                     - set(df.schema.names))
+        if bad:
+            raise ValueError(
+                f"generated/NOT NULL column(s) {bad} not in the "
+                f"schema {df.schema.names}")
+        probe = Snapshot(-1, df.schema.json(), {},
+                         generated=generated, identity=identity)
+        for c, e in (defaults or {}).items():
+            self._validate_default(c, e, probe)
+        props = {k: str(v) for k, v in (properties or {}).items()}
+        self._validate_props(props)
+        cons = self._auto_constraints(generated, not_null)
+        self._enforce(df, cons)
+        adds = self._stage(df, partition_by,
+                           partition_files=partition_files)
+        spec = {"constraints": cons, "generated": generated,
+                "identity": identity,
+                "identity_high": {c: s["start"] - s["step"]
+                                  for c, s in identity.items()},
+                "defaults": dict(defaults or {}), "properties": props}
+        return {"schema_json": df.schema.json(),
+                "partition_by": partition_by or [],
+                "add": [a.to_json() for a in adds], "remove": [],
+                **{k: v for k, v in spec.items() if v}}
 
     def create(self, df: DataFrame,
                partition_by: list[str] | None = None,
@@ -1748,53 +1840,11 @@ class TxnTable:
         EMPTY — the DDL shape)."""
         if self.exists():
             raise FileExistsError(f"txlog table already at {self.path}")
-        generated = dict(generated or {})
-        not_null = list(not_null or [])
-        identity = {k: {"start": int(v["start"]),
-                        "step": int(v["step"])}
-                    for k, v in (identity or {}).items()}
-        if identity:
-            self._validate_identity_spec(df, identity, generated)
-            if df.take(1):
-                raise ValueError(
-                    "identity tables must be created EMPTY (the log "
-                    "owns allocation); CREATE then append")
-        if generated:
-            df = self._derive_generated(df, generated)
-        cons = self._auto_constraints(generated, not_null)
-        bad = sorted((set(generated) | set(not_null))
-                     - {f.name for f in df.schema.fields})
-        if bad:
-            raise ValueError(
-                f"generated/NOT NULL column(s) {bad} not in the "
-                f"schema {[f.name for f in df.schema.fields]}")
-        if cons:
-            self._enforce(df, cons)
-        adds = self._stage(df, partition_by,
-                           partition_files=partition_files)
-        commit = {"op": "create", "ts": time.time(),
-                  "schema_json": df.schema.json(),
-                  "partition_by": partition_by or [],
-                  "add": [a.to_json() for a in adds], "remove": []}
-        if cons:
-            commit["constraints"] = cons
-        if generated:
-            commit["generated"] = generated
-        if identity:
-            commit["identity"] = identity
-            commit["identity_high"] = {
-                c: s["start"] - s["step"] for c, s in identity.items()}
-        if defaults:
-            probe = Snapshot(-1, df.schema.json(), {},
-                             generated=generated, identity=identity)
-            for c, e in defaults.items():
-                self._validate_default(c, e, probe)
-            commit["defaults"] = dict(defaults)
-        if properties:
-            props = {k: str(v) for k, v in properties.items()}
-            self._validate_props(props)
-            commit["properties"] = props
-        self._commit(None, commit)
+        self._commit(None, {"op": "create", "ts": time.time(),
+                            **self._define(df, partition_by,
+                                           partition_files, generated,
+                                           not_null, identity, defaults,
+                                           properties)})
         return self
 
     def convert_from_parquet(self) -> "TxnTable":
@@ -2153,62 +2203,29 @@ class TxnTable:
         schema evolution: new columns extend the table schema (old
         files read as NULL for them); see _check_schema.
         Returns the committed version."""
+        def done(s: Snapshot) -> bool:     # the log holds this batch
+            return (txn_app is not None
+                    and s.txns.get(txn_app, -1) >= (txn_batch or 0))
+
+        def stage(out: DataFrame, s: Snapshot) -> list[AddFile]:
+            return self._stage(out, partition_by or s.partition_by or None,
+                               mapping=s.column_mapping)
+
         snap = self._replay()
-        if (txn_app is not None
-                and snap.txns.get(txn_app, -1) >= (txn_batch or 0)):
+        if done(snap):
             return None
-        raw = df                       # pre-identity frame, for restage
-        bases: dict[str, int] = {}
-
-        def prep(snap: Snapshot) -> tuple[DataFrame, dict[str, int]]:
-            out = raw
-            b: dict[str, int] = {}
-            if snap.identity:          # allocate BEFORE generated —
-                out, b = self._assign_identity(out, snap)  # gen may
-            out = self._apply_defaults(out, snap)          # reference
-            if snap.generated:                             # either
-                out = self._derive_generated(out, snap.generated)
-            return out, b
-
-        df, bases = prep(snap)
-        evolved = self._check_schema(df, snap, schema_mode)
-        validated = dict(snap.constraints)
-        self._enforce(df, validated)
-        adds = self._stage(df, partition_by or snap.partition_by or None,
-                           mapping=snap.column_mapping)
-        commit: dict[str, Any] = {
-            "op": "append", "ts": time.time(),
-            "add": [a.to_json() for a in adds], "remove": []}
-        if bases:
-            commit["identity_high"] = self._identity_high(
-                adds, snap, bases)
-        if evolved:
-            commit["schema_json"] = evolved
+        rows = _NewRows(df)
+        commit: dict[str, Any] = {"op": "append", "ts": time.time(),
+                                  "remove": []}
         if txn_app is not None:
             commit["txn"] = {"app": txn_app, "batch": int(txn_batch or 0)}
+        self._restage(rows, snap, commit, stage, schema_mode)
 
         def rebase(head: Snapshot, c: dict[str, Any]
                    ) -> dict[str, Any] | None:
-            nonlocal df, bases, validated
-            if (txn_app is not None
-                    and head.txns.get(txn_app, -1) >= (txn_batch or 0)):
+            if done(head):
                 return None            # a concurrent replay beat us
-            moved = self._identity_moved(head, bases)
-            if moved:
-                # our staged ids would collide: RESTAGE from the new
-                # high (old staged files orphan; vacuum sweeps)
-                df, bases = prep(head)
-            validated = self._recheck(
-                head, None if moved else validated,
-                lambda cons: self._enforce(df, cons))
-            if moved:
-                adds = self._stage(
-                    df, partition_by or head.partition_by or None,
-                    mapping=head.column_mapping)
-                c["add"] = [a.to_json() for a in adds]
-                c["identity_high"] = self._identity_high(
-                    adds, head, bases)
-            self._rebase_schema(c, df, head, schema_mode)
+            self._restage(rows, head, c, stage, schema_mode)
             return c
 
         v = self._commit(snap, commit, rebase)   # appends commute
@@ -2245,10 +2262,15 @@ class TxnTable:
         writer unaware of the idempotence state would drop it from
         its next checkpoint and double-ingest.
 
-        Concurrency: appends commute, so a lost race retries —
-        UNLESS the new head shows overlapping copy_sources (a
-        concurrent COPY INTO of the same files), which aborts with
-        ConcurrentWriteError instead of double-loading."""
+        ``src_dir`` is a local directory, as a path or a ``file:``
+        URI; any other scheme, or a directory that does not exist,
+        raises rather than loading nothing.
+
+        Concurrency: appends commute, so a lost race retries through
+        the append rebase (identity ids restage past a concurrent
+        allocation) — UNLESS the new head shows overlapping
+        copy_sources (a concurrent COPY INTO of the same files), which
+        aborts with ConcurrentWriteError instead of double-loading."""
         import fnmatch
         if not self.exists():
             # Delta's posture: COPY INTO requires an existing target
@@ -2257,7 +2279,16 @@ class TxnTable:
             raise FileNotFoundError(
                 f"COPY INTO target {self.path} does not exist: "
                 "CREATE TABLE (or CONVERT) first")
-        src_root = os.path.abspath(src_dir)
+        uri = urlparse(src_dir)
+        if uri.scheme not in ("", "file"):
+            raise ValueError(
+                f"COPY INTO reads a local directory; {src_dir!r} has "
+                f"the unsupported scheme {uri.scheme!r}")
+        src_root = os.path.abspath(unquote(uri.path) if uri.scheme
+                                   else src_dir)
+        if not os.path.isdir(src_root):
+            raise FileNotFoundError(
+                f"COPY INTO source directory {src_root} does not exist")
         found: list[str] = []
         for dirpath, dirnames, filenames in os.walk(src_root):
             dirnames[:] = [d for d in dirnames
@@ -2339,37 +2370,17 @@ class TxnTable:
         else:
             raise ValueError(f"COPY INTO: unsupported FILEFORMAT "
                              f"{fmt!r} (parquet|json|csv)")
-        cp_bases: dict[str, int] = {}
-        if snap.identity:              # identity cols are excluded
-            df, cp_bases = self._assign_identity(df, snap)  # from the
-        df = self._apply_defaults(df, snap)                 # pin above
-        if snap.generated:
-            df = self._derive_generated(df, snap.generated)
-        evolved = self._check_schema(df, snap, schema_mode)
-        validated = dict(snap.constraints)
-        self._enforce(df, validated)
-        adds = self._stage(df, snap.partition_by or None,
-                           mapping=snap.column_mapping)
-        rows = sum(a.rows for a in adds)
-        commit: dict[str, Any] = {
-            "op": "copy_into", "ts": time.time(),
-            "add": [a.to_json() for a in adds], "remove": [],
-            "copy_sources": new}
-        if cp_bases:
-            commit["identity_high"] = self._identity_high(
-                adds, snap, cp_bases)
-        if evolved:
-            commit["schema_json"] = evolved
+        rows = _NewRows(df)
+        commit: dict[str, Any] = {"op": "copy_into", "ts": time.time(),
+                                  "remove": [], "copy_sources": new}
+
+        def stage(out: DataFrame, s: Snapshot) -> list[AddFile]:
+            return self._stage(out, s.partition_by or None,
+                               mapping=s.column_mapping)
+
+        self._restage(rows, snap, commit, stage, schema_mode)
 
         def rebase(head: Snapshot, c: dict[str, Any]) -> dict[str, Any]:
-            nonlocal validated
-            if self._identity_moved(head, cp_bases):
-                raise ConcurrentWriteError(
-                    f"COPY INTO {self.path}: a concurrent write "
-                    "allocated identity values past this batch's "
-                    "base; re-run (nothing was recorded — the same "
-                    "files will load; staged files are orphaned "
-                    "until vacuum)")
             overlap = set(new) & head.copied
             if overlap:
                 raise ConcurrentWriteError(
@@ -2378,16 +2389,14 @@ class TxnTable:
                     "(first: "
                     f"{sorted(overlap)[0]}); re-run to load the rest "
                     "(staged files are orphaned until vacuum)")
-            validated = self._recheck(
-                head, validated, lambda cons: self._enforce(df, cons))
-            self._rebase_schema(c, df, head, schema_mode)
+            self._restage(rows, head, c, stage, schema_mode)
             return c
 
         v = self._commit(snap, commit, rebase, features=("copy_into",))
         self._maybe_autocompact()
         return {"version": v, "files_loaded": len(new),
                 "files_skipped": len(found) - len(new),
-                "rows_loaded": int(rows)}
+                "rows_loaded": sum(a["rows"] for a in commit["add"])}
 
     def overwrite(self, df: DataFrame,
                   partition_by: list[str] | None = None,
@@ -2397,56 +2406,36 @@ class TxnTable:
         recomputes the removes against the new head and retries.
         ``properties`` (when not None) full-map-replaces the table
         properties in the same commit — CREATE OR REPLACE resets
-        unspecified properties, Delta's REPLACE semantics."""
+        unspecified properties, Delta's REPLACE semantics. The new
+        rows are readied as an append's are: identity columns get fresh
+        ids (never reused, as in Delta), omitted DEFAULT and generated
+        columns are filled."""
         pre = self._replay()
         self._assert_mutable(pre, "overwrite")
-        ow_bases: dict[str, int] = {}
-        if pre.identity:               # fresh ids, never reused —
-            df, ow_bases = self._assign_identity(df, pre)  # Delta too
-        if pre.generated:
-            df = self._derive_generated(df, pre.generated)
-        validated = dict(pre.constraints)
-        self._enforce(df, validated)
-        adds = self._stage(df, partition_by)
         props = (None if properties is None
                  else {k: str(v) for k, v in properties.items()})
         if props is not None:
             self._validate_props(props)
+        rows, staged = _NewRows(df), {}
 
         def build(snap: Snapshot) -> dict[str, Any]:
-            nonlocal df, ow_bases, validated, adds
-            moved = self._identity_moved(snap, ow_bases)
-            if moved:
-                # concurrent allocation past our base: restage
-                df, ow_bases = self._assign_identity(
-                    df.drop(*ow_bases), snap)
-                if snap.generated:
-                    df = self._derive_generated(df, snap.generated)
-            # same hole append closes: a concurrent ALTER between our
-            # read and publish must re-validate our rows
-            validated = self._recheck(
-                snap, None if moved else validated,
-                lambda cons: self._enforce(df, cons))
-            if moved:
-                adds = self._stage(df, partition_by)
+            self._restage(rows, snap, staged,
+                          lambda out, _: self._stage(out, partition_by))
+            kept = set(rows.df.columns)
             commit = {"op": "overwrite", "ts": time.time(),
-                      "schema_json": df.schema.json(),
+                      "schema_json": rows.df.schema.json(),
                       # schema replace: defaults survive only for
                       # columns the new schema still has
                       "defaults": {k: x for k, x
                                    in snap.defaults.items()
-                                   if k in set(df.columns)},
+                                   if k in kept},
                       "column_mapping": {}, "dropped_physical": [],
                       "partition_by": (partition_by
                                        if partition_by is not None
                                        else snap.partition_by),
-                      "add": [a.to_json() for a in adds],
-                      "remove": sorted(snap.live)}
+                      **staged, "remove": sorted(snap.live)}
             if props is not None:
                 commit["properties"] = props
-            if ow_bases:
-                commit["identity_high"] = self._identity_high(
-                    adds, snap, ow_bases)
             return commit
 
         return self._commit_from_head(build, pre)
@@ -2472,40 +2461,17 @@ class TxnTable:
         reset. Blocked by txlog.appendOnly like every rewrite."""
         pre = self._replay()
         self._assert_mutable(pre, "replace")
-        generated = dict(generated or {})
-        identity = {k: {"start": int(v["start"]), "step": int(v["step"])}
-                    for k, v in (identity or {}).items()}
-        if identity:
-            self._validate_identity_spec(df, identity, generated)
-            if df.take(1):
-                raise ValueError(
-                    "identity tables must be (re)created EMPTY (the "
-                    "log owns allocation); REPLACE then append")
-        if generated:
-            df = self._derive_generated(df, generated)
-        cons = self._auto_constraints(generated, list(not_null or []))
-        if cons:
-            self._enforce(df, cons)
-        props = {k: str(v) for k, v in (properties or {}).items()}
-        self._validate_props(props)
-        if defaults:
-            probe = Snapshot(-1, df.schema.json(), {},
-                             generated=generated, identity=identity)
-            for c, e in defaults.items():
-                self._validate_default(c, e, probe)
-        adds = self._stage(df, partition_by)
+        spec = self._define(df, partition_by, None, generated, not_null,
+                            identity, defaults, properties)
 
         def build(snap: Snapshot) -> dict[str, Any]:
             self._assert_mutable(snap, "replace")
             return {
                 "op": "replace", "ts": time.time(),
-                "schema_json": df.schema.json(),
-                "partition_by": partition_by or [],
-                "constraints": cons,
-                "generated": generated,
-                "identity": identity,
-                "defaults": dict(defaults or {}),
-                "properties": props,
+                # full-map replace: a spec the new definition leaves
+                # out is reset
+                "constraints": {}, "generated": {}, "identity": {},
+                "defaults": {}, "properties": {}, **spec,
                 "column_mapping": {}, "dropped_physical": [],
                 # the replace wiped the rows those marks guard, so a
                 # COPY INTO re-run / idempotent-stream re-delivery
@@ -2513,7 +2479,6 @@ class TxnTable:
                 # semantics; ADVICE r11 #3). identity_high stays
                 # accumulative BY DESIGN (uniqueness across history).
                 "copy_sources_reset": True, "txns_reset": True,
-                "add": [a.to_json() for a in adds],
                 "remove": sorted(snap.live)}
 
         return self._commit_from_head(build, pre)
@@ -3547,12 +3512,7 @@ class TxnTable:
         hit = F.coalesce(cond, F.lit(False))
         snap = self._replay()
         self._assert_mutable(snap, "replaceWhere")
-        bases: dict[str, int] = {}
-        if snap.identity:
-            df, bases = self._assign_identity(df, snap)
-        df = self._apply_defaults(df, snap)
-        if snap.generated:
-            df = self._derive_generated(df, snap.generated)
+        df, bases = self._ready(df, snap)
         stray = df.where(~F.coalesce(cond, F.lit(False))).take(1)
         if stray:
             raise ValueError(

@@ -37,6 +37,17 @@ def test_fill_on_absence_supplied_null_wins(spark, tmp_path):
             f)["protocol"]["writer_features"]
 
 
+def test_overwrite_fills_an_omitted_default(spark, tmp_path):
+    """overwrite readies its rows as append does: a frame omitting a
+    defaulted column gets the DEFAULT, and the default survives."""
+    t = _mk(spark, tmp_path)
+    t.append(spark.createDataFrame([(9, "apac")], "id long, region string"))
+    t.overwrite(spark.range(2).selectExpr("id"))
+    got = {r.id: r.region for r in t.snapshot().collect()}
+    assert got == {0: "emea", 1: "emea"}
+    assert t._replay().defaults == {"region": "'emea'"}
+
+
 def test_alter_set_default_no_backfill_drop_restores_strict(
         spark, tmp_path):
     t = TxnTable(spark, str(tmp_path / "t"))

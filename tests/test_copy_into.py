@@ -51,6 +51,22 @@ def test_rerun_loads_each_file_exactly_once(spark, tmp_path):
     assert sorted(r.id for r in t.snapshot().collect()) == list(range(8))
 
 
+def test_source_dir_file_uri_loads_and_bad_sources_raise(spark,
+                                                         tmp_path):
+    """A ``file:`` URI names the same directory as its path; another
+    scheme or a missing directory raises instead of loading nothing."""
+    d = _land(spark, tmp_path, "a", 0, 5)
+    t = _mk(spark, tmp_path)
+    t.create(spark.createDataFrame([], "id long, v long"))
+    assert t.copy_into("file:" + d)["rows_loaded"] == 5
+    assert t.copy_into(d)["files_loaded"] == 0       # same files
+    with pytest.raises(ValueError, match="scheme"):
+        t.copy_into("s3a://bucket/landing")
+    with pytest.raises(FileNotFoundError):
+        t.copy_into(str(tmp_path / "no_such_dir"))
+    assert t.snapshot().count() == 5
+
+
 def test_sources_ride_the_same_commit_as_the_adds(spark, tmp_path):
     _land(spark, tmp_path, "a", 0, 4)
     t = _mk(spark, tmp_path)

@@ -4,8 +4,9 @@ contract. If `_try_publish` or `_maybe_checkpoint` start calling
 storage operations outside the declared sets, this test fails and the
 spec (plus any object-store LogStore port) must be revisited together
 — the same discipline as the independent-reader interop pin. It also
-pins `TxnTable._commit` as the only caller of both, and
-`TxnTable._commits` as the only reader of commit JSONs (property 4)."""
+pins `TxnTable._commit` as the only caller of both,
+`TxnTable._commits` as the only reader of commit JSONs (property 4),
+and one path that readies a write's new rows."""
 
 from __future__ import annotations
 
@@ -15,6 +16,11 @@ import re
 from tests.source_refs import package_refs
 
 from aws_payment_data_lake_spark.sources.txlog import TxnTable
+from aws_payment_data_lake_spark.sources.txlog_batch import (
+    _SnapshotWriter,
+    _StreamWriter,
+    _Upholding,
+)
 
 
 def _os_ops(fn) -> set[str]:
@@ -102,3 +108,26 @@ def test_one_merge_engine():
     sql = [where for _, where in refs["merge"]
            if where.startswith("sources/txsql.py")]
     assert sql == [], f"the SQL layer calls .merge( directly: {sql}"
+
+
+def test_one_row_readying_path():
+    """One path readies a write's new rows: inside the package,
+    ``_assign_identity`` is called only from ``TxnTable._ready``
+    (identity, then DEFAULT, then generated columns) and
+    ``_identity_moved`` only from ``TxnTable._restage``, the stage and
+    lost-race restage step of append, overwrite and COPY INTO. The
+    ``format("txlog")`` batch writer refuses no CHECK, generated or
+    DEFAULT table: it upholds them through the code the stream writer
+    uses."""
+    refs = package_refs({"_assign_identity", "_identity_moved"})
+    assert [c for c, _ in refs["_assign_identity"]] == \
+        ["TxnTable._ready"], refs["_assign_identity"]
+    assert [c for c, _ in refs["_identity_moved"]] == \
+        ["TxnTable._restage"], refs["_identity_moved"]
+    assert issubclass(_SnapshotWriter, _Upholding)
+    assert issubclass(_StreamWriter, _Upholding)
+    refusal = inspect.getsource(_SnapshotWriter._refuse_unsupported)
+    for word in ("constraints", "CHECK", "generated", "default",
+                 "DEFAULT"):
+        assert word not in refusal, \
+            f"the batch writer refuses {word!r} tables again"

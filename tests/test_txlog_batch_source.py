@@ -159,43 +159,51 @@ def test_write_upholds_column_mapping(spark, cat, tmp_path):
 
 def test_write_refuses_features_it_cannot_uphold(spark, cat,
                                                  tmp_path):
-    """The third-party-writer contract: a table demanding write-side
-    semantics this client can't evaluate refuses up front."""
+    """The third-party-writer contract: the batch writer upholds what
+    the stream writer upholds (CHECK constraints over the staged
+    files, generated columns derived), and a table demanding what it
+    can't uphold (identity, CDF capture, appendOnly under overwrite)
+    refuses up front."""
     import pytest as _pytest
     register_txlog_source(spark)
+
+    def put(df, name, mode="append"):
+        (df.write.format("txlog").mode(mode)
+         .option("path", cat.table(name).path).save())
+
+    cat.sql("CREATE TABLE con (id bigint, v double) USING txlog")
+    cat.sql("ALTER TABLE con ADD CONSTRAINT c CHECK (v > 0)")
+    put(spark.createDataFrame([(0, 1.0)], "id bigint, v double"), "con")
+    with _pytest.raises(Exception, match="CheckViolationError"):
+        put(spark.createDataFrame([(1, -1.0)], "id bigint, v double"),
+            "con")
+    assert _rows(cat.sql("SELECT * FROM con")) == [(0, 1.0)]
+    cat.sql("CREATE TABLE gen (id bigint, d string GENERATED "
+            "ALWAYS AS (cast(id as string))) USING txlog")
+    put(spark.range(2), "gen")
+    assert _rows(cat.sql("SELECT * FROM gen")) == [(0, "0"), (1, "1")]
+    with _pytest.raises(Exception, match="CheckViolationError"):
+        put(spark.range(1).selectExpr("id", "'x' AS d"), "gen")
     cases = {
-        "con": ("CREATE TABLE con (id bigint, v double) USING txlog",
-                "ALTER TABLE con ADD CONSTRAINT c CHECK (v > 0)",
-                "CHECK constraints"),
-        "gen": ("CREATE TABLE gen (id bigint, d string GENERATED "
-                "ALWAYS AS (cast(id as string))) USING txlog",
-                None, "generated columns"),
         "idn": ("CREATE TABLE idn (pk bigint GENERATED ALWAYS AS "
-                "IDENTITY, v double) USING txlog",
-                None, "identity columns"),
+                "IDENTITY, v double) USING txlog", "identity columns"),
         "cdf": ("CREATE TABLE cdf (id bigint) USING txlog "
                 "TBLPROPERTIES ('txlog.enableChangeDataFeed'='true')",
-                None, "change-data-feed"),
+                "change-data-feed"),
     }
-    for name, (ddl, extra, needle) in cases.items():
+    for name, (ddl, needle) in cases.items():
         cat.sql(ddl)
-        if extra:
-            cat.sql(extra)
         df = (spark.range(1).selectExpr("id", "1.0 AS v")
-              if name in ("con", "idn") else spark.range(1))
+              if name == "idn" else spark.range(1))
         with _pytest.raises(Exception, match=needle):
-            (df.write.format("txlog").mode("append")
-             .option("path", cat.table(name).path).save())
+            put(df, name)
     # appendOnly: append fine, overwrite refused
     cat.sql("CREATE TABLE ao (id bigint) USING txlog "
             "TBLPROPERTIES ('txlog.appendOnly' = 'true')")
-    p = cat.table("ao").path
-    (spark.range(2).write.format("txlog").mode("append")
-     .option("path", p).save())
+    put(spark.range(2), "ao")
     assert cat.sql("SELECT COUNT(*) FROM ao").collect()[0][0] == 2
     with _pytest.raises(Exception, match="appendOnly"):
-        (spark.range(1).write.format("txlog").mode("overwrite")
-         .option("path", p).save())
+        put(spark.range(1), "ao", "overwrite")
 
 
 def test_write_schema_mismatch_refused_on_append(spark, cat,

@@ -6,6 +6,8 @@ Metadata DDL rebuilds its commit from the new head and lands at the
 next version with the winner's rows intact. overwrite/replace are
 last-writer-wins: they land at the next version and remove the
 winner's file too, whose rows stay readable at the winner's version.
+The verbs that stage new rows (append, overwrite, COPY INTO) restage
+them when the winner allocated identity ids past their base.
 The single-shot verbs (delete, dv delete/update, replaceWhere,
 restore) abort with ConcurrentWriteError and leave the winner's
 commit as the head."""
@@ -24,9 +26,10 @@ BASE = [(1, 10, "a"), (2, 20, "b"), (3, 30, "c")]
 WINNER = [(50, 500, "w")]
 
 
-def _race_first_publish(monkeypatch, spark, t):
+def _race_first_publish(monkeypatch, spark, t, winner=None):
     """Patch _try_publish so the next publish through ``t`` first lets
-    a concurrent append (another handle) claim that very version."""
+    a concurrent append (another handle) of ``winner`` (default: the
+    WINNER row) claim that very version."""
     intruder = TxnTable(spark, t.path)
     orig = TxnTable._try_publish
     state = {"armed": True, "winner": None}
@@ -35,7 +38,8 @@ def _race_first_publish(monkeypatch, spark, t):
         if self is t and state["armed"]:
             state["armed"] = False
             state["winner"] = intruder.append(
-                spark.createDataFrame(WINNER, DDL))
+                winner if winner is not None
+                else spark.createDataFrame(WINNER, DDL))
             assert state["winner"] == version    # it took our version
         return orig(self, version, commit, features)
 
@@ -154,3 +158,34 @@ def test_single_shot_verbs_abort(spark, table, monkeypatch, verb):
     assert state["winner"] == before + 1 == table.latest_version()
     assert table.history()[-1]["op"] == "append"
     assert _ids(table) == sorted(rows + [50])
+
+
+@pytest.mark.parametrize("verb", ["append", "overwrite", "copy_into"])
+def test_identity_race_restages_generated_columns(spark, tmp_path,
+                                                  monkeypatch, verb):
+    """The winner's append allocates ids past the write's base, so the
+    write restages from its raw rows: fresh ids, and generated columns
+    computed from those ids rather than the stale ones."""
+    t = TxnTable(spark, str(tmp_path / "idg"))
+    t.create(spark.createDataFrame([], "id long, v int"),
+             identity={"id": {"start": 1, "step": 1}},
+             generated={"g": "id * 10"})
+    t.append(spark.createDataFrame([(1,), (2,)], "v int"))
+    ours = spark.createDataFrame([(7,), (8,)], "v int")
+    land = str(tmp_path / "land")
+    if verb == "copy_into":
+        ours.coalesce(1).write.parquet(land)
+    state = _race_first_publish(
+        monkeypatch, spark, t, spark.createDataFrame([(500,)], "v int"))
+    {"append": lambda: t.append(ours),
+     "overwrite": lambda: t.overwrite(ours),
+     "copy_into": lambda: t.copy_into(land)}[verb]()
+    assert state["winner"] == t.latest_version() - 1
+    rows = t.snapshot().collect()
+    assert all(r.g == r.id * 10 for r in rows)
+    ids = [r.id for r in rows]
+    assert len(set(ids)) == len(ids)
+    assert sorted(r.v for r in rows) == (
+        [7, 8] if verb == "overwrite" else [1, 2, 7, 8, 500])
+    won = max(_ids(t, state["winner"]))        # no id is reused
+    assert min(r.id for r in rows if r.v in (7, 8)) > won
